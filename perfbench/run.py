@@ -230,6 +230,7 @@ def _run(args, cores: int, work: str) -> int:
         metrics = {}
     elif tracer is not None:
         metrics = tracer.per_layer(res, event_log, session_s)
+        log("spans " + json.dumps(tracer.span_records()))
         # peak RSS spread ~18 % across seeds: a layer figure, not a bound
         metrics["spark.peak_rss_mb"] = (rss.peak / 2**20, "MB")
     else:

@@ -368,6 +368,15 @@ class Tracer:
         m["trace.wall_s"] = (statistics.median(res.walls), "s")
         return m
 
+    def span_records(self) -> list[dict]:
+        """Every span of the run, times relative to the first span's start."""
+        t0 = self.spans[0].start if self.spans else 0.0
+        return [
+            {"id": s.sid, "layer": s.layer, "parent": s.parent.sid if s.parent else None,
+             "start_s": s.start - t0, "end_s": s.end - t0, **s.info}
+            for s in self.spans
+        ]
+
     def _ancestors(self, s: Span):
         p = s.parent
         while p is not None:
