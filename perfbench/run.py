@@ -5,9 +5,12 @@
 Run from the root of a checkout of the repository. The runner pins the
 environment (local[<cores>], shuffle partitions = cores, a 3 GiB driver
 heap, every scratch, checkpoint and temp directory inside the checkout),
-writes the workload's seeded inputs, repeats the workload's timed unit
-until ``--seconds`` have passed (at least once), checks every output, and
-prints one JSON object as the last line of standard output:
+writes the workload's seeded inputs, warms up on a small corpus, repeats
+the workload's timed unit until ``--seconds`` have passed (at least once;
+exactly once in a traced run), checks every output, and prints one JSON
+object as the last line of standard output, its end-to-end times scaled
+to a reference host speed by a program-independent probe (`host_probe`;
+see README.md):
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -23,6 +26,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import threading
 import time
@@ -31,6 +35,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 DRIVER_MEM = "3g"
 RSS_PERIOD_S = 0.2
+# median host_probe() on the idle 4-vCPU machine the bounds were set on
+PROBE_REF_S = 0.12
+PROBES = 5
 
 
 def log(msg: str) -> None:
@@ -104,6 +111,27 @@ class RssSampler:
         self._thread.join()
 
 
+def host_probe(threads: int, n: int = 1 << 21, reps: int = 3) -> float:
+    """Seconds for `threads` threads to each sort a fixed array `reps`
+    times (numpy releases the GIL while it sorts): a fixed piece of work,
+    independent of the program, that slows as the host gets busier."""
+    import numpy as np
+
+    base = np.random.default_rng(0).random(n)
+
+    def work() -> None:
+        for _ in range(reps):
+            np.sort(base)
+
+    ts = [threading.Thread(target=work) for _ in range(threads)]
+    t0 = time.perf_counter()
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    return time.perf_counter() - t0
+
+
 def start_spark(cores: int, work: str, event_log: str | None):
     from fuzzycat_spark import get_spark
 
@@ -148,19 +176,20 @@ def stop_spark(spark) -> None:
             proc.wait()
 
 
-def end_to_end(res, session_s: float) -> dict:
-    """The user-visible metrics of one run. A batch run is one epoch over
-    the whole corpus."""
+def end_to_end(res, session_s: float, scale: float) -> dict:
+    """The user-visible metrics of one run, times scaled to the reference
+    host speed by `scale`. A batch run is one epoch over the whole
+    corpus."""
     from workloads import median
 
-    wall = median(res.walls)
+    wall = median(res.walls) * scale
     return {
-        "setup_s": (session_s + median(res.setup_s), "s"),
+        "setup_s": ((session_s + median(res.setup_s) + res.warmup_s) * scale, "s"),
         "wall_s": (wall, "s"),
         "docs_per_s": (res.docs / wall, "1/s"),
         "pair_recall": (median(res.recall), "ratio"),
         "pair_precision": (median(res.precision), "ratio"),
-        "epoch_p50_s": (median(res.epochs), "s"),
+        "epoch_p50_s": (median(res.epochs) * scale, "s"),
     }
 
 
@@ -200,6 +229,8 @@ def _run(args, cores: int, work: str) -> int:
     t0 = time.perf_counter()
     spark = start_spark(cores, work, event_log)
     session_s = time.perf_counter() - t0
+    # the host's speed around set-up and the timed loop, three times
+    probes = [host_probe(cores) for _ in range(PROBES)]
     try:
         if args.trace:
             from tracing import Tracer
@@ -207,25 +238,32 @@ def _run(args, cores: int, work: str) -> int:
             tracer = Tracer(spark)
         wl = Workload(args.workload, args.seed, work, tracer)
         wl.generate_inputs(res)
-        log(f"{args.workload} seed={args.seed}: {res.docs} docs, session {session_s:.1f}s")
+        wl.warm_up(spark, res)
+        log(f"{args.workload} seed={args.seed}: {res.docs} docs, "
+            f"session {session_s:.1f}s, warm-up {res.warmup_s:.1f}s")
         from pyspark import SparkContext
 
+        probes += [host_probe(cores) for _ in range(PROBES)]
         with RssSampler(SparkContext._gateway.proc.pid) as rss:
             if tracer is not None:
                 tracer.install()
             try:
-                wl.run(spark, args.seconds, res)
+                # per-layer figures are those of one timed unit
+                wl.run(spark, args.seconds, res, max_reps=1 if tracer else 0)
             finally:
                 if tracer is not None:
                     tracer.uninstall()
+        probes += [host_probe(cores) for _ in range(PROBES)]
         if tracer is not None:
             tracer.count_deferred()
-        wl.check_stream(spark, res)
     finally:
         stop_spark(spark)
     for e in res.errors:
         log(f"FAILED {e}")
-    log(f"walls {[round(w, 2) for w in res.walls]} epochs {[round(e, 2) for e in res.epochs]}")
+    probe = statistics.median(probes)
+    scale = PROBE_REF_S / probe
+    log(f"walls {[round(w, 2) for w in res.walls]} epochs {[round(e, 2) for e in res.epochs]} "
+        f"(as timed); host probe {probe:.4f}s, scale {scale:.3f}")
     if not res.walls:
         metrics = {}
     elif tracer is not None:
@@ -233,8 +271,11 @@ def _run(args, cores: int, work: str) -> int:
         log("spans " + json.dumps(tracer.span_records()))
         # peak RSS spread ~18 % across seeds: a layer figure, not a bound
         metrics["spark.peak_rss_mb"] = (rss.peak / 2**20, "MB")
+        metrics["host.probe_s"] = (probe, "s")
+        # scaled like wall_s, so the difference is the tracing overhead
+        metrics["trace.wall_s"] = (metrics["trace.wall_s"][0] * scale, "s")
     else:
-        metrics = end_to_end(res, session_s)
+        metrics = end_to_end(res, session_s, scale)
     out = {
         "correct": res.failed == 0 and bool(res.walls),
         "attempted": max(res.attempted, 1),

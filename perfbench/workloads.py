@@ -5,9 +5,9 @@ entry points (`dedup_pages`, `incremental_dedup_batch`, `compact_state`,
 
 Closed loop: one driver process submits one job at a time and waits for it.
 Inputs are written to parquet during set-up, so every timed run starts at a
-parquet scan. Each timed run is the first run of the pipeline in a fresh
-Spark session, as a scheduled batch job or a freshly started stream sees it:
-JVM JIT, code generation and Python worker start-up are inside the timing.
+parquet scan. Set-up also runs the unit once over a small warm-up corpus
+(`Workload.warm_up`), so JVM class loading, code generation and Python
+worker start-up happen there and not inside the timing.
 """
 
 from __future__ import annotations
@@ -31,6 +31,12 @@ SHAPES = {
     # text strategies (not in BENCHMARK.json: see README.md)
     "deep_overlap": Shape(n_families=300, n_chains=40),
 }
+# a few dozen docs of the same shape: enough to run every code path once
+WARMUP_SHAPES = {
+    "web_crawl": Shape(n_families=25),
+    "stream_ingest": Shape(n_families=25, n_segments=1),
+    "deep_overlap": Shape(n_families=25, n_chains=2),
+}
 SETUP_REPEATS = 3
 
 
@@ -47,6 +53,7 @@ class RunResult:
     """Everything one workload run measured, before it is reported."""
 
     setup_s: list[float] = field(default_factory=list)
+    warmup_s: float = 0.0
     walls: list[float] = field(default_factory=list)
     epochs: list[float] = field(default_factory=list)
     docs: int = 0
@@ -110,28 +117,51 @@ class Workload:
         self.tracer = tracer
         self.shape = SHAPES[name]
         self.inputs = f"{work}/inputs"
+        self.warmup_inputs = f"{work}/warmup"
         self.golden = None
-        self.stream_outputs: list = []  # committed assignments of each pass
+        self.reference = None  # stream_ingest: dedup_pages' (id, cluster_id) set
 
     def generate_inputs(self, res: RunResult) -> None:
         """Write the inputs SETUP_REPEATS times; the repeats give the
-        median generation time, the last copy is the one the run reads."""
+        median generation time, the last copy is the one the run reads.
+        The warm-up corpus comes from the same seed."""
         for _ in range(SETUP_REPEATS):
             t0 = time.perf_counter()
             res.docs = generate(self.seed, self.shape, self.inputs)
             res.setup_s.append(time.perf_counter() - t0)
+        generate(self.seed, WARMUP_SHAPES[self.name], self.warmup_inputs)
         self.golden = read_table(f"{self.inputs}/golden.parquet")
 
-    def run(self, spark, seconds: float, res: RunResult) -> None:
+    def warm_up(self, spark, res: RunResult) -> None:
+        """Untimed set-up work: the unit once over the warm-up corpus, which
+        takes the session's start-up costs; for stream_ingest also the
+        batch reference (`dedup_pages` over the stream's docs) that every
+        timed pass is compared with."""
+        t0 = time.perf_counter()
+        scratch, tracer, self.tracer = RunResult(), self.tracer, None
+        if self.shape.n_segments:
+            from fuzzycat_spark.operators.dedup import dedup_pages
+
+            self._stream_pass(spark, f"{self.work}/warmup", scratch, self.warmup_inputs)
+            pages = spark.read.parquet(f"{self.inputs}/segments").drop("seg")
+            _, ref = dedup_pages(pages, self.cfg)
+            self.reference = {(r["id"], r["cluster_id"]) for r in ref.collect()}
+        else:
+            self._batch_run(spark, f"{self.work}/warmup", scratch, self.warmup_inputs)
+        self.tracer = tracer
+        res.warmup_s = time.perf_counter() - t0
+
+    def run(self, spark, seconds: float, res: RunResult, max_reps: int = 0) -> None:
         """Repeat the workload's unit of work until `seconds` have passed
-        (at least once)."""
+        (at least once, at most `max_reps` times when that is set), and
+        check each unit's output."""
         unit = self._stream_pass if self.shape.n_segments else self._batch_run
         deadline = time.perf_counter() + seconds
         i = 0
         while True:
             res.attempted += 1
             try:
-                unit(spark, f"{self.work}/run{i}", res)
+                self._check(unit(spark, f"{self.work}/run{i}", res, self.inputs), res)
             except CheckFailed as exc:
                 res.failed += 1
                 res.errors.append(f"check: {exc}")
@@ -139,20 +169,26 @@ class Workload:
                 res.failed += 1
                 res.errors.append(f"run: {type(exc).__name__}: {exc}")
             i += 1
-            if time.perf_counter() >= deadline:
+            if time.perf_counter() >= deadline or i == max_reps:
                 break
 
-    def _score(self, assign, res: RunResult) -> None:
+    def _check(self, assign, res: RunResult) -> None:
+        """Coverage and pair scores; for stream_ingest, equality with the
+        batch reference."""
         r, p = check_assignments(assign, self.golden)
         res.recall.append(r)
         res.precision.append(p)
+        if self.reference is not None and \
+                set(zip(assign["id"], assign["cluster_id"])) != self.reference:
+            raise CheckFailed("incremental assignments differ from dedup_pages")
 
-    def _batch_run(self, spark, out: str, res: RunResult) -> None:
-        """dedup_pages over the corpus, assignments committed to parquet."""
+    def _batch_run(self, spark, out: str, res: RunResult, inputs: str):
+        """dedup_pages over the corpus, assignments committed to parquet;
+        returns them."""
         from fuzzycat_spark.operators.dedup import dedup_pages
 
         t0 = time.perf_counter()
-        pages = spark.read.parquet(f"{self.inputs}/pages")
+        pages = spark.read.parquet(f"{inputs}/pages")
         if self.tracer is not None:
             assign = self.tracer.traced_dedup(pages, self.cfg)
         else:
@@ -160,12 +196,12 @@ class Workload:
         assign.write.parquet(f"{out}/assignments")
         res.walls.append(time.perf_counter() - t0)
         res.epochs.append(res.walls[-1])
-        self._score(read_table(f"{out}/assignments"), res)
+        return read_table(f"{out}/assignments")
 
-    def _stream_pass(self, spark, state: str, res: RunResult) -> None:
+    def _stream_pass(self, spark, state: str, res: RunResult, inputs: str):
         """Each segment through incremental_dedup_batch(assign=True) into
-        fresh state, then one compact_state; `check_stream` compares the
-        committed assignments with the batch pipeline's."""
+        fresh state, then one compact_state; returns the committed
+        assignments."""
         from fuzzycat_spark.streaming.assignments import read_assignments
         from fuzzycat_spark.streaming.compaction import compact_state
         from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
@@ -174,32 +210,14 @@ class Workload:
         t0 = time.perf_counter()
         for k in range(self.shape.n_segments):
             te = time.perf_counter()
-            segment = spark.read.parquet(f"{self.inputs}/segments/seg={k}")
+            segment = spark.read.parquet(f"{inputs}/segments/seg={k}")
             incremental_dedup_batch(segment, index, pairs, self.cfg, assign=True)
             res.epochs.append(time.perf_counter() - te)
         compact_state(spark, index, pairs)
         res.walls.append(time.perf_counter() - t0)
         if self.tracer is not None:
             self.tracer.stream_state(state, pairs)
-        got = read_assignments(spark, index).toPandas()
-        self._score(got, res)
-        self.stream_outputs.append(got)
-
-    def check_stream(self, spark, res: RunResult) -> None:
-        """Each pass's incremental assignments must equal `dedup_pages` over
-        the same docs. The reference runs after the timed loop (and outside
-        any tracing), once per run."""
-        if not self.stream_outputs:
-            return
-        from fuzzycat_spark.operators.dedup import dedup_pages
-
-        pages = spark.read.parquet(f"{self.inputs}/segments").drop("seg")
-        _, ref = dedup_pages(pages, self.cfg)
-        want = {(r["id"], r["cluster_id"]) for r in ref.collect()}
-        for got in self.stream_outputs:
-            if set(zip(got["id"], got["cluster_id"])) != want:
-                res.failed += 1
-                res.errors.append("check: incremental assignments differ from dedup_pages")
+        return read_assignments(spark, index).toPandas()
 
 
 def median(xs: list[float]) -> float:
