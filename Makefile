@@ -2,14 +2,19 @@
 
 .PHONY: test oracle bench scaling dist submit-local clean
 
+# the tier-1 command of ROADMAP.md
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python tools/check_oracles.py /root/testdata/sf0.01
 
+# one seeded run of each benchmark workload (BENCHMARK.json)
+SEED ?= 1
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload web_crawl --seed $(SEED) --seconds 5
+	python3 perfbench/run.py --workload stream_ingest --seed $(SEED) --seconds 5
 
 scaling:
 	python tools/bench_scaling.py

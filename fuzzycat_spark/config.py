@@ -13,6 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_HEAP_MB = 32 << 10
 
 # scan-parallelism cache for fan_out_scan: (applicationId, key) -> n_parts.
 # Physical-planning a frame to count its scan partitions costs ~100 ms; a
@@ -98,6 +99,18 @@ def _scratch_dir() -> str:
     return tempfile.gettempdir()
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """`spark.driver.memory` when SPARK_GRAFT_DRIVER_MEM is unset: a quarter
+    of physical memory (the JVM's own MaxRAMPercentage default), at least
+    1g and at most 32g. In local mode the driver JVM also holds off-heap
+    shuffle and network buffers, and the Python workers live outside it,
+    so the other three quarters are their headroom: a fixed 32g heap on a
+    16 GB host let the JVM grow until the kernel OOM-killed it."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, min(MAX_DRIVER_HEAP_MB, (phys_bytes // 4) >> 20))}m"
+
+
 def get_spark(
     app_name: str = "fuzzycat-spark",
     cores: int | str = "*",
@@ -118,7 +131,10 @@ def get_spark(
         .appName(app_name)
         # local-mode driver hosts all executor state; the 1g default heap
         # OOMs once localCheckpoint blocks accumulate across CC iterations
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")

@@ -113,6 +113,32 @@ class DedupConfig:
     edge_statuses: tuple[str, ...] = field(default_factory=lambda: EDGE_STATUSES)
 
 
+# band id under which substring gram buckets keep their cumulative counts
+# in `Prior.sizes` (gram buckets are probe-joined, never pair-expanded)
+GRAM_BAND = "ssgram"
+
+
+@dataclass(frozen=True)
+class Prior:
+    """The committed state of earlier stream epochs: the prior input of
+    `dedup_stages`. Batch passes none, which is the one-epoch case.
+
+    - bands:    band rows (id, band_id, band_hash) of the approximate
+                strategies
+    - features: `prepare_pages` rows (with `_emb` for the embedding tier)
+    - grams:    substring k-gram index rows (id, gh)
+    - probes:   substring probe rows (id, gh0, slug)
+    - sizes:    cumulative per-bucket counts (band_id, band_hash, cap, n);
+                gram buckets under band id GRAM_BAND
+    """
+
+    bands: DataFrame | None = None
+    features: DataFrame | None = None
+    grams: DataFrame | None = None
+    probes: DataFrame | None = None
+    sizes: DataFrame | None = None
+
+
 def _deny(cfg: "DedupConfig") -> tuple[str, ...]:
     """Resolve cfg.denylist_keys (None -> the default web denylist)."""
     if cfg.denylist_keys is None:
@@ -273,9 +299,11 @@ def strategy_band_table(
 
 
 def _star_edges_for_key(
-    members: DataFrame, key: str, reason: str
+    members: DataFrame, key: str, reason: str, prior: DataFrame | None = None
 ) -> DataFrame:
-    """member→min-id-representative edges for one equality key column.
+    """member→representative edges for one equality key column: the min id
+    of the key's `prior` members (earlier stream epochs) when it has any,
+    else the min id of `members`. Edges are made for `members` only.
 
     groupBy + equi-join, NOT Window.partitionBy(key): the window form
     funnels an entire key group through one task — exactly the 10^6-copy
@@ -288,6 +316,11 @@ def _star_edges_for_key(
     per-family subplans it is.)
     """
     reps = members.groupBy(key).agg(F.min("id").alias("_rep"))
+    if prior is not None:
+        old = prior.groupBy(key).agg(F.min("id").alias("_old"))
+        reps = reps.join(old, on=key, how="left").select(
+            key, F.coalesce("_old", "_rep").alias("_rep")
+        )
     return (
         members.join(reps, on=key)
         .filter(F.col("id") != F.col("_rep"))
@@ -300,10 +333,13 @@ def _star_edges_for_key(
     )
 
 
-def star_edges(prep: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFrame | None:
+def star_edges(
+    prep: DataFrame, cfg: DedupConfig = DedupConfig(), prior: Prior | None = None
+) -> DataFrame | None:
     """(id_a, id_b, status, reason) star edges for the DETERMINISTIC
     key-equality strategies: every member of a content-hash / slug-key
-    group links to the group's min-id representative.
+    group links to the group's min-id representative — the min over the
+    prior feature rows when the key was seen in an earlier epoch.
 
     Key equality is transitive, so a group of n docs needs only n-1 edges
     for connected components to recover the full cluster — pair
@@ -321,35 +357,100 @@ def star_edges(prep: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFrame |
     docs fall to the pairwise cascade's ambiguous statuses, which never
     form edges).
     """
-    outs = []
-    if "exact" in cfg.strategies:
-        outs.append(
-            _star_edges_for_key(
-                prep.filter(F.col("ch").isNotNull()).select("id", "ch"),
-                "ch",
-                "CONTENT_HASH",
-            )
-        )
-    if "slug" in cfg.strategies:
-        from fuzzycat_spark.operators.verify import SHORT_TOKENS
+    from fuzzycat_spark.operators.verify import SHORT_TOKENS
 
-        members = prep.filter(
-            F.col("slug_key").isNotNull() & (F.col("n_tok") >= SHORT_TOKENS)
-        )
+    families = []
+    if "exact" in cfg.strategies:
+        families.append(("ch", "CONTENT_HASH", F.col("ch").isNotNull()))
+    if "slug" in cfg.strategies:
+        member = F.col("slug_key").isNotNull() & (F.col("n_tok") >= SHORT_TOKENS)
         deny = _deny(cfg)
         if deny:
             # denylisted slugs never star: a corpus full of "404 not
             # found" pages must not collapse into one SLUG_MATCH cluster
-            members = members.filter(~F.col("slug_key").isin(*deny))
-        outs.append(
-            _star_edges_for_key(members.select("id", "slug_key"), "slug_key", "SLUG_MATCH")
-        )
-    if not outs:
+            member = member & ~F.col("slug_key").isin(*deny)
+        families.append(("slug_key", "SLUG_MATCH", member))
+    if not families:
         return None
+    old = prior.features if prior is not None else None
+    outs = [
+        _star_edges_for_key(
+            prep.filter(member).select("id", key),
+            key,
+            reason,
+            None if old is None else old.filter(member).select("id", key),
+        )
+        for key, reason, member in families
+    ]
     out = outs[0]
     for t in outs[1:]:
         out = out.unionByName(t)
     return out
+
+
+def index_rows(
+    pages: DataFrame, prep: DataFrame, cfg: DedupConfig
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """(bands, grams): the candidate index rows of `pages` — the band table
+    of every band strategy (`strategy_band_table`), and the substring
+    k-gram rows (`substring_doc_grams`) when that strategy is on. A stream
+    epoch persists both as its index state."""
+    band_strategies = tuple(s for s in cfg.strategies if s != "substring")
+    bands = grams = None
+    if band_strategies:
+        bands = strategy_band_table(
+            prep, replace(cfg, strategies=band_strategies), pages=pages
+        )
+    if "substring" in cfg.strategies:
+        from fuzzycat_spark.operators.substring import substring_doc_grams
+
+        grams = substring_doc_grams(
+            pages, cfg.id_col, cfg.text_col, k=cfg.substring_k,
+            slug_mode=cfg.slug_mode,
+        )
+    return bands, grams
+
+
+def index_candidates(
+    bands: DataFrame | None,
+    grams: DataFrame | None,
+    cfg: DedupConfig,
+    prior: Prior | None = None,
+) -> DataFrame:
+    """(id_a, id_b) candidates from one epoch's index rows (`index_rows`):
+    bucket-capped pair expansion of the band table plus confirmed
+    substring containment, against the `prior` epochs' rows when given
+    (caps on cumulative sizes; only pairs with a new id)."""
+    p = prior or Prior()
+    sizes = p.sizes
+    pairs = None
+    if bands is not None:
+        if cfg.salt_hot:
+            from fuzzycat_spark.operators.lsh import salt_hot_buckets
+
+            bands = salt_hot_buckets(bands, "cap", cfg.salt_hot)
+        pairs = lsh_candidate_pairs(
+            bands, max_bucket_size="cap", prior_bands=p.bands, prior_sizes=sizes
+        )
+    if grams is not None:
+        from fuzzycat_spark.operators.substring import substring_pairs
+
+        ss = substring_pairs(
+            grams,
+            cfg.max_bucket_size,
+            prior_grams=p.grams,
+            prior_probes=p.probes,
+            prior_sizes=None if sizes is None else sizes.filter(
+                F.col("band_id") == GRAM_BAND
+            ).select(F.col("band_hash").cast("long").alias("gh"), "n"),
+        ).select(
+            F.least(F.col("id_in"), F.col("id_of")).alias("id_a"),
+            F.greatest(F.col("id_in"), F.col("id_of")).alias("id_b"),
+        )
+        pairs = ss.distinct() if pairs is None else pairs.unionByName(ss).distinct()
+    if pairs is None:
+        raise ValueError(f"no blocking strategies enabled: {cfg.strategies}")
+    return pairs
 
 
 def candidate_pairs(
@@ -372,35 +473,7 @@ def candidate_pairs(
             pages, cfg.id_col, cfg.text_col, slug_mode=cfg.slug_mode,
             with_token_hashes="simhash" in cfg.strategies,
         )
-    band_strategies = tuple(s for s in cfg.strategies if s != "substring")
-    pairs = None
-    if band_strategies:
-        bands = strategy_band_table(
-            prep, replace(cfg, strategies=band_strategies), pages=pages
-        )
-        if cfg.salt_hot:
-            from fuzzycat_spark.operators.lsh import salt_hot_buckets
-
-            bands = salt_hot_buckets(bands, "cap", cfg.salt_hot)
-        pairs = lsh_candidate_pairs(bands, max_bucket_size="cap")
-    if "substring" in cfg.strategies:
-        from fuzzycat_spark.operators.substring import exact_substring_pairs
-
-        ss = exact_substring_pairs(
-            pages,
-            cfg.id_col,
-            cfg.text_col,
-            k=cfg.substring_k,
-            max_bucket_size=cfg.max_bucket_size,
-            slug_mode=cfg.slug_mode,
-        ).select(
-            F.least(F.col("id_in"), F.col("id_of")).alias("id_a"),
-            F.greatest(F.col("id_in"), F.col("id_of")).alias("id_b"),
-        )
-        pairs = ss.distinct() if pairs is None else pairs.unionByName(ss).distinct()
-    if pairs is None:
-        raise ValueError(f"no blocking strategies enabled: {cfg.strategies}")
-    return pairs
+    return index_candidates(*index_rows(pages, prep, cfg), cfg)
 
 
 def dedup_stages(
@@ -408,14 +481,31 @@ def dedup_stages(
     cfg: DedupConfig,
     stage,
     cc_checkpointer=None,
+    prior: Prior | None = None,
 ) -> dict[str, DataFrame]:
-    """THE flagship dedup plan, parameterized over stage materialization —
-    the single source of truth shared by `dedup_pages` (ephemeral
-    checkpoints) and `plans.pipeline.run_dedup_pipeline` (named resumable
-    checkpoints). `stage(name, build)` must materialize `build()` and
-    return the re-read frame; `cc_checkpointer` optionally threads a
-    StageCheckpointer into the CC loop so its per-iteration tables land in
-    the resumable dir.
+    """THE dedup plan, parameterized over stage materialization and over
+    the committed state of earlier epochs — the single source of truth
+    shared by `dedup_pages` (ephemeral checkpoints),
+    `plans.pipeline.run_dedup_pipeline` (named resumable checkpoints) and
+    each epoch of `streaming.dedup_stream.incremental_dedup_batch`.
+    `stage(name, build)` must materialize `build()` and return the re-read
+    frame; `cc_checkpointer` optionally threads a StageCheckpointer into
+    the CC loop so its per-iteration tables land in the resumable dir.
+
+    `prior` is the committed state of a stream (`Prior`); batch passes
+    none and is the one-epoch case. Three steps read it, and each reduces
+    to its batch form when it is empty:
+    - star edges: a key seen before keeps its prior min-id representative,
+      and edges are made for the new ids only;
+    - capped pair expansion: caps apply to cumulative bucket sizes, and
+      only pairs with at least one new id are emitted;
+    - substring candidates: new probes join new and prior grams, prior
+      probes join new grams.
+    Verification reads the new feature rows plus the prior ones of the
+    candidates' ids. With a prior, the epoch's index rows also pass
+    through `stage("bands")` / `stage("grams")` so the caller can persist
+    them, and a caller that folds components itself may return None for
+    "assignments".
 
     Plan shape (see the stage comments below): one materialized narrow
     preparation feeds blocking AND verification; deterministic key-equality
@@ -426,9 +516,11 @@ def dedup_stages(
     through capped pair expansion + the verify cascade, with the embedding
     cosine tier ahead of the text rules when enabled.
 
-    Returns {"prepared", "candidates" (None when only key-equality
+    Returns {"prepared", "bands"/"grams" (the epoch's index rows, None for
+    strategies that have none), "candidates" (None when only key-equality
     strategies are enabled), "verified", "assignments"}.
     """
+    emb_on = "embedding" in cfg.strategies and cfg.embedding_col is not None
     # narrow projection: no html/text payload past here (SURVEY §4's
     # "shuffle only verify columns"); the simhash strategy additionally
     # fingerprints off the prep token hashes, so raw text is scanned once
@@ -437,30 +529,47 @@ def dedup_stages(
         lambda: prepare_pages(
             pages, cfg.id_col, cfg.text_col, slug_mode=cfg.slug_mode,
             with_token_hashes="simhash" in cfg.strategies,
+            emb_col=cfg.embedding_col if emb_on else None,
         ),
     )
-    stars = star_edges(prep, cfg)
+    stars = star_edges(prep, cfg, prior)
     near_cfg = replace(
         cfg,
         strategies=tuple(s for s in cfg.strategies if s not in ("exact", "slug")),
     )
-    cands = None
-    verified_near = None
+    bands = grams = cands = verified_near = None
     if near_cfg.strategies:
+        bands, grams = index_rows(pages, prep, near_cfg)
+        if prior is not None:
+            # a stream persists its index rows: one materialization feeds
+            # the candidates and the state writes
+            if bands is not None:
+                bands = stage("bands", lambda b=bands: b)
+            if grams is not None:
+                grams = stage("grams", lambda g=grams: g)
         # materialize candidates before the feature joins: with the lazy
         # window+join+distinct plan inline, the verify joins get planned
         # without row statistics and run ~5x slower
-        cands = stage("candidates", lambda: candidate_pairs(pages, near_cfg, prep=prep))
-        if "embedding" in cfg.strategies and cfg.embedding_col is not None:
+        cands = stage(
+            "candidates", lambda: index_candidates(bands, grams, near_cfg, prior)
+        )
+        feats = prep
+        if prior is not None and prior.features is not None:
+            # prior feature rows only for the ids that collided
+            hit = cands.select(F.col("id_a").alias("id")).unionByName(
+                cands.select(F.col("id_b").alias("id"))
+            )
+            feats = prep.unionByName(
+                prior.features.join(hit, on="id", how="left_semi")
+            )
+        if emb_on:
             # embedding tier BEFORE the text cascade: paraphrase dups have
             # dissimilar text by definition, so the text rules would
             # refuse them — cosine >= embedding_strong is the verdict,
             # and only the unresolved remainder pays the text joins
             from fuzzycat_spark.operators.knn import cosine_col
 
-            emb = pages.select(
-                F.col(cfg.id_col).alias("id"), F.col(cfg.embedding_col).alias("e")
-            )
+            emb = feats.select("id", F.col("_emb").alias("e"))
 
             def build_emb_pairs() -> DataFrame:
                 scored = (
@@ -490,10 +599,10 @@ def dedup_stages(
                 emb_pairs.select("id_a", "id_b"), on=["id_a", "id_b"], how="left_anti"
             )
             verified_near = verify_pairs(
-                rest, prep, denylist_keys=_deny(cfg)
+                rest, feats, denylist_keys=_deny(cfg)
             ).unionByName(emb_pairs)
         else:
-            verified_near = verify_pairs(cands, prep, denylist_keys=_deny(cfg))
+            verified_near = verify_pairs(cands, feats, denylist_keys=_deny(cfg))
     canon = None
     if cfg.canonical_col:
         from fuzzycat_spark.functions.urls import canonical_link_pairs
@@ -582,6 +691,8 @@ def dedup_stages(
     assignments = stage("assignments", build_assignments)
     return {
         "prepared": prep,
+        "bands": bands,
+        "grams": grams,
         "candidates": cands,
         "verified": verified,
         "assignments": assignments,

@@ -198,6 +198,8 @@ def bbit_band_table(
 def lsh_candidate_pairs(
     band_table: DataFrame,
     max_bucket_size: int | str | None = DEFAULT_MAX_BUCKET,
+    prior_bands: DataFrame | None = None,
+    prior_sizes: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (id_a, id_b) candidates from within-bucket pair expansion.
 
@@ -212,6 +214,13 @@ def lsh_candidate_pairs(
 
     max_bucket_size: int for a global cap, a column name (str) for a
     per-row cap carried in the band table, or None for no cap.
+
+    prior_bands / prior_sizes: the band rows (id, band_id, band_hash) and
+    cumulative per-bucket counts (band_id, band_hash, n) of earlier stream
+    epochs. The cap then applies to a bucket's cumulative size, and only
+    pairs with at least one id of `band_table` are emitted: the in-bucket
+    combinations of its ids plus their pairs with the prior members of the
+    buckets under the cap. A bucket over its cap never reads its prior rows.
     """
     b = band_table
     if max_bucket_size is not None:
@@ -221,7 +230,15 @@ def lsh_candidate_pairs(
             if isinstance(max_bucket_size, str)
             else F.lit(max_bucket_size)
         )
-        b = b.withColumn("_bs", F.count(F.lit(1)).over(w)).filter(
+        size = F.count(F.lit(1)).over(w)
+        if prior_sizes is not None:
+            b = b.join(
+                prior_sizes.select("band_id", "band_hash", F.col("n").alias("_prior_n")),
+                on=["band_id", "band_hash"],
+                how="left",
+            )
+            size = size + F.coalesce(F.col("_prior_n"), F.lit(0))
+        b = b.withColumn("_bs", size).filter(
             (F.col("_bs") <= cap) & (F.col("_bs") >= 2)
         )
     buckets = b.groupBy("band_id", "band_hash").agg(
@@ -229,11 +246,18 @@ def lsh_candidate_pairs(
     )
     if max_bucket_size is None:
         buckets = buckets.filter(F.size("ids") >= 2)
-    return (
-        buckets.select(F.explode(_pair_combos(F.col("ids"))).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    pairs = buckets.select(F.explode(_pair_combos(F.col("ids"))).alias("p")).select(
+        "p.id_a", "p.id_b"
     )
+    if prior_bands is not None:
+        old = prior_bands.select("band_id", "band_hash", F.col("id").alias("_old"))
+        pairs = pairs.unionByName(
+            b.join(old, on=["band_id", "band_hash"]).select(
+                F.least("id", "_old").alias("id_a"),
+                F.greatest("id", "_old").alias("id_b"),
+            )
+        )
+    return pairs.distinct()
 
 
 def salt_hot_buckets(

@@ -113,8 +113,28 @@ def exact_substring_pairs(
     Guaranteed-recall containment: probe = first k-gram, index = all
     k-grams, exact `contains` confirmation on the slugs.
     """
-    g = substring_doc_grams(docs, id_col, text_col, k, slug_mode)
+    return substring_pairs(
+        substring_doc_grams(docs, id_col, text_col, k, slug_mode), max_bucket_size
+    )
 
+
+def substring_pairs(
+    g: DataFrame,
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
+    prior_grams: DataFrame | None = None,
+    prior_probes: DataFrame | None = None,
+    prior_sizes: DataFrame | None = None,
+) -> DataFrame:
+    """(id_in, id_of) containment pairs over `substring_doc_grams` rows.
+
+    prior_grams (id, gh), prior_probes (id, gh0, slug) and prior_sizes
+    (gh, n) are the index rows, probe rows and cumulative gram-bucket
+    counts of earlier stream epochs. New probes then also join the prior
+    grams and prior probes join the new grams, so containment links in
+    both temporal orders; the cap applies to a bucket's cumulative size;
+    prior x prior never joins, so a pair surfaces in the epoch its newer
+    member arrives.
+    """
     # the gram join moves (id, int64) rows ONLY; slugs rejoin afterwards
     # for the (much smaller) surviving candidate set
     index = g.select(
@@ -122,23 +142,42 @@ def exact_substring_pairs(
         F.explode(F.col("grams")).alias("gh"),
     )
     if max_bucket_size is not None:
-        w = Window.partitionBy("gh")
+        size = F.count(F.lit(1)).over(Window.partitionBy("gh"))
+        if prior_sizes is not None:
+            index = index.join(
+                prior_sizes.select("gh", F.col("n").alias("_prior_n")), on="gh", how="left"
+            )
+            size = size + F.coalesce(F.col("_prior_n"), F.lit(0))
         index = (
-            index.withColumn("_bs", F.count(F.lit(1)).over(w))
+            index.withColumn("_bs", size)
             .filter(F.col("_bs") <= max_bucket_size)
-            .drop("_bs")
+            .select("id_of", "gh")
         )
     probe = g.select(
         F.col("id").alias("id_in"),
         F.col("gh0").alias("gh"),
     )
+    pairs = probe.join(index, on="gh")
+    if prior_grams is not None:
+        # a probe's first window is one of its own grams, so the capped
+        # index holds it exactly when the bucket is under the cap
+        cool = probe.join(index.select("gh"), on="gh", how="left_semi")
+        pairs = pairs.unionByName(
+            cool.join(prior_grams.select(F.col("id").alias("id_of"), "gh"), on="gh")
+        )
+    if prior_probes is not None:
+        pairs = pairs.unionByName(
+            prior_probes.select(F.col("id").alias("id_in"), F.col("gh0").alias("gh"))
+            .join(index, on="gh")
+        )
     cands = (
-        probe.join(index, on="gh")
-        .filter(F.col("id_in") != F.col("id_of"))
+        pairs.filter(F.col("id_in") != F.col("id_of"))
         .select("id_in", "id_of")
         .distinct()
     )
     slugs = g.select("id", "slug")
+    if prior_probes is not None:
+        slugs = slugs.unionByName(prior_probes.select("id", "slug"))
     return (
         cands.join(slugs.select(F.col("id").alias("id_in"), F.col("slug").alias("_s_in")), on="id_in")
         .join(slugs.select(F.col("id").alias("id_of"), F.col("slug").alias("_s_of")), on="id_of")

@@ -72,6 +72,7 @@ def prepare_pages(
     text_col: str = "text",
     slug_mode: str = "ascii",
     with_token_hashes: bool = False,
+    emb_col: str | None = None,
 ) -> DataFrame:
     """Single-stage materialized document preparation shared by blocking
     and verification: scan → slug/tokens → shingles/tokset → hashed forms,
@@ -88,6 +89,9 @@ def prepare_pages(
     forms (set intersections are hash-invariant, equality becomes key
     equality), so at 100 TB the checkpoint and every downstream shuffle
     move int64 arrays and md5 keys, never tokens or shingles.
+
+    `emb_col` carries an embedding column through as `_emb`, so the
+    embedding tier scores candidates from the feature rows.
     """
     lang = (
         F.col("lang") if "lang" in df.columns else F.lit(None).cast("string")
@@ -96,7 +100,9 @@ def prepare_pages(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("_text"),
         lang.alias("lang"),
+        *([F.col(emb_col).alias("_emb")] if emb_col else []),
     )
+    carry = ["id", "_text", "lang"] + (["_emb"] if emb_col else [])
     # barrier 1: slug evaluated once. slug_mode="ascii" (default) stays
     # pure-Catalyst; "unicode"/"auto" opt into the full NFKD/category
     # slugifier (space-preserving pandas UDF) so non-Latin corpora key on
@@ -108,7 +114,7 @@ def prepare_pages(
     slug_expr = slug_for_mode(F.col("_text"), slug_mode)
     s1 = _gen_barrier(
         base,
-        ["id", "_text", "lang"],
+        carry,
         F.struct(slug_expr.alias("slug")),
     )
     # barrier 2: token array from the slug attribute
@@ -117,7 +123,7 @@ def prepare_pages(
     ).otherwise(F.split(F.col("slug"), " "))
     s2 = _gen_barrier(
         s1,
-        ["id", "_text", "lang", "slug"],
+        [*carry, "slug"],
         F.struct(toks_expr.alias("toks")),
     )
     if slug_mode in ("unicode", "auto"):
@@ -131,13 +137,13 @@ def prepare_pages(
 
         s2 = _gen_barrier(
             s2.withColumnRenamed("toks", "_rawtoks"),
-            ["id", "_text", "lang", "slug"],
+            [*carry, "slug"],
             F.struct(expand_cjk_bigrams(F.col("_rawtoks")).alias("toks")),
         )
     # barrier 3: shingles/tokset from the token attribute
     s3 = _gen_barrier(
         s2,
-        ["id", "_text", "lang", "slug", "toks"],
+        [*carry, "slug", "toks"],
         F.struct(
             word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles"),
             F.array_distinct(F.col("toks")).alias("tokset"),
@@ -183,6 +189,8 @@ def prepare_pages(
         from fuzzycat_spark.functions.hashing import token_hashes32
 
         cols.append(token_hashes32(F.col("toks")).alias("tok_h32"))
+    if emb_col:
+        cols.append(F.col("_emb"))
     return materialize(s3.select(*cols), "prep_features")
 
 

@@ -8,45 +8,46 @@ module is the Spark-native version of that incremental story:
 - `streaming_exact_dedup`: readStream → watermarked dropDuplicates on the
   content hash — exact dups within the watermark horizon never reach the
   sink twice.
-- `incremental_dedup_batch` (used via foreachBatch): each micro-batch is
-  blocked/verified against BOTH itself and the accumulated band index
-  (stream-static join), then appends its own band rows to the index —
-  the grow-only index mirrors the reference's ES candidate store.
+- `incremental_dedup_batch` (used via foreachBatch): each micro-batch runs
+  through the ONE dedup plan, `operators.dedup.dedup_stages`, with the
+  committed state of earlier epochs as its prior input (`Prior`) — the
+  probe-against-store with a single code path. Batch `dedup_pages` is the
+  one-epoch case of the same plan, so stream == batch holds by
+  construction rather than by a second copy kept in step.
 
-Strategy scope: every band strategy the batch pipeline supports — exact,
-slug, minhash, simhash, winnow, nysiis, and embedding with the
-DETERMINISTIC hyperplane index (seeded planes hash identically across
-epochs, so historical buckets stay joinable) — plus substring containment
-via a per-epoch k-gram index (below). embedding_index="ivf" is refused
-loudly: per-batch k-means centroids are not stable across epochs, so IVF
-cell ids written in epoch N would be meaningless against epoch N+1's
-(batch users get IVF; streams use hyperplane). A stream's DedupConfig
+Strategy scope: what `dedup_stages` runs, with the prior read in three
+places: key-equality stars keep a key's historical min-id representative;
+the capped pair expansion caps on cumulative bucket sizes and emits only
+pairs with a new id; substring probes join new and historical grams in
+both temporal orders. Options whose result depends on the whole corpus at
+once are refused loudly: embedding_index="ivf" (per-batch k-means
+centroids are not stable across epochs — streams use the seeded
+hyperplane index), salt_hot and canonical_col. A stream's DedupConfig
 must not change over its lifetime — the embedding column in particular is
 persisted into the feature state, and enabling it mid-stream fails loudly.
 
 State layout (all object-store-safe: existence = try-read, never
-os.path):
-- `<index>/epoch=N/`          band rows (id, band_id, band_hash),
-                              sub-partitioned by band_id so cross-joins
-                              prune partitions
+os.path); each table is one field of the prior:
+- `<index>/epoch=N/`          band rows (id, band_id, band_hash) of the
+                              approximate strategies, sub-partitioned by
+                              band_id (`Prior.bands`)
 - `<index>_features/epoch=N/` per-id verify features (hashed forms only;
-                              plus the embedding vector when the embedding
-                              strategy is enabled — the cosine tier needs
-                              historical vectors)
-- `<index>_ssgrams/epoch=N/`  substring k-gram index rows (id, gh int64) —
-                              the distributed suffix-array analog, epoch-
-                              partitioned like the band index
+                              plus `_emb` when the embedding strategy is
+                              enabled): verification and the cosine tier
+                              of historical docs, and the key-equality
+                              representatives (`Prior.features`)
+- `<index>_ssgrams/epoch=N/`  substring k-gram index rows (id, gh)
+                              (`Prior.grams`)
 - `<index>_ssmeta/epoch=N/`   substring probe rows (id, gh0, slug): the
                               first-window hash plus the normalized slug
-                              for the exact containment confirmation (the
-                              one state table holding strings — the same
-                              price the batch operator pays when it joins
-                              slugs back for surviving candidates)
-- `<index>_sizes/epoch=N/`    cumulative per-bucket counts SNAPSHOT — the
-                              hot-band guard: buckets whose TOTAL size
-                              (history + this batch) exceeds the cap are
-                              excluded from the cross join
-- `<pairs>/epoch=N/`          the verified-pair sink
+                              for the exact containment confirmation
+                              (`Prior.probes`)
+- `<index>_sizes/epoch=N/`    cumulative per-bucket counts SNAPSHOT, gram
+                              buckets under band id "ssgram" — the caps
+                              apply to these, so a bucket grown hot never
+                              reads its historical rows (`Prior.sizes`)
+- `<pairs>/epoch=N/`          the verified-pair sink (the plan's
+                              "verified" stage)
 - `<index>_sizes/_CURRENT`    the commit pointer: the highest epoch whose
                               writes ALL completed
 
@@ -66,14 +67,28 @@ pure streaming operators cannot express.
 
 from __future__ import annotations
 
+import logging
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fuzzycat_spark.functions.hashing import content_hash
-from fuzzycat_spark.operators.dedup import DedupConfig, strategy_band_table
-from fuzzycat_spark.operators.lsh import lsh_candidate_pairs
-from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs
+from fuzzycat_spark.operators.dedup import (
+    GRAM_BAND,
+    HARD_STAGES,
+    DedupConfig,
+    Prior,
+    dedup_stages,
+)
 from fuzzycat_spark.plans.checkpoint import materialize
+
+# not used here: perfbench/tracing.py looks these names up on this module
+from fuzzycat_spark.operators.dedup import strategy_band_table  # noqa: F401
+from fuzzycat_spark.operators.lsh import lsh_candidate_pairs  # noqa: F401
+from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs  # noqa: F401
+
+logger = logging.getLogger(__name__)
 
 
 def streaming_exact_dedup(
@@ -96,13 +111,18 @@ def streaming_exact_dedup(
 
 
 def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Object-store-safe existence probe: attempt the read and treat an
-    unreadable/absent path as no table. `os.path.exists` is wrong for
-    s3a://-style URIs; the catalog/read attempt is the portable check."""
+    """Object-store-safe existence probe: attempt the read and treat a path
+    that does not exist as no table. `os.path.exists` is wrong for
+    s3a://-style URIs; the read attempt is the portable check. Any other
+    failure raises: reading an unreadable committed table as empty history
+    would silently drop the idempotency guard and the cross-epoch
+    candidates."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def _pointer_path(sizes_path: str) -> str:
@@ -141,8 +161,10 @@ def _commit_pointer(index_path: str, epoch: int) -> None:
 def _read_state(
     spark: SparkSession, parent: str, upto_epoch: int | None
 ) -> DataFrame | None:
-    """Read a per-epoch state table, keeping only COMMITTED epochs (a
-    crashed attempt's epoch dir is present but not pointed to).
+    """Read a per-epoch state table, keeping only COMMITTED epochs: the
+    epoch dirs are listed and only those up to the pointer are read, so a
+    crashed attempt's dir (present but not pointed to, possibly holding
+    nothing but a `_temporary` dir) is never touched.
 
     Compaction-aware (streaming/compaction.py): if the table carries a
     base pointer, the view is base(gen) ∪ epochs in (base_upto, committed]
@@ -152,20 +174,20 @@ def _read_state(
     discovery never sees it."""
     if upto_epoch is None:
         return None
-    from fuzzycat_spark.streaming.compaction import base_pointer
+    from fuzzycat_spark.streaming.compaction import _epoch_dirs, base_pointer
 
     ptr = base_pointer(parent)
-    tail = try_read_parquet(spark, parent)
+    after = -1 if ptr is None else ptr[1]
+    dirs = [f"{parent}/{d}" for e, d in _epoch_dirs(parent) if after < e <= upto_epoch]
+    tail = (
+        spark.read.option("basePath", parent).parquet(*dirs).drop("epoch")
+        if dirs
+        else None
+    )
     if ptr is None:
-        if tail is None:
-            return None
-        return tail.filter(F.col("epoch") <= upto_epoch).drop("epoch")
+        return tail
     gen, base_upto = ptr
     base = try_read_parquet(spark, f"{parent}/_base/gen={gen}")
-    if tail is not None:
-        tail = tail.filter(
-            (F.col("epoch") > base_upto) & (F.col("epoch") <= upto_epoch)
-        ).drop("epoch")
     if base is None:
         # A base pointer without a readable gen dir means compacted
         # history is GONE (partial copy of the state tree, manual
@@ -186,6 +208,67 @@ def read_pairs(spark: SparkSession, pairs_path: str, index_path: str) -> DataFra
     return _read_state(spark, pairs_path, committed_epoch(index_path))
 
 
+def _check_incremental(cfg: DedupConfig) -> None:
+    """Refuse the options whose result depends on the whole corpus at once,
+    which an epoch never sees."""
+    if "embedding" in cfg.strategies and cfg.embedding_index != "hyperplane":
+        raise ValueError(
+            "incremental dedup supports embedding_index='hyperplane' only: "
+            "seeded hyperplanes hash identically across epochs, but IVF "
+            "centroids are fit per batch, so cell ids written in one epoch "
+            "would not match the next epoch's — the grow-only index would "
+            "silently stop linking cross-batch embedding dups. Use "
+            "hyperplane for streams (IVF stays a batch-pipeline index)."
+        )
+    if cfg.salt_hot:
+        raise ValueError(
+            "incremental dedup does not support salt_hot: a bucket's salted "
+            "shards depend on its cumulative size, so rows indexed before it "
+            "grew hot would sit under the unsalted key"
+        )
+    if cfg.canonical_col:
+        raise ValueError(
+            "incremental dedup does not support canonical_col: a canonical "
+            "href resolves against the page urls of the whole corpus"
+        )
+
+
+def _cumulative_sizes(
+    spark: SparkSession,
+    bands: DataFrame | None,
+    grams: DataFrame | None,
+    cfg: DedupConfig,
+    prior: DataFrame | None,
+) -> DataFrame:
+    """The epoch's per-bucket count snapshot: the committed one plus this
+    epoch's band and substring gram buckets."""
+    parts = [] if prior is None else [prior]
+    if bands is not None:
+        parts.append(
+            bands.groupBy("band_id", "band_hash", "cap").agg(F.count(F.lit(1)).alias("n"))
+        )
+    if grams is not None:
+        parts.append(
+            grams.select(F.explode("grams").alias("gh"))
+            .groupBy("gh")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.lit(GRAM_BAND).alias("band_id"),
+                F.col("gh").cast("string").alias("band_hash"),
+                F.lit(cfg.max_bucket_size).alias("cap"),
+                "n",
+            )
+        )
+    if not parts:
+        return spark.createDataFrame([], "band_id string, band_hash string, cap int, n bigint")
+    if len(parts) == 1:
+        return parts[0]
+    out = parts[0]
+    for t in parts[1:]:
+        out = out.unionByName(t)
+    return out.groupBy("band_id", "band_hash", "cap").agg(F.sum("n").alias("n"))
+
+
 def incremental_dedup_batch(
     batch: DataFrame,
     index_path: str,
@@ -194,23 +277,18 @@ def incremental_dedup_batch(
     epoch_id: int | None = None,
     assign: bool = True,
 ) -> None:
-    """foreachBatch body: verify `batch` against itself + the accumulated
-    index, append verified pairs, then extend the index.
+    """foreachBatch body: run `batch` through the dedup plan
+    (`operators.dedup.dedup_stages`) with the committed state as its prior
+    input, write the epoch's state, then commit it.
 
-    The index persists ALL strategy band rows (exact hash, slug key,
-    MinHash bands), so cross-batch exact and slug dups link through the
-    same stream-static join as LSH collisions — the reference's
-    probe-vs-store search (`matching.py:20-181`) with one code path.
-
-    Skew/size discipline per batch:
-    - re-ingested ids are dropped before any work (idempotent re-delivery
-      neither duplicates state nor re-verifies old pairs)
-    - the hot-band guard uses CUMULATIVE bucket sizes (a tiny side table,
-      one row per distinct bucket) rather than re-scanning the whole index
-    - historical features are semi-joined down to the ids that actually
-      collided before the verify join
-    - superseded per-batch materializations are pruned (keep_last) so a
-      long-running stream doesn't grow local disk without bound
+    Only the stream-specific steps live here:
+    - the replay guard (a committed epoch never re-runs) and the
+      idempotency filter (re-delivered ids are dropped before any work);
+    - the committed-state reads that make up the prior;
+    - `update_assignments`, which folds the epoch's pairs into the label
+      state in place of the plan's batch connected components;
+    - the per-epoch overwrite writes, the manifest, and the pointer swap
+      last.
     """
     spark = batch.sparkSession
     feat_path = index_path + "_features"
@@ -241,9 +319,7 @@ def incremental_dedup_batch(
         # replay has none; a fresh-restart batch with new data does, and
         # must fail loudly so the operator re-runs with either the
         # original checkpoint_dir or fresh state paths.
-        import logging
-
-        logging.getLogger(__name__).warning(
+        logger.warning(
             "incremental_dedup_batch: skipping epoch %d (already committed "
             "through epoch %d) — verifying the skipped batch carries no "
             "unseen ids",
@@ -269,21 +345,19 @@ def incremental_dedup_batch(
             )
         return
 
-    emb_enabled = "embedding" in cfg.strategies
-    if emb_enabled and cfg.embedding_index != "hyperplane":
-        raise ValueError(
-            "incremental dedup supports embedding_index='hyperplane' only: "
-            "seeded hyperplanes hash identically across epochs, but IVF "
-            "centroids are fit per batch, so cell ids written in one epoch "
-            "would not match the next epoch's — the grow-only index would "
-            "silently stop linking cross-batch embedding dups. Use "
-            "hyperplane for streams (IVF stays a batch-pipeline index)."
-        )
+    _check_incremental(cfg)
     batch = materialize(batch, "stream_batch", keep_last=2)
     feat_hist = _read_state(spark, feat_path, committed)
     if feat_hist is not None:
+        if "embedding" in cfg.strategies and "_emb" not in feat_hist.columns:
+            raise ValueError(
+                "the committed feature state carries no embedding column: "
+                "this stream's earlier epochs ran WITHOUT the embedding "
+                "strategy. A stream's DedupConfig must not change over its "
+                "lifetime — start fresh state paths to enable embeddings."
+            )
         # idempotency guard: drop ids the index already carries BEFORE any
-        # feature/band/gram work — every strategy below sees only new docs
+        # feature/band/gram work — every strategy sees only new docs
         batch = materialize(
             batch.join(
                 feat_hist.select(F.col("id").alias(cfg.id_col)),
@@ -293,360 +367,77 @@ def incremental_dedup_batch(
             "stream_batch_new",
             keep_last=2,
         )
-    prep = prepare_pages(
-        batch, cfg.id_col, cfg.text_col, slug_mode=cfg.slug_mode,
-        with_token_hashes="simhash" in cfg.strategies,
-    )
-    if emb_enabled:
-        if cfg.embedding_col is None or cfg.embedding_dim is None:
-            raise ValueError(
-                "embedding strategy needs cfg.embedding_col and cfg.embedding_dim"
-            )
-        if feat_hist is not None and "_emb" not in feat_hist.columns:
-            raise ValueError(
-                "the committed feature state carries no embedding column: "
-                "this stream's earlier epochs ran WITHOUT the embedding "
-                "strategy. A stream's DedupConfig must not change over its "
-                "lifetime — start fresh state paths to enable embeddings."
-            )
-        # persist the vector alongside the hashed features: the cosine
-        # tier must score candidates against HISTORICAL docs' embeddings
-        prep = materialize(
-            prep.join(
-                batch.select(
-                    F.col(cfg.id_col).alias("id"),
-                    F.col(cfg.embedding_col).alias("_emb"),
-                ),
-                on="id",
-                how="left",
-            ),
-            "stream_prep_emb",
-            keep_last=2,
-        )
-
-    band_strategies = tuple(s for s in cfg.strategies if s != "substring")
-    if band_strategies:
-        from dataclasses import replace
-
-        new_bands = materialize(
-            strategy_band_table(
-                prep, replace(cfg, strategies=band_strategies), pages=batch
-            ),
-            "stream_bands",
-            keep_last=2,
-        )
-    else:
-        # substring-only config: no band strategies, empty band table with
-        # the right schema so the shared sizes/star/cross plumbing is a no-op
-        new_bands = prep.select(
-            "id",
-            F.lit("x").alias("band_id"),
-            F.lit("x").alias("band_hash"),
-            F.lit(0).alias("cap"),
-        ).limit(0)
-    # deterministic key-equality bands (exact hash, slug) link via star
-    # edges — same O(n) no-cap design as the batch pipeline (see
-    # operators/dedup.star_edges): each new member links to the band's
-    # representative (the historical min id if the band was seen before,
-    # else the batch-local min), so boilerplate mega-clusters stay fully
-    # connected across batches without ever joining member x member.
-    _KEY_BANDS = ("exact", "slug")
-    # slug stars honor the cascade's length screen (short/empty docs fall
-    # to ambiguous, never an edge) — drop their slug rows before they can
-    # reach the index or a star (mirrors batch star_edges)
-    from fuzzycat_spark.operators.verify import SHORT_TOKENS
-
-    short_ids = prep.filter(F.col("n_tok") < SHORT_TOKENS).select("id")
-    new_bands = new_bands.join(
-        short_ids.withColumn("_short_slug", F.lit(True)),
-        on="id",
-        how="left",
-    ).filter(
-        ~((F.col("band_id") == "slug") & F.col("_short_slug").isNotNull())
-    ).drop("_short_slug")
-    new_key = new_bands.filter(F.col("band_id").isin(*_KEY_BANDS))
-    new_near = new_bands.filter(~F.col("band_id").isin(*_KEY_BANDS))
-
-    ss = None
+    # the index tables of the strategies this config runs
+    index = grams = probes = None
+    if set(cfg.strategies) - {"exact", "slug", "substring"}:
+        index = _read_state(spark, index_path, committed)
     if "substring" in cfg.strategies:
-        # substring containment state: the per-doc k-gram rows (index
-        # side) and (first-window hash, slug) probes — the SAME quantities
-        # the batch operator derives, persisted per epoch so containment
-        # links across batches in both directions (new-in-old via
-        # new-probe x old-index, old-in-new via old-probe x new-index)
-        from fuzzycat_spark.operators.substring import substring_doc_grams
-
-        gdoc = materialize(
-            substring_doc_grams(
-                batch, cfg.id_col, cfg.text_col, k=cfg.substring_k,
-                slug_mode=cfg.slug_mode,
-            ),
-            "stream_ssdoc",
-            keep_last=2,
-        )
-        ss = (
-            gdoc.select("id", F.explode("grams").alias("gh")),
-            gdoc.select("id", "gh0", "slug"),
-        )
-
-    # cumulative per-bucket sizes: old + this batch's contribution
-    new_sizes = new_bands.groupBy("band_id", "band_hash", "cap").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    if ss is not None:
-        # substring gram buckets ride the same cumulative-size/hot-guard
-        # machinery under the reserved 'ssgram' band id (they are NEVER
-        # pair-expanded like bands — only probe-joined below)
-        new_sizes = new_sizes.unionByName(
-            ss[0]
-            .groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.lit("ssgram").alias("band_id"),
-                F.col("gh").cast("string").alias("band_hash"),
-                F.lit(cfg.max_bucket_size).alias("cap"),
-                "n",
-            )
-        )
-    old_sizes = (
-        try_read_parquet(spark, f"{sizes_path}/epoch={committed}")
-        if committed is not None
-        else None
-    )
-    if old_sizes is not None:
-        new_sizes = (
-            new_sizes.unionByName(old_sizes)
-            .groupBy("band_id", "band_hash", "cap")
-            .agg(F.sum("n").alias("n"))
-        )
-    sizes = materialize(new_sizes, "stream_sizes", keep_last=2)
-    hot = sizes.filter(F.col("n") > F.col("cap")).select("band_id", "band_hash")
-
-    # within-batch candidates for APPROXIMATE bands only (single-shuffle
-    # capped pair expansion); key bands link through stars below
-    cands = lsh_candidate_pairs(new_near, max_bucket_size="cap")
-
-    # star edges for the key bands: rep = historical min id for the band
-    # if present, else the batch-local min
-    index = _read_state(spark, index_path, committed)
-    from pyspark.sql.window import Window
-
-    wb = Window.partitionBy("band_id", "band_hash")
-    key_m = new_key.withColumn("_newrep", F.min("id").over(wb))
-    if index is not None:
-        hist_reps = (
-            index.filter(F.col("band_id").isin(*_KEY_BANDS))
-            .groupBy("band_id", "band_hash")
-            .agg(F.min("id").alias("_histrep"))
-        )
-        key_m = key_m.join(hist_reps, on=["band_id", "band_hash"], how="left")
-    else:
-        key_m = key_m.withColumn("_histrep", F.lit(None).cast("string"))
-    star_pairs = (
-        key_m.withColumn("_rep", F.coalesce("_histrep", "_newrep"))
-        .filter(F.col("id") != F.col("_rep"))
-        .select(
-            F.least("_rep", "id").alias("id_a"),
-            F.greatest("_rep", "id").alias("id_b"),
-            F.when(F.col("band_id") == "exact", F.lit("CONTENT_HASH"))
-            .otherwise(F.lit("SLUG_MATCH"))
-            .alias("reason"),
-        )
-        .withColumn(
-            "_prio", F.when(F.col("reason") == "CONTENT_HASH", 0).otherwise(1)
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("id_a", "id_b").orderBy("_prio")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("id_a", "id_b", F.lit("exact").alias("status"), "reason")
+        grams = _read_state(spark, index_path + "_ssgrams", committed)
+        probes = _read_state(spark, index_path + "_ssmeta", committed)
+    prior = Prior(
+        # partition discovery types an all-digit band_id (minhash bands) as int
+        bands=None if index is None else index.withColumn(
+            "band_id", F.col("band_id").cast("string")
+        ),
+        features=feat_hist,
+        grams=grams,
+        probes=probes,
+        sizes=None if committed is None else try_read_parquet(
+            spark, f"{sizes_path}/epoch={committed}"
+        ),
     )
 
-    # cross candidates for approximate bands: new batch vs historical
-    # index, hot bands excluded on BOTH sides by cumulative size (the
-    # within-batch cap alone would let a band that grew hot across
-    # batches join quadratically)
-    if index is not None:
-        cool_new = new_near.join(hot, on=["band_id", "band_hash"], how="left_anti")
-        cool_old = index.filter(~F.col("band_id").isin(*_KEY_BANDS)).join(
-            hot, on=["band_id", "band_hash"], how="left_anti"
-        )
-        cross = (
-            cool_new.alias("n")
-            .join(cool_old.alias("o"), on=["band_id", "band_hash"])
-            .select(
-                F.least(F.col("n.id"), F.col("o.id")).alias("id_a"),
-                F.greatest(F.col("n.id"), F.col("o.id")).alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        cands = cands.unionByName(cross).distinct()
+    def stage(name: str, build) -> DataFrame | None:
+        if name == "assignments":
+            return None  # update_assignments folds the epoch's pairs below
+        if name == "verified":
+            # the epoch's pairs sink is the verified stage's checkpoint
+            build().write.mode("overwrite").parquet(f"{pairs_path}/epoch={epoch_id}")
+            return spark.read.parquet(f"{pairs_path}/epoch={epoch_id}")
+        df = build()
+        if name in HARD_STAGES or name in ("bands", "grams"):
+            df = materialize(df, f"stream_{name}", keep_last=2)
+        return df
 
-    if ss is not None:
-        # substring containment candidates: probe (first k-gram) joins the
-        # gram index, hot gram buckets excluded by CUMULATIVE size on both
-        # sides (in batch only the index side is capped, but a probe whose
-        # bucket is hot finds zero index rows there — excluding the probe
-        # is the same result, fewer shuffled rows). hist x hist never
-        # joins, so a pair is emitted exactly once: the epoch its newer
-        # member arrives.
-        new_grams, new_meta = ss
-        hot_gh = hot.filter(F.col("band_id") == "ssgram").select(
-            F.col("band_hash").cast("long").alias("gh")
-        )
-        hist_grams = _read_state(spark, index_path + "_ssgrams", committed)
-        hist_meta = _read_state(spark, index_path + "_ssmeta", committed)
-        cool_new_grams = new_grams.join(hot_gh, on="gh", how="left_anti")
-        index_side = cool_new_grams
-        if hist_grams is not None:
-            index_side = index_side.unionByName(
-                hist_grams.join(hot_gh, on="gh", how="left_anti")
-            )
-        probe_new = new_meta.select("id", F.col("gh0").alias("gh")).join(
-            hot_gh, on="gh", how="left_anti"
-        )
-        sspairs = (
-            probe_new.select(F.col("id").alias("id_in"), "gh")
-            .join(index_side.select(F.col("id").alias("id_of"), "gh"), on="gh")
-            .select("id_in", "id_of")
-        )
-        if hist_meta is not None:
-            probe_hist = hist_meta.select("id", F.col("gh0").alias("gh")).join(
-                hot_gh, on="gh", how="left_anti"
-            )
-            sspairs = sspairs.unionByName(
-                probe_hist.select(F.col("id").alias("id_in"), "gh")
-                .join(
-                    cool_new_grams.select(F.col("id").alias("id_of"), "gh"),
-                    on="gh",
-                )
-                .select("id_in", "id_of")
-            )
-        sspairs = sspairs.filter(F.col("id_in") != F.col("id_of")).distinct()
-        # exact confirmation over the persisted slugs (kills k-gram hash
-        # collisions and shared-prefix-only overlaps, exactly like batch)
-        slugs = new_meta.select("id", "slug")
-        if hist_meta is not None:
-            slugs = slugs.unionByName(hist_meta.select("id", "slug"))
-        confirmed = (
-            sspairs.join(
-                slugs.select(F.col("id").alias("id_in"), F.col("slug").alias("_s_in")),
-                on="id_in",
-            )
-            .join(
-                slugs.select(F.col("id").alias("id_of"), F.col("slug").alias("_s_of")),
-                on="id_of",
-            )
-            .filter(F.instr(F.col("_s_of"), F.col("_s_in")) > 0)
-            .select(
-                F.least(F.col("id_in"), F.col("id_of")).alias("id_a"),
-                F.greatest(F.col("id_in"), F.col("id_of")).alias("id_b"),
-            )
-        )
-        cands = cands.unionByName(confirmed).distinct()
-
-    cands = materialize(cands, "stream_cands", keep_last=2)
-
-    # features: this batch's + ONLY the historical rows that collided
-    feats = prep
-    if feat_hist is not None:
-        hit_ids = (
-            cands.select(F.col("id_a").alias("id"))
-            .unionByName(cands.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        feats = feats.unionByName(
-            feat_hist.join(hit_ids, on="id", how="left_semi")
-        )
-
-    # star-linked pairs bypass the cascade (key equality IS the verdict);
-    # drop them from the candidate set so a pair is emitted once
-    cands = cands.join(
-        star_pairs.select("id_a", "id_b"), on=["id_a", "id_b"], how="left_anti"
-    )
-    from fuzzycat_spark.operators.dedup import _deny
-
-    if emb_enabled:
-        # embedding cosine tier BEFORE the text cascade, mirroring the
-        # batch plan (dedup_stages): paraphrase dups have dissimilar text
-        # by definition, so cosine >= embedding_strong is the verdict and
-        # only the remainder pays the text joins. feats carries _emb for
-        # both this batch's and the colliding historical docs.
-        from fuzzycat_spark.operators.knn import cosine_col
-
-        embs = feats.select("id", "_emb")
-        scored = (
-            cands.join(
-                embs.select(F.col("id").alias("id_a"), F.col("_emb").alias("_ea")),
-                on="id_a",
-            )
-            .join(
-                embs.select(F.col("id").alias("id_b"), F.col("_emb").alias("_eb")),
-                on="id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.round(cosine_col(F.col("_ea"), F.col("_eb")), 9).alias("_cos"),
-            )
-        )
-        emb_pairs = materialize(
-            scored.filter(F.col("_cos") >= cfg.embedding_strong).select(
-                "id_a",
-                "id_b",
-                F.lit("strong").alias("status"),
-                F.lit("EMBEDDING_COSINE").alias("reason"),
-            ),
-            "stream_emb_pairs",
-            keep_last=2,
-        )
-        rest = cands.join(
-            emb_pairs.select("id_a", "id_b"), on=["id_a", "id_b"], how="left_anti"
-        )
-        verified = verify_pairs(rest, feats, denylist_keys=_deny(cfg)).unionByName(
-            emb_pairs
-        )
-    else:
-        verified = verify_pairs(cands, feats, denylist_keys=_deny(cfg))
-    # every write below is per-epoch + overwrite (idempotent under replay
-    # of the same epoch); the pointer swap LAST makes the epoch atomic —
+    out = dedup_stages(batch, cfg, stage, prior=prior)
+    prep, bands, grams = out["prepared"], out["bands"], out["grams"]
+    # every state write (the pairs sink in the "verified" stage included)
+    # is per-epoch + overwrite (idempotent under replay of the same
+    # epoch); the pointer swap LAST makes the epoch atomic —
     # a kill between any two writes leaves the pointer at the previous
     # epoch, and the replay overwrites the partial dirs
-    verified.unionByName(star_pairs).write.mode("overwrite").parquet(
-        f"{pairs_path}/epoch={epoch_id}"
-    )
     if assign:
         # incremental cluster assignments (streaming/assignments.py):
-        # fold this epoch's written pairs into the label state — reads
-        # the just-written sink (materialized; re-deriving the lazy plan
-        # would re-run blocking+verify), writes labels/remap BEFORE the
-        # pointer swap so assignments commit atomically with the epoch
+        # labels/remap are written BEFORE the pointer swap so assignments
+        # commit atomically with the epoch
         from fuzzycat_spark.streaming.assignments import update_assignments
 
         update_assignments(
             spark,
-            spark.read.parquet(f"{pairs_path}/epoch={epoch_id}"),
+            out["verified"],
             prep.select("id"),
             index_path,
             epoch_id,
             committed,
             edge_statuses=cfg.edge_statuses,
         )
-    new_bands.select("id", "band_id", "band_hash").write.partitionBy(
-        "band_id"
-    ).mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
+    # an empty partitioned write leaves no data file, and a later read of
+    # the index could not infer its schema
+    if bands is not None and not bands.isEmpty():
+        # one file per band per epoch, not one per input partition and band
+        bands.select("id", "band_id", "band_hash").repartition("band_id").write.partitionBy(
+            "band_id"
+        ).mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
     prep.write.mode("overwrite").parquet(f"{feat_path}/epoch={epoch_id}")
-    sizes.write.mode("overwrite").parquet(f"{sizes_path}/epoch={epoch_id}")
+    _cumulative_sizes(spark, bands, grams, cfg, prior.sizes).write.mode(
+        "overwrite"
+    ).parquet(f"{sizes_path}/epoch={epoch_id}")
     extra_tables: tuple[tuple[str, str], ...] = ()
-    if ss is not None:
-        ss[0].write.mode("overwrite").parquet(
-            f"{index_path}_ssgrams/epoch={epoch_id}"
-        )
-        ss[1].write.mode("overwrite").parquet(
+    if grams is not None:
+        grams.select("id", F.explode("grams").alias("gh")).write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}_ssgrams/epoch={epoch_id}")
+        grams.select("id", "gh0", "slug").write.mode("overwrite").parquet(
             f"{index_path}_ssmeta/epoch={epoch_id}"
         )
         extra_tables = (
@@ -673,8 +464,8 @@ def _write_epoch_manifest(
     counts per partition for each state table of the epoch — metadata
     reads only, zero Spark jobs, same mechanism as the batch pipeline's
     stage lineage (plans/checkpoint.partition_lineage). Written BEFORE the
-    pointer swap so a committed epoch always has its manifest; failures
-    degrade to an error record, never block the commit."""
+    pointer swap so a committed epoch always has its manifest; a failed
+    write is logged as a warning and never blocks the commit."""
     import json
 
     from fuzzycat_spark.plans.checkpoint import partition_lineage
@@ -691,14 +482,16 @@ def _write_epoch_manifest(
             )
         },
     }
+    path = f"{index_path}_sizes/_manifest_epoch_{epoch_id}.json"
     try:
-        fs, p = _resolve_fs(
-            f"{index_path}_sizes/_manifest_epoch_{epoch_id}.json"
-        )
+        fs, p = _resolve_fs(path)
         with fs.open_output_stream(p) as f:
             f.write(json.dumps(manifest, indent=1).encode("utf-8"))
-    except Exception:
-        pass  # lineage is telemetry — never fail the epoch over it
+    except Exception as e:
+        # lineage is telemetry: the epoch still commits, but says so
+        logger.warning(
+            "epoch %d manifest not written to %s: %r", epoch_id, path, e, exc_info=True
+        )
 
 
 def read_epoch_manifest(index_path: str, epoch_id: int) -> dict | None:

@@ -351,18 +351,20 @@ def test_incremental_equals_batch_dedup(spark):
         .collect()
     }
 
-    tmp = tempfile.mkdtemp(prefix="inc_eq_")
-    index, pairs_path = f"{tmp}/index", f"{tmp}/pairs"
-    for lo, hi in ((0, 3), (3, 6), (6, 8)):
-        b = spark.createDataFrame(rows[lo:hi], "url string, text string")
-        incremental_dedup_batch(b, index, pairs_path, cfg)
-    inc_pairs = {
-        (r.id_a, r.id_b)
-        for r in spark.read.parquet(pairs_path)
-        .filter("status in ('exact','strong')")
-        .collect()
-    }
-    assert inc_pairs == batch_pairs
+    # one segment (empty prior) and three (committed prior)
+    for splits in (((0, 8),), ((0, 3), (3, 6), (6, 8))):
+        tmp = tempfile.mkdtemp(prefix="inc_eq_")
+        index, pairs_path = f"{tmp}/index", f"{tmp}/pairs"
+        for lo, hi in splits:
+            b = spark.createDataFrame(rows[lo:hi], "url string, text string")
+            incremental_dedup_batch(b, index, pairs_path, cfg)
+        inc_pairs = {
+            (r.id_a, r.id_b)
+            for r in spark.read.parquet(pairs_path)
+            .filter("status in ('exact','strong')")
+            .collect()
+        }
+        assert inc_pairs == batch_pairs, splits
 
 
 def test_streaming_state_survives_mid_write_kill(spark, monkeypatch, tmp_path):
@@ -599,22 +601,24 @@ def test_incremental_equals_batch_winnow_substring(spark, tmp_path):
         .collect()
     }
 
-    base = str(tmp_path)
-    index, pairs_path = f"{base}/index", f"{base}/pairs"
-    for lo, hi in ((0, 3), (3, 6), (6, 8)):
-        b = spark.createDataFrame(rows[lo:hi], "url string, text string")
-        incremental_dedup_batch(b, index, pairs_path, cfg)
-    inc_pairs = {
-        (r.id_a, r.id_b, r.status)
-        for r in spark.read.parquet(pairs_path)
-        .filter("status in ('exact','strong')")
-        .collect()
-    }
-    assert inc_pairs == batch_pairs
-    # the containment pairs must actually be present (both directions)
-    flat = {(a, b) for a, b, _ in inc_pairs}
-    assert ("big_a", "s_in") in flat
-    assert ("s_in2", "s_of") in flat or ("s_of", "s_in2") in flat
+    # one segment (empty prior) and three (committed prior)
+    for splits in (((0, 8),), ((0, 3), (3, 6), (6, 8))):
+        base = f"{tmp_path}/{len(splits)}"
+        index, pairs_path = f"{base}/index", f"{base}/pairs"
+        for lo, hi in splits:
+            b = spark.createDataFrame(rows[lo:hi], "url string, text string")
+            incremental_dedup_batch(b, index, pairs_path, cfg)
+        inc_pairs = {
+            (r.id_a, r.id_b, r.status)
+            for r in spark.read.parquet(pairs_path)
+            .filter("status in ('exact','strong')")
+            .collect()
+        }
+        assert inc_pairs == batch_pairs, splits
+        # the containment pairs must actually be present (both directions)
+        flat = {(a, b) for a, b, _ in inc_pairs}
+        assert ("big_a", "s_in") in flat
+        assert ("s_in2", "s_of") in flat or ("s_of", "s_in2") in flat
 
 
 def test_incremental_embedding_cosine_links_across_batches(spark, tmp_path):
@@ -653,18 +657,20 @@ def test_incremental_embedding_cosine_links_across_batches(spark, tmp_path):
     }
     assert ("p1", "q1", "strong", "EMBEDDING_COSINE") in batch_pairs
 
-    base = str(tmp_path)
-    index, pairs_path = f"{base}/index", f"{base}/pairs"
-    for lo, hi in ((0, 1), (1, 3)):
-        b = spark.createDataFrame(rows[lo:hi], schema)
-        incremental_dedup_batch(b, index, pairs_path, cfg)
-    inc_pairs = {
-        (r.id_a, r.id_b, r.status, r.reason)
-        for r in spark.read.parquet(pairs_path)
-        .filter("status in ('exact','strong')")
-        .collect()
-    }
-    assert inc_pairs == batch_pairs
+    # one segment (empty prior) and two (committed prior)
+    for splits in (((0, 3),), ((0, 1), (1, 3))):
+        base = f"{tmp_path}/{len(splits)}"
+        index, pairs_path = f"{base}/index", f"{base}/pairs"
+        for lo, hi in splits:
+            b = spark.createDataFrame(rows[lo:hi], schema)
+            incremental_dedup_batch(b, index, pairs_path, cfg)
+        inc_pairs = {
+            (r.id_a, r.id_b, r.status, r.reason)
+            for r in spark.read.parquet(pairs_path)
+            .filter("status in ('exact','strong')")
+            .collect()
+        }
+        assert inc_pairs == batch_pairs, splits
 
 
 def test_incremental_embedding_ivf_fails_loudly(spark, tmp_path):
@@ -679,6 +685,18 @@ def test_incremental_embedding_ivf_fails_loudly(spark, tmp_path):
         "url string, text string, emb array<double>",
     )
     with pytest.raises(ValueError, match="hyperplane"):
+        incremental_dedup_batch(b, f"{tmp_path}/i", f"{tmp_path}/p", cfg)
+
+
+@pytest.mark.parametrize(
+    "opts", [{"salt_hot": 8}, {"canonical_col": "canonical"}], ids=["salt_hot", "canonical"]
+)
+def test_incremental_refuses_whole_corpus_options(spark, tmp_path, opts):
+    """Salted shards follow a bucket's cumulative size and canonical hrefs
+    resolve against every page url: neither is decidable per epoch."""
+    cfg = DedupConfig(**opts)
+    b = spark.createDataFrame([("u1", "text")], "url string, text string")
+    with pytest.raises(ValueError, match="does not support"):
         incremental_dedup_batch(b, f"{tmp_path}/i", f"{tmp_path}/p", cfg)
 
 

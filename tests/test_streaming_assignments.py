@@ -123,3 +123,30 @@ def test_crash_before_pointer_keeps_previous_assignments(spark, monkeypatch, tmp
     assert _assignment_set(read_assignments(spark, index)) == _assignment_set(
         dedup_pages(df, _CFG)[1]
     )
+
+
+def test_bucket_over_its_cap_only_cumulatively_matches_batch(spark, tmp_path):
+    """One name bucket holds four docs, two per epoch, against a cap of
+    three: each epoch alone fits under the cap, the union does not, so
+    batch drops the bucket and the stream must too — the epoch-1 pair
+    (d3, d4) may not link through it. d1/d2 still link through their
+    content-hash star. Checked with the corpus as one segment and as two."""
+    rows = [
+        ("d1", "alpha smith", _T1),
+        ("d2", "alpha smith", _T1),
+        ("d3", "alpha smith", _T2),
+        ("d4", "alpha smith", _T2 + " termzz termzy"),
+    ]
+    schema = "url string, name string, text string"
+    cfg = DedupConfig(
+        strategies=("exact", "nysiis"), name_col="name", max_bucket_size=3
+    )
+    batch = _assignment_set(dedup_pages(spark.createDataFrame(rows, schema), cfg)[1])
+    assert batch == {("d1", "d1"), ("d2", "d1"), ("d3", "d3"), ("d4", "d4")}
+    for splits in (((0, 4),), ((0, 2), (2, 4))):
+        state = f"{tmp_path}/{len(splits)}"
+        index, pairs = f"{state}/index", f"{state}/pairs"
+        for lo, hi in splits:
+            b = spark.createDataFrame(rows[lo:hi], schema)
+            incremental_dedup_batch(b, index, pairs, cfg)
+        assert _assignment_set(read_assignments(spark, index)) == batch, splits
