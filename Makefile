@@ -7,8 +7,10 @@ test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
+# the Spark-vs-DuckDB cases alone, in the tier-1 environment
 oracle:
-	python tools/check_oracles.py /root/testdata/sf0.01
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/test_oracles.py tests/test_corpus_oracles.py -q -p no:cacheprovider
 
 # one seeded run of each benchmark workload (BENCHMARK.json)
 SEED ?= 1

@@ -24,10 +24,8 @@ from fuzzycat_spark.functions.text import (  # noqa: F401
 from fuzzycat_spark.functions.hashing import (  # noqa: F401
     content_hash,
     md5_h64,
-    minhash_band_keys_sql,
     minhash_from_h64_udf,
     minhash_params,
-    minhash_signature_sql,
     minhash_signature_udf,
     simhash32,
 )

@@ -1,13 +1,12 @@
 """Hashing kernels: content hashes, MinHash signatures, SimHash fingerprints.
 
-Two implementations per sketch:
-- **Native Catalyst** (`minhash_signature_sql`, `simhash32`) — md5-based,
-  JVM-side, whole-stage codegen, bit-for-bit reproducible in DuckDB for the
-  correctness oracle.
-- **Vectorized pandas UDF** (`minhash_signature_udf`) — one md5 per shingle
-  then k derived permutations via numpy broadcast ((a_i*h + b_i) mod p),
-  the classic Broder construction; Arrow-batched for the 100 TB path where
-  k native md5 calls per shingle would dominate.
+- **MinHash** (`minhash_signature_udf`, `minhash_from_h64_udf`) — one md5
+  per shingle, then k permutations by splitmix64 mixing in numpy,
+  Arrow-batched (k native md5 calls per shingle would dominate at scale).
+  `minhash_params` exposes the constants, so the DuckDB oracle reproduces
+  the signatures bit-for-bit.
+- **SimHash** (`simhash32`) — native Catalyst, md5-based, JVM-side,
+  whole-stage codegen.
 
 Reference semantics being generalized: fuzzycat blocks on a single
 normalized key (`/root/reference/fuzzycat/sandcrawler.py:66-90` via
@@ -49,52 +48,6 @@ def content_hash(col: Column | str) -> Column:
     """md5 of raw bytes — the exact-duplicate key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c.cast("binary"))
-
-
-def _seed_min_expr(shingles: Column, i: int) -> Column:
-    """min(md5(i || ':' || s)) over the shingle array for one seed family,
-    with a deterministic sentinel for empty sets."""
-    return F.when(
-        F.size(shingles) == 0,
-        F.md5(F.concat(F.lit(str(i)), F.lit(":")).cast("binary")),
-    ).otherwise(
-        F.array_min(
-            F.transform(
-                shingles,
-                lambda s: F.md5(F.concat(F.lit(str(i)), F.lit(":"), s).cast("binary")),
-            )
-        )
-    )
-
-
-def minhash_signature_sql(shingles: Column, k: int = 16) -> Column:
-    """MinHash signature as array<string>: sig[i] = min(md5(i || ':' || s)).
-
-    Pure Catalyst (no Python at all) and trivially DuckDB-reproducible, but
-    ~15x slower than `minhash_signature_udf` (k interpreted md5 evals per
-    shingle) — use the UDF for pipelines, this for native-only contexts.
-    """
-    return F.array(*[_seed_min_expr(shingles, i) for i in range(k)])
-
-
-def minhash_band_keys_sql(shingles: Column, bands: int, rows: int) -> Column:
-    """Band keys computed directly from per-seed min expressions.
-
-    Building bands from `slice(minhash_signature_sql(...))` would let
-    Catalyst's CollapseProject inline the whole k-seed signature once PER
-    BAND (a `bands`-fold blowup measured at ~4x wall); constructing each
-    band from exactly its own seeds keeps every seed evaluated once.
-    """
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", *[_seed_min_expr(shingles, b * rows + r) for r in range(rows)]
-                ).cast("binary")
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def minhash_params(k: int = 16, seed: int = 42) -> list[int]:
@@ -352,7 +305,6 @@ __all__ = [
     "content_hash",
     "md5_h64",
     "minhash_from_h64_udf",
-    "minhash_signature_sql",
     "minhash_signature_udf",
     "lsh_band_keys",
     "simhash32",

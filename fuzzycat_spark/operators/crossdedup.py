@@ -137,7 +137,7 @@ def cross_corpus_pairs(
     """
     mk = lambda sh: minhash_band_table(  # noqa: E731
         sh, "id", "text", num_perm, bands, rows,
-        use_udf=True, unit_bands=unit_bands, shingles_col="sh",
+        unit_bands=unit_bands, shingles_col="sh",
     )
     nb = mk(new_sh)
     rb = ref_bands if ref_bands is not None else mk(ref_sh)

@@ -44,7 +44,6 @@ class DedupConfig:
     bands: int = 16
     rows: int = 2
     shingle_n: int = 3
-    minhash_udf: bool = True
     max_block_size: int = 100
     max_bucket_size: int = 200
     simhash_band_bits: int = 8
@@ -184,9 +183,7 @@ def strategy_band_table(
         tables.append(
             minhash_band_table(
                 prep, "id", cfg.text_col, cfg.num_perm, cfg.bands,
-                cfg.rows, cfg.shingle_n, use_udf=cfg.minhash_udf,
-                h64_col="shingles_h" if cfg.minhash_udf else None,
-                shingles_col=None if cfg.minhash_udf else "shingles",
+                cfg.rows, cfg.shingle_n, h64_col="shingles_h",
             ).select("id", F.col("band_id").cast("string").alias("band_id"), "band_hash")
         )
     if "simhash" in cfg.strategies:

@@ -202,13 +202,13 @@ def lm_perplexity_buckets(
     Rank r uses ceil(n/3) / ceil(2n/3); an empty sample leaves both
     cutoffs NULL and every document in 'tail' — callers that FILTER on
     the bucket must treat an everything-tail result as a configuration
-    error (jobs/corpus_job.py fails loudly when the kept set empties).
+    error.
 
     `scores` is consumed by two plan branches (the cutoff sample and
     the output join); pass a materialized frame (StageCheckpointer /
     `plans.checkpoint.materialize`) when it is expensive to recompute —
-    `doc_lm_scores` output is a multi-shuffle LM fit, and corpus_job
-    checkpoints it as its own stage before bucketing.
+    `doc_lm_scores` output is a multi-shuffle LM fit worth checkpointing
+    as its own stage before bucketing.
     """
     from fuzzycat_spark.functions.hashing import md5_field48
 

@@ -23,10 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fuzzycat_spark.functions.hashing import (
-    _seed_min_expr,
     lsh_band_keys,
     md5_h64,
-    minhash_band_keys_sql,
     minhash_from_h64_udf,
     simhash32_from_hashes,
     token_hashes32,
@@ -53,17 +51,15 @@ def minhash_band_table(
     bands: int = DEFAULT_BANDS,
     rows: int = DEFAULT_ROWS,
     shingle_n: int = 3,
-    use_udf: bool = True,
     unit_bands: int = DEFAULT_UNIT_BANDS,
     shingles_col: str | None = None,
     h64_col: str | None = None,
 ) -> DataFrame:
     """(id, band_id, band_hash) — one row per band per document.
 
-    use_udf=True (default) → numpy-vectorized Broder permutations, Arrow
-    batches, one ArrowEvalPython per doc batch (fast path; the DuckDB
-    oracle reproduces it from `minhash_params`);
-    use_udf=False → pure-Catalyst md5 signature (no Python anywhere).
+    The signature is k splitmix64 permutations mixed in numpy over Arrow
+    batches, one ArrowEvalPython per doc batch (the DuckDB oracle
+    reproduces it from `minhash_params`).
 
     Besides the `bands` r-row bands, the first `unit_bands` signature
     entries are ALSO emitted as single-row bands (band ids `bands`..).
@@ -78,37 +74,25 @@ def minhash_band_table(
     shingles = (
         F.col(shingles_col) if shingles_col else word_shingles(text_col, shingle_n)
     )
-    if use_udf:
-        # base hash JVM-side (md5 -> int64 inside codegen); the UDF receives
-        # array<long> and does only the chunked numpy permutation mix —
-        # zero Python hashing per shingle. h64_col short-circuits even the
-        # JVM md5 when the caller pre-materialized base hashes (prep's
-        # sh_md5h column).
-        h64 = F.col(h64_col) if h64_col else F.transform(shingles, md5_h64)
-        sig = minhash_from_h64_udf(num_perm)(h64)
-        # sig is an ArrowEvalPython output attribute, so the per-band slice
-        # below re-reads the materialized array instead of re-running Python
-        keys = lsh_band_keys(F.col("sig"), bands, rows)
-        if unit_bands:
-            keys = F.concat(
-                keys,
-                F.transform(
-                    F.slice(F.col("sig"), 1, unit_bands), lambda x: x.cast("string")
-                ),
-            )
-        return df.select(F.col(id_col).alias("id"), sig.alias("sig")).select(
-            "id", F.posexplode(keys).alias("band_id", "band_hash")
-        )
-    # native path: band keys built straight from per-seed expressions —
-    # see minhash_band_keys_sql for why we never slice a full signature here
-    keys = minhash_band_keys_sql(shingles, bands, rows)
+    # base hash JVM-side (md5 -> int64 inside codegen); the UDF receives
+    # array<long> and does only the chunked numpy permutation mix —
+    # zero Python hashing per shingle. h64_col short-circuits even the
+    # JVM md5 when the caller pre-materialized base hashes (prep's
+    # sh_md5h column).
+    h64 = F.col(h64_col) if h64_col else F.transform(shingles, md5_h64)
+    sig = minhash_from_h64_udf(num_perm)(h64)
+    # sig is an ArrowEvalPython output attribute, so the per-band slice
+    # below re-reads the materialized array instead of re-running Python
+    keys = lsh_band_keys(F.col("sig"), bands, rows)
     if unit_bands:
         keys = F.concat(
-            keys, F.array(*[_seed_min_expr(shingles, i) for i in range(unit_bands)])
+            keys,
+            F.transform(
+                F.slice(F.col("sig"), 1, unit_bands), lambda x: x.cast("string")
+            ),
         )
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(keys).alias("band_id", "band_hash"),
+    return df.select(F.col(id_col).alias("id"), sig.alias("sig")).select(
+        "id", F.posexplode(keys).alias("band_id", "band_hash")
     )
 
 

@@ -275,8 +275,8 @@ def page_directives_udf(html: pd.Series) -> pd.DataFrame:
 # description surface out of it (title, meta description, charset, first
 # h1) with whole-stage-codegen regexps — zero UDFs, zero shuffles, the
 # per-page cost a 10^12-page catalog pass can afford. The patterns live
-# in the Java-regex ∩ RE2 common subset so the driver oracle can run the
-# IDENTICAL strings through DuckDB (same two-engine pattern as pii).
+# in the Java-regex ∩ RE2 common subset so the DuckDB oracle
+# (tests/test_oracles.py, `page_meta`) runs the IDENTICAL strings.
 # Semantics are bounded by design: comments are stripped first (a
 # commented-out <title> never wins), the first match of each field is
 # taken, inner whitespace collapses to single spaces, charset is

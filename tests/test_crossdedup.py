@@ -91,7 +91,7 @@ class TestCrossPairs:
     def test_ref_bands_reuse_is_identical(self, spark, corpora):
         new, ref = corpora
         rb = minhash_band_table(
-            ref, "id", "text", use_udf=True, shingles_col="sh"
+            ref, "id", "text", shingles_col="sh"
         )
         assert _pairs(new, ref) == _pairs(new, ref, ref_bands=rb)
 
@@ -139,7 +139,7 @@ class TestVerdicts:
 class TestCandidates:
     def test_same_id_both_sides_reports_self(self, spark):
         sh = _sh(spark, [(1, BASE)])
-        bands = minhash_band_table(sh, "id", "text", use_udf=True, shingles_col="sh")
+        bands = minhash_band_table(sh, "id", "text", shingles_col="sh")
         got = {
             (r["new_id"], r["ref_id"])
             for r in cross_candidate_pairs(bands, bands).collect()

@@ -27,7 +27,6 @@ from fuzzycat_spark.functions import (
 )
 from fuzzycat_spark.functions.hashing import (
     hamming32,
-    minhash_signature_sql,
     minhash_signature_udf,
 )
 
@@ -114,20 +113,6 @@ def test_fingerprint_stable_under_small_edit(spark):
     fa = one(spark, a, doc_fingerprint("text"))
     fb = one(spark, b, doc_fingerprint("text"))
     assert fa == fb  # deterministic for this fixture
-
-
-def test_minhash_sql_jaccard_estimate(spark):
-    df = spark.createDataFrame(
-        [("x", "a b c d e f g h i j k l m n o p"), ("y", "a b c d e f g h i j k l m n o q")],
-        "id string, text string",
-    )
-    sigs = {
-        r.id: r.sig
-        for r in df.select("id", minhash_signature_sql(word_shingles("text", 3), 32).alias("sig")).collect()
-    }
-    agree = sum(a == b for a, b in zip(sigs["x"], sigs["y"])) / 32
-    # true shingle jaccard = 12/16 = 0.75 (last 3 shingles + 1 differ)
-    assert 0.4 < agree <= 1.0
 
 
 def test_minhash_udf_identical_inputs_identical_sigs(spark):
@@ -505,7 +490,7 @@ def test_corpus_filter_admits_non_latin_by_script(spark, tmp_path):
     """corpus_filter's script-aware admission: a CJK doc (lang-ID 'und',
     quality metrics Latin-trained) is KEPT by script + codepoint length,
     short non-Latin fragments and denylisted slugs still drop."""
-    import __spark_entry__ as E
+    from test_oracles import q_corpus_filter
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog again and again today it seems", "en"),
@@ -516,7 +501,7 @@ def test_corpus_filter_admits_non_latin_by_script(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     sf = str(tmp_path)
     df.write.parquet(f"{sf}/documents.parquet")
-    kept = {r.doc_id: r.script for r in E.q_corpus_filter(spark, sf).collect()}
+    kept = {r.doc_id: r.script for r in q_corpus_filter(spark, sf).collect()}
     assert 0 in kept and kept[0] == "latin"
     assert 1 in kept and kept[1] == "han"
     assert 2 not in kept and 3 not in kept

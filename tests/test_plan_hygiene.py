@@ -17,9 +17,9 @@ def _plan(df) -> str:
 
 
 def test_token_count_prunes_scan_columns(spark):
-    import __spark_entry__ as E
+    from test_oracles import q_token_count
 
-    plan = _plan(E.q_token_count(spark, SF))
+    plan = _plan(q_token_count(spark, SF))
     # the documents table carries text/html-ish payloads; the count query
     # must read only (doc_id, text)
     scan_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -31,21 +31,20 @@ def test_token_count_prunes_scan_columns(spark):
 
 
 def test_no_cartesian_products_in_pipeline(spark):
-    import __spark_entry__ as E
+    from test_oracles import q_candidates, q_substring_pairs, q_verified_pairs
 
-    for q in ("candidates", "verified_pairs", "substring_pairs"):
-        df = E.queries()[q](spark, SF)
-        plan = _plan(df)
-        assert "CartesianProduct" not in plan, f"{q} plan has a cartesian:\n{plan[:2000]}"
+    for q in (q_candidates, q_verified_pairs, q_substring_pairs):
+        plan = _plan(q(spark, SF))
+        assert "CartesianProduct" not in plan, f"{q.__name__} plan has a cartesian:\n{plan[:2000]}"
 
 
 def test_candidates_single_band_shuffle(spark):
     """The band table is consumed by exactly ONE shuffle (window+groupBy
     reuse the same hash partitioning) — a second exchange over band keys
     would mean the single-shuffle design regressed."""
-    import __spark_entry__ as E
+    from test_oracles import q_lsh_candidates
 
-    plan = _plan(E.queries()["lsh_candidates"](spark, SF))
+    plan = _plan(q_lsh_candidates(spark, SF))
     band_exchanges = [
         l
         for l in plan.splitlines()
@@ -77,12 +76,12 @@ def test_components_all_candidates_have_no_cartesian(spark):
     """The ALL-strategy candidate union (minhash + simhash bands +
     substring index) must stay join-shaped — no strategy may introduce a
     cartesian product."""
+    from test_oracles import ALL_CFG
+
     from fuzzycat_spark.operators.dedup import candidate_pairs
 
-    import __spark_entry__ as E
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cands = candidate_pairs(docs, E.ALL_CFG)
+    cands = candidate_pairs(docs, ALL_CFG)
     assert "CartesianProduct" not in _plan(cands)
 
 
@@ -215,12 +214,12 @@ def test_all_strategy_bands_share_one_shuffle(spark):
     minhash + simhash + winnow band tables union before the single
     bucket-cap window + pair expansion, so the whole six-strategy
     candidate plan contains exactly ONE (band_id, band_hash) exchange."""
+    from test_oracles import ALL_CFG
+
     from fuzzycat_spark.operators.dedup import candidate_pairs
 
-    import __spark_entry__ as E
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(candidate_pairs(docs, E.ALL_CFG))
+    plan = _plan(candidate_pairs(docs, ALL_CFG))
     band_exchanges = [
         l
         for l in plan.splitlines()
@@ -247,9 +246,11 @@ def test_ivf_seed_selection_is_heap_not_global_sort(spark):
 def test_lm_scores_all_jvm_and_narrow(spark):
     """The bigram-LM scorer must stay whole-stage-codegen (no Python
     workers) and shuffle only 8-byte hash rows — never token text."""
-    import __spark_entry__ as E
+    from test_oracles import _docs
 
-    plan = _plan(E.queries()["lm_scores"](spark, SF))
+    from fuzzycat_spark.operators.lm import doc_lm_scores
+
+    plan = _plan(doc_lm_scores(_docs(spark, SF), scale=1_000_000_000))
     assert "PythonUDF" not in plan and "ArrowEval" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     # the 1-row vocab scalar joins via broadcast nested loop; that must

@@ -96,10 +96,9 @@ synth_pages(spark, n_families={N_FAMILIES}, n_spam={N_SPAM}).write.mode("overwri
         "scaling_efficiency": round(speedup / ideal, 3),
     }
     print(json.dumps(summary))
-    # refresh the committed campaign artifact that bench.py embeds (set
-    # SPARK_GRAFT_CAMPAIGN_OUT=SCALING_CAMPAIGN.json after a real campaign;
-    # bench output then carries measured-at provenance, never stale
-    # constants baked into live bench lines)
+    # refresh the committed campaign artifact (set
+    # SPARK_GRAFT_CAMPAIGN_OUT=SCALING_CAMPAIGN.json after a real campaign,
+    # so the record carries measured-at provenance)
     out_path = os.environ.get("SPARK_GRAFT_CAMPAIGN_OUT")
     if out_path:
         with open(out_path, "w") as f:
@@ -108,8 +107,7 @@ synth_pages(spark, n_families={N_FAMILIES}, n_spam={N_SPAM}).write.mode("overwri
 
 
 def campaign_artifact(results: list[dict], reps: int) -> dict:
-    """Provenance-stamped campaign record for SCALING_CAMPAIGN.json (the
-    artifact bench.py embeds as `historical_reference`). Emits every
+    """Provenance-stamped campaign record for SCALING_CAMPAIGN.json. Emits every
     measured N→4N pair — the north rule's criterion — not just the
     campaign's endpoint ratio."""
     import datetime

@@ -18,14 +18,15 @@ verify cascade itself):
   LANGUAGE (falls through every similarity rule first).
 - exact / slug / shingle / short / unknown controls for the older arms.
 
-The generator ASSERTS the intended reason set by running the gate's own
-DuckDB oracle over the freshly written parquet — if a content tweak ever
-shifts a ratio across a threshold, generation fails instead of
-committing a vacuous fixture.
+The generator ASSERTS the intended reason set by running the `lev_pairs`
+DuckDB oracle of tests/test_oracles.py over the freshly written parquet —
+if a content tweak ever shifts a ratio across a threshold, generation
+fails instead of committing a vacuous fixture.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -221,11 +222,11 @@ def main() -> None:
     out = "/root/repo/fixtures/lev_docs.parquet"
     pq.write_table(table, out)
 
-    # self-check: run the gate's oracle and assert the reason coverage
-    import __spark_entry__ as entry_mod
+    # self-check: run the lev_pairs oracle and assert the reason coverage
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
+    from test_oracles import lev_pairs_sql
 
-    sql = entry_mod.oracle_sql()["lev_pairs"]
-    got = duckdb.sql(sql).df()
+    got = duckdb.sql(lev_pairs_sql()).df()
     by_reason = got.groupby("reason").size().to_dict()
     print(f"wrote {out}: {table.num_rows} docs, {len(got)} pairs")
     print(by_reason)
