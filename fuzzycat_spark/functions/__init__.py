@@ -2,7 +2,6 @@ from fuzzycat_spark.functions.normalize import (  # noqa: F401
     slug_text,
     tokens_col,
     word_shingles,
-    char_shingles,
     num_project,
     unicode_slugify_udf,
     unicode_slugify,

@@ -227,19 +227,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return word_shingles_from_tokens(tokens_col(col), n)
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Overlapping character k-gram shingles (distinct) of the slug."""
-    slug = slug_text(col)
-    n = F.length(slug)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.substring(slug, i, k),
-    )
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(grams)
-    )
-
-
 def num_project(col: Column | str) -> Column:
     """Replace every digit run with ``<NUM>`` — detects metadata-only edits.
 

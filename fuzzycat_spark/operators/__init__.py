@@ -1,3 +1,1 @@
-from fuzzycat_spark.operators.blocking import block_stats, with_block_key  # noqa: F401
-from fuzzycat_spark.operators.pairs import block_pairs  # noqa: F401
 from fuzzycat_spark.operators.components import connected_components  # noqa: F401

@@ -19,8 +19,6 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fuzzycat_spark.functions.hashing import content_hash
-from fuzzycat_spark.functions.normalize import slug_text
 from fuzzycat_spark.operators.lsh import (
     lsh_candidate_pairs,
     minhash_band_table,
@@ -77,15 +75,6 @@ class DedupConfig:
     embedding_dim: int | None = None
     embedding_planes: int = 8
     embedding_strong: float = 0.9
-    # candidate index for the embedding strategy: "hyperplane" buckets
-    # (2^planes buckets — size n_planes to the corpus) or "ivf" inverted
-    # lists (k-means coarse cells — bucket count set directly by
-    # embedding_ivf_k and INDEPENDENT of dimension/plane geometry, the
-    # standard 10^9-vector layout; cluster-boundary pairs are the recall
-    # tradeoff either way, and both routes share the capped band machinery
-    # and the cosine tier)
-    embedding_index: str = "hyperplane"
-    embedding_ivf_k: int = 8
     # boilerplate denylist (the graft of the reference's blacklist data,
     # data.py:12-34): md5 slug keys whose SLUG equality is meaningless —
     # they never form slug star edges or slug band rows, and the cascade
@@ -159,8 +148,9 @@ def strategy_band_table(
 
     Exact hash and slug key are single-band strategies ('exact'/'slug'
     band ids) capped at max_block_size; MinHash LSH bands are capped at
-    max_bucket_size. `pages` is only needed for the simhash strategy
-    (it re-tokenizes raw text).
+    max_bucket_size. SimHash fingerprints off prep's per-token hashes
+    (`prepare_pages(with_token_hashes=True)`); `pages` is only needed for
+    the embedding, winnow and nysiis strategies.
     """
     tables = []
     if "exact" in cfg.strategies:
@@ -187,23 +177,13 @@ def strategy_band_table(
             ).select("id", F.col("band_id").cast("string").alias("band_id"), "band_hash")
         )
     if "simhash" in cfg.strategies:
-        if "tok_h32" in prep.columns:
-            # fingerprint off the prep checkpoint's per-token hashes —
-            # no second text scan / tokenization (see prepare_pages)
-            from fuzzycat_spark.operators.lsh import simhash_bucket_table_from_hashes
-
-            sh = simhash_bucket_table_from_hashes(prep, cfg.simhash_band_bits)
-        elif pages is None:
+        if "tok_h32" not in prep.columns:
             raise ValueError(
-                "simhash strategy needs prep with tok_h32 or the raw pages frame"
-            )
-        else:
-            sh = simhash_bucket_table(
-                pages, cfg.id_col, cfg.text_col, cfg.simhash_band_bits,
-                slug_mode=cfg.slug_mode,
+                "simhash strategy needs prep with tok_h32 "
+                "(prepare_pages(..., with_token_hashes=True))"
             )
         tables.append(
-            sh.select(
+            simhash_bucket_table(prep, cfg.simhash_band_bits).select(
                 "id",
                 F.concat(F.lit("sh"), F.col("band_id").cast("string")).alias("band_id"),
                 "band_hash",
@@ -215,42 +195,23 @@ def strategy_band_table(
                 "embedding strategy needs the raw pages frame plus "
                 "cfg.embedding_col and cfg.embedding_dim"
             )
-        if cfg.embedding_index == "ivf":
-            from fuzzycat_spark.operators.knn import ivf_assign, ivf_centroids
+        from fuzzycat_spark.operators.knn import (
+            hyperplane_bucket_col,
+            hyperplane_planes,
+        )
 
-            emb = pages.select(
+        # seeded hyperplanes hash identically in every epoch, so a stream's
+        # grow-only index and a batch run bucket the same vector alike
+        planes = hyperplane_planes(cfg.embedding_dim, cfg.embedding_planes)
+        tables.append(
+            pages.select(
                 F.col(cfg.id_col).alias("id"),
-                F.col(cfg.embedding_col).alias("embedding"),
-            )
-            cents = ivf_centroids(
-                emb, k=cfg.embedding_ivf_k, n_iter=1, id_col="id",
-                vec_col="embedding",
-            )
-            tables.append(
-                ivf_assign(emb, cents, id_col="id", vec_col="embedding").select(
-                    F.col("vec_id_").alias("id"),
-                    F.lit("emb").alias("band_id"),
-                    F.col("cid").cast("string").alias("band_hash"),
-                )
-            )
-        elif cfg.embedding_index == "hyperplane":
-            from fuzzycat_spark.operators.knn import (
-                hyperplane_bucket_col,
-                hyperplane_planes,
-            )
-
-            planes = hyperplane_planes(cfg.embedding_dim, cfg.embedding_planes)
-            tables.append(
-                pages.select(
-                    F.col(cfg.id_col).alias("id"),
-                    F.lit("emb").alias("band_id"),
-                    hyperplane_bucket_col(F.col(cfg.embedding_col), planes).alias(
-                        "band_hash"
-                    ),
-                ).filter(F.col("band_hash").isNotNull())
-            )
-        else:
-            raise ValueError(f"unknown embedding_index: {cfg.embedding_index!r}")
+                F.lit("emb").alias("band_id"),
+                hyperplane_bucket_col(F.col(cfg.embedding_col), planes).alias(
+                    "band_hash"
+                ),
+            ).filter(F.col("band_hash").isNotNull())
+        )
     if "winnow" in cfg.strategies:
         if pages is None:
             raise ValueError("winnow strategy needs the raw pages frame")

@@ -124,10 +124,9 @@ def oversize_ann_buckets(
     max_bucket_size: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """(bucket, bucket_size) for the hyperplane buckets the cap excludes —
-    the `oversize_blocks` accounting for the embedding side (excluded
-    buckets are counted, never silently dropped). Degenerate embeddings
-    (all-zero vectors land in the all-ones bucket) are the realistic hot
-    case this surfaces."""
+    excluded buckets are counted, never silently dropped. Degenerate
+    embeddings (all-zero vectors land in the all-ones bucket) are the
+    realistic hot case this surfaces."""
     if dim is None:
         raise ValueError("oversize_ann_buckets requires dim= (see hyperplane_knn)")
     planes = hyperplane_planes(dim, n_planes, seed)
@@ -204,133 +203,6 @@ def hyperplane_knn(
     joined = cand.join(pv, on="probe_id").join(iv, on="neighbor_id")
     sim = cosine_col(F.col("ea"), F.col("eb"))
     w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        joined.select("probe_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_centroids(
-    embeddings: DataFrame,
-    k: int = 8,
-    n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic IVF coarse centroids: (cid, centroid array<double>).
-
-    Seeds are a seeded HASH-SAMPLE: the k vectors with the smallest
-    md5(seed || id) — a uniform draw (md5 scrambles any id distribution)
-    that is deterministic, resume-stable, and reproducible in any engine
-    (the DuckDB oracle runs the identical expression), unlike
-    `df.sample`, whose Bernoulli draw depends on Spark's partition
-    layout. Physically this is TakeOrderedAndProject — a per-partition
-    k-heap over the scan plus a driver merge of p×k rows — NOT a global
-    sort (no range-partitioning exchange; pinned by
-    tests/test_plan_hygiene.py). Earlier rounds seeded from the k lowest
-    ids, which biased seeds toward one corner of the id space and showed
-    up as a global-sort smell in the plan.
-
-    Refinement is `n_iter` Lloyd iterations. Each iteration is two
-    shuffles, both bounded: assignment broadcasts the k centroids, and
-    the per-position mean shuffles (cid, pos) keys — k*dim groups
-    regardless of corpus size. Clusters that lose all members drop out
-    (same semantics as the SQL GROUP BY); components are rounded so
-    cross-engine float summation order cannot flip a downstream argmax.
-    """
-    hk = F.md5(
-        F.concat(F.lit(str(seed)), F.col("id").cast("string")).cast("binary")
-    )
-    w = Window.orderBy(F.asc("_hk"), F.asc("id"))
-    cents = (
-        embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("c"))
-        .withColumn("_hk", hk)
-        .orderBy("_hk", "id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w) - 1).cast("long").alias("cid"),
-            F.transform("c", lambda x: x.cast("double")).alias("centroid"),
-        )
-    )
-    for _ in range(n_iter):
-        asg = ivf_assign(embeddings, cents, id_col=id_col, vec_col=vec_col)
-        pos_means = (
-            embeddings.join(asg, on=embeddings[id_col] == asg["vec_id_"])
-            .select("cid", F.posexplode(F.col(vec_col)).alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg(F.col("v").cast("double")), round_to).alias("av"))
-        )
-        cents = pos_means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "av"))), lambda s: s["av"]
-            ).alias("centroid")
-        )
-    return cents
-
-
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id_, cid): each vector's nearest centroid by cosine (ties to the
-    lowest cid). Broadcast of k rows + a per-row argmax — no shuffle of the
-    vector table beyond the window's hash partition on id."""
-    joined = embeddings.select(
-        F.col(id_col).alias("vec_id_"), F.col(vec_col).alias("e")
-    ).crossJoin(F.broadcast(centroids))
-    sim = F.round(cosine_col(F.col("e"), F.col("centroid")), 9)
-    w = Window.partitionBy("vec_id_").orderBy(F.desc("sim"), F.asc("cid"))
-    return (
-        joined.select("vec_id_", "cid", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id_", "cid")
-    )
-
-
-def ivf_knn(
-    probes: DataFrame,
-    index: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: the index is partitioned into inverted lists
-    by nearest centroid; each probe scans only its `nprobe` nearest lists.
-
-    The scan fraction is ~nprobe/k of the index regardless of corpus size,
-    and each vector lives in exactly one list so no post-join distinct is
-    needed (unlike multiprobe hyperplane LSH). One shuffle on cid.
-    """
-    asg = ivf_assign(index, centroids, id_col=id_col, vec_col=vec_col)
-    inv = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("eb")
-    ).join(asg, on=F.col("neighbor_id") == F.col("vec_id_")).drop("vec_id_")
-    pj = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("ea")
-    ).crossJoin(F.broadcast(centroids))
-    psim = F.round(cosine_col(F.col("ea"), F.col("centroid")), 9)
-    pw = Window.partitionBy("probe_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probe_lists = (
-        pj.select("probe_id", "ea", "cid", psim.alias("csim"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("probe_id", "ea", "cid")
-    )
-    joined = probe_lists.join(inv, on="cid").filter(
-        F.col("probe_id") != F.col("neighbor_id")
-    )
-    sim = cosine_col(F.col("ea"), F.col("eb"))
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("neighbor_id")
-    )
     return (
         joined.select("probe_id", "neighbor_id", sim.alias("cosine"))
         .withColumn("rank", F.row_number().over(w).cast("long"))

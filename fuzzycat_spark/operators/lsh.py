@@ -9,8 +9,8 @@ Scale design:
 - Only (id, band_id, band_hash) rows are exploded and shuffled — one row
   per band per doc, never the text.
 - Hot buckets (boilerplate) are the skew risk: buckets above
-  `max_bucket_size` are excluded from the quadratic join but surfaced via
-  `oversize_blocks`-style accounting; AQE skew-join handles residual skew.
+  `max_bucket_size` are excluded from the quadratic join; AQE skew-join
+  handles residual skew.
 - `salt_hot_buckets` optionally shards a hot bucket's members into salted
   sub-buckets so SOME pairs inside mega-clusters still surface (the
   reference just drops clusters > max size, `verify.py:130-131`).
@@ -27,14 +27,8 @@ from fuzzycat_spark.functions.hashing import (
     md5_h64,
     minhash_from_h64_udf,
     simhash32_from_hashes,
-    token_hashes32,
 )
-from fuzzycat_spark.functions.normalize import (
-    tokens_col,
-    tokens_for_mode,
-    word_shingles,
-)
-from fuzzycat_spark.plans.checkpoint import materialize
+from fuzzycat_spark.functions.normalize import word_shingles
 
 DEFAULT_NUM_PERM = 32
 DEFAULT_BANDS = 16
@@ -106,75 +100,6 @@ def _pair_combos(ids: Column) -> Column:
                 F.slice(ids, i + F.lit(2), F.size(ids)),
                 lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
             ),
-        )
-    )
-
-
-def bbit_band_table(
-    df: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    rows: int = DEFAULT_ROWS,
-    b: int = 8,
-    shingle_n: int = 3,
-    shingles_col: str | None = None,
-    h64_col: str | None = None,
-) -> DataFrame:
-    """(id, band_id, band_hash) from a b-BIT MinHash signature (Li &
-    König, "b-Bit Minwise Hashing", WWW 2010): only the LOW b bits of
-    each signature entry feed the band keys, and each band key is the
-    rows·b-bit PACKED integer of its masked entries — `band_hash` here
-    is a LONG whose value fits rows·b bits (b=8, rows=2 → 16 bits;
-    parquet dictionary+bit-packing stores it in ~2 bytes), not the
-    32-char md5 string the full-width table emits. That is where the
-    paper's storage claim is realized: at 10^12 docs the persisted
-    band/signature artifact dominates index storage for the cross-crawl
-    `ref_bands=` / `--emit-bands` path, and the packed table is ~8-16×
-    smaller per row than the md5-keyed one. The trade-off: per-band
-    collision probability for unrelated docs rises from ~2^-64r to
-    ~2^-br, compensated by more rows or bands; masking never SPLITS a
-    bucket, so every candidate pair of a full-width table AT THE SAME
-    BAND LAYOUT (same bands/rows, `unit_bands=0`) is still produced —
-    the safe direction for a dedup screen, with the cap handling the
-    extra fpps like any other hot bucket. NOTE: `minhash_band_table`'s
-    PRODUCTION default adds 4 single-entry unit bands for containment
-    dups; a lone b-bit value is a 2^b-way key (useless mega-buckets),
-    so this table has no unit-band analog — containment recall must
-    come from the substring/winnow strategies when switching a
-    persisted index to b-bit keys."""
-    assert bands * rows == num_perm, "bands * rows must equal num_perm"
-    if not (0 < b < 64):
-        raise ValueError(f"b must be in (0, 64): {b}")
-    if rows * b > 63:
-        raise ValueError(
-            f"rows*b = {rows * b} bits will not pack into a signed long; "
-            "lower b or rows"
-        )
-    mask = (1 << b) - 1
-    shingles = (
-        F.col(shingles_col) if shingles_col else word_shingles(text_col, shingle_n)
-    )
-    h64 = F.col(h64_col) if h64_col else F.transform(shingles, md5_h64)
-    sig = minhash_from_h64_udf(num_perm)(h64)
-    packed = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda i: F.aggregate(
-            F.slice(F.col("bsig"), i * rows + 1, rows),
-            F.lit(0).cast("long"),
-            lambda acc, x: F.shiftleft(acc, b).bitwiseOR(x),
-        ),
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), sig.alias("sig"))
-        .select(
-            "id",
-            F.transform("sig", lambda x: x.bitwiseAND(F.lit(mask))).alias("bsig"),
-        )
-        .select(
-            "id",
-            F.posexplode(packed).alias("band_id", "band_hash"),
         )
     )
 
@@ -284,46 +209,20 @@ def salt_hot_buckets(
 
 
 def simhash_bucket_table(
-    df: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-    band_bits: int = 8,
-    slug_mode: str = "ascii",
+    prep: DataFrame, band_bits: int = 8, hashes_col: str = "tok_h32"
 ) -> DataFrame:
-    """(id, band_id, band_hash) from SimHash fingerprints.
+    """(id, band_id, band_hash) Charikar chunks of each document's 32-bit
+    SimHash, fingerprinted off the per-token hashes of a prepared-features
+    table (`prepare_pages(with_token_hashes=True)`), so raw text is
+    scanned and tokenized once.
 
-    The 32-bit fingerprint splits into 32/band_bits chunks; docs within
-    Hamming distance < number-of-chunks collide on at least one chunk
-    (pigeonhole) — the standard Charikar bucketing. `slug_mode` selects
-    the shared tokenizer (tokens_for_mode), so under "unicode"/"auto" the
-    fingerprint hashes the same CJK-bigram token stream as every other
-    strategy instead of the ASCII fold's residue.
+    The fingerprint splits into 32/band_bits chunks; docs within Hamming
+    distance < number-of-chunks collide on at least one chunk
+    (pigeonhole) — the standard Charikar bucketing.
     """
-    toks = (
-        tokens_col(text_col)
-        if slug_mode == "ascii"
-        else tokens_for_mode(text_col, slug_mode)
-    )
-    # two-stage: materialize per-token hashes so the 32 per-bit aggregate
-    # passes read an attribute instead of re-hashing every token 32x
-    staged = materialize(
-        df.select(
-            F.col(id_col).alias("id"),
-            token_hashes32(toks).alias("hashes"),
-        ),
-        None,
-    )
-    return _simhash_chunk_rows(staged, "hashes", band_bits)
-
-
-def _simhash_chunk_rows(
-    hashed: DataFrame, hashes_col: str, band_bits: int
-) -> DataFrame:
-    """(id, band_id, band_hash) Charikar chunks from a materialized
-    per-token-hash array attribute."""
     n_bands = 32 // band_bits
     fp = simhash32_from_hashes(F.col(hashes_col))
-    keyed = hashed.select("id", fp.alias("fp")).filter(
+    keyed = prep.select("id", fp.alias("fp")).filter(
         F.col("fp").isNotNull() & (F.col("fp") >= 0)
     )
     mask = (1 << band_bits) - 1
@@ -334,14 +233,3 @@ def _simhash_chunk_rows(
         ]
     )
     return keyed.select("id", F.posexplode(bands).alias("band_id", "band_hash"))
-
-
-def simhash_bucket_table_from_hashes(
-    prep: DataFrame, band_bits: int = 8, hashes_col: str = "tok_h32"
-) -> DataFrame:
-    """SimHash chunk rows straight off a prepared-features checkpoint
-    carrying per-token 32-bit hashes (prepare_pages with_token_hashes=True)
-    — identical output to `simhash_bucket_table`, minus its second scan
-    and re-tokenization of the raw text (and minus a second pandas-UDF
-    pass under unicode slug modes)."""
-    return _simhash_chunk_rows(prep, hashes_col, band_bits)

@@ -28,12 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fuzzycat_spark.functions.hashing import content_hash, md5_h64
-from fuzzycat_spark.functions.normalize import (
-    num_project,
-    slug_text,
-    tokens_col,
-    word_shingles_from_tokens,
-)
+from fuzzycat_spark.functions.normalize import num_project, word_shingles_from_tokens
 from fuzzycat_spark.plans.checkpoint import materialize
 
 # thresholds (the shingle/signature config that recall is measured at)
@@ -470,10 +465,3 @@ def verify_pairs(
     )
     return resolved1.unionByName(resolved2).unionByName(tier3)
 
-
-def verdict_counts(verified: DataFrame) -> DataFrame:
-    """The reference's reason Counter (`verify.py:113,143,147`) as a
-    groupBy — per-(status, reason) counts."""
-    return verified.groupBy("status", "reason").agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )

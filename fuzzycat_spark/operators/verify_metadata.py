@@ -38,8 +38,6 @@ Faithfulness notes (each deliberate, matching observed reference behavior):
 
 from __future__ import annotations
 
-import itertools
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -12,8 +12,9 @@ IDENTICAL selected fingerprint to both documents, while the fingerprint
 density stays ~2/(w+1) of the shingle count.
 
 Scale shape: one window function over (doc, pos) — a single shuffle that
-reuses the hash partitioning of the shingle explode — then a fingerprint
-equi-join with the same hot-bucket cap discipline as the LSH band join.
+reuses the hash partitioning of the shingle explode. The "winnow" dedup
+strategy uses the fingerprints as band keys, so they go through the same
+capped pair expansion as the LSH bands (`operators/dedup.py`).
 Everything is arithmetic on int64 (hash-mod packing), so the DuckDB oracle
 reproduces it bit-for-bit.
 
@@ -24,7 +25,7 @@ sub-document generalization the web-page graft needs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -110,29 +111,3 @@ def winnow_fingerprints(
     )
     return sel
 
-
-def winnow_overlap_pairs(
-    fps: DataFrame,
-    min_common: int = 2,
-    max_bucket_size: int | None = 200,
-) -> DataFrame:
-    """(id_a, id_b, n_common) for document pairs sharing >= `min_common`
-    selected fingerprints. The join key is the 40-bit fp alone (position-
-    independent: a shared paragraph matches wherever it moved). Hot
-    fingerprints (boilerplate) are dropped by bucket size BEFORE the
-    self-join, same guard as the LSH band join."""
-    t = fps.select("id", "fp").distinct()
-    if max_bucket_size is not None:
-        sizes = t.groupBy("fp").agg(F.count(F.lit(1)).alias("n"))
-        t = t.join(
-            sizes.filter(F.col("n") <= max_bucket_size).select("fp"), on="fp"
-        )
-    a = t.select(F.col("id").alias("id_a"), "fp")
-    b = t.select(F.col("id").alias("id_b"), "fp")
-    return (
-        a.join(b, on="fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-    )

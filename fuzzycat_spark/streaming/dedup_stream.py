@@ -20,9 +20,7 @@ places: key-equality stars keep a key's historical min-id representative;
 the capped pair expansion caps on cumulative bucket sizes and emits only
 pairs with a new id; substring probes join new and historical grams in
 both temporal orders. Options whose result depends on the whole corpus at
-once are refused loudly: embedding_index="ivf" (per-batch k-means
-centroids are not stable across epochs — streams use the seeded
-hyperplane index), salt_hot and canonical_col. A stream's DedupConfig
+once are refused loudly: salt_hot and canonical_col. A stream's DedupConfig
 must not change over its lifetime — the embedding column in particular is
 persisted into the feature state, and enabling it mid-stream fails loudly.
 
@@ -211,15 +209,6 @@ def read_pairs(spark: SparkSession, pairs_path: str, index_path: str) -> DataFra
 def _check_incremental(cfg: DedupConfig) -> None:
     """Refuse the options whose result depends on the whole corpus at once,
     which an epoch never sees."""
-    if "embedding" in cfg.strategies and cfg.embedding_index != "hyperplane":
-        raise ValueError(
-            "incremental dedup supports embedding_index='hyperplane' only: "
-            "seeded hyperplanes hash identically across epochs, but IVF "
-            "centroids are fit per batch, so cell ids written in one epoch "
-            "would not match the next epoch's — the grow-only index would "
-            "silently stop linking cross-batch embedding dups. Use "
-            "hyperplane for streams (IVF stays a batch-pipeline index)."
-        )
     if cfg.salt_hot:
         raise ValueError(
             "incremental dedup does not support salt_hot: a bucket's salted "

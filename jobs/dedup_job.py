@@ -61,16 +61,19 @@ def main() -> None:
         "--embedding-col", default=None,
         help="array<float> column for the embedding strategy",
     )
-    p.add_argument("--embedding-dim", type=int, default=None)
-    p.add_argument("--embedding-planes", type=int, default=8)
+    p.add_argument(
+        "--embedding-dim", type=int, default=None,
+        help="width of --embedding-col (required with the embedding strategy)",
+    )
+    p.add_argument(
+        "--embedding-planes", type=int, default=8,
+        help="seeded random hyperplanes of the embedding index: 2^N buckets, "
+        "the same in batch and stream",
+    )
     p.add_argument(
         "--embedding-strong", type=float, default=0.9,
         help="cosine at/above which a candidate pair is a strong dup",
     )
-    p.add_argument(
-        "--embedding-index", default="hyperplane", choices=("hyperplane", "ivf"),
-    )
-    p.add_argument("--embedding-ivf-k", type=int, default=8)
     p.add_argument(
         "--canonical-col", default=None,
         help="column of rel=canonical hrefs (as "
@@ -142,8 +145,6 @@ def main() -> None:
         embedding_dim=args.embedding_dim,
         embedding_planes=args.embedding_planes,
         embedding_strong=args.embedding_strong,
-        embedding_index=args.embedding_index,
-        embedding_ivf_k=args.embedding_ivf_k,
         canonical_col=args.canonical_col,
         canonical_url_col=args.canonical_url_col,
         salt_hot=args.salt_hot,

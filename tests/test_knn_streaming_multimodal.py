@@ -80,74 +80,6 @@ def test_bucketed_similar_pairs_subset_of_exact(vectors, spark):
     assert len(got) >= len(exact) * 0.5   # planted parallel pairs mostly co-bucket
 
 
-def test_ivf_assign_partitions_index(vectors):
-    from fuzzycat_spark.operators.knn import ivf_assign, ivf_centroids
-
-    cents = ivf_centroids(vectors, k=4, n_iter=1)
-    rows = cents.collect()
-    assert 1 <= len(rows) <= 4
-    assert all(len(r.centroid) == 16 for r in rows)
-    asg = ivf_assign(vectors, cents).collect()
-    # exactly one list per vector (unlike multiprobe LSH: no distinct needed)
-    assert len(asg) == vectors.count()
-    assert len({r.vec_id_ for r in asg}) == len(asg)
-    assert {r.cid for r in asg} <= {r.cid for r in rows}
-
-
-def test_ivf_knn_recall_and_exactness_at_full_probe(vectors):
-    from fuzzycat_spark.operators.knn import ivf_centroids, ivf_knn
-
-    cents = ivf_centroids(vectors, k=4, n_iter=1)
-    exact = {r.probe_id: r.neighbor_id for r in brute_force_knn(vectors, vectors, k=1).collect()}
-    # nprobe == k probes every list -> identical to brute force
-    full = {r.probe_id: r.neighbor_id
-            for r in ivf_knn(vectors, vectors, cents, k=1, nprobe=4).collect()}
-    assert full == exact
-    # nprobe=2 scans half the index; planted near-dups land in the same
-    # list as their original, so recall on top-1 stays high
-    approx = {r.probe_id: r.neighbor_id
-              for r in ivf_knn(vectors, vectors, cents, k=1, nprobe=2).collect()}
-    planted = [i for i in range(0, 40, 4)]
-    hits = sum(1 for p in planted if approx.get(p) == 1000 + p)
-    assert hits >= len(planted) * 0.8
-
-
-def test_embedding_strategy_ivf_clusters_planted_family(spark):
-    """DedupConfig(embedding_index='ivf'): a planted near-identical
-    vector family lands in one inverted list and clusters through the
-    cosine tier, while well-separated vectors stay singletons — the same
-    pipeline semantics as the hyperplane index, different candidate
-    geometry."""
-    import numpy as np
-
-    from fuzzycat_spark.operators.dedup import DedupConfig, dedup_pages
-
-    rng = np.random.RandomState(7)
-    base = rng.standard_normal(16)
-    fam = [base + rng.standard_normal(16) * 0.01 for _ in range(3)]
-    others = [rng.standard_normal(16) * (i + 1) for i in range(12)]
-    rows = [(i, v.tolist()) for i, v in enumerate(fam + others)]
-    pages = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).select(
-        F.col("vec_id").alias("url"),
-        F.col("vec_id").cast("string").alias("text"),
-        "embedding",
-    )
-    cfg = DedupConfig(
-        strategies=("embedding",),
-        embedding_col="embedding",
-        embedding_dim=16,
-        embedding_index="ivf",
-        embedding_ivf_k=4,
-        embedding_strong=0.95,
-    )
-    _, assign = dedup_pages(pages, cfg)
-    got = {r.id: r.cluster_id for r in assign.collect()}
-    assert got[0] == got[1] == got[2] == 0
-    assert len({v for k, v in got.items() if k >= 3}) == 12  # others singletons
-
-
 def test_incremental_dedup_across_batches(spark):
     tmp = tempfile.mkdtemp()
     index, pairs = f"{tmp}/index", f"{tmp}/pairs"
@@ -671,21 +603,6 @@ def test_incremental_embedding_cosine_links_across_batches(spark, tmp_path):
             .collect()
         }
         assert inc_pairs == batch_pairs, splits
-
-
-def test_incremental_embedding_ivf_fails_loudly(spark, tmp_path):
-    cfg = DedupConfig(
-        strategies=("embedding",),
-        embedding_col="emb",
-        embedding_dim=4,
-        embedding_index="ivf",
-    )
-    b = spark.createDataFrame(
-        [("u1", "text", [0.1, 0.2, 0.3, 0.4])],
-        "url string, text string, emb array<double>",
-    )
-    with pytest.raises(ValueError, match="hyperplane"):
-        incremental_dedup_batch(b, f"{tmp_path}/i", f"{tmp_path}/p", cfg)
 
 
 @pytest.mark.parametrize(

@@ -1,17 +1,12 @@
-"""Operator-level tests: blocking, pair generation, LSH, verify cascade,
+"""Operator-level tests: candidate strategies, LSH, verify cascade,
 connected components."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
-from fuzzycat_spark.functions.hashing import content_hash
-from fuzzycat_spark.functions.normalize import slug_text
-from fuzzycat_spark.operators.blocking import block_stats, with_block_key
 from fuzzycat_spark.operators.components import connected_components
 from fuzzycat_spark.operators.lsh import lsh_candidate_pairs, minhash_band_table
-from fuzzycat_spark.operators.pairs import block_pairs, oversize_blocks
 from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs
 
 
@@ -26,35 +21,6 @@ def docs(spark):
         ("u6", None, "en"),  # null
     ]
     return spark.createDataFrame(rows, "url string, text string, lang string")
-
-
-def test_block_pairs_exact(docs):
-    pairs = block_pairs(docs, content_hash("text")).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {("u1", "u2")}
-
-
-def test_block_pairs_slug(docs):
-    pairs = block_pairs(docs, F.md5(slug_text("text").cast("binary"))).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {("u1", "u2"), ("u1", "u3"), ("u2", "u3")}
-
-
-def test_block_pairs_max_size(spark):
-    # 5 docs in one block, cap at 4 -> no pairs, but counted in oversize
-    df = spark.createDataFrame([(f"u{i}", "same text here") for i in range(5)], "url string, text string")
-    key = content_hash("text")
-    assert block_pairs(df, key, max_block_size=4).count() == 0
-    over = oversize_blocks(df, key, max_block_size=4).collect()
-    assert len(over) == 1 and over[0].block_size == 5
-    assert block_pairs(df, key, max_block_size=None).count() == 10  # 5C2
-
-
-def test_block_stats(docs):
-    s = block_stats(docs, F.md5(slug_text("text").cast("binary"))).first()
-    # u5 empty slug -> md5("") is still a key; u6 null -> key_empty
-    assert s.key_empty == 1
-    assert s.key_ok == 5
-    assert s.num_clusters == 3  # {u1,u2,u3}, {u4}, {u5}
-    assert s.num_multi_clusters == 1
 
 
 def test_lsh_finds_near_dups(spark):
@@ -281,12 +247,10 @@ def test_winnow_guarantee_shared_run(spark):
 
 
 def test_winnow_density_and_overlap_pairs(spark):
-    """Fingerprint count stays a small fraction of the shingle count, and
-    overlap pairing finds exactly the pair with the common paragraph."""
-    from fuzzycat_spark.operators.winnow import (
-        winnow_fingerprints,
-        winnow_overlap_pairs,
-    )
+    """Fingerprint count stays a small fraction of the shingle count.
+    Partial-overlap pairing by the winnow strategy, which uses the
+    fingerprints as band keys, is test_winnow_strategy_surfaces_partial_overlap."""
+    from fuzzycat_spark.operators.winnow import winnow_fingerprints
 
     para = " ".join(f"para{i}" for i in range(30))
     docs = [("x", " ".join(f"xw{i}" for i in range(200)) + " " + para),
@@ -297,10 +261,6 @@ def test_winnow_density_and_overlap_pairs(spark):
     n_fp = fps.count()
     # ~2/(w+1) density: 3 docs x ~230 shingles -> well under half selected
     assert n_fp < 3 * 230 * 0.6
-    pairs = {(r.id_a, r.id_b): r.n_common
-             for r in winnow_overlap_pairs(fps, min_common=2).collect()}
-    assert set(pairs) == {("x", "y")}
-    assert pairs[("x", "y")] >= 2
 
 
 def test_nysiis_strategy_blocks_homophone_names(spark):
@@ -405,74 +365,19 @@ def test_embedding_strategy_clusters_paraphrases(spark):
     assert vmap[("p1", "p2")] == ("strong", "EMBEDDING_COSINE")
 
 
+def test_simhash_strategy_requires_token_hashes(docs):
+    """SimHash fingerprints only off prep's per-token hashes: prep built
+    without them is refused, never re-tokenized from the raw text."""
+    from fuzzycat_spark.operators.dedup import DedupConfig, strategy_band_table
+
+    prep = prepare_pages(docs, "url", "text")
+    with pytest.raises(ValueError, match="with_token_hashes"):
+        strategy_band_table(prep, DedupConfig(strategies=("simhash",)))
+
+
 def test_embedding_strategy_requires_config(spark):
     from fuzzycat_spark.operators.dedup import DedupConfig, candidate_pairs
 
     df = spark.createDataFrame([("a", "t")], "url string, text string")
     with pytest.raises(ValueError, match="embedding"):
         candidate_pairs(df, DedupConfig(strategies=("embedding",)))
-
-
-def test_bbit_bands_superset_of_full_width_candidates(spark):
-    """Masking to b bits never splits a bucket: every full-width LSH
-    candidate pair must also surface from the b-bit table (the safe
-    direction for a dedup screen); exact duplicates always pair."""
-    from fuzzycat_spark.operators.lsh import (
-        bbit_band_table,
-        lsh_candidate_pairs,
-        minhash_band_table,
-    )
-
-    base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
-            "juliett kilo lima mike november oscar")
-    rows = (
-        [(f"d{i}", f"{base} edition {i % 3}") for i in range(9)]  # 3 dup triples
-        + [(f"u{i}", f"completely different subject {i} covering item "
-                     f"{i * 11} and matter {i * 13} separately") for i in range(6)]
-    )
-    df = spark.createDataFrame(rows, "url string, text string")
-    full = minhash_band_table(df, "url", "text", unit_bands=0)
-    bbit = bbit_band_table(df, "url", "text", b=8)
-    full_pairs = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(full, max_bucket_size=None).collect()
-    }
-    bbit_pairs = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(bbit, max_bucket_size=None).collect()
-    }
-    assert full_pairs <= bbit_pairs
-    for grp in range(3):
-        ids = sorted(f"d{i}" for i in range(9) if i % 3 == grp)
-        for i, a in enumerate(ids):
-            for bb in ids[i + 1:]:
-                assert (a, bb) in bbit_pairs
-
-
-def test_bbit_band_table_rejects_bad_b(spark):
-    import pytest as _pytest
-
-    from fuzzycat_spark.operators.lsh import bbit_band_table
-
-    df = spark.createDataFrame([("u", "a b c")], "url string, text string")
-    with _pytest.raises(ValueError, match="b must be"):
-        bbit_band_table(df, "url", "text", b=64)
-    # the packed key must fit a signed long: rows*b > 63 is rejected
-    with _pytest.raises(ValueError, match="pack"):
-        bbit_band_table(df, "url", "text", b=40)
-
-
-def test_bbit_band_keys_are_packed_longs_not_md5_strings(spark):
-    """The storage claim lives here: band_hash is the rows*b-bit packed
-    LONG of the masked entries (16 bits at b=8/rows=2), not a 32-char
-    md5 string like the full-width table."""
-    from fuzzycat_spark.operators.lsh import bbit_band_table
-
-    df = spark.createDataFrame(
-        [("u1", "alpha bravo charlie delta echo foxtrot")],
-        "url string, text string",
-    )
-    t = bbit_band_table(df, "url", "text", b=8)
-    assert dict(t.dtypes)["band_hash"] == "bigint"
-    vals = [r.band_hash for r in t.collect()]
-    assert vals and all(0 <= v < (1 << 16) for v in vals)

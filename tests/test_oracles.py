@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import math
 import tempfile
+from dataclasses import replace
 from pathlib import Path
 
 import duckdb
@@ -43,16 +44,15 @@ from fuzzycat_spark.functions.text import (
     quality_score_cols,
     token_count,
 )
-from fuzzycat_spark.operators.blocking import block_stats
 from fuzzycat_spark.operators.components import connected_components
 from fuzzycat_spark.operators.dedup import (
     DedupConfig,
     candidate_pairs,
     dedup_pages,
     dup_stats,
+    star_edges,
 )
 from fuzzycat_spark.operators.lsh import lsh_candidate_pairs, minhash_band_table
-from fuzzycat_spark.operators.pairs import block_pairs
 from fuzzycat_spark.operators.verify import (
     LEV_PFX,
     LEV_STRONG_RATIO,
@@ -654,23 +654,20 @@ def _spark_cosine(a, b):
     return dot / (na * nb)
 
 
+def _key_star_edges(spark, sf_dir, strategy):
+    """The product's star edges of one key-equality strategy: each member
+    of a key group links to the group's min id."""
+    prep = prepare_pages(_docs(spark, sf_dir), "doc_id", "text")
+    cfg = replace(DOC_CFG, strategies=(strategy,))
+    return star_edges(prep, cfg).select("id_a", "id_b")
+
+
 def q_exact_dup_pairs(spark, sf_dir):
-    return block_pairs(
-        _docs(spark, sf_dir), content_hash("text"), "doc_id", max_block_size=None
-    ).select("id_a", "id_b")
+    return _key_star_edges(spark, sf_dir, "exact")
 
 
 def q_slug_dup_pairs(spark, sf_dir):
-    return block_pairs(
-        _docs(spark, sf_dir), F.md5(slug_text("text").cast("binary")), "doc_id",
-        max_block_size=None,
-    ).select("id_a", "id_b")
-
-
-def q_block_stats(spark, sf_dir):
-    return block_stats(
-        _docs(spark, sf_dir), F.md5(slug_text("text").cast("binary")), "doc_id"
-    ).select("key_ok", "num_clusters", "num_multi_clusters", "max_cluster_size", "key_empty")
+    return _key_star_edges(spark, sf_dir, "slug")
 
 
 def q_cluster_size_histogram(spark, sf_dir):
@@ -1022,57 +1019,6 @@ def q_lsh_candidates(spark, sf_dir):
     return lsh_candidate_pairs(_band_table(spark, sf_dir), MAX_BUCKET)
 
 
-_BBIT_B = 8
-
-
-def q_bbit_candidates(spark, sf_dir):
-    """b-bit MinHash candidates (operators/lsh.bbit_band_table — Li &
-    König, WWW 2010): each band key is the rows·b-bit PACKED LONG of
-    its masked signature entries (16 bits here vs a 32-char md5 in the
-    full-width table), so the persisted band artifact (the cross-crawl
-    `--emit-bands` path) actually shrinks ~8-16× per row. Masking never
-    splits a bucket — recall is monotonically >= the full-width table
-    at the same band layout (unit_bands=0; the production unit bands
-    have no b-bit analog) — and the extra accidental collisions are
-    handled by the same bucket cap as every hot bucket. Same capped
-    single-shuffle pair expansion as `lsh_candidates`."""
-    from fuzzycat_spark.operators.lsh import bbit_band_table
-
-    bands = bbit_band_table(
-        _doc_shingles(spark, sf_dir), "doc_id", "text",
-        NUM_PERM, BANDS, ROWS, b=_BBIT_B, shingles_col="sh",
-    )
-    return lsh_candidate_pairs(bands, MAX_BUCKET)
-
-
-def _bbit_candidates_sql() -> str:
-    mask = (1 << _BBIT_B) - 1
-    bb = ", ".join(
-        f"CAST(((l[{2 * b + 1}] & {mask}) << {_BBIT_B})"
-        f" | (l[{2 * b + 2}] & {mask}) AS BIGINT)"
-        for b in range(BANDS)
-    )
-    return f"""
-WITH {_SIG_CTES},
-sig_list AS (SELECT doc_id, list(sig ORDER BY perm_id) AS l
-             FROM sigs GROUP BY doc_id),
-bband_rows AS (
-  SELECT doc_id,
-         CAST(generate_subscripts(bk, 1) - 1 AS BIGINT) AS band_id,
-         unnest(bk) AS band_hash
-  FROM (SELECT doc_id, [{bb}] AS bk FROM sig_list)
-),
-bucket_ok AS (
-  SELECT band_id, band_hash FROM bband_rows
-  GROUP BY band_id, band_hash HAVING count(*) <= {MAX_BUCKET}
-),
-br AS (SELECT bband_rows.* FROM bband_rows
-       JOIN bucket_ok USING (band_id, band_hash))
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM br a JOIN br b USING (band_id, band_hash)
-WHERE a.doc_id < b.doc_id"""
-
-
 _NGRAM_JACCARD_T = 0.5
 
 
@@ -1155,12 +1101,6 @@ def q_canonical_docs(spark, sf_dir):
     return select_canonical(
         _docs(spark, sf_dir), q_components(spark, sf_dir), "doc_id", "text"
     )
-
-
-def q_closest_match(spark, sf_dir):
-    from fuzzycat_spark.operators.pairs import status_ranked_matches
-
-    return status_ranked_matches(q_verified_pairs(spark, sf_dir), "id_a", k=1)
 
 
 def q_knn(spark, sf_dir):
@@ -1343,70 +1283,6 @@ SELECT emb.vec_id AS id, coalesce(cc.cluster_id, emb.vec_id) AS cluster_id
 FROM embeddings emb LEFT JOIN cc ON emb.vec_id = cc.id"""
 
 
-# the sf0.001 embeddings are near-orthogonal (max pairwise cosine ~0.51),
-# so the IVF case runs at a threshold that actually forms clusters —
-# a case where zero edges survive would pass vacuously
-_EMB_STRONG_IVF = 0.45
-
-
-def q_components_embedding_ivf(spark, sf_dir):
-    """The embedding strategy's IVF scale path end-to-end: the same
-    dedup_pages pipeline as components_embedding but candidates come from
-    k-means inverted lists (cell count set by k, independent of plane
-    geometry — the 10^9-vector index layout) instead of hyperplane
-    buckets, still through the capped band machinery and the cosine
-    tier. Threshold 0.45 (vs 0.9) so REAL edges and multi-doc clusters
-    form on the near-orthogonal sf0.001 embeddings — this case checks
-    cluster formation, not just empty-edge agreement."""
-    e = _emb(spark, sf_dir)
-    pages = e.select(
-        F.col("vec_id").alias("url"),
-        F.col("vec_id").cast("string").alias("text"),
-        "embedding",
-    )
-    cfg = DedupConfig(
-        strategies=("embedding",),
-        embedding_col="embedding",
-        embedding_dim=_ANN_DIM,
-        embedding_index="ivf",
-        embedding_ivf_k=_IVF_K,
-        embedding_strong=_EMB_STRONG_IVF,
-        max_bucket_size=MAX_BUCKET,
-    )
-    _, assign = dedup_pages(pages, cfg)
-    return assign
-
-
-def _components_embedding_ivf_sql() -> str:
-    return f"""WITH RECURSIVE {_ivf_cents_cte()},
-bkok AS (
-  SELECT cid FROM asg GROUP BY cid HAVING count(*) BETWEEN 2 AND {MAX_BUCKET}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM asg a JOIN bkok USING (cid) JOIN asg b ON a.cid = b.cid
-  WHERE a.vec_id < b.vec_id
-),
-epairs AS (
-  SELECT id_a, id_b FROM cand
-  JOIN embeddings a ON cand.id_a = a.vec_id
-  JOIN embeddings b ON cand.id_b = b.vec_id
-  WHERE round({_COS_D}, 9) >= {_EMB_STRONG_IVF}
-),
-eedges AS MATERIALIZED (
-  SELECT id_a AS src, id_b AS dst FROM epairs
-  UNION ALL SELECT id_b AS src, id_a AS dst FROM epairs
-),
-reach(id, r) AS (
-  SELECT src, src FROM eedges
-  UNION
-  SELECT g.src, reach.r FROM eedges g JOIN reach ON g.dst = reach.id
-),
-cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-SELECT emb.vec_id AS id, coalesce(cc.cluster_id, emb.vec_id) AS cluster_id
-FROM embeddings emb LEFT JOIN cc ON emb.vec_id = cc.id"""
-
-
 _PLANTED_FIXTURE = f"{FIXTURES}/embeddings_planted.parquet"
 _PLANTED_STRONG = 0.9  # the PRODUCTION default (DedupConfig.embedding_strong)
 
@@ -1552,112 +1428,7 @@ SELECT probe_id, neighbor_id, rank FROM (
 ) WHERE rank <= 3"""
 
 
-_IVF_K = 8
-_IVF_NPROBE = 2
-
-
-def q_ivf_assign(spark, sf_dir):
-    """IVF coarse quantization: deterministic seeds (k lowest-id vectors) +
-    one Lloyd iteration, then nearest-centroid assignment. The inverted-list
-    build step of the IVF ANN scale path."""
-    from fuzzycat_spark.operators.knn import ivf_assign, ivf_centroids
-
-    e = _emb(spark, sf_dir)
-    cents = ivf_centroids(e, k=_IVF_K, n_iter=1)
-    return ivf_assign(e, cents).select(F.col("vec_id_").alias("vec_id"), "cid")
-
-
-def q_ivf_knn(spark, sf_dir):
-    """IVF top-k: each probe scans only its nprobe nearest inverted lists
-    (~nprobe/k of the index, corpus-size independent)."""
-    from fuzzycat_spark.operators.knn import ivf_centroids, ivf_knn
-
-    e = _emb(spark, sf_dir)
-    cents = ivf_centroids(e, k=_IVF_K, n_iter=1)
-    return ivf_knn(e, e, cents, k=3, nprobe=_IVF_NPROBE).select(
-        "probe_id", "neighbor_id", "rank"
-    )
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b}))))"
-    )
-
-
-def _ivf_cents_cte() -> str:
-    """Shared CTEs reproducing ivf_centroids(k=8, n_iter=1) + ivf_assign:
-    seeded-hash-sample seeds (k smallest md5('0' || id) — the engine-
-    portable mirror of ivf_centroids' TakeOrderedAndProject draw) ->
-    argmax-cosine assignment -> per-position rounded means -> final
-    assignment. DuckDB lists are 1-based where posexplode is 0-based;
-    only the ordering matters."""
-    e_emb = "CAST(e.embedding AS DOUBLE[])"
-    return f"""
-seeds AS (
-  SELECT CAST(row_number() OVER (ORDER BY hk, id) - 1 AS BIGINT) AS cid, c AS centroid
-  FROM (SELECT vec_id AS id, md5('0' || CAST(vec_id AS VARCHAR)) AS hk,
-               CAST(embedding AS DOUBLE[]) AS c
-        FROM embeddings ORDER BY hk, id LIMIT {_IVF_K})
-),
-asg0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, s.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY round({_cos_sql(e_emb, "s.centroid")}, 9) DESC, s.cid) AS rn
-    FROM embeddings e CROSS JOIN seeds s
-  ) WHERE rn = 1
-),
-cents AS (
-  SELECT cid, list(av ORDER BY pos) AS centroid FROM (
-    SELECT a.cid, t.i AS pos, round(avg(CAST(e.embedding[t.i] AS DOUBLE)), 6) AS av
-    FROM embeddings e
-    JOIN asg0 a USING (vec_id), generate_series(1, {_ANN_DIM}) AS t(i)
-    GROUP BY a.cid, t.i
-  ) GROUP BY cid
-),
-asg AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY round({_cos_sql(e_emb, "c.centroid")}, 9) DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn = 1
-)"""
-
-
-def _ivf_assign_sql() -> str:
-    return f"WITH {_ivf_cents_cte()} SELECT vec_id, cid FROM asg"
-
-
-def _ivf_knn_sql() -> str:
-    e_emb = "CAST(e.embedding AS DOUBLE[])"
-    return f"""
-WITH {_ivf_cents_cte()},
-probe_lists AS (
-  SELECT probe_id, cid FROM (
-    SELECT e.vec_id AS probe_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY round({_cos_sql(e_emb, "c.centroid")}, 9) DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn <= {_IVF_NPROBE}
-)
-SELECT probe_id, neighbor_id, rank FROM (
-  SELECT p.probe_id, n.vec_id AS neighbor_id,
-    CAST(row_number() OVER (PARTITION BY p.probe_id
-      ORDER BY round({_COS_D}, 9) DESC, n.vec_id) AS BIGINT) AS rank
-  FROM probe_lists p
-  JOIN asg n ON n.cid = p.cid
-  JOIN embeddings a ON a.vec_id = p.probe_id
-  JOIN embeddings b ON b.vec_id = n.vec_id
-  WHERE n.vec_id != p.probe_id
-) WHERE rank <= 3"""
-
-
 _WINNOW_W = 4
-_WINNOW_MIN_COMMON = 2
-_WINNOW_CAP = 200
 
 
 def q_winnow_fps(spark, sf_dir):
@@ -1669,22 +1440,6 @@ def q_winnow_fps(spark, sf_dir):
     return winnow_fingerprints(
         _docs(spark, sf_dir), "doc_id", "text", k=SHINGLE_N, w=_WINNOW_W
     ).select(F.col("id").alias("doc_id"), "fp", "pos")
-
-
-def q_winnow_overlap(spark, sf_dir):
-    """Document pairs sharing >= min_common winnowing fingerprints —
-    catches shared-paragraph overlap that whole-doc LSH jaccard misses."""
-    from fuzzycat_spark.operators.winnow import (
-        winnow_fingerprints,
-        winnow_overlap_pairs,
-    )
-
-    fps = winnow_fingerprints(
-        _docs(spark, sf_dir), "doc_id", "text", k=SHINGLE_N, w=_WINNOW_W
-    )
-    return winnow_overlap_pairs(
-        fps, min_common=_WINNOW_MIN_COMMON, max_bucket_size=_WINNOW_CAP
-    )
 
 
 def _winnow_sel_cte() -> str:
@@ -1732,20 +1487,6 @@ wsel AS (
 
 def _winnow_fps_sql() -> str:
     return f"WITH {_winnow_sel_cte()} SELECT doc_id, fp, pos FROM wsel"
-
-
-def _winnow_overlap_sql() -> str:
-    return f"""
-WITH {_winnow_sel_cte()},
-wfp AS (SELECT DISTINCT doc_id, fp FROM wsel),
-wcool AS (
-  SELECT doc_id, fp FROM wfp
-  WHERE fp IN (SELECT fp FROM wfp GROUP BY fp HAVING count(*) <= {_WINNOW_CAP})
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-FROM wcool a JOIN wcool b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING count(*) >= {_WINNOW_MIN_COMMON}"""
 
 
 _SUBSTR_K = 25
@@ -2044,6 +1785,28 @@ def q_components_denylist(spark, sf_dir):
     return assign
 
 
+# min-id star edges of the key-equality strategies (operators/dedup.
+# star_edges) over `t`/`tok` of _BASE_CTES: each member of a content-hash
+# or slug-key group links to the group's min id; slug stars need
+# SHORT_TOKENS tokens and a key off the default denylist
+_STAR_CTES = f"""dstar_exact AS (
+  SELECT least(rep, doc_id) AS id_a, greatest(rep, doc_id) AS id_b,
+         'exact' AS status, 'CONTENT_HASH' AS reason
+  FROM (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
+        FROM t WHERE text IS NOT NULL)
+  WHERE doc_id != rep
+),
+dstar_slug AS (
+  SELECT least(rep, doc_id) AS id_a, greatest(rep, doc_id) AS id_b,
+         'exact' AS status, 'SLUG_MATCH' AS reason
+  FROM (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(slug)) AS rep
+        FROM tok
+        WHERE slug IS NOT NULL AND len(toks) >= {SHORT_TOKENS}
+          AND md5(slug) NOT IN ({_DENY_IN}))
+  WHERE doc_id != rep
+)"""
+
+
 def _denylist_ctes() -> str:
     """Shared oracle CTEs reproducing dedup_pages over the denylist
     fixture: MinHash band candidates (capped) -> cascade (with the
@@ -2084,22 +1847,7 @@ near_verified AS (
   SELECT id_a, id_b, v[1] AS status, v[2] AS reason
   FROM (SELECT id_a, id_b, {_VERIFY_CASE} AS v FROM pairrows)
 ),
-dstar_exact AS (
-  SELECT least(rep, doc_id) AS id_a, greatest(rep, doc_id) AS id_b,
-         'exact' AS status, 'CONTENT_HASH' AS reason
-  FROM (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
-        FROM t WHERE text IS NOT NULL)
-  WHERE doc_id != rep
-),
-dstar_slug AS (
-  SELECT least(rep, doc_id) AS id_a, greatest(rep, doc_id) AS id_b,
-         'exact' AS status, 'SLUG_MATCH' AS reason
-  FROM (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(slug)) AS rep
-        FROM tok
-        WHERE slug IS NOT NULL AND len(toks) >= {SHORT_TOKENS}
-          AND md5(slug) NOT IN ({_DENY_IN}))
-  WHERE doc_id != rep
-),
+{_STAR_CTES},
 verified AS (
   SELECT id_a, id_b, status, reason FROM (
     SELECT *, row_number() OVER (PARTITION BY id_a, id_b ORDER BY
@@ -2718,30 +2466,11 @@ FROM s JOIN v ON s.doc_id = v.doc_id"""
 CASES = {
     "exact_dup_pairs": (
         q_exact_dup_pairs,
-        """
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM documents a JOIN documents b ON md5(a.text) = md5(b.text)
-            WHERE a.doc_id < b.doc_id""",
+        f"WITH {_BASE_CTES},\n{_STAR_CTES}\nSELECT id_a, id_b FROM dstar_exact",
     ),
     "slug_dup_pairs": (
         q_slug_dup_pairs,
-        f"""
-            WITH k AS (SELECT doc_id, md5({_SLUG}) AS key FROM documents)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM k a JOIN k b USING (key) WHERE a.doc_id < b.doc_id""",
-    ),
-    "block_stats": (
-        q_block_stats,
-        f"""
-            WITH k AS (SELECT doc_id, md5({_SLUG}) AS key FROM documents
-                       WHERE {_SLUG} IS NOT NULL),
-            per AS (SELECT key, count(*) AS cs FROM k GROUP BY key)
-            SELECT CAST(coalesce(sum(cs), 0) AS BIGINT) AS key_ok,
-                   count(*) AS num_clusters,
-                   CAST(coalesce(sum(CASE WHEN cs >= 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS num_multi_clusters,
-                   CAST(coalesce(max(cs), 0) AS BIGINT) AS max_cluster_size,
-                   CAST((SELECT count(*) FROM documents WHERE text IS NULL) AS INT) AS key_empty
-            FROM per""",
+        f"WITH {_BASE_CTES},\n{_STAR_CTES}\nSELECT id_a, id_b FROM dstar_slug",
     ),
     "cluster_size_histogram": (
         q_cluster_size_histogram,
@@ -2806,7 +2535,6 @@ CASES = {
             FROM br a JOIN br b USING (band_id, band_hash)
             WHERE a.doc_id < b.doc_id""",
     ),
-    "bbit_candidates": (q_bbit_candidates, _bbit_candidates_sql()),
     "ngram_jaccard": (
         q_ngram_jaccard,
         f"""
@@ -2872,20 +2600,6 @@ CASES = {
               SELECT cluster_id, count(*) AS cluster_size FROM assignments GROUP BY 1
             ) GROUP BY cluster_size""",
     ),
-    "closest_match": (
-        q_closest_match,
-        f"""
-            WITH {_VERIFIED_CTES}
-            SELECT probe, match, status, rank FROM (
-              SELECT id_a AS probe, id_b AS match, status,
-                CAST(row_number() OVER (PARTITION BY id_a ORDER BY
-                  (CASE status WHEN 'exact' THEN 10 WHEN 'strong' THEN 20
-                               WHEN 'weak' THEN 30 WHEN 'ambiguous' THEN 40 END),
-                  id_b) AS BIGINT) AS rank
-              FROM verified
-              WHERE status IN ('exact', 'strong', 'weak', 'ambiguous')
-            ) WHERE rank <= 1""",
-    ),
     "knn": (q_knn, _KNN_SQL),
     "similar_embeddings": (q_similar_embeddings, _SIMILAR_PAIRS_SQL),
     "ann_buckets": (q_ann_buckets, _ann_bucket_sql()),
@@ -2911,10 +2625,7 @@ CASES = {
             WHERE strpos(b.slug, a.slug) > 0""",
     ),
     "ann_similar_pairs": (q_ann_similar_pairs, _ann_similar_pairs_sql()),
-    "ivf_assign": (q_ivf_assign, _ivf_assign_sql()),
-    "ivf_knn": (q_ivf_knn, _ivf_knn_sql()),
     "winnow_fps": (q_winnow_fps, _winnow_fps_sql()),
-    "winnow_overlap": (q_winnow_overlap, _winnow_overlap_sql()),
     "corpus_filter": (q_corpus_filter, _corpus_filter_sql()),
     "page_directives": (
         q_page_directives,
@@ -2950,10 +2661,6 @@ CASES = {
             FROM '{_WARC_EXPECTED}'""",
     ),
     "latest_revision": (q_latest_revision, _latest_revision_sql()),
-    "components_embedding_ivf": (
-        q_components_embedding_ivf,
-        _components_embedding_ivf_sql(),
-    ),
     "denylist_pairs": (q_denylist_pairs, _denylist_pairs_sql()),
     "components_denylist": (q_components_denylist, _components_denylist_sql()),
     "ann_pairs_planted": (q_ann_pairs_planted, _ann_pairs_planted_sql()),

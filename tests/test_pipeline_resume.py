@@ -1,5 +1,5 @@
-"""Resumable pipeline: stage checkpoints, lineage counters, resume-from-
-last-stage, and the star-join / status-ranking operators."""
+"""Resumable pipeline: stage checkpoints, lineage counters and resume-from-
+last-stage."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from fuzzycat_spark.operators.dedup import DedupConfig, dedup_pages
-from fuzzycat_spark.operators.pairs import star_pairs, status_ranked_matches
 from fuzzycat_spark.plans.checkpoint import StageCheckpointer
 from fuzzycat_spark.plans.pipeline import run_dedup_pipeline
 from fuzzycat_spark.sources import synth_pages
@@ -86,35 +85,6 @@ def test_cli_pipeline_matches_flagship_on_mega_cluster(spark, tmp_path):
     flag_assign = {(r.id, r.cluster_id) for r in a_flag.collect()}
     cli_assign = {(r.id, r.cluster_id) for r in out["assignments"].collect()}
     assert cli_assign == flag_assign
-
-
-def test_star_pairs(spark):
-    rows = [
-        ("p1", "k1", "release"),
-        ("r1", "k1", "ref"),
-        ("r2", "k1", "ref"),
-        ("p2", "k2", "release"),
-        ("lonely", "k3", "ref"),
-    ]
-    df = spark.createDataFrame(rows, "url string, key string, role string")
-    got = {
-        (r.id_a, r.id_b)
-        for r in star_pairs(df, F.col("key"), "role", "release").collect()
-    }
-    # pivot vs members only — no ref-ref pair, no pivot without members
-    assert got == {("p1", "r1"), ("p1", "r2")}
-
-
-def test_status_ranked_matches(spark):
-    rows = [
-        ("a", "x", "weak", "W"),
-        ("a", "y", "exact", "E"),
-        ("a", "z", "different", "D"),
-        ("b", "q", "ambiguous", "U"),
-    ]
-    v = spark.createDataFrame(rows, "id_a string, id_b string, status string, reason string")
-    got = {r.probe: (r.match, r.status) for r in status_ranked_matches(v).collect()}
-    assert got == {"a": ("y", "exact"), "b": ("q", "ambiguous")}
 
 
 def test_sweep_spares_live_dir_with_fresh_heartbeat(tmp_path):

@@ -98,7 +98,7 @@ def test_lang_id_table_uses_broadcast_join(spark):
 
 def test_ann_bucket_cap_excludes_and_counts_mega_bucket(spark):
     """The standalone embedding ANN entry points get the same skew guard
-    as the text LSH path (mirrors test_block_pairs_max_size): a planted
+    as the text LSH path: a planted
     mega-bucket — 30 degenerate near-identical vectors, the all-same-sign
     hot case — must be EXCLUDED from the quadratic join when over the cap
     and COUNTED by oversize_ann_buckets, while normal buckets keep their
@@ -226,21 +226,6 @@ def test_all_strategy_bands_share_one_shuffle(spark):
         if "Exchange hashpartitioning" in l and "band_hash" in l
     ]
     assert len(band_exchanges) == 1, plan[:3000]
-
-
-def test_ivf_seed_selection_is_heap_not_global_sort(spark):
-    """ivf_centroids' seed draw (k smallest md5(seed||id)) must compile
-    to TakeOrderedAndProject — a per-partition k-heap plus a driver merge
-    of p*k rows — never a range-partitioned global sort of the vector
-    table. A rangepartitioning exchange here would shuffle the entire
-    10^9-vector corpus to pick 8 seeds."""
-    from fuzzycat_spark.operators.knn import ivf_centroids
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf_centroids(e, k=8, n_iter=0)
-    plan = _plan(cents)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "rangepartitioning" not in plan.lower(), plan
 
 
 def test_lm_scores_all_jvm_and_narrow(spark):
