@@ -42,7 +42,6 @@ class DedupConfig:
     bands: int = 16
     rows: int = 2
     shingle_n: int = 3
-    max_block_size: int = 100
     max_bucket_size: int = 200
     simhash_band_bits: int = 8
     # "substring" strategy: guaranteed-recall containment candidates
@@ -77,10 +76,10 @@ class DedupConfig:
     embedding_strong: float = 0.9
     # boilerplate denylist (the graft of the reference's blacklist data,
     # data.py:12-34): md5 slug keys whose SLUG equality is meaningless —
-    # they never form slug star edges or slug band rows, and the cascade
-    # marks their pairs ambiguous/"BLACKLISTED" (byte-identical junk still
-    # dedupes via CONTENT_HASH). Defaults to the committed web-boilerplate
-    # list; pass () to disable, or your own denylist_slug_keys(...) tuple.
+    # they never form slug star edges, and the cascade marks their pairs
+    # ambiguous/"BLACKLISTED" (byte-identical junk still dedupes via
+    # CONTENT_HASH). Defaults to the committed web-boilerplate list; pass
+    # () to disable, or your own denylist_slug_keys(...) tuple.
     denylist_keys: tuple[str, ...] | None = None
     # mega-cluster softener: when > 0, buckets over their cap are re-keyed
     # into this many salted shards BEFORE the cap filter, so a hot bucket
@@ -105,6 +104,10 @@ class DedupConfig:
 # in `Prior.sizes` (gram buckets are probe-joined, never pair-expanded)
 GRAM_BAND = "ssgram"
 
+# the deterministic key-equality strategies: linked by `star_edges`, never
+# by band rows, so no bucket cap applies to them
+KEY_STRATEGIES = frozenset({"exact", "slug"})
+
 
 @dataclass(frozen=True)
 class Prior:
@@ -116,7 +119,7 @@ class Prior:
     - features: `prepare_pages` rows (with `_emb` for the embedding tier)
     - grams:    substring k-gram index rows (id, gh)
     - probes:   substring probe rows (id, gh0, slug)
-    - sizes:    cumulative per-bucket counts (band_id, band_hash, cap, n);
+    - sizes:    cumulative per-bucket counts (band_id, band_hash, n);
                 gram buckets under band id GRAM_BAND
     """
 
@@ -141,34 +144,18 @@ def strategy_band_table(
     cfg: DedupConfig = DedupConfig(),
     pages: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, band_id, band_hash, cap) rows for every enabled blocking
-    strategy — the shared candidate-generation surface for the batch
-    pipeline AND the streaming index (which persists these rows as its
-    grow-only LSH state).
+    """(id, band_id, band_hash) rows for every enabled APPROXIMATE
+    blocking strategy — the shared candidate-generation surface for the
+    batch pipeline AND the streaming index (which persists these rows as
+    its grow-only LSH state). The key-equality strategies (KEY_STRATEGIES)
+    have no band rows: `star_edges` links them.
 
-    Exact hash and slug key are single-band strategies ('exact'/'slug'
-    band ids) capped at max_block_size; MinHash LSH bands are capped at
-    max_bucket_size. SimHash fingerprints off prep's per-token hashes
+    Every bucket gets the same cap downstream, cfg.max_bucket_size.
+    SimHash fingerprints off prep's per-token hashes
     (`prepare_pages(with_token_hashes=True)`); `pages` is only needed for
     the embedding, winnow and nysiis strategies.
     """
     tables = []
-    if "exact" in cfg.strategies:
-        tables.append(
-            prep.select(
-                "id", F.lit("exact").alias("band_id"), F.col("ch").alias("band_hash")
-            ).filter(F.col("band_hash").isNotNull())
-        )
-    if "slug" in cfg.strategies:
-        deny = _deny(cfg)
-        slug_rows = prep.select(
-            "id",
-            F.lit("slug").alias("band_id"),
-            F.col("slug_key").alias("band_hash"),
-        ).filter(F.col("band_hash").isNotNull())
-        if deny:
-            slug_rows = slug_rows.filter(~F.col("band_hash").isin(*deny))
-        tables.append(slug_rows)
     if "minhash" in cfg.strategies:
         tables.append(
             minhash_band_table(
@@ -244,16 +231,11 @@ def strategy_band_table(
             ).filter(F.col("band_hash").isNotNull() & (F.col("band_hash") != ""))
         )
     if not tables:
-        raise ValueError(f"no blocking strategies enabled: {cfg.strategies}")
+        raise ValueError(f"no approximate strategies enabled: {cfg.strategies}")
     bands = tables[0]
     for t in tables[1:]:
         bands = bands.unionByName(t)
-    # per-strategy caps: hash/slug blocks use max_block_size, LSH buckets
-    # max_bucket_size (mirrors the reference's max-cluster-size guard)
-    cap = F.when(
-        F.col("band_id").isin("exact", "slug"), F.lit(cfg.max_block_size)
-    ).otherwise(F.lit(cfg.max_bucket_size))
-    return bands.withColumn("cap", cap)
+    return bands
 
 
 def _star_edges_for_key(
@@ -350,10 +332,13 @@ def index_rows(
     pages: DataFrame, prep: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """(bands, grams): the candidate index rows of `pages` — the band table
-    of every band strategy (`strategy_band_table`), and the substring
-    k-gram rows (`substring_doc_grams`) when that strategy is on. A stream
-    epoch persists both as its index state."""
-    band_strategies = tuple(s for s in cfg.strategies if s != "substring")
+    of the approximate strategies (`strategy_band_table`), and the
+    substring k-gram rows (`substring_doc_grams`) when that strategy is
+    on. The key-equality strategies have no index rows. A stream epoch
+    persists both as its index state."""
+    band_strategies = tuple(
+        s for s in cfg.strategies if s not in KEY_STRATEGIES and s != "substring"
+    )
     bands = grams = None
     if band_strategies:
         bands = strategy_band_table(
@@ -386,9 +371,9 @@ def index_candidates(
         if cfg.salt_hot:
             from fuzzycat_spark.operators.lsh import salt_hot_buckets
 
-            bands = salt_hot_buckets(bands, "cap", cfg.salt_hot)
+            bands = salt_hot_buckets(bands, cfg.max_bucket_size, cfg.salt_hot)
         pairs = lsh_candidate_pairs(
-            bands, max_bucket_size="cap", prior_bands=p.bands, prior_sizes=sizes
+            bands, cfg.max_bucket_size, prior_bands=p.bands, prior_sizes=sizes
         )
     if grams is not None:
         from fuzzycat_spark.operators.substring import substring_pairs
@@ -407,7 +392,7 @@ def index_candidates(
         )
         pairs = ss.distinct() if pairs is None else pairs.unionByName(ss).distinct()
     if pairs is None:
-        raise ValueError(f"no blocking strategies enabled: {cfg.strategies}")
+        raise ValueError(f"no approximate strategies enabled: {cfg.strategies}")
     return pairs
 
 
@@ -416,12 +401,15 @@ def candidate_pairs(
     cfg: DedupConfig = DedupConfig(),
     prep: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidates from all enabled blocking strategies via ONE shuffle.
+    """The candidates of the approximate strategies — the plan's
+    "candidates" stage for one epoch (`dedup_stages` builds it from the same
+    `index_rows` + `index_candidates`). The key-equality strategies yield
+    none here: `star_edges` links them.
 
-    Every strategy is just a (id, band_id, band_hash) generator; unioning
-    the band *tables* before a single bucket-capped pair expansion replaces
-    per-strategy join+distinct subplans with one shuffle + one distinct:
-    same pair set, ~1/3 the stages.
+    Every approximate strategy is just a (id, band_id, band_hash)
+    generator; unioning the band *tables* before a single bucket-capped
+    pair expansion replaces per-strategy join+distinct subplans with one
+    shuffle + one distinct: same pair set, ~1/3 the stages.
 
     `prep` is the materialized table from `prepare_pages` — pass it when
     the caller also verifies, so normalization runs once for both phases.
@@ -491,13 +479,9 @@ def dedup_stages(
         ),
     )
     stars = star_edges(prep, cfg, prior)
-    near_cfg = replace(
-        cfg,
-        strategies=tuple(s for s in cfg.strategies if s not in ("exact", "slug")),
-    )
     bands = grams = cands = verified_near = None
-    if near_cfg.strategies:
-        bands, grams = index_rows(pages, prep, near_cfg)
+    if set(cfg.strategies) - KEY_STRATEGIES:
+        bands, grams = index_rows(pages, prep, cfg)
         if prior is not None:
             # a stream persists its index rows: one materialization feeds
             # the candidates and the state writes
@@ -509,7 +493,7 @@ def dedup_stages(
         # window+join+distinct plan inline, the verify joins get planned
         # without row statistics and run ~5x slower
         cands = stage(
-            "candidates", lambda: index_candidates(bands, grams, near_cfg, prior)
+            "candidates", lambda: index_candidates(bands, grams, cfg, prior)
         )
         feats = prep
         if prior is not None and prior.features is not None:

@@ -106,7 +106,7 @@ def _pair_combos(ids: Column) -> Column:
 
 def lsh_candidate_pairs(
     band_table: DataFrame,
-    max_bucket_size: int | str | None = DEFAULT_MAX_BUCKET,
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     prior_bands: DataFrame | None = None,
     prior_sizes: DataFrame | None = None,
 ) -> DataFrame:
@@ -121,8 +121,7 @@ def lsh_candidate_pairs(
     native combination expression and deduped across bands by `distinct`
     (map-side partial aggregation, so the pair shuffle is near-deduped).
 
-    max_bucket_size: int for a global cap, a column name (str) for a
-    per-row cap carried in the band table, or None for no cap.
+    max_bucket_size: the cap on every bucket, or None for no cap.
 
     prior_bands / prior_sizes: the band rows (id, band_id, band_hash) and
     cumulative per-bucket counts (band_id, band_hash, n) of earlier stream
@@ -134,11 +133,6 @@ def lsh_candidate_pairs(
     b = band_table
     if max_bucket_size is not None:
         w = Window.partitionBy("band_id", "band_hash")
-        cap = (
-            F.col(max_bucket_size)
-            if isinstance(max_bucket_size, str)
-            else F.lit(max_bucket_size)
-        )
         size = F.count(F.lit(1)).over(w)
         if prior_sizes is not None:
             b = b.join(
@@ -148,7 +142,7 @@ def lsh_candidate_pairs(
             )
             size = size + F.coalesce(F.col("_prior_n"), F.lit(0))
         b = b.withColumn("_bs", size).filter(
-            (F.col("_bs") <= cap) & (F.col("_bs") >= 2)
+            (F.col("_bs") <= max_bucket_size) & (F.col("_bs") >= 2)
         )
     buckets = b.groupBy("band_id", "band_hash").agg(
         F.array_sort(F.collect_list("id")).alias("ids")
@@ -171,7 +165,7 @@ def lsh_candidate_pairs(
 
 def salt_hot_buckets(
     band_table: DataFrame,
-    max_bucket_size: int | str = DEFAULT_MAX_BUCKET,
+    max_bucket_size: int = DEFAULT_MAX_BUCKET,
     salt_buckets: int = 16,
 ) -> DataFrame:
     """Re-key oversized buckets into `salt_buckets` salted shards — the
@@ -186,19 +180,13 @@ def salt_hot_buckets(
     (band_id, band_hash) — the same partitioning `lsh_candidate_pairs`'
     cap filter uses — instead of the round-3 groupBy + join-back, which
     paid a second exchange of the whole band table for the same number.
-    `max_bucket_size` is an int, or a column name (str) for the per-row
-    cap carried in the band table (DedupConfig's per-strategy caps).
-    Extra columns (e.g. `cap`) pass through untouched.
+    `max_bucket_size` is the cap `lsh_candidate_pairs` applies next.
+    Extra columns pass through untouched.
     """
-    cap = (
-        F.col(max_bucket_size)
-        if isinstance(max_bucket_size, str)
-        else F.lit(max_bucket_size)
-    )
     w = Window.partitionBy("band_id", "band_hash")
     t = band_table.withColumn("_bsz", F.count(F.lit(1)).over(w))
     salted = F.when(
-        F.col("_bsz") > cap,
+        F.col("_bsz") > max_bucket_size,
         F.concat(
             F.col("band_hash"),
             F.lit("#"),

@@ -4,5 +4,4 @@ from fuzzycat_spark.streaming.assignments import (  # noqa: F401
 )
 from fuzzycat_spark.streaming.dedup_stream import (  # noqa: F401
     incremental_dedup_batch,
-    streaming_exact_dedup,
 )

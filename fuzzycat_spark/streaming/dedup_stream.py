@@ -5,9 +5,6 @@ The reference is strictly batch and rebuilds from scratch per run
 (`simple.py:50-87`) verifies one probe at a time against an ES index. This
 module is the Spark-native version of that incremental story:
 
-- `streaming_exact_dedup`: readStream → watermarked dropDuplicates on the
-  content hash — exact dups within the watermark horizon never reach the
-  sink twice.
 - `incremental_dedup_batch` (used via foreachBatch): each micro-batch runs
   through the ONE dedup plan, `operators.dedup.dedup_stages`, with the
   committed state of earlier epochs as its prior input (`Prior`) — the
@@ -71,10 +68,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fuzzycat_spark.functions.hashing import content_hash
 from fuzzycat_spark.operators.dedup import (
     GRAM_BAND,
     HARD_STAGES,
+    KEY_STRATEGIES,
     DedupConfig,
     Prior,
     dedup_stages,
@@ -87,25 +84,6 @@ from fuzzycat_spark.operators.lsh import lsh_candidate_pairs  # noqa: F401
 from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs  # noqa: F401
 
 logger = logging.getLogger(__name__)
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    watermark_col: str = "warc_ts",
-    watermark: str = "1 hour",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-dup suppression on a streaming pages DataFrame.
-
-    State is bounded by the watermark: a page is a duplicate if its content
-    hash was seen within the horizon (dropDuplicatesWithinWatermark).
-    """
-    return (
-        stream.withColumn("ch", content_hash(text_col))
-        .withWatermark(watermark_col, watermark)
-        .dropDuplicatesWithinWatermark(["ch"])
-        .drop("ch")
-    )
 
 
 def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
@@ -226,15 +204,16 @@ def _cumulative_sizes(
     spark: SparkSession,
     bands: DataFrame | None,
     grams: DataFrame | None,
-    cfg: DedupConfig,
     prior: DataFrame | None,
 ) -> DataFrame:
-    """The epoch's per-bucket count snapshot: the committed one plus this
-    epoch's band and substring gram buckets."""
-    parts = [] if prior is None else [prior]
+    """The epoch's per-bucket count snapshot (band_id, band_hash, n): the
+    committed one plus this epoch's band and substring gram buckets. The
+    committed snapshot is projected to those columns, so one written with
+    an extra column (an earlier layout's per-row `cap`) still resumes."""
+    parts = [] if prior is None else [prior.select("band_id", "band_hash", "n")]
     if bands is not None:
         parts.append(
-            bands.groupBy("band_id", "band_hash", "cap").agg(F.count(F.lit(1)).alias("n"))
+            bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("n"))
         )
     if grams is not None:
         parts.append(
@@ -244,18 +223,17 @@ def _cumulative_sizes(
             .select(
                 F.lit(GRAM_BAND).alias("band_id"),
                 F.col("gh").cast("string").alias("band_hash"),
-                F.lit(cfg.max_bucket_size).alias("cap"),
                 "n",
             )
         )
     if not parts:
-        return spark.createDataFrame([], "band_id string, band_hash string, cap int, n bigint")
+        return spark.createDataFrame([], "band_id string, band_hash string, n bigint")
     if len(parts) == 1:
         return parts[0]
     out = parts[0]
     for t in parts[1:]:
         out = out.unionByName(t)
-    return out.groupBy("band_id", "band_hash", "cap").agg(F.sum("n").alias("n"))
+    return out.groupBy("band_id", "band_hash").agg(F.sum("n").alias("n"))
 
 
 def incremental_dedup_batch(
@@ -358,7 +336,7 @@ def incremental_dedup_batch(
         )
     # the index tables of the strategies this config runs
     index = grams = probes = None
-    if set(cfg.strategies) - {"exact", "slug", "substring"}:
+    if set(cfg.strategies) - KEY_STRATEGIES - {"substring"}:
         index = _read_state(spark, index_path, committed)
     if "substring" in cfg.strategies:
         grams = _read_state(spark, index_path + "_ssgrams", committed)
@@ -414,11 +392,11 @@ def incremental_dedup_batch(
     # the index could not infer its schema
     if bands is not None and not bands.isEmpty():
         # one file per band per epoch, not one per input partition and band
-        bands.select("id", "band_id", "band_hash").repartition("band_id").write.partitionBy(
+        bands.repartition("band_id").write.partitionBy(
             "band_id"
         ).mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
     prep.write.mode("overwrite").parquet(f"{feat_path}/epoch={epoch_id}")
-    _cumulative_sizes(spark, bands, grams, cfg, prior.sizes).write.mode(
+    _cumulative_sizes(spark, bands, grams, prior.sizes).write.mode(
         "overwrite"
     ).parquet(f"{sizes_path}/epoch={epoch_id}")
     extra_tables: tuple[tuple[str, str], ...] = ()

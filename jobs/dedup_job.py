@@ -33,7 +33,6 @@ def main() -> None:
     p.add_argument("--bands", type=int, default=16)
     p.add_argument("--rows", type=int, default=2)
     p.add_argument("--shingle-n", type=int, default=3)
-    p.add_argument("--max-block-size", type=int, default=100)
     p.add_argument("--max-bucket-size", type=int, default=200)
     p.add_argument("--id-col", default="url")
     p.add_argument("--text-col", default="text")
@@ -149,7 +148,6 @@ def main() -> None:
         canonical_url_col=args.canonical_url_col,
         salt_hot=args.salt_hot,
         denylist_keys=() if args.no_denylist else None,
-        max_block_size=args.max_block_size,
         max_bucket_size=args.max_bucket_size,
     )
     pages = read_pages(spark, args.input)

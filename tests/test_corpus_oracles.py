@@ -26,7 +26,6 @@ from test_oracles import (
     BANDS,
     DOC_CFG,
     FIXTURES,
-    MAX_BLOCK,
     MAX_BUCKET,
     NUM_PERM,
     ROWS,

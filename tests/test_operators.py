@@ -381,3 +381,35 @@ def test_embedding_strategy_requires_config(spark):
     df = spark.createDataFrame([("a", "t")], "url string, text string")
     with pytest.raises(ValueError, match="embedding"):
         candidate_pairs(df, DedupConfig(strategies=("embedding",)))
+
+
+def test_key_strategies_link_only_through_stars(spark):
+    """exact and slug have one path, the star edges: they add no band rows,
+    so the bucket cap never drops a key group. Five byte-identical pages
+    over a cap of 3 yield no candidate pair, and still form one cluster."""
+    from fuzzycat_spark.operators.dedup import (
+        DedupConfig,
+        candidate_pairs,
+        dedup_pages,
+        strategy_band_table,
+    )
+
+    copy = "the same boilerplate footer text repeated on every page of the site"
+    rows = [(f"c{i}", copy) for i in range(5)]
+    rows.append(("z", "an unrelated article about river ecology and fish ladders"))
+    df = spark.createDataFrame(rows, "url string, text string")
+    cfg = DedupConfig(strategies=("exact", "slug", "minhash"), max_bucket_size=3)
+
+    bands = strategy_band_table(prepare_pages(df, "url", "text"), cfg)
+    assert bands.columns == ["id", "band_id", "band_hash"]
+    band_ids = {r.band_id for r in bands.select("band_id").distinct().collect()}
+    assert not band_ids & {"exact", "slug"}, band_ids
+
+    copies = {f"c{i}" for i in range(5)}
+    cands = {(r.id_a, r.id_b) for r in candidate_pairs(df, cfg).collect()}
+    assert not {p for p in cands if set(p) <= copies}, cands
+
+    _, assign = dedup_pages(df, cfg)
+    clusters = {r.id: r.cluster_id for r in assign.collect()}
+    assert {clusters[c] for c in copies} == {"c0"}
+    assert clusters["z"] == "z"

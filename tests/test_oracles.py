@@ -74,7 +74,6 @@ BANDS = 16
 ROWS = 2
 UNIT_BANDS = 4
 MAX_BUCKET = 200
-MAX_BLOCK = 100
 SHINGLE_N = 3
 
 DOC_CFG = DedupConfig(
@@ -85,7 +84,6 @@ DOC_CFG = DedupConfig(
     bands=BANDS,
     rows=ROWS,
     shingle_n=SHINGLE_N,
-    max_block_size=MAX_BLOCK,
     max_bucket_size=MAX_BUCKET,
 )
 
@@ -102,7 +100,6 @@ ALL_CFG = DedupConfig(
     bands=BANDS,
     rows=ROWS,
     shingle_n=SHINGLE_N,
-    max_block_size=MAX_BLOCK,
     max_bucket_size=MAX_BUCKET,
 )
 
@@ -215,34 +212,10 @@ bucket_ok AS (
   GROUP BY band_id, band_hash HAVING count(*) <= {MAX_BUCKET}
 ),
 br AS (SELECT band_rows.* FROM band_rows JOIN bucket_ok USING (band_id, band_hash)),
-lsh_cand AS (
+cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM br a JOIN br b USING (band_id, band_hash)
   WHERE a.doc_id < b.doc_id
-),
-exact_keyed AS (
-  SELECT doc_id, md5(text) AS k, count(*) OVER (PARTITION BY md5(text)) AS bs FROM t
-),
-exact_cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM exact_keyed a JOIN exact_keyed b USING (k)
-  WHERE a.doc_id < b.doc_id AND a.bs BETWEEN 2 AND {MAX_BLOCK}
-),
-slug_keyed AS (
-  SELECT doc_id, md5(slug) AS k, count(*) OVER (PARTITION BY md5(slug)) AS bs FROM t
-  WHERE slug IS NOT NULL AND md5(slug) != ''
-    AND md5(slug) NOT IN ({_DENY_IN})
-),
-slug_cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM slug_keyed a JOIN slug_keyed b USING (k)
-  WHERE a.doc_id < b.doc_id AND a.bs BETWEEN 2 AND {MAX_BLOCK}
-),
-cand AS (
-  SELECT DISTINCT * FROM (
-    SELECT * FROM lsh_cand UNION ALL SELECT * FROM exact_cand
-    UNION ALL SELECT * FROM slug_cand
-  )
 )"""
 
 _NPROJ = "regexp_replace(slug, '[0-9]+', '<NUM>', 'g')"
@@ -1620,7 +1593,6 @@ def q_components_unicode(spark, sf_dir):
         text_col="text",
         strategies=("exact", "slug", "simhash"),
         slug_mode="unicode",
-        max_block_size=MAX_BLOCK,
         max_bucket_size=MAX_BUCKET,
     )
     _, assign = dedup_pages(df, cfg)
@@ -1759,7 +1731,6 @@ _DENY_CFG = DedupConfig(
     bands=BANDS,
     rows=ROWS,
     shingle_n=SHINGLE_N,
-    max_block_size=MAX_BLOCK,
     max_bucket_size=MAX_BUCKET,
 )
 

@@ -41,16 +41,16 @@ def test_pipeline_stages_and_resume(spark):
 
 def test_cli_pipeline_matches_flagship_on_mega_cluster(spark, tmp_path):
     """run_dedup_pipeline (the spark-submit path) must produce EXACTLY the
-    flagship dedup_pages pair set — including on an over-cap (>100-copy
-    slug-equal) template family. The round-4 CLI path routed exact/slug
+    flagship dedup_pages pair set — including on a slug-equal template
+    family over the bucket cap. The round-4 CLI path routed exact/slug
     through the capped band table, so a mega-cluster's buckets exceeded
-    max_block_size=100 and yielded ZERO pairs (the reference's
-    drop-big-clusters pathology, verify.py:130-131, that star edges exist
-    to fix); it also re-scanned text for simhash. Both paths now run
+    the cap and yielded ZERO pairs (the reference's drop-big-clusters
+    pathology, verify.py:130-131, that star edges exist to fix); it also
+    re-scanned text for simhash. Both paths now run
     operators.dedup.dedup_stages."""
     corpus = synth_pages(spark, n_families=20, n_spam=0)
     # 120 slug-equal pages (punctuation-only variants -> one slug key, many
-    # content hashes), well over max_block_size=100
+    # content hashes), over the bucket cap of 100 set below
     mega = spark.range(120).select(
         F.concat(F.lit("https://mega.example/p/"), F.col("id").cast("string")).alias("url"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("warc_ts"),
@@ -62,7 +62,9 @@ def test_cli_pipeline_matches_flagship_on_mega_cluster(spark, tmp_path):
         F.lit("en").alias("lang"),
     )
     pages = corpus.unionByName(mega)
-    cfg = DedupConfig(strategies=("exact", "slug", "minhash", "simhash"))
+    cfg = DedupConfig(
+        strategies=("exact", "slug", "minhash", "simhash"), max_bucket_size=100
+    )
 
     v_flag, a_flag = dedup_pages(pages, cfg)
     flag_pairs = {(r.id_a, r.id_b, r.status, r.reason) for r in v_flag.collect()}

@@ -186,7 +186,7 @@ def test_salt_hot_buckets_single_exchange_and_partial_survival(spark):
         [(f"u{i}", "b0", "h", 10) for i in range(40)],
         "id string, band_id string, band_hash string, cap int",
     )
-    salted = salt_hot_buckets(bands, "cap", salt_buckets=8)
+    salted = salt_hot_buckets(bands, 10, salt_buckets=8)
     plan = _plan(salted)
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "cap" in salted.columns  # extra columns pass through

@@ -1,6 +1,7 @@
 """Failures around the incremental dedup state are loud: an unreadable
 committed table raises instead of reading as empty history, and a failed
-epoch manifest write is logged (the epoch still commits)."""
+epoch manifest write is logged (the epoch still commits). A sizes snapshot
+written with an extra column of an earlier layout still resumes."""
 
 from __future__ import annotations
 
@@ -84,3 +85,51 @@ def test_manifest_write_failure_is_logged_and_epoch_commits(
         "_manifest_epoch_0.json" in m and "no space left on device" in m for m in msgs
     ), msgs
     assert ds.read_epoch_manifest(index, 0) is None
+
+
+def test_sizes_snapshot_with_cap_column_still_resumes(spark, tmp_path):
+    """A sizes snapshot written with the earlier per-row `cap` column must
+    resume: epoch 1 over it gives the pairs and sizes of a clean run."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    near = FAM.replace("fine", "good")
+    epochs = (
+        [("u1", FAM), ("u2", "a different page about rivers and fish ladders here")],
+        [("u3", FAM), ("u4", near)],
+    )
+
+    clean, resumed = f"{tmp_path}/clean", f"{tmp_path}/resumed"
+    ds.incremental_dedup_batch(
+        spark.createDataFrame(epochs[0], SCHEMA),
+        f"{clean}/index", f"{clean}/pairs", CFG, assign=False,
+    )
+    shutil.copytree(clean, resumed)
+    snap = f"{resumed}/index_sizes/epoch=0"
+    spark.read.parquet(snap).select(
+        "band_id", "band_hash", F.lit(200).cast("int").alias("cap"), "n"
+    ).write.parquet(f"{tmp_path}/capped")
+    shutil.rmtree(snap)
+    shutil.move(f"{tmp_path}/capped", snap)
+    assert "cap" in spark.read.parquet(snap).columns
+
+    def epoch1(root: str):
+        index, pairs = f"{root}/index", f"{root}/pairs"
+        ds.incremental_dedup_batch(
+            spark.createDataFrame(epochs[1], SCHEMA), index, pairs, CFG, assign=False
+        )
+        assert ds.committed_epoch(index) == 1
+        got_pairs = sorted(
+            tuple(r) for r in ds.read_pairs(spark, pairs, index)
+            .select("id_a", "id_b", "status", "reason").collect()
+        )
+        got_sizes = sorted(
+            tuple(r) for r in spark.read.parquet(f"{index}_sizes/epoch=1")
+            .select("band_id", "band_hash", "n").collect()
+        )
+        return got_pairs, got_sizes
+
+    want = epoch1(clean)
+    assert want[0], "the fixture must yield pairs"
+    assert epoch1(resumed) == want
