@@ -9,7 +9,8 @@ Catalyst/AQE pick physical strategy.
 
 Layout:
   functions/  — scalar/column kernels (normalize, shingle, minhash, simhash)
-  operators/  — blocking, pair generation, LSH, verify cascades, components
+  operators/  — key stars, LSH band candidates, verify cascades, components,
+                the dedup_stages plan
   sources/    — synthetic corpus generator, pages table IO, multimodal stubs
   plans/      — checkpointed resumable multi-stage pipeline driver
   streaming/  — structured-streaming incremental dedup

@@ -8,11 +8,7 @@ from fuzzycat_spark.functions.normalize import (  # noqa: F401
     sandcrawler_slugify,
     sandcrawler_slugify_udf,
 )
-from fuzzycat_spark.functions.phonetic import (  # noqa: F401
-    nysiis,
-    nysiis_key,
-    nysiis_udf,
-)
+from fuzzycat_spark.functions.phonetic import nysiis  # noqa: F401
 from fuzzycat_spark.functions.text import (  # noqa: F401
     jaccard_col,
     token_count,

@@ -104,16 +104,6 @@ def nysiis(name: str | None) -> str | None:
     return key
 
 
-@pandas_udf(StringType())
-def nysiis_udf(s: pd.Series) -> pd.Series:
-    return s.map(nysiis, na_action="ignore")
-
-
-def nysiis_key(col: Column) -> Column:
-    """Column form for blocking: nysiis code of the (name) column."""
-    return nysiis_udf(col)
-
-
 def nysiis_name(full_name: str | None) -> str | None:
     """Multi-token form for full person names: the space-joined NYSIIS
     codes of each alphabetic token ('Jon Smyth' and 'John Smith' both key

@@ -423,37 +423,3 @@ def canonicalize_with_mined(
         keyed.join(F.broadcast(strip), on="host", how="left")
         .select("id", surt_key(F.col("_u"), F.col("_strip")).alias("surt"))
     )
-
-
-def latest_revision(
-    docs: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Collapse crawl revisits: ONE kept row per canonical URL — the
-    newest snapshot (ties → lowest id), with the revision count for
-    auditing. The step between ingestion and text dedup on a corpus with
-    recrawls: Common Crawl re-fetches popular pages every snapshot, and
-    without this collapse every recrawl pair burns verify work
-    downstream.
-
-    One shuffle (the per-surt window); the frame carries only
-    (id, surt, ts), and the caller joins winners back to payloads
-    (left-semi shape, same as every keep join in this repo).
-    """
-    from pyspark.sql.window import Window
-
-    keyed = docs.select(
-        F.col(id_col).alias("id"),
-        surt_key(url_col).alias("surt"),
-        F.col(ts_col).alias("ts"),
-    )
-    w = Window.partitionBy("surt")
-    wo = w.orderBy(F.col("ts").desc(), F.col("id").asc())
-    return (
-        keyed.withColumn("_rn", F.row_number().over(wo))
-        .withColumn("n_revisions", F.count(F.lit(1)).over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", "surt", F.col("ts").alias(ts_col), "n_revisions")
-    )

@@ -1,8 +1,7 @@
 """Fixed-point Lloyd k-means over embedding columns — the clustering
 pass SemDeDup-style semantic dedup and diversity-sampling pipelines run
 before their within-cluster work (Abbas et al. 2023 cluster embeddings
-with k-means, then prune near-duplicates inside each cluster; IVF in
-`operators/knn.py` is the one-assignment-pass cousin of the same idea).
+with k-means, then prune near-duplicates inside each cluster).
 The reference has no analog (fuzzycat has no vector data).
 
 Determinism contract (same policy as `operators/lm.py` /

@@ -11,8 +11,8 @@ RECONSTRUCTED vector, so only codes ever sit in the index.
 
 The reference has no vector surface at all (fuzzycat blocks on one
 normalized metadata key, `/root/reference/fuzzycat/sandcrawler.py:66-90`);
-this is the scale path behind the embedding-similarity additions, the
-IVF cousin in `operators/knn.py` handles the bucketing half of IVFADC.
+this is the scale path behind the embedding-similarity additions, and
+`ivfadc_knn` below adds the inverted-file bucketing half of IVFADC.
 
 Determinism contract (same policy as `operators/kmeans.py`): components
 are quantized ONCE to int64 (`quantize_vec`), codebooks are trained with

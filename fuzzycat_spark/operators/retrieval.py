@@ -3,8 +3,8 @@
 The reference's online path pulls candidate records from an
 Elasticsearch query on normalized fields (`/root/reference/fuzzycat/
 matching.py` builds bool queries over title/author tokens) — a LEXICAL
-ranked scan, distinct from the embedding-side ANN analogs in
-`operators/knn.py`. This operator is that scan as a batch DataFrame
+ranked scan, distinct from the embedding strategy's hyperplane buckets
+(`operators/knn.py`). This operator is that scan as a batch DataFrame
 plan: a small query table is scored against every document by
 TF × inverse-document-frequency term weight and the top k documents per
 query are returned.

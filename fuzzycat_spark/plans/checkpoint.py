@@ -72,6 +72,20 @@ def atomic_put(path: str, payload: str) -> None:
         f.write(payload.encode("utf-8"))
 
 
+def read_control(path: str) -> str | None:
+    """The content of one small control file written by `atomic_put`, or
+    None if the path does not exist. Every other failure (an unreachable
+    filesystem, a denied read) raises: a pointer that cannot be read is
+    not the same as no pointer."""
+    from pyarrow import fs as pafs
+
+    fs, p = resolve_fs(path)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+        return None
+    with fs.open_input_stream(p) as f:
+        return f.read().decode("utf-8")
+
+
 def partition_lineage(path: str) -> dict:
     """Per-partition lineage + counters for a completed parquet stage,
     from file FOOTERS only: each writer task emits one file, so per-file

@@ -70,16 +70,23 @@ def _base_pointer_path(parent: str) -> str:
 
 def base_pointer(parent: str) -> tuple[int, int] | None:
     """(gen, upto_epoch) of a state table's compacted base, or None if the
-    table has never been compacted. One read of one small key."""
-    from fuzzycat_spark.plans.checkpoint import resolve_fs
+    table has never been compacted. One read of one small key. Only a
+    missing pointer means never compacted: a pointer that cannot be read
+    or parsed raises, since the epochs it covers are gone from the tail."""
+    from fuzzycat_spark.plans.checkpoint import read_control
 
-    try:
-        fs, p = resolve_fs(_base_pointer_path(parent))
-        with fs.open_input_stream(p) as f:
-            d = json.loads(f.read().decode("utf-8"))
-        return int(d["gen"]), int(d["upto"])
-    except (OSError, ValueError, KeyError, FileNotFoundError):
+    path = _base_pointer_path(parent)
+    raw = read_control(path)
+    if raw is None:
         return None
+    try:
+        d = json.loads(raw)
+        return int(d["gen"]), int(d["upto"])
+    except (ValueError, KeyError, TypeError):
+        raise RuntimeError(
+            f"base pointer {path} holds {raw!r}, not a gen/upto record; "
+            "refusing to serve a truncated view"
+        ) from None
 
 
 def _write_base_pointer(parent: str, gen: int, upto: int) -> None:
@@ -91,16 +98,16 @@ def _write_base_pointer(parent: str, gen: int, upto: int) -> None:
 
 
 def _list_child_dirs(parent: str) -> list[str]:
-    """Child directory basenames of `parent` ([] if the path is absent)."""
+    """Child directory basenames of `parent` ([] if the path is absent; a
+    listing that fails for any other reason raises)."""
     from pyarrow import fs as pafs
 
     from fuzzycat_spark.plans.checkpoint import resolve_fs
 
-    try:
-        fs, p = resolve_fs(parent)
-        infos = fs.get_file_info(pafs.FileSelector(p, recursive=False))
-    except (OSError, FileNotFoundError):
-        return []
+    fs, p = resolve_fs(parent)
+    infos = fs.get_file_info(
+        pafs.FileSelector(p, recursive=False, allow_not_found=True)
+    )
     return [
         i.base_name for i in infos if i.type == pafs.FileType.Directory
     ]

@@ -116,13 +116,23 @@ def _resolve_fs(path: str):
 def committed_epoch(index_path: str) -> int | None:
     """Highest epoch whose state writes all completed (None = no commits).
     One read of one small key, resolved through pyarrow.fs so s3a://-style
-    index paths work, not just local directories."""
-    try:
-        fs, p = _resolve_fs(_pointer_path(index_path + "_sizes"))
-        with fs.open_input_stream(p) as f:
-            return int(f.read().decode("utf-8").strip())
-    except (OSError, ValueError, FileNotFoundError):
+    index paths work, not just local directories. Only a missing pointer
+    means no commits: a pointer that cannot be read or parsed raises, since
+    reading it as "no commits" would restart at epoch 0 over the committed
+    state."""
+    from fuzzycat_spark.plans.checkpoint import read_control
+
+    path = _pointer_path(index_path + "_sizes")
+    raw = read_control(path)
+    if raw is None:
         return None
+    try:
+        return int(raw.strip())
+    except ValueError:
+        raise RuntimeError(
+            f"commit pointer {path} holds {raw!r}, not an epoch number; "
+            "refusing to guess the committed epoch"
+        ) from None
 
 
 def _commit_pointer(index_path: str, epoch: int) -> None:

@@ -1,9 +1,9 @@
 """DuckDB oracles for the corpus-prep modules.
 
-The corpus-prep modules (line and web filters, decontamination, mixing and
-splits, sharding, vocabularies and BPE, LM scores, link graph, k-means, PQ,
-sketches, PII, mojibake, media, crawl deltas, the classifier and cross-corpus
-dedup) sit outside the dedup system's import closure. Until a module is
+The corpus-prep modules (line and web filters, mixing and splits, sharding,
+vocabularies and BPE, LM scores, link graph, k-means, PQ, sketches, PII,
+mojibake, media and the classifier) sit outside the dedup system's import
+closure. Until a module is
 deleted, its cases here gate it; a case goes with its module.
 
 Each case runs a Spark function that calls the library directly and an
@@ -23,52 +23,17 @@ from fuzzycat_spark.functions.normalize import tokens_col
 from fuzzycat_spark.functions.text import quality_score_cols
 from fuzzycat_spark.operators.components import connected_components
 from test_oracles import (
-    BANDS,
-    DOC_CFG,
     FIXTURES,
-    MAX_BUCKET,
-    NUM_PERM,
-    ROWS,
     SF,
-    SHINGLE_N,
-    UNIT_BANDS,
     _ANN_DIM,
-    _ANN_PLANES_N,
-    _A_PFX,
-    _A_TS,
-    _BAND_CTES,
-    _BASE_CTES,
-    _B_PFX,
-    _B_TS,
-    _CAND_CTES,
     _CC_SQL,
-    _CONTAIN,
     _COS_D,
-    _DENY_IN,
-    _EN_STOPS,
-    _FEAT_CTES,
-    _JAC_SH,
-    _JAC_TOK,
-    _LEV_R,
-    _NGRAM_JACCARD_T,
-    _NPROJ,
-    _PERM_VALUES,
     _PLANTED_FIXTURE,
     _PLANTED_STRONG,
     _QUALITY_SQL,
-    _R2_BANDS,
-    _SIG_CTES,
     _SLUG,
-    _TS_R,
-    _UNIT_BAND_LIST,
-    _VERIFIED_CTES,
-    _VERIFY_CASE,
-    _ann_bucket_sql,
-    _ann_planes,
-    _doc_shingles,
     _docs,
     _emb,
-    _lev_ratio_sql,
     _surt_cte,
     _surt_host_col_sql,
     compare,
@@ -180,36 +145,6 @@ SELECT d.doc_id,
   coalesce(rem.n_removed, 0) AS n_removed,
   coalesce(clean.n_kept, 0) AS n_kept
 FROM d LEFT JOIN clean USING (doc_id) LEFT JOIN rem USING (doc_id)"""
-
-
-_EVAL_FIXTURE_SQL = f"{FIXTURES}/eval_docs.parquet"
-
-
-_DECONTAMINATE_SQL = f"""
-WITH ev_toks AS (
-  SELECT CASE WHEN slug = '' THEN []::VARCHAR[]
-         ELSE string_split(slug, ' ') END AS ws
-  FROM (SELECT {_SLUG} AS slug
-        FROM (SELECT text FROM '{_EVAL_FIXTURE_SQL}'))
-),
-eg AS (SELECT DISTINCT unnest(
-        CASE WHEN len(ws) = 0 THEN []::VARCHAR[]
-             WHEN len(ws) <= 5 THEN [array_to_string(ws, ' ')]
-             ELSE list_transform(range(1, len(ws) - 5 + 2),
-                                 i -> array_to_string(ws[i:i+4], ' '))
-        END) AS gram FROM ev_toks),
-rep_toks AS (
-  SELECT doc_id,
-    CASE WHEN slug = '' THEN []::VARCHAR[] ELSE string_split(slug, ' ') END AS ws
-  FROM (SELECT doc_id, {_SLUG} AS slug FROM documents)
-),
-dg AS (SELECT DISTINCT doc_id, gram FROM {_rep_grams(5)}),
-hits AS (SELECT doc_id, count(*) AS n FROM dg JOIN eg USING (gram)
-         GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(coalesce(hits.n, 0) AS BIGINT) AS n_eval_grams_hit,
-  coalesce(hits.n, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits USING (doc_id)"""
 
 
 _DOMAIN_CAP_SQL = f"""
@@ -381,22 +316,6 @@ def q_line_dedup(spark, sf_dir):
     out = strip_common_lines(spark.read.parquet(_LINE_FIXTURE), min_docs=3)
     return out.select(
         "doc_id", F.col("text").alias("text_clean"), "n_removed", "n_kept"
-    )
-
-
-_EVAL_FIXTURE = f"{FIXTURES}/eval_docs.parquet"
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: per-document count of distinct eval
-    n-grams leaked (operators/decontaminate.py — eval grams broadcast,
-    corpus never shuffles). n=5 so exact overlaps exist in this
-    vocabulary; the committed eval fixture plants 5-grams that occur in
-    BOTH sf corpora plus clean prompts with zero hits."""
-    from fuzzycat_spark.operators.decontaminate import decontaminate
-
-    return decontaminate(
-        _docs(spark, sf_dir), spark.read.parquet(_EVAL_FIXTURE), n=5
     )
 
 
@@ -638,62 +557,10 @@ SELECT doc_id, text_clean, n_lines_kept,
 FROM cleaned"""
 
 
-_CROSS_SEED = 7
-
-
 _STRATA_QUOTAS = {"en": 50, "de": 30, "zh": 10, "fr": 1000}
 
 
 _STRATA_SEED = 3
-
-
-def _cross_sides(spark, sf_dir):
-    """Deterministic split of the corpus into a frozen 'reference' side
-    (even 48-bit md5 draw) and an incoming 'new' side (odd) — the gate's
-    stand-in for two crawls. One text scan: both sides filter the same
-    materialized shingle table."""
-    from fuzzycat_spark.functions.hashing import md5_field48
-
-    sh = _doc_shingles(spark, sf_dir).withColumn(
-        "_side", F.pmod(md5_field48("doc_id", _CROSS_SEED), F.lit(2))
-    )
-    new_sh = sh.filter(F.col("_side") == 1).select(F.col("doc_id").alias("id"), "sh")
-    ref_sh = sh.filter(F.col("_side") == 0).select(F.col("doc_id").alias("id"), "sh")
-    return new_sh, ref_sh
-
-
-def q_cross_dedup_pairs(spark, sf_dir):
-    """Asymmetric cross-corpus near-dedup (operators/crossdedup.py):
-    screen a new crawl against a frozen reference corpus. MinHash band
-    candidates from BOTH sides share one combined-bucket-capped shuffle
-    of (id, band_id, band_hash) rows; only new x ref pairs are expanded
-    (never the quadratic within-reference set), then the exact shingle
-    Jaccard confirms survivors. The reference analog is the cluster
-    step run between dataset versions instead of within one."""
-    from fuzzycat_spark.operators.crossdedup import cross_corpus_pairs
-
-    new_sh, ref_sh = _cross_sides(spark, sf_dir)
-    return cross_corpus_pairs(
-        new_sh, ref_sh,
-        num_perm=NUM_PERM, bands=BANDS, rows=ROWS, unit_bands=UNIT_BANDS,
-        max_bucket_size=MAX_BUCKET, jaccard_threshold=_NGRAM_JACCARD_T,
-    )
-
-
-def q_cross_dedup(spark, sf_dir):
-    """Per-new-document screening verdict over the cross-corpus pairs:
-    matched flag + best reference match (max Jaccard, ties to smallest
-    ref id). Clean documents appear with matched=false — the keep list
-    a downstream mix stage consumes."""
-    from fuzzycat_spark.functions.hashing import md5_field48
-    from fuzzycat_spark.operators.crossdedup import cross_dedup_verdicts
-
-    new_ids = (
-        _docs(spark, sf_dir)
-        .filter(F.pmod(md5_field48("doc_id", _CROSS_SEED), F.lit(2)) == 1)
-        .select(F.col("doc_id").alias("new_id"))
-    )
-    return cross_dedup_verdicts(new_ids, q_cross_dedup_pairs(spark, sf_dir))
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -710,45 +577,6 @@ def q_stratified_sample(spark, sf_dir):
         _docs(spark, sf_dir), _STRATA_QUOTAS,
         id_col="doc_id", key_col="lang", seed=_STRATA_SEED,
     )
-
-
-def _cross_pairs_sql() -> str:
-    return f"""{_BAND_CTES},
-            side AS (
-              SELECT doc_id,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':{_CROSS_SEED}'), 1, 12))::BIGINT % 2 AS side
-              FROM documents
-            ),
-            bucket_ok AS (
-              SELECT band_id, band_hash FROM band_rows
-              GROUP BY band_id, band_hash HAVING count(*) <= {MAX_BUCKET}
-            ),
-            br AS (
-              SELECT band_rows.*, side.side
-              FROM band_rows
-              JOIN bucket_ok USING (band_id, band_hash)
-              JOIN side USING (doc_id)
-            ),
-            cross_cand AS (
-              SELECT DISTINCT n.doc_id AS new_id, r.doc_id AS ref_id
-              FROM br n JOIN br r USING (band_id, band_hash)
-              WHERE n.side = 1 AND r.side = 0
-            ),
-            cross_scored AS (
-              SELECT c.new_id, c.ref_id,
-                     CASE WHEN len(list_distinct(list_concat(a.shingles, b.shingles))) = 0
-                          THEN 0.0
-                          ELSE len(list_intersect(a.shingles, b.shingles))
-                               / len(list_distinct(list_concat(a.shingles, b.shingles)))
-                     END AS j
-              FROM cross_cand c
-              JOIN sh a ON c.new_id = a.doc_id
-              JOIN sh b ON c.ref_id = b.doc_id
-            ),
-            cross_pairs AS (
-              SELECT new_id, ref_id, round(j, 6) AS jac FROM cross_scored
-              WHERE round(j, 9) >= {_NGRAM_JACCARD_T}
-            )"""
 
 
 def _stratified_sample_sql() -> str:
@@ -768,115 +596,6 @@ def _stratified_sample_sql() -> str:
               FROM h JOIN q USING (lang)
             )
             SELECT doc_id AS id, lang, rank FROM r WHERE rank <= quota"""
-
-
-# Semantic decontamination eval suite: one member of each planted >0.9
-# family (their 3 siblings MUST flag) plus ONE copy of the 210-strong
-# mega vector (vec_id 20). The 209 remaining corpus copies sit at
-# cosine 1.0 to it: the BRUTE screen flags all of them, while the ANN
-# screen's corpus-side bucket cap (209 copies > MAX_BUCKET=200) excludes
-# their bucket — the two gates diverge by exactly those 209 rows, so the
-# cap is exercised non-vacuously on both engines.
-_SEMCON_EVAL_IDS = (0, 4, 8, 12, 16, 20)
-
-
-def _semcon_sides(spark):
-    e = spark.read.parquet(_PLANTED_FIXTURE)
-    ev = e.filter(F.col("vec_id").isin(*_SEMCON_EVAL_IDS))
-    corpus = e.filter(~F.col("vec_id").isin(*_SEMCON_EVAL_IDS))
-    return corpus, ev
-
-
-def q_semantic_contamination(spark, sf_dir):
-    """Embedding-space eval-overlap screen, EXACT brute path
-    (operators/decontaminate.py semantic_contamination — eval suite
-    broadcast, |corpus| x |eval| JVM-side cosines, corpus never
-    shuffles). Eval = one member of each planted >0.9 family + one copy
-    of the mega vector: the 15 family siblings and all 209 remaining
-    mega copies must flag; fillers must not."""
-    from fuzzycat_spark.operators.decontaminate import semantic_contamination
-
-    corpus, ev = _semcon_sides(spark)
-    return semantic_contamination(corpus, ev, threshold=_PLANTED_STRONG)
-
-
-def q_semantic_contamination_ann(spark, sf_dir):
-    """The LSH-bucketed scale path of the semantic screen
-    (semantic_contamination_ann): cosines only within shared hyperplane
-    buckets, CORPUS-side buckets above max_bucket_size=200 excluded.
-    The 209 corpus mega copies exceed the cap, so they are NOT flagged
-    here despite cosine 1.0 to eval vec 20 — the exact divergence from
-    the brute gate that proves the cap is modeled (round-4 ADVICE:
-    vacuous cap agreement), mirrored in the oracle's HAVING clause."""
-    from fuzzycat_spark.operators.decontaminate import (
-        semantic_contamination_ann,
-    )
-
-    corpus, ev = _semcon_sides(spark)
-    return semantic_contamination_ann(
-        corpus,
-        ev,
-        threshold=_PLANTED_STRONG,
-        n_planes=_ANN_PLANES_N,
-        dim=_ANN_DIM,
-        max_bucket_size=MAX_BUCKET,
-    )
-
-
-def _semcon_ids_sql() -> str:
-    return ", ".join(str(i) for i in _SEMCON_EVAL_IDS)
-
-
-def _semantic_contamination_sql() -> str:
-    return f"""
-WITH embeddings AS (SELECT * FROM '{_PLANTED_FIXTURE}'),
-ev AS (SELECT * FROM embeddings WHERE vec_id IN ({_semcon_ids_sql()})),
-corpus AS (SELECT * FROM embeddings WHERE vec_id NOT IN ({_semcon_ids_sql()})),
-scored AS (
-  SELECT a.vec_id AS cid, round({_COS_D}, 6) AS c6,
-         CASE WHEN round({_COS_D}, 9) >= {_PLANTED_STRONG} THEN 1 ELSE 0 END AS hit
-  FROM corpus a CROSS JOIN ev b
-),
-agg AS (
-  SELECT cid, max(c6) AS max_eval_cos,
-         CAST(sum(hit) AS BIGINT) AS n_eval_hits
-  FROM scored GROUP BY cid
-)
-SELECT c.vec_id AS vec_id, agg.max_eval_cos,
-       CAST(coalesce(agg.n_eval_hits, 0) AS BIGINT) AS n_eval_hits,
-       coalesce(agg.n_eval_hits, 0) > 0 AS contaminated
-FROM corpus c LEFT JOIN agg ON c.vec_id = agg.cid"""
-
-
-def _semantic_contamination_ann_sql() -> str:
-    return f"""
-WITH embeddings AS (SELECT * FROM '{_PLANTED_FIXTURE}'),
-bk AS ({_ann_bucket_sql()}),
-ev AS (SELECT vec_id FROM embeddings WHERE vec_id IN ({_semcon_ids_sql()})),
-corpus AS (SELECT vec_id FROM embeddings WHERE vec_id NOT IN ({_semcon_ids_sql()})),
-cbk AS (SELECT bk.vec_id, bk.bucket FROM bk JOIN corpus USING (vec_id)),
-cbkok AS (SELECT bucket FROM cbk GROUP BY bucket HAVING count(*) <= {MAX_BUCKET}),
-ebk AS (SELECT bk.vec_id, bk.bucket FROM bk JOIN ev USING (vec_id)),
-cand AS (
-  SELECT c.vec_id AS cid, e.vec_id AS eid
-  FROM cbk c JOIN cbkok USING (bucket) JOIN ebk e ON c.bucket = e.bucket
-),
-scored AS (
-  SELECT cand.cid, round({_COS_D}, 6) AS c6,
-         CASE WHEN round({_COS_D}, 9) >= {_PLANTED_STRONG} THEN 1 ELSE 0 END AS hit
-  FROM cand
-  JOIN embeddings a ON a.vec_id = cand.cid
-  JOIN embeddings b ON b.vec_id = cand.eid
-),
-agg AS (
-  SELECT cid, max(c6) AS max_eval_cos,
-         CAST(sum(hit) AS BIGINT) AS n_eval_hits
-  FROM scored GROUP BY cid
-)
-SELECT c.vec_id AS vec_id, agg.max_eval_cos,
-       CAST(coalesce(agg.n_eval_hits, 0) AS BIGINT) AS n_eval_hits,
-       coalesce(agg.n_eval_hits, 0) > 0 AS contaminated
-FROM corpus c LEFT JOIN agg ON c.vec_id = agg.cid"""
 
 
 def q_media_features(spark, sf_dir):
@@ -1005,84 +724,6 @@ def _image_dup_pairs_sql() -> str:
         WHERE bit_count(xor(x.ahash, y.ahash)) <= 7"""
 
 
-def q_crawl_delta(spark, sf_dir):
-    """Between-crawl delta (operators/delta.py): two snapshots derived
-    deterministically from the documents table — snapshot B drops every
-    doc_id % 5 == 1 page (removed), rewrites every doc_id % 4 == 0 page
-    (changed), and gains shifted-id pages for doc_id % 9 == 2 (added) —
-    classified added/removed/changed/unchanged by one full-outer join
-    on the key with md5 content hashes computed inside each scan."""
-    from fuzzycat_spark.operators.delta import crawl_delta
-
-    d = _docs(spark, sf_dir)
-    old = d.select(F.col("doc_id").cast("string").alias("url"), "text")
-    surv = d.filter(F.col("doc_id") % 5 != 1).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("doc_id") % 4 == 0, F.concat(F.col("text"), F.lit(" v2"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    added = d.filter(F.col("doc_id") % 9 == 2).select(
-        (F.col("doc_id") + 1000000).cast("string").alias("url"), "text"
-    )
-    return crawl_delta(old, surv.unionByName(added))
-
-
-_CRAWL_DELTA_SQL = """
-    WITH old AS (
-      SELECT CAST(doc_id AS VARCHAR) AS key, md5(coalesce(text, ''))
-               AS old_hash
-      FROM documents),
-    new AS (
-      SELECT CAST(doc_id AS VARCHAR) AS key,
-             md5(coalesce(CASE WHEN doc_id % 4 = 0 THEN text || ' v2'
-                               ELSE text END, '')) AS new_hash
-      FROM documents WHERE doc_id % 5 <> 1
-      UNION ALL
-      SELECT CAST(doc_id + 1000000 AS VARCHAR) AS key,
-             md5(coalesce(text, '')) AS new_hash
-      FROM documents WHERE doc_id % 9 = 2)
-    SELECT coalesce(o.key, n.key) AS key,
-           CASE WHEN o.old_hash IS NULL THEN 'added'
-                WHEN n.new_hash IS NULL THEN 'removed'
-                WHEN o.old_hash <> n.new_hash THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           o.old_hash, n.new_hash
-    FROM old o FULL OUTER JOIN new n ON o.key = n.key"""
-
-
-def q_content_moves(spark, sf_dir):
-    """Moved-content detection (operators/delta.py content_moves): the
-    crawl_delta fixture's doc_id ≡ 11 (mod 45) pages are BOTH removed
-    (mod-5 drop) and re-added under a shifted URL with identical text —
-    a URL move a key-based delta misreads as destroy+create. Exact
-    duplicate families add hashes with several gone/added keys, so the
-    min-key representative and both counts are exercised non-trivially.
-    Two partial-agg groupBys over the thin removed/added tails + one
-    hash equi join; page text never reaches the operator."""
-    from fuzzycat_spark.operators.delta import content_moves
-
-    return content_moves(q_crawl_delta(spark, sf_dir))
-
-
-def _content_moves_sql() -> str:
-    return f"""
-        WITH delta AS ({_CRAWL_DELTA_SQL}),
-        gone AS (
-          SELECT old_hash AS content_h, min(key) AS old_key,
-                 CAST(COUNT(*) AS BIGINT) AS n_old_gone
-          FROM delta WHERE status = 'removed' GROUP BY old_hash),
-        came AS (
-          SELECT new_hash AS content_h, min(key) AS new_key,
-                 CAST(COUNT(*) AS BIGINT) AS n_new_added
-          FROM delta WHERE status = 'added' GROUP BY new_hash)
-        SELECT g.content_h, g.old_key, c.new_key, g.n_old_gone,
-               c.n_new_added
-        FROM gone g JOIN came c ON g.content_h = c.content_h"""
-
-
 def q_host_components(spark, sf_dir):
     """Site clusters: connected components over the UNDIRECTED host link
     graph (operators/linkgraph.host_graph → operators/components) —
@@ -1183,132 +824,6 @@ def _split_leakage_safe_sql() -> str:
                      ('0x' || substr(md5(cluster_id::VARCHAR || ':{_SPLIT_SEED}'),
                                      1, 12))::BIGINT AS f
               FROM assignments)"""
-
-
-def q_split_contamination(spark, sf_dir):
-    """Cross-split leakage audit (operators/decontaminate.py
-    cross_split_contamination): for every held-out doc, distinct word
-    n-grams shared with ANY train doc — both sides corpus-sized, so grams
-    meet as md5_h64 integers in one narrow shuffle (train side distinct
-    before the exchange). Splits here are DOC-level (`assign_splits`) —
-    the routing that CAN leak — so the audit proves non-zero hits on this
-    corpus's duplicate families; n=5 like the `decontaminate` gate."""
-    from fuzzycat_spark.operators.decontaminate import (
-        cross_split_contamination,
-    )
-    from fuzzycat_spark.operators.mixing import assign_splits
-
-    docs = assign_splits(
-        _docs(spark, sf_dir), _SPLIT_FRACTIONS, seed=_SPLIT_SEED
-    )
-    return cross_split_contamination(docs, n=5)
-
-
-def q_split_contamination_safe(spark, sf_dir):
-    """The other half of the split-hygiene story: the SAME audit as
-    `split_contamination` but over CLUSTER-routed splits
-    (assign_splits_by_cluster on the pipeline's CC labels). Every
-    duplicate family rides one side of every boundary, so the doc-level
-    gate's 13 contaminated held-out docs drop to 1 on this corpus — the
-    residue being a shared phrase between docs BELOW the dup threshold
-    (no exact/strong edge, so no cluster), which no split routing can
-    remove; only a stricter n or an n-gram-level screen would."""
-    from fuzzycat_spark.operators.decontaminate import (
-        cross_split_contamination,
-    )
-    from fuzzycat_spark.operators.mixing import assign_splits_by_cluster
-
-    docs = _docs(spark, sf_dir)
-    routed = assign_splits_by_cluster(
-        docs.select("doc_id", "text"),
-        q_components(spark, sf_dir),
-        _SPLIT_FRACTIONS,
-        seed=_SPLIT_SEED,
-    )
-    return cross_split_contamination(routed, n=5)
-
-
-def q_split_train_screen(spark, sf_dir):
-    """The actionable side of split hygiene (operators/decontaminate.py
-    train_overlap_screen): TRAIN docs sharing a word 5-gram with any
-    held-out doc, flagged `drop` — the GPT-3-style removal that protects
-    val/test integrity by shrinking train, never the eval sets. Same
-    shared gram table and narrow hash semi-join as the audit, roles
-    swapped (the held-out gram set is the DISTINCT/broadcastable side)."""
-    from fuzzycat_spark.operators.decontaminate import train_overlap_screen
-    from fuzzycat_spark.operators.mixing import assign_splits
-
-    docs = assign_splits(
-        _docs(spark, sf_dir), _SPLIT_FRACTIONS, seed=_SPLIT_SEED
-    )
-    return train_overlap_screen(docs, n=5)
-
-
-def _split_gram_ctes(routing: str = "doc") -> str:
-    """Shared sp/rep_toks/g CTE block for the two cross-split gram
-    queries (the contamination audit and the train-side screen): split
-    assignment (doc- or cluster-routed md5 draw), slug token arrays, and
-    the distinct per-doc 5-gram table. Both gates consume the SAME gram
-    semantics by construction — a tokenizer or routing fix lands once."""
-    from fuzzycat_spark.operators.mixing import split_bounds
-
-    arms = "\n".join(
-        f"WHEN f < {b} THEN '{n}'"
-        for n, b in split_bounds(_SPLIT_FRACTIONS)
-    )
-    if routing == "doc":
-        sp = f"""
-  SELECT doc_id, CASE {arms} END AS split
-  FROM (SELECT doc_id,
-          ('0x' || substr(md5(doc_id::VARCHAR || ':{_SPLIT_SEED}'),
-                          1, 12))::BIGINT AS f
-        FROM documents)"""
-    else:
-        sp = f"""
-  SELECT doc_id, CASE {arms} END AS split
-  FROM (SELECT id AS doc_id,
-          ('0x' || substr(md5(cluster_id::VARCHAR || ':{_SPLIT_SEED}'),
-                          1, 12))::BIGINT AS f
-        FROM ({_CC_SQL}))"""
-    return f"""
-WITH sp AS ({sp}),
-rep_toks AS (
-  SELECT doc_id,
-    CASE WHEN slug = '' THEN []::VARCHAR[] ELSE string_split(slug, ' ') END AS ws
-  FROM (SELECT doc_id, {_SLUG} AS slug FROM documents)),
-g AS (SELECT DISTINCT doc_id, gram FROM {_rep_grams(5)} WHERE gram <> '')"""
-
-
-def _split_train_screen_sql() -> str:
-    # Same gram table as the audit, with the join roles swapped: the
-    # DISTINCT side is the held-out grams and the flagged side is train.
-    return f"""
-{_split_gram_ctes("doc")},
-hg AS (SELECT DISTINCT gram FROM g JOIN sp USING (doc_id)
-       WHERE sp.split <> 'train'),
-hits AS (SELECT g.doc_id, count(*) AS n
-         FROM g JOIN sp USING (doc_id) JOIN hg USING (gram)
-         WHERE sp.split = 'train' GROUP BY g.doc_id)
-SELECT sp.doc_id,
-  CAST(coalesce(hits.n, 0) AS BIGINT) AS n_heldout_grams_hit,
-  coalesce(hits.n, 0) > 0 AS "drop"
-FROM sp LEFT JOIN hits USING (doc_id)
-WHERE sp.split = 'train'"""
-
-
-def _split_contamination_sql(routing: str = "doc") -> str:
-    return f"""
-{_split_gram_ctes(routing)},
-tg AS (SELECT DISTINCT gram FROM g JOIN sp USING (doc_id)
-       WHERE sp.split = 'train'),
-hits AS (SELECT g.doc_id, count(*) AS n
-         FROM g JOIN sp USING (doc_id) JOIN tg USING (gram)
-         WHERE sp.split <> 'train' GROUP BY g.doc_id)
-SELECT sp.doc_id, sp.split,
-  CAST(coalesce(hits.n, 0) AS BIGINT) AS n_train_grams_hit,
-  coalesce(hits.n, 0) > 0 AS contaminated
-FROM sp LEFT JOIN hits USING (doc_id)
-WHERE sp.split <> 'train'"""
 
 
 def _split_assign_sql() -> str:
@@ -3228,7 +2743,6 @@ CASES = {
     "line_stats": (q_line_stats, _LINE_STATS_SQL),
     "common_lines": (q_common_lines, _COMMON_LINES_SQL),
     "line_dedup": (q_line_dedup, _LINE_DEDUP_SQL),
-    "decontaminate": (q_decontaminate, _DECONTAMINATE_SQL),
     "domain_cap": (q_domain_cap, _DOMAIN_CAP_SQL),
     "sitemap_entries": (q_sitemap_entries, f"WITH {_sitemap_entries_cte()} SELECT sitemap_url, kind, loc,"
             " lastmod, changefreq, priority FROM entries"),
@@ -3239,21 +2753,6 @@ CASES = {
     "token_budget": (q_token_budget, _token_budget_sql()),
     "host_quality": (q_host_quality, _host_quality_sql()),
     "robots_crawl_delays": (q_robots_crawl_delays, _robots_crawl_delays_sql()),
-    "cross_dedup_pairs": (q_cross_dedup_pairs, f"""
-            WITH {_cross_pairs_sql()}
-            SELECT new_id, ref_id, jac FROM cross_pairs"""),
-    "cross_dedup": (q_cross_dedup, f"""
-            WITH {_cross_pairs_sql()},
-            best AS (
-              SELECT new_id, ref_id AS best_ref, jac AS best_jac,
-                     row_number() OVER (
-                       PARTITION BY new_id ORDER BY jac DESC, ref_id ASC
-                     ) AS rn
-              FROM cross_pairs
-            ),
-            news AS (SELECT doc_id AS new_id FROM side WHERE side = 1)
-            SELECT n.new_id, b.best_ref IS NOT NULL AS matched, b.best_ref, b.best_jac
-            FROM news n LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (new_id)"""),
     "stratified_sample": (q_stratified_sample, _stratified_sample_sql()),
     "media_features": (q_media_features, """
             SELECT doc_id, sha256(coalesce(text, '')) AS content_sha,
@@ -3270,13 +2769,8 @@ CASES = {
             SELECT media_id, ahash FROM '{_MEDIA_FIXTURE}'
             WHERE kind = 'image'"""),
     "image_dup_pairs": (q_image_dup_pairs, _image_dup_pairs_sql()),
-    "crawl_delta": (q_crawl_delta, _CRAWL_DELTA_SQL),
-    "content_moves": (q_content_moves, _content_moves_sql()),
     "split_assign": (q_split_assign, _split_assign_sql()),
     "split_leakage_safe": (q_split_leakage_safe, _split_leakage_safe_sql()),
-    "split_contamination": (q_split_contamination, _split_contamination_sql()),
-    "split_contamination_safe": (q_split_contamination_safe, _split_contamination_sql("cluster")),
-    "split_train_screen": (q_split_train_screen, _split_train_screen_sql()),
     "host_components": (q_host_components, _host_components_sql()),
     "media_resize": (q_media_resize, f"""
             SELECT media_id, rs8_count AS rs_count, rs8_sum AS rs_sum,
@@ -3313,8 +2807,6 @@ CASES = {
     "bloom_screen": (q_bloom_screen, _bloom_screen_sql()),
     "fix_mojibake": (q_fix_mojibake, _fix_mojibake_sql()),
     "corpus_report": (q_corpus_report, _corpus_report_sql()),
-    "semantic_contamination": (q_semantic_contamination, _semantic_contamination_sql()),
-    "semantic_contamination_ann": (q_semantic_contamination_ann, _semantic_contamination_ann_sql()),
     "robots_rules": (q_robots_rules, _robots_rules_sql()),
     "robots_decisions": (q_robots_decisions, _robots_decisions_sql()),
     "classifier_scores": (q_classifier_scores, _classifier_scores_sql()),

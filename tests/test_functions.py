@@ -265,11 +265,11 @@ def test_nysiis_reference_vectors(name, code):
 
 
 def test_nysiis_udf_blocks_homophones(spark):
-    from fuzzycat_spark.functions.phonetic import nysiis, nysiis_key
+    from fuzzycat_spark.functions.phonetic import nysiis, nysiis_name_key
 
     names = ["Johnson", "Jonson", "Knight", "Night", "Smith", "Schmidt"]
     df = spark.createDataFrame([(n,) for n in names], "name string")
-    got = {r.name: r.k for r in df.select("name", nysiis_key(F.col("name")).alias("k")).collect()}
+    got = {r.name: r.k for r in df.select("name", nysiis_name_key(F.col("name")).alias("k")).collect()}
     assert got == {n: nysiis(n) for n in names}
     assert got["Johnson"] == got["Jonson"]
     assert got["Knight"] == got["Night"]

@@ -1,5 +1,5 @@
-"""Tests for similarity search, streaming incremental dedup, and multimodal
-feature plumbing."""
+"""Tests for streaming incremental dedup (the embedding tier included) and
+multimodal feature plumbing."""
 
 from __future__ import annotations
 
@@ -10,10 +10,6 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from fuzzycat_spark.operators.knn import (
-    brute_force_knn,
-    hyperplane_knn,
-)
 from fuzzycat_spark.sources.multimodal import (
     MEDIA_SCHEMA,
     deterministic_fake_decoder,
@@ -23,61 +19,6 @@ from fuzzycat_spark.sources.multimodal import (
 )
 from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
 from fuzzycat_spark.operators.dedup import DedupConfig
-
-
-@pytest.fixture(scope="module")
-def vectors(spark):
-    rng = np.random.RandomState(0)
-    base = rng.standard_normal((40, 16)).astype(float)
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        # a near-duplicate neighbor for every 4th vector
-        if i % 4 == 0:
-            noisy = v + rng.standard_normal(16) * 0.05
-            rows.append((1000 + i, [float(x) for x in noisy]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
-
-
-def test_brute_force_knn_finds_planted_neighbor(vectors):
-    res = brute_force_knn(vectors, vectors, k=1)
-    top1 = {r.probe_id: r.neighbor_id for r in res.collect()}
-    planted = [i for i in range(0, 40, 4)]
-    hits = sum(1 for i in planted if top1[i] == 1000 + i)
-    assert hits == len(planted)
-
-
-def test_hyperplane_knn_recall(vectors):
-    exact = {r.probe_id: r.neighbor_id for r in brute_force_knn(vectors, vectors, k=1).collect()}
-    approx = {r.probe_id: r.neighbor_id for r in hyperplane_knn(vectors, vectors, k=1, n_planes=6, dim=16).collect()}
-    planted = [i for i in range(0, 40, 4)]
-    # planted near-dups are nearly-parallel vectors -> same bucket with high prob
-    recall = sum(1 for i in planted if approx.get(i) == exact[i]) / len(planted)
-    assert recall >= 0.7
-    # multiprobe (one-bit flips, probe side only) can only add candidates
-    multi = {r.probe_id: r.neighbor_id for r in hyperplane_knn(
-        vectors, vectors, k=1, n_planes=6, dim=16, multiprobe=1).collect()}
-    recall_m = sum(1 for i in planted if multi.get(i) == exact[i]) / len(planted)
-    assert recall_m >= recall
-
-
-def test_hyperplane_knn_requires_dim(vectors):
-    with pytest.raises(ValueError):
-        hyperplane_knn(vectors, vectors, k=1, n_planes=6)
-
-
-def test_bucketed_similar_pairs_subset_of_exact(vectors, spark):
-    from fuzzycat_spark.operators.knn import bucketed_similar_pairs, cosine_col
-
-    got = {(r.id_a, r.id_b) for r in bucketed_similar_pairs(
-        vectors, 0.9, n_planes=4, dim=16, id_col="vec_id").collect()}
-    a = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
-    b = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    exact = {(r.id_a, r.id_b) for r in a.join(b, F.col("id_a") < F.col("id_b"))
-             .filter(cosine_col(F.col("ea"), F.col("eb")) >= 0.9)
-             .select("id_a", "id_b").collect()}
-    assert got <= exact          # never invents pairs
-    assert len(got) >= len(exact) * 0.5   # planted parallel pairs mostly co-bucket
 
 
 def test_incremental_dedup_across_batches(spark):

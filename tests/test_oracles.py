@@ -1125,75 +1125,6 @@ def q_ann_buckets(spark, sf_dir):
     )
 
 
-def q_ann_knn(spark, sf_dir):
-    from fuzzycat_spark.operators.knn import hyperplane_knn
-
-    e = _emb(spark, sf_dir)
-    res = hyperplane_knn(e, e, k=3, n_planes=_ANN_PLANES_N, dim=_ANN_DIM)
-    # round before ranking for cross-engine determinism (see q_knn)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("neighbor_id")
-    )
-    joined = res.select("probe_id", "neighbor_id", "cosine")
-    return (
-        joined.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("probe_id", "neighbor_id", "rank")
-    )
-
-
-def q_ann_knn_multiprobe(spark, sf_dir):
-    """Multiprobe hyperplane ANN: every probe ALSO scans the n_planes
-    buckets one sign-flip away (probe-side explosion only — the index
-    stays one row per vector), trading n_planes+1 probe keys for recall.
-    Candidate set is a strict superset of q_ann_knn's."""
-    from fuzzycat_spark.operators.knn import hyperplane_knn
-
-    e = _emb(spark, sf_dir)
-    res = hyperplane_knn(
-        e, e, k=3, n_planes=_ANN_PLANES_N, dim=_ANN_DIM, multiprobe=1
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("neighbor_id")
-    )
-    return (
-        res.select("probe_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("probe_id", "neighbor_id", "rank")
-    )
-
-
-def _ann_knn_multiprobe_sql() -> str:
-    n = _ANN_PLANES_N
-    return f"""
-WITH bk AS ({_ann_bucket_sql()}),
-bkok AS (SELECT bucket FROM bk GROUP BY bucket HAVING count(*) <= {MAX_BUCKET}),
-pbk AS (
-  SELECT vec_id, bucket FROM bk
-  UNION ALL
-  SELECT vec_id,
-         substr(bucket, 1, i - 1)
-         || (CASE WHEN substr(bucket, i, 1) = '1' THEN '0' ELSE '1' END)
-         || substr(bucket, i + 1) AS bucket
-  FROM bk CROSS JOIN (SELECT unnest(range(1, {n + 1})) AS i)
-),
-cand AS (
-  SELECT DISTINCT p.vec_id AS probe_id, bb.vec_id AS neighbor_id
-  FROM pbk p JOIN bk bb ON p.bucket = bb.bucket
-  JOIN bkok ON bb.bucket = bkok.bucket
-  WHERE p.vec_id != bb.vec_id
-)
-SELECT probe_id, neighbor_id, rank FROM (
-  SELECT c.probe_id, c.neighbor_id,
-    CAST(row_number() OVER (PARTITION BY c.probe_id
-         ORDER BY round({_COS_D}, 9) DESC, c.neighbor_id) AS BIGINT) AS rank
-  FROM cand c
-  JOIN embeddings a ON c.probe_id = a.vec_id
-  JOIN embeddings b ON c.neighbor_id = b.vec_id
-) WHERE rank <= 3"""
-
-
 # threshold below the sf0.001 embeddings' max pairwise cosine (~0.51)
 # so the edge tier and multi-doc clusters are actually exercised — at the
 # production default (0.9, DedupConfig.embedding_strong) this corpus has
@@ -1260,35 +1191,6 @@ _PLANTED_FIXTURE = f"{FIXTURES}/embeddings_planted.parquet"
 _PLANTED_STRONG = 0.9  # the PRODUCTION default (DedupConfig.embedding_strong)
 
 
-def q_ann_pairs_planted(spark, sf_dir):
-    """bucketed_similar_pairs at the production threshold (0.9) over the
-    committed planted fixture (tools/make_planted_embeddings.py): five
-    >0.9-cosine families that MUST surface, plus a 210-copy identical
-    vector whose mega bucket exceeds max_bucket_size=200 and MUST be
-    excluded — the bucket cap and the 0.9 threshold are both exercised
-    non-vacuously (sf0.001 has no over-cap embedding bucket)."""
-    from fuzzycat_spark.operators.knn import bucketed_similar_pairs
-
-    e = spark.read.parquet(_PLANTED_FIXTURE)
-    return bucketed_similar_pairs(
-        e, _PLANTED_STRONG, n_planes=_ANN_PLANES_N, dim=_ANN_DIM
-    ).select("id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine"))
-
-
-def _ann_pairs_planted_sql() -> str:
-    return f"""
-WITH embeddings AS (SELECT * FROM '{_PLANTED_FIXTURE}'),
-bk AS ({_ann_bucket_sql()}),
-bkok AS (SELECT bucket FROM bk GROUP BY bucket HAVING count(*) <= {MAX_BUCKET})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({_COS_D}, 6) AS cosine
-FROM embeddings a
-JOIN bk ba ON a.vec_id = ba.vec_id
-JOIN bkok ON ba.bucket = bkok.bucket
-JOIN bk bb ON ba.bucket = bb.bucket
-JOIN embeddings b ON b.vec_id = bb.vec_id
-WHERE a.vec_id < b.vec_id AND round({_COS_D}, 9) >= {_PLANTED_STRONG}"""
-
-
 def q_components_embedding_planted(spark, sf_dir):
     """The embedding strategy end-to-end at embedding_strong=0.9 — the
     shipped production default — over the planted fixture: the five
@@ -1346,33 +1248,6 @@ SELECT emb.vec_id AS id, coalesce(cc.cluster_id, emb.vec_id) AS cluster_id
 FROM embeddings emb LEFT JOIN cc ON emb.vec_id = cc.id"""
 
 
-def q_ann_similar_pairs(spark, sf_dir):
-    """Bounded-at-scale threshold pairs: exact cosine only WITHIN
-    hyperplane buckets (one shuffle; the all-pairs `similar_embeddings`
-    stays as the labeled exact baseline)."""
-    from fuzzycat_spark.operators.knn import bucketed_similar_pairs
-
-    return bucketed_similar_pairs(
-        _emb(spark, sf_dir), _SIM_THRESHOLD, n_planes=_ANN_PLANES_N, dim=_ANN_DIM
-    ).select("id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine"))
-
-
-def _ann_similar_pairs_sql() -> str:
-    # bucket cap mirrored from bucketed_similar_pairs' default
-    # max_bucket_size (pairs only form inside buckets at/below the cap;
-    # over-cap buckets are excluded entirely — see lsh_candidate_pairs)
-    return f"""
-WITH bk AS ({_ann_bucket_sql()}),
-bkok AS (SELECT bucket FROM bk GROUP BY bucket HAVING count(*) <= {MAX_BUCKET})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({_COS_D}, 6) AS cosine
-FROM embeddings a
-JOIN bk ba ON a.vec_id = ba.vec_id
-JOIN bkok ON ba.bucket = bkok.bucket
-JOIN bk bb ON ba.bucket = bb.bucket
-JOIN embeddings b ON b.vec_id = bb.vec_id
-WHERE a.vec_id < b.vec_id AND round({_COS_D}, 9) >= {_SIM_THRESHOLD}"""
-
-
 def _ann_bucket_sql() -> str:
     bits = " || ".join(
         "(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
@@ -1380,25 +1255,6 @@ def _ann_bucket_sql() -> str:
         for p in _ann_planes()
     )
     return f"SELECT vec_id, {bits} AS bucket FROM embeddings"
-
-
-def _ann_knn_sql() -> str:
-    # hyperplane_knn caps the INDEX side only (probe rows are never
-    # dropped; an over-cap bucket simply yields no neighbors from it)
-    return f"""
-WITH bk AS ({_ann_bucket_sql()}),
-bkok AS (SELECT bucket FROM bk GROUP BY bucket HAVING count(*) <= {MAX_BUCKET})
-SELECT probe_id, neighbor_id, rank FROM (
-  SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-    CAST(row_number() OVER (PARTITION BY a.vec_id
-         ORDER BY round({_COS_D}, 9) DESC, b.vec_id) AS BIGINT) AS rank
-  FROM embeddings a
-  JOIN bk ba ON a.vec_id = ba.vec_id
-  JOIN bk bb ON ba.bucket = bb.bucket
-  JOIN bkok ON bb.bucket = bkok.bucket
-  JOIN embeddings b ON b.vec_id = bb.vec_id
-  WHERE a.vec_id != b.vec_id
-) WHERE rank <= 3"""
 
 
 _WINNOW_W = 4
@@ -2107,43 +1963,6 @@ def q_warc_scan(spark, sf_dir):
     )
 
 
-_REVISIT_FIXTURE = f"{FIXTURES}/revisit_docs.parquet"
-
-
-def q_latest_revision(spark, sf_dir):
-    """Crawl-revisit collapse (functions/urls.latest_revision): one kept
-    row per canonical SURT key — the newest snapshot, timestamp ties to
-    the lowest id — with the revision count. One per-key window shuffle
-    over (id, surt, ts) only. Fixture plants multi-spelling revisits, a
-    timestamp tie, and a single-fetch page; the oracle reuses the SURT
-    CTE plus the identical window."""
-    from fuzzycat_spark.functions.urls import latest_revision
-
-    return latest_revision(
-        spark.read.parquet(_REVISIT_FIXTURE), "url", "warc_ts", "url_id"
-    ).select(F.col("id").alias("url_id"), "surt", "warc_ts", "n_revisions")
-
-
-def _latest_revision_sql() -> str:
-    surt_cte = _SURT_CTE.replace(_URL_FIXTURE, _REVISIT_FIXTURE)
-    return f"""
-            WITH {surt_cte},
-            keyed AS (
-              SELECT s.url_id, s.surt, r.warc_ts
-              FROM surts s JOIN '{_REVISIT_FIXTURE}' r USING (url_id)
-            )
-            SELECT url_id, surt, warc_ts,
-                   CAST(n_revisions AS BIGINT) AS n_revisions
-            FROM (
-              SELECT url_id, surt, warc_ts,
-                row_number() OVER (
-                  PARTITION BY surt ORDER BY warc_ts DESC, url_id ASC
-                ) AS rn,
-                count(*) OVER (PARTITION BY surt) AS n_revisions
-              FROM keyed
-            ) WHERE rn = 1"""
-
-
 def _surt_host_col_sql(h1: str) -> str:
     """DuckDB SURT host from a cleaned (lowercased, www/default-port
     stripped) host expression — mirrors functions/urls.surt_host, same
@@ -2574,8 +2393,6 @@ CASES = {
     "knn": (q_knn, _KNN_SQL),
     "similar_embeddings": (q_similar_embeddings, _SIMILAR_PAIRS_SQL),
     "ann_buckets": (q_ann_buckets, _ann_bucket_sql()),
-    "ann_knn": (q_ann_knn, _ann_knn_sql()),
-    "ann_knn_multiprobe": (q_ann_knn_multiprobe, _ann_knn_multiprobe_sql()),
     "lang_stats": (
         q_lang_stats,
         """
@@ -2595,7 +2412,6 @@ CASES = {
             FROM s a JOIN s b ON a.doc_id != b.doc_id
             WHERE strpos(b.slug, a.slug) > 0""",
     ),
-    "ann_similar_pairs": (q_ann_similar_pairs, _ann_similar_pairs_sql()),
     "winnow_fps": (q_winnow_fps, _winnow_fps_sql()),
     "corpus_filter": (q_corpus_filter, _corpus_filter_sql()),
     "page_directives": (
@@ -2631,10 +2447,8 @@ CASES = {
                    n_bytes
             FROM '{_WARC_EXPECTED}'""",
     ),
-    "latest_revision": (q_latest_revision, _latest_revision_sql()),
     "denylist_pairs": (q_denylist_pairs, _denylist_pairs_sql()),
     "components_denylist": (q_components_denylist, _components_denylist_sql()),
-    "ann_pairs_planted": (q_ann_pairs_planted, _ann_pairs_planted_sql()),
     "components_embedding_planted": (
         q_components_embedding_planted,
         _components_embedding_planted_sql(),

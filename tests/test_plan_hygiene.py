@@ -96,78 +96,6 @@ def test_lang_id_table_uses_broadcast_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ann_bucket_cap_excludes_and_counts_mega_bucket(spark):
-    """The standalone embedding ANN entry points get the same skew guard
-    as the text LSH path: a planted
-    mega-bucket — 30 degenerate near-identical vectors, the all-same-sign
-    hot case — must be EXCLUDED from the quadratic join when over the cap
-    and COUNTED by oversize_ann_buckets, while normal buckets keep their
-    pairs."""
-    from fuzzycat_spark.operators.knn import (
-        bucketed_similar_pairs,
-        hyperplane_knn,
-        oversize_ann_buckets,
-    )
-
-    dim, planes = 4, 3
-    hot = [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(30)]
-    # two near-identical cool vectors (their own small bucket)
-    cool = [(100, [-1.0, 0.9, -0.8, 0.7]), (101, [-1.0, 0.9, -0.8, 0.71])]
-    e = spark.createDataFrame(hot + cool, "vec_id long, embedding array<double>")
-
-    over = oversize_ann_buckets(
-        e, n_planes=planes, dim=dim, max_bucket_size=10
-    ).collect()
-    assert len(over) == 1 and over[0].bucket_size == 30
-
-    pairs = bucketed_similar_pairs(
-        e, 0.5, n_planes=planes, dim=dim, max_bucket_size=10
-    ).collect()
-    got = {(r.id_a, r.id_b) for r in pairs}
-    assert (100, 101) in got  # cool bucket survives
-    assert all(a >= 100 for a, _ in got)  # mega-bucket contributed nothing
-
-    knn = hyperplane_knn(
-        e, e, k=3, n_planes=planes, dim=dim, max_bucket_size=10
-    ).collect()
-    assert {r.probe_id for r in knn} == {100, 101}
-
-    # uncapped: the mega bucket explodes quadratically (30*29 ordered pairs)
-    assert (
-        bucketed_similar_pairs(
-            e, 0.5, n_planes=planes, dim=dim, max_bucket_size=None
-        ).count()
-        == 30 * 29 / 2 + 1
-    )
-
-
-def test_ann_bucket_shuffle_is_narrow(spark):
-    """The ANN bucket-join shuffle must move (id, bucket) only — the
-    vector column may not ride any bucket exchange (it joins back for
-    surviving candidates). The exchange's child may CONSUME the embedding
-    to compute the bucket, but must not carry it as an output column
-    (aliased ea/eb, the pre-round-4 shape)."""
-    from fuzzycat_spark.operators.knn import bucketed_similar_pairs, hyperplane_knn
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for df in (
-        bucketed_similar_pairs(e, 0.5, n_planes=8, dim=64),
-        hyperplane_knn(e, e, k=3, n_planes=8, dim=64),
-    ):
-        plan = _plan(df)
-        lines = plan.splitlines()
-        for i, l in enumerate(lines):
-            if "Exchange hashpartitioning" not in l:
-                continue
-            if "band_hash" not in l and "bucket" not in l:
-                continue
-            child = lines[i + 1] if i + 1 < len(lines) else ""
-            for carried in (" AS ea#", " AS eb#", " AS _ea#", " AS _eb#"):
-                assert carried not in child, (
-                    f"vector rides the bucket shuffle:\n{l}\n{child}"
-                )
-
-
 def test_salt_hot_buckets_single_exchange_and_partial_survival(spark):
     """salt_hot_buckets must size buckets with a window count (ONE
     exchange over the band table — the round-3 groupBy+join paid two),
@@ -285,21 +213,6 @@ def test_pagerank_shuffles_are_host_int64_only(spark):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "html" not in line and "dst_url" not in line, line
-
-
-def test_semantic_contamination_brute_is_broadcast_no_shuffle_of_corpus(spark):
-    """The brute semantic screen must evaluate |corpus| x |eval| cosines
-    via a BROADCAST nested-loop join — the corpus side never shuffles
-    vectors, and no Python UDF appears (cosine is zip_with/aggregate)."""
-    from fuzzycat_spark.operators.decontaminate import semantic_contamination
-
-    e = spark.read.parquet("/root/repo/fixtures/embeddings_planted.parquet")
-    out = semantic_contamination(
-        e.filter("vec_id >= 20"), e.filter("vec_id < 20"), threshold=0.9
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "pythonUDF" not in plan.lower()
 
 
 def test_robots_rules_single_hosts_shuffle_no_udf(spark):

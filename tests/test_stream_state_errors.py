@@ -1,7 +1,8 @@
 """Failures around the incremental dedup state are loud: an unreadable
-committed table raises instead of reading as empty history, and a failed
-epoch manifest write is logged (the epoch still commits). A sizes snapshot
-written with an extra column of an earlier layout still resumes."""
+committed table or a garbled commit or base pointer raises instead of
+reading as empty history, and a failed epoch manifest write is logged (the
+epoch still commits). A sizes snapshot written with an extra column of an
+earlier layout still resumes."""
 
 from __future__ import annotations
 
@@ -133,3 +134,50 @@ def test_sizes_snapshot_with_cap_column_still_resumes(spark, tmp_path):
     want = epoch1(clean)
     assert want[0], "the fixture must yield pairs"
     assert epoch1(resumed) == want
+
+
+def _tree(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_garbled_commit_pointer_raises_and_keeps_committed_state(spark, tmp_path):
+    """A commit pointer that does not parse is not "no commits": read that
+    way, a direct call would take epoch 0 and overwrite the committed
+    epoch 0 state."""
+    index, pairs = f"{tmp_path}/index", f"{tmp_path}/pairs"
+    ds.incremental_dedup_batch(
+        spark.createDataFrame([("u1", FAM)], SCHEMA), index, pairs, CFG, assign=False
+    )
+    feat0 = f"{index}_features/epoch=0"
+    before = _tree(feat0)
+    with open(f"{index}_sizes/_CURRENT", "w") as f:
+        f.write("7}garbled")
+    with pytest.raises(RuntimeError, match="commit pointer"):
+        ds.incremental_dedup_batch(
+            spark.createDataFrame([("u2", FAM)], SCHEMA), index, pairs, CFG, assign=False
+        )
+    assert _tree(feat0) == before
+
+
+def test_garbled_base_pointer_fails_the_read(spark, tmp_path):
+    """A base pointer that does not parse is not "never compacted": read
+    that way, `_read_state` would serve only the tail left after
+    compaction."""
+    from fuzzycat_spark.streaming.compaction import compact_state
+
+    index, pairs = f"{tmp_path}/index", f"{tmp_path}/pairs"
+    ds.incremental_dedup_batch(
+        spark.createDataFrame([("u1", FAM), ("u2", FAM)], SCHEMA),
+        index, pairs, CFG, assign=False,
+    )
+    compact_state(spark, index, pairs)
+    assert ds.read_pairs(spark, pairs, index).count() == 1
+    with open(f"{pairs}/_BASE", "w") as f:
+        f.write('{"gen": 0, "upto"')
+    with pytest.raises(RuntimeError, match="base pointer"):
+        ds._read_state(spark, pairs, ds.committed_epoch(index))

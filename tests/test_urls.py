@@ -49,36 +49,6 @@ def test_url_dup_pairs_groups_variants(spark):
     assert pairs == [(1, 2), (1, 3), (2, 3)]
 
 
-class TestLatestRevision:
-    def test_newest_wins_ties_break_low_id(self, spark):
-        from fuzzycat_spark.functions.urls import latest_revision
-
-        kept = {
-            r["id"]: (r["n_revisions"])
-            for r in latest_revision(
-                spark.read.parquet("/root/repo/fixtures/revisit_docs.parquet"),
-                "url", "warc_ts", "url_id",
-            ).collect()
-        }
-        # page A: 4 spellings collapse, newest (id 3) wins
-        # page B: timestamp tie -> lowest id (4)
-        # page C: singleton; page D: newest (id 7)
-        assert kept == {3: 4, 4: 2, 6: 1, 7: 2}
-
-    def test_partition_invariant(self, spark):
-        from fuzzycat_spark.functions.urls import latest_revision
-
-        df = spark.read.parquet("/root/repo/fixtures/revisit_docs.parquet")
-        a = sorted(r["id"] for r in latest_revision(df, "url", "warc_ts", "url_id").collect())
-        b = sorted(
-            r["id"]
-            for r in latest_revision(
-                df.repartition(7), "url", "warc_ts", "url_id"
-            ).collect()
-        )
-        assert a == b
-
-
 def test_resolve_href_arms(spark):
     from fuzzycat_spark.functions.urls import resolve_href
 
