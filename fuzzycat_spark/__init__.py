@@ -11,7 +11,7 @@ Layout:
   functions/  — scalar/column kernels (normalize, shingle, minhash, simhash)
   operators/  — key stars, LSH band candidates, verify cascades, components,
                 the dedup_stages plan
-  sources/    — synthetic corpus generator, pages table IO, multimodal stubs
+  sources/    — synthetic corpus generator, pages table IO
   plans/      — checkpointed resumable multi-stage pipeline driver
   streaming/  — structured-streaming incremental dedup
 """

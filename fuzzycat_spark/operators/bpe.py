@@ -21,13 +21,12 @@ Scale shape — the whole point of doing BPE in Spark:
   symbol strings in codegen. Nothing document-shaped ever re-enters.
 - Frequencies and pair counts are int64 throughout — exact under any
   reduction order, so the learned merge sequence is deterministic and
-  cross-engine hash-matchable (the same policy as `operators/lm.py` /
-  `kmeans.py`; float-scored tokenizer trainers cannot be gated this
-  way).
+  cross-engine hash-matchable (the same policy as `operators/lm.py`;
+  float-scored tokenizer trainers cannot be gated this way).
 - Rounds chain lazily; pass a `StageCheckpointer` (`checkpointer=`) to
   cut lineage per round on big runs (without it, round t's argmax
   re-derives rounds 1..t-1 inside one DAG — fine for tens of merges,
-  quadratic for thousands), exactly like `operators/kmeans.py`.
+  quadratic for thousands).
 
 Merge-application semantics (the one documented deviation from
 canonical BPE): applying merge (a, b) rewrites each word's
@@ -251,7 +250,7 @@ def bpe_apply(
     the trainer never saw must still segment. `merges` is the persisted
     model artifact in learning order ((left, right) pairs — a tokenizer
     model is driver-sized by definition, ~30k rows, same footing as
-    broadcast k-means centroids or classifier weights).
+    broadcast classifier weights).
 
     Each word symbolizes per character and folds the merge list as ONE
     codegen chain of literal space-padded replaces — identical

@@ -36,10 +36,13 @@ _MAT_COUNTER = 0
 def resolve_fs(path: str):
     """(filesystem, fs_path) via pyarrow.fs — local paths AND object-store
     URIs (hadoop s3a:///s3n:// map to pyarrow's s3://). Shared by stage
-    lineage here and the streaming pointer/lineage I/O."""
+    lineage here and the streaming pointer/lineage I/O. A path without a
+    scheme is made absolute first: `from_uri` rejects a relative one."""
+    import os
+
     from pyarrow import fs as pafs
 
-    uri = path
+    uri = path if "://" in path else os.path.abspath(path)
     for hadoop_scheme in ("s3a://", "s3n://"):
         if uri.startswith(hadoop_scheme):
             uri = "s3://" + uri[len(hadoop_scheme) :]

@@ -472,17 +472,19 @@ def _write_epoch_manifest(
 
 
 def read_epoch_manifest(index_path: str, epoch_id: int) -> dict | None:
-    """Load one epoch's lineage manifest (None if absent/unreadable)."""
+    """Load one epoch's lineage manifest. Only a manifest that was never
+    written gives None: one that cannot be read or parsed raises with its
+    path, like the commit pointer (`committed_epoch`)."""
     import json
 
+    from fuzzycat_spark.plans.checkpoint import read_control
+
+    path = f"{index_path}_sizes/_manifest_epoch_{epoch_id}.json"
     try:
-        fs, p = _resolve_fs(
-            f"{index_path}_sizes/_manifest_epoch_{epoch_id}.json"
-        )
-        with fs.open_input_stream(p) as f:
-            return json.loads(f.read().decode("utf-8"))
-    except Exception:
-        return None
+        raw = read_control(path)
+        return None if raw is None else json.loads(raw)
+    except (json.JSONDecodeError, UnicodeDecodeError) as e:
+        raise RuntimeError(f"epoch manifest {path} does not parse: {e}") from None
 
 
 def run_incremental_dedup(

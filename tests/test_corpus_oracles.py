@@ -1,10 +1,9 @@
 """DuckDB oracles for the corpus-prep modules.
 
 The corpus-prep modules (line and web filters, mixing and splits, sharding,
-vocabularies and BPE, LM scores, link graph, k-means, PQ, sketches, PII,
-mojibake, media and the classifier) sit outside the dedup system's import
-closure. Until a module is
-deleted, its cases here gate it; a case goes with its module.
+vocabularies and BPE, LM scores, link graph, sketches, PII, mojibake and
+the classifier) sit outside the dedup system's import closure. Until a
+module is deleted, its cases here gate it; a case goes with its module.
 
 Each case runs a Spark function that calls the library directly and an
 independent DuckDB query, and compares them the way tests/test_oracles.py
@@ -25,15 +24,10 @@ from fuzzycat_spark.operators.components import connected_components
 from test_oracles import (
     FIXTURES,
     SF,
-    _ANN_DIM,
     _CC_SQL,
-    _COS_D,
-    _PLANTED_FIXTURE,
-    _PLANTED_STRONG,
     _QUALITY_SQL,
     _SLUG,
     _docs,
-    _emb,
     _surt_cte,
     _surt_host_col_sql,
     compare,
@@ -596,132 +590,6 @@ def _stratified_sample_sql() -> str:
               FROM h JOIN q USING (lang)
             )
             SELECT doc_id AS id, lang, rank FROM r WHERE rank <= quota"""
-
-
-def q_media_features(spark, sf_dir):
-    """Multimodal plumbing through the oracle gate: documents' text bytes
-    stand in for an opaque media payload; the distributed mapInPandas
-    batch path computes (content_sha, n_bytes), which SQL can recompute
-    exactly — the embedding (decoder-dependent) is covered by unit tests."""
-    from fuzzycat_spark.sources.multimodal import extract_media_features
-
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.lit(None).cast("string").alias("mime"),
-        F.col("text").cast("binary").alias("bytes"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    return extract_media_features(media).select(
-        F.col("media_id").cast("long").alias("doc_id"), "content_sha", "n_bytes"
-    )
-
-
-_MEDIA_FIXTURE = f"{FIXTURES}/media_docs.parquet"
-
-
-def q_media_decode(spark, sf_dir):
-    """The REAL media codec through the oracle gate: committed binary
-    payloads (uncompressed 24-bit BMP incl. bottom-up/top-down/padded
-    rows, binary PPM with header comment, PGM, 8/16-bit PCM WAV) are
-    decoded by `real_decoder` inside a distributed mapInPandas pass;
-    the gate compares (sample count, sum, sha256 of the uint8 samples)
-    against scalars precomputed from the SOURCE pixel arrays at
-    fixture-generation time (tools/make_media_fixture.py). A codec bug
-    of even one byte hash-mismatches. Compressed formats (PNG/JPEG/MP4)
-    remain behind the declared NotImplementedError seam."""
-    from fuzzycat_spark.sources.multimodal import decode_media_stats
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    return decode_media_stats(media)
-
-
-def q_media_resize(spark, sf_dir):
-    """Image resize over the media fixture: decode each committed payload
-    (BMP/PPM/PGM/PNG via `real_decoder`), reshape the flat samples with
-    the TABLE's width/height metadata, nearest-neighbor resize to 8x8
-    (integer floor grid — no half-pixel centers, so the fixture generator
-    pins the result from source arrays), and emit count/sum/sha of the
-    resized samples. Gates decode → metadata reshape → resize end to end;
-    audio rows are excluded (no 2-D grid)."""
-    from fuzzycat_spark.sources.multimodal import resize_media
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    return resize_media(media, out_h=8, out_w=8)
-
-
-_AUDIO_FRAMES_FIXTURE = f"{FIXTURES}/media_audio_frames.parquet"
-
-
-def q_audio_frames(spark, sf_dir):
-    """Frame-level audio features over the media fixture's PCM payloads:
-    decode with `real_decoder`, cut into 16-sample frames, emit integer
-    midline energy + zero-crossing counts per frame
-    (sources/multimodal.py audio_frame_stats). The oracle reads scalars
-    the fixture generator computed from the SOURCE sample arrays through
-    the shared `frame_stats_u8` kernel, so decode → framing → features
-    is pinned end to end; image rows are excluded before the decode."""
-    from fuzzycat_spark.sources.multimodal import audio_frame_stats
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    return audio_frame_stats(media, frame_len=16)
-
-
-def q_image_ahash(spark, sf_dir):
-    """Perceptual 64-bit average hash per image (sources/multimodal.py
-    ahash64): decode → integer grayscale → shared 8x8 floor-grid resize
-    → mean threshold, all integer-only. The oracle reads hashes the
-    fixture generator computed from the SOURCE pixel arrays through the
-    same kernel, so decode → gray → resize → threshold is pinned; the
-    fixture plants the same gradient in three containers (bottom-up
-    BMP, top-down BMP, PNG) that must collide exactly."""
-    from fuzzycat_spark.sources.multimodal import image_ahash
-
-    return image_ahash(spark.read.parquet(_MEDIA_FIXTURE))
-
-
-def q_image_dup_pairs(spark, sf_dir):
-    """Perceptual near-duplicate image pairs over the media fixture
-    (sources/multimodal.py image_dup_pairs): 8x 8-bit masked-band
-    candidates through the shared capped band machinery, then exact
-    bit_count(xor) <= 7 — catches the cross-container/cross-format
-    gradient family (hamming 0) and the one-pixel tweak (hamming 6)
-    while the random images stay unpaired. Exact recall at the
-    threshold: <= 7 differing bits touch <= 7 of the 8 bands."""
-    from fuzzycat_spark.sources.multimodal import image_dup_pairs
-
-    return image_dup_pairs(spark.read.parquet(_MEDIA_FIXTURE))
-
-
-def _image_dup_pairs_sql() -> str:
-    from fuzzycat_spark.sources.multimodal import _AHASH_BAND_MASKS
-
-    masks = ", ".join(
-        f"({i}, {m}::BIGINT)" for i, m in enumerate(_AHASH_BAND_MASKS)
-    )
-    return f"""
-        WITH ah AS (SELECT media_id, ahash FROM '{_MEDIA_FIXTURE}'
-                    WHERE kind = 'image'),
-        bands AS (
-          SELECT media_id, m.i, ah.ahash & m.mask AS bh
-          FROM ah CROSS JOIN (VALUES {masks}) AS m(i, mask)),
-        sized AS (
-          SELECT media_id, i, bh,
-                 count(*) OVER (PARTITION BY i, bh) AS bs
-          FROM bands),
-        cand AS (
-          SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b
-          FROM sized a JOIN sized b
-            ON a.i = b.i AND a.bh = b.bh AND a.media_id < b.media_id
-          WHERE a.bs BETWEEN 2 AND 200)
-        SELECT c.id_a, c.id_b,
-               CAST(bit_count(xor(x.ahash, y.ahash)) AS BIGINT) AS hamming
-        FROM cand c
-        JOIN ah x ON x.media_id = c.id_a
-        JOIN ah y ON y.media_id = c.id_b
-        WHERE bit_count(xor(x.ahash, y.ahash)) <= 7"""
 
 
 def q_host_components(spark, sf_dir):
@@ -1932,396 +1800,6 @@ def _host_pagerank_sql(
     )
 
 
-_KM_K = 8
-
-
-_KM_ITERS = 3
-
-
-_KM_SCALE = 1_000_000
-
-
-def q_kmeans_assign(spark, sf_dir):
-    """Fixed-point Lloyd k-means over the embeddings table
-    (operators/kmeans.py) — the SemDeDup-style clustering pass.
-    Components quantized once to int64; distances, centroid sums, and
-    truncated means are pure integer arithmetic (exact under any
-    reduction order — float centroid means could never hash-match).
-    Assignment is a broadcast k-row join reduced in codegen (no
-    shuffle); each update is ONE partial-agg shuffle keyed by
-    (cluster, component). Seeds = smallest-md5(id) prefix, planned as
-    TakeOrderedAndProject."""
-    from fuzzycat_spark.operators.kmeans import kmeans_fit
-
-    assign, _ = kmeans_fit(
-        _emb(spark, sf_dir), k=_KM_K, iters=_KM_ITERS, scale=_KM_SCALE
-    )
-    return assign
-
-
-def _kmeans_parts(
-    src: str, k: int, iters: int, scale: int,
-    prefix: str = "", quantize: bool = True,
-) -> list[str]:
-    """CTE chain (q, c0, a0, u0, c1, ..., afinal) computing the fixed-
-    point Lloyd iterations over `src` (a table name or quoted path);
-    the final assignment CTE is named `{prefix}afinal`. With
-    `quantize=False`, `src` must already expose (vec_id, qv) — the
-    product-quantization oracle fits one chain per SLICED subspace of a
-    single shared quantization CTE, prefixed s{m}_ to keep names apart."""
-    p = prefix
-
-    def assign(src: str, cent: str, out: str) -> str:
-        return f"""{out} AS (
-          SELECT vec_id, cluster, dist FROM (
-            SELECT vec_id, cluster, dist,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cluster) AS rn
-            FROM (
-              SELECT v.vec_id, c.cid AS cluster,
-                     CAST(list_sum(list_transform(range(1, len(v.qv)+1),
-                       j -> (v.qv[j]-c.cv[j])*(v.qv[j]-c.cv[j])))
-                       AS BIGINT) AS dist
-              FROM {src} v CROSS JOIN {cent} c))
-          WHERE rn = 1)"""
-
-    if quantize:
-        base = f"""{p}q AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * {float(scale)}) AS BIGINT))
-                   AS qv
-          FROM {src})"""
-    else:
-        base = f"{p}q AS (SELECT vec_id, qv FROM {src})"
-    parts = [
-        base,
-        f"""{p}c0 AS (
-          SELECT CAST(row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR))) AS INT) AS cid,
-                 qv AS cv
-          FROM (SELECT * FROM {p}q
-                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {k}))""",
-    ]
-    for i in range(iters):
-        parts.append(assign(f"{p}q", f"{p}c{i}", f"{p}a{i}"))
-        parts.append(f"""{p}u{i} AS (
-          SELECT cluster, list(m ORDER BY pos) AS cv_new FROM (
-            SELECT a.cluster, j AS pos,
-                   CAST(sum(v.qv[j]) AS BIGINT)
-                     // CAST(count(*) AS BIGINT) AS m
-            FROM {p}a{i} a JOIN {p}q v USING (vec_id),
-                 UNNEST(range(1, len(v.qv)+1)) AS r(j)
-            GROUP BY a.cluster, j)
-          GROUP BY cluster)""")
-        parts.append(f"""{p}c{i + 1} AS (
-          SELECT c.cid, COALESCE(u.cv_new, c.cv) AS cv
-          FROM {p}c{i} c LEFT JOIN {p}u{i} u ON u.cluster = c.cid)""")
-    parts.append(assign(f"{p}q", f"{p}c{iters}", f"{p}afinal"))
-    return parts
-
-
-def _kmeans_sql(
-    k: int = _KM_K, iters: int = _KM_ITERS, scale: int = _KM_SCALE
-) -> str:
-    parts = _kmeans_parts("embeddings", k, iters, scale)
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + "\nSELECT vec_id, cluster, dist FROM afinal"
-    )
-
-
-_SD_K = 4
-
-
-_SD_ITERS = 2
-
-
-_SD_CAP = 200
-
-
-def q_semdedup_pairs(spark, sf_dir):
-    """SemDeDup end to end (operators/kmeans.semdedup_pairs) over the
-    planted fixture at the production 0.9 threshold: fixed-point k-means
-    buckets the space, same-cluster pairs route through the SAME capped
-    band machinery as every text strategy (band_id='km'), vectors join
-    back only for surviving candidates, exact cosine filters. The
-    210-copy identical-vector family lands in an over-cap cluster and is
-    excluded (mirrored in the oracle — cap modeling stays non-vacuous);
-    the five planted >0.9 families must surface."""
-    from fuzzycat_spark.operators.kmeans import semdedup_pairs
-
-    e = spark.read.parquet(_PLANTED_FIXTURE).select("vec_id", "embedding")
-    return semdedup_pairs(
-        e,
-        threshold=_PLANTED_STRONG,
-        k=_SD_K,
-        iters=_SD_ITERS,
-        scale=_KM_SCALE,
-        max_cluster_size=_SD_CAP,
-    ).select("id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine"))
-
-
-def _semdedup_sql() -> str:
-    parts = [f"emb AS (SELECT vec_id, embedding FROM '{_PLANTED_FIXTURE}')"]
-    parts += _kmeans_parts("emb", _SD_K, _SD_ITERS, _KM_SCALE)
-    parts.append(f"""big AS (
-      SELECT cluster, count(*) AS bs FROM afinal GROUP BY cluster)""")
-    parts.append(f"""cand AS (
-      SELECT x.vec_id AS ida, y.vec_id AS idb
-      FROM afinal x JOIN afinal y
-        ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-      JOIN big g ON g.cluster = x.cluster
-        AND g.bs BETWEEN 2 AND {_SD_CAP})""")
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT c.ida AS id_a, c.idb AS id_b, round({_COS_D}, 6) AS cosine
-FROM cand c
-JOIN emb a ON a.vec_id = c.ida
-JOIN emb b ON b.vec_id = c.idb
-WHERE round({_COS_D}, 9) >= {_PLANTED_STRONG}"""
-    )
-
-
-_PQ_M = 4
-
-
-_PQ_K = 4
-
-
-_PQ_ITERS = 2
-
-
-_PQ_TOPK = 3
-
-
-_PQ_PROBES = 5
-
-
-def q_pq_codes(spark, sf_dir):
-    """Product-quantization index rows (operators/pq.py — Jégou et al.
-    2011): each embedding compressed to M per-subspace codebook ids.
-    Codebooks are M independent fixed-point Lloyd fits over SLICED views
-    of one quantized pass; encoding is SHUFFLE-FREE (M·K codebook rows
-    ride one broadcast row, argmin is the kmeans_assign sorted-struct
-    fold in codegen). Integer distances make every code cross-engine
-    exact. Emitted exploded as (vec_id, m, code)."""
-    from fuzzycat_spark.operators.pq import pq_encode, pq_fit
-
-    e = _emb(spark, sf_dir)
-    books = pq_fit(
-        e, _PQ_M, _PQ_K, _PQ_ITERS, scale=_KM_SCALE, dim=_ANN_DIM
-    )
-    codes = pq_encode(
-        e, books, _PQ_M, _ANN_DIM // _PQ_M, scale=_KM_SCALE
-    )
-    return codes.select("vec_id", F.posexplode("codes").alias("m", "code"))
-
-
-def q_pq_knn(spark, sf_dir):
-    """ADC top-k over the PQ index (operators/pq.pq_knn): the probe's
-    full-precision quantized vector vs each document's codebook
-    RECONSTRUCTION — only M small codes ever represent the corpus, the
-    compressed-domain ANN path when even (id, vector) rows are too big
-    to cache. Probes broadcast; reconstruction via try_element_at on the
-    broadcast codebooks in codegen; ONE shuffle (the per-probe rank
-    window). adist is integer squared L2 — (adist, vec_id) ranking is
-    deterministic in both engines."""
-    from fuzzycat_spark.operators.pq import pq_knn
-
-    e = _emb(spark, sf_dir)
-    probes = e.select("vec_id").filter(F.col("vec_id") < _PQ_PROBES)
-    return pq_knn(
-        e,
-        probes,
-        topk=_PQ_TOPK,
-        m=_PQ_M,
-        k=_PQ_K,
-        iters=_PQ_ITERS,
-        scale=_KM_SCALE,
-        dim=_ANN_DIM,
-    )
-
-
-def _pq_parts() -> list[str]:
-    """Shared PQ CTE chain: one quantization pass (pqv), M sliced
-    subspace inputs, M prefixed Lloyd chains, and the joined `codes`
-    table (vec_id, c0..c{M-1})."""
-    sd = _ANN_DIM // _PQ_M
-    parts = [
-        f"""pqv AS (
-      SELECT vec_id, list_transform(embedding,
-        x -> CAST(floor(CAST(x AS DOUBLE) * {float(_KM_SCALE)}) AS BIGINT)) AS qv
-      FROM embeddings)"""
-    ]
-    for j in range(_PQ_M):
-        parts.append(
-            f"s{j}in AS (SELECT vec_id, qv[{j * sd + 1}:{(j + 1) * sd}] AS qv FROM pqv)"
-        )
-        parts += _kmeans_parts(
-            f"s{j}in", _PQ_K, _PQ_ITERS, _KM_SCALE,
-            prefix=f"s{j}_", quantize=False,
-        )
-    joins = " ".join(
-        f"JOIN s{j}_afinal s{j} USING (vec_id)" for j in range(1, _PQ_M)
-    )
-    sel = ", ".join(f"s{j}.cluster AS c{j}" for j in range(_PQ_M))
-    parts.append(f"codes AS (SELECT s0.vec_id, {sel} FROM s0_afinal s0 {joins})")
-    return parts
-
-
-def _pq_codes_sql() -> str:
-    arms = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {j} AS m, c{j} AS code FROM codes"
-        for j in range(_PQ_M)
-    )
-    return "WITH " + ",\n".join(_pq_parts()) + "\n" + arms
-
-
-def _pq_knn_sql() -> str:
-    parts = _pq_parts()
-    cj = " ".join(
-        f"JOIN s{j}_c{_PQ_ITERS} cb{j} ON cb{j}.cid = c.c{j}"
-        for j in range(_PQ_M)
-    )
-    rv = " || ".join(f"cb{j}.cv" for j in range(_PQ_M))
-    parts.append(f"rec AS (SELECT c.vec_id, {rv} AS rv FROM codes c {cj})")
-    parts.append(
-        f"pprobes AS (SELECT vec_id AS probe_id, qv FROM pqv WHERE vec_id < {_PQ_PROBES})"
-    )
-    parts.append(
-        """scored AS (
-      SELECT p.probe_id, r.vec_id,
-             CAST(list_sum(list_transform(range(1, len(r.rv)+1),
-               j -> (p.qv[j]-r.rv[j])*(p.qv[j]-r.rv[j]))) AS BIGINT) AS adist
-      FROM pprobes p CROSS JOIN rec r WHERE r.vec_id <> p.probe_id)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT probe_id, vec_id, adist, CAST(rank AS BIGINT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY probe_id
-                               ORDER BY adist, vec_id) AS rank
-  FROM scored)
-WHERE rank <= {_PQ_TOPK}"""
-    )
-
-
-_IVFADC_KC = 4
-
-
-_IVFADC_NPROBE = 2
-
-
-def q_ivfadc_knn(spark, sf_dir):
-    """IVFADC (operators/pq.ivfadc_knn — Jégou et al. 2011 §V): coarse
-    fixed-point Lloyd quantizer partitions the corpus into inverted
-    lists, PQ codebooks train on the RESIDUALS q(x) - c(cell(x)), and
-    each probe scores only its `nprobe` nearest lists by ADC against its
-    own per-cell query residual. Everything is integer (one quantize
-    pass, truncated-mean centroids, squared-L2 scores), so codes,
-    distances, AND the final ranking hash-match the unrolled oracle."""
-    from fuzzycat_spark.operators.pq import ivfadc_knn
-
-    e = _emb(spark, sf_dir)
-    probes = e.select("vec_id").filter(F.col("vec_id") < _PQ_PROBES)
-    return ivfadc_knn(
-        e,
-        probes,
-        topk=_PQ_TOPK,
-        kc=_IVFADC_KC,
-        m=_PQ_M,
-        k=_PQ_K,
-        iters=_PQ_ITERS,
-        nprobe=_IVFADC_NPROBE,
-        scale=_KM_SCALE,
-        dim=_ANN_DIM,
-    )
-
-
-def _ivfadc_sql() -> str:
-    """Unrolled IVFADC: coarse Lloyd chain over the quantized vectors,
-    residual table, M per-subspace Lloyd chains over SLICED residuals,
-    codebook reconstruction, probe-side nprobe cell selection, ADC."""
-    sd = _ANN_DIM // _PQ_M
-    sq = (
-        "CAST(list_sum(list_transform(range(1, len({a})+1),"
-        " j -> ({a}[j]-{b}[j])*({a}[j]-{b}[j]))) AS BIGINT)"
-    )
-    parts = [
-        f"""pqv AS (
-      SELECT vec_id, list_transform(embedding,
-        x -> CAST(floor(CAST(x AS DOUBLE) * {float(_KM_SCALE)}) AS BIGINT)) AS qv
-      FROM embeddings)"""
-    ]
-    parts += _kmeans_parts(
-        "pqv", _IVFADC_KC, _PQ_ITERS, _KM_SCALE, prefix="cc_", quantize=False
-    )
-    parts.append(f"""res AS (
-      SELECT v.vec_id, a.cluster,
-             list_transform(range(1, len(v.qv)+1),
-                            j -> v.qv[j] - c.cv[j]) AS qv
-      FROM pqv v JOIN cc_afinal a USING (vec_id)
-                 JOIN cc_c{_PQ_ITERS} c ON c.cid = a.cluster)""")
-    for j in range(_PQ_M):
-        parts.append(
-            f"r{j}in AS (SELECT vec_id, qv[{j * sd + 1}:{(j + 1) * sd}]"
-            " AS qv FROM res)"
-        )
-        parts += _kmeans_parts(
-            f"r{j}in", _PQ_K, _PQ_ITERS, _KM_SCALE,
-            prefix=f"r{j}_", quantize=False,
-        )
-    joins = " ".join(
-        f"JOIN r{j}_afinal s{j} USING (vec_id)" for j in range(1, _PQ_M)
-    )
-    sel = ", ".join(f"s{j}.cluster AS c{j}" for j in range(_PQ_M))
-    parts.append(
-        f"icodes AS (SELECT s0.vec_id, {sel} FROM r0_afinal s0 {joins})"
-    )
-    cj = " ".join(
-        f"JOIN r{j}_c{_PQ_ITERS} cb{j} ON cb{j}.cid = c.c{j}"
-        for j in range(_PQ_M)
-    )
-    rv = " || ".join(f"cb{j}.cv" for j in range(_PQ_M))
-    parts.append(f"""irec AS (
-      SELECT c.vec_id, r.cluster, {rv} AS rv
-      FROM icodes c JOIN res r USING (vec_id) {cj})""")
-    parts.append(
-        f"iprobes AS (SELECT vec_id AS probe_id, qv FROM pqv"
-        f" WHERE vec_id < {_PQ_PROBES})"
-    )
-    parts.append(f"""pcand AS (
-      SELECT probe_id, cid AS cluster, qres FROM (
-        SELECT p.probe_id, c.cid,
-               list_transform(range(1, len(p.qv)+1),
-                              j -> p.qv[j] - c.cv[j]) AS qres,
-               row_number() OVER (
-                 PARTITION BY p.probe_id
-                 ORDER BY {sq.format(a="p.qv", b="c.cv")}, c.cid) AS rn
-        FROM iprobes p CROSS JOIN cc_c{_PQ_ITERS} c)
-      WHERE rn <= {_IVFADC_NPROBE})""")
-    parts.append(f"""iscored AS (
-      SELECT p.probe_id, r.vec_id, r.cluster,
-             {sq.format(a="p.qres", b="r.rv")} AS adist
-      FROM pcand p JOIN irec r USING (cluster)
-      WHERE r.vec_id <> p.probe_id)""")
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT probe_id, vec_id, cluster, adist, CAST(rank AS BIGINT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY probe_id
-                               ORDER BY adist, vec_id) AS rank
-  FROM iscored)
-WHERE rank <= {_PQ_TOPK}"""
-    )
-
-
 _LL_B = 6  # 64 LogLog registers
 
 
@@ -2754,28 +2232,9 @@ CASES = {
     "host_quality": (q_host_quality, _host_quality_sql()),
     "robots_crawl_delays": (q_robots_crawl_delays, _robots_crawl_delays_sql()),
     "stratified_sample": (q_stratified_sample, _stratified_sample_sql()),
-    "media_features": (q_media_features, """
-            SELECT doc_id, sha256(coalesce(text, '')) AS content_sha,
-                   CAST(octet_length(CAST(coalesce(text, '') AS BLOB)) AS BIGINT)
-                     AS n_bytes
-            FROM documents"""),
-    "media_decode": (q_media_decode, f"""
-            SELECT media_id, px_count, px_sum, px_sha
-            FROM '{_MEDIA_FIXTURE}'"""),
-    "audio_frames": (q_audio_frames, f"""
-            SELECT media_id, frame_idx, n_samples, energy, zero_crossings
-            FROM '{_AUDIO_FRAMES_FIXTURE}'"""),
-    "image_ahash": (q_image_ahash, f"""
-            SELECT media_id, ahash FROM '{_MEDIA_FIXTURE}'
-            WHERE kind = 'image'"""),
-    "image_dup_pairs": (q_image_dup_pairs, _image_dup_pairs_sql()),
     "split_assign": (q_split_assign, _split_assign_sql()),
     "split_leakage_safe": (q_split_leakage_safe, _split_leakage_safe_sql()),
     "host_components": (q_host_components, _host_components_sql()),
-    "media_resize": (q_media_resize, f"""
-            SELECT media_id, rs8_count AS rs_count, rs8_sum AS rs_sum,
-                   rs8_sha AS rs_sha
-            FROM '{_MEDIA_FIXTURE}' WHERE kind = 'image'"""),
     "pii_scrub": (q_pii_scrub, _pii_scrub_sql()),
     "corpus_mix": (q_corpus_mix, _corpus_mix_sql()),
     "temperature_mix": (q_temperature_mix, _temperature_mix_sql()),
@@ -2796,11 +2255,6 @@ CASES = {
     "host_links": (q_host_links, _HOST_LINKS_SQL),
     "host_pagerank": (q_host_pagerank, _host_pagerank_sql()),
     "anchor_texts": (q_anchor_texts, _ANCHOR_TEXTS_SQL),
-    "kmeans_assign": (q_kmeans_assign, _kmeans_sql()),
-    "semdedup_pairs": (q_semdedup_pairs, _semdedup_sql()),
-    "pq_codes": (q_pq_codes, _pq_codes_sql()),
-    "pq_knn": (q_pq_knn, _pq_knn_sql()),
-    "ivfadc_knn": (q_ivfadc_knn, _ivfadc_sql()),
     "distinct_sketch": (q_distinct_sketch, _distinct_sketch_sql()),
     "cms_counts": (q_cms_counts, _cms_counts_sql()),
     "bloom_bits": (q_bloom_bits, _bloom_bits_sql()),

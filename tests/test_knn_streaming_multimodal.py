@@ -1,22 +1,12 @@
-"""Tests for streaming incremental dedup (the embedding tier included) and
-multimodal feature plumbing."""
+"""Tests for streaming incremental dedup (the embedding tier included)."""
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import numpy as np
-import pyspark.sql.functions as F
 import pytest
 
-from fuzzycat_spark.sources.multimodal import (
-    MEDIA_SCHEMA,
-    deterministic_fake_decoder,
-    extract_media_features,
-    sample_video_frames,
-    strict_decoder,
-)
 from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
 from fuzzycat_spark.operators.dedup import DedupConfig
 
@@ -33,166 +23,6 @@ def test_incremental_dedup_across_batches(spark):
     incremental_dedup_batch(b2, index, pairs, cfg)
     got = {(r.id_a, r.id_b): r.status for r in spark.read.parquet(pairs).collect()}
     assert got.get(("u1", "u3")) == "exact"
-
-
-def test_media_features_deterministic_and_distributed(spark):
-    rows = [
-        ("m1", "image", "image/png", b"\x89PNGfakebytes1", 8, 8, None),
-        ("m2", "image", "image/png", b"\x89PNGfakebytes1", 8, 8, None),  # same bytes
-        ("m3", "audio", "audio/wav", b"RIFFfakeaudio", None, None, 2500),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r.media_id: r for r in extract_media_features(media).collect()}
-    assert feats["m1"].content_sha == feats["m2"].content_sha
-    assert feats["m1"].embedding == feats["m2"].embedding
-    assert feats["m1"].content_sha != feats["m3"].content_sha
-    assert len(feats["m3"].embedding) == 16
-
-
-def test_video_frame_sampling_schedule(spark):
-    rows = [("v1", "video", "video/mp4", b"fakevideobytes", None, None, 3500)]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    frames = sample_video_frames(media, every_ms=1000).collect()
-    assert [f.frame_ts_ms for f in frames] == [0, 1000, 2000, 3000]
-    assert all(f.frame_ref.endswith(f"@{f.frame_ts_ms}") for f in frames)
-
-
-def test_strict_decoder_marks_integration_point():
-    with pytest.raises(NotImplementedError):
-        strict_decoder(b"x", "image")
-    # the fake decoder is deterministic on content
-    a = deterministic_fake_decoder(b"same", "image")
-    b = deterministic_fake_decoder(b"same", "image")
-    assert (a == b).all()
-
-
-_MEDIA_FIXTURE = "/root/repo/fixtures/media_docs.parquet"
-
-
-def test_real_decoder_round_trips_committed_fixture():
-    """Byte-identity of the real codec: every committed payload (BMP
-    bottom-up/top-down/padded, PPM with comment, PGM, 8/16-bit PCM WAV)
-    decodes to exactly the source sample array recorded at fixture
-    generation time (tools/make_media_fixture.py) — scalar path, no Spark."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    from fuzzycat_spark.sources.multimodal import real_decoder
-
-    t = pq.read_table(_MEDIA_FIXTURE).to_pydict()
-    assert len(t["media_id"]) >= 7
-    for mid, raw, kind, n, s, sha in zip(
-        t["media_id"], t["bytes"], t["kind"], t["px_count"], t["px_sum"], t["px_sha"]
-    ):
-        px = real_decoder(raw, kind).astype(np.uint8)
-        assert px.size == n, mid
-        assert int(px.astype(np.int64).sum()) == s, mid
-        assert hashlib.sha256(px.tobytes()).hexdigest() == sha, mid
-
-
-def test_real_decoder_rejects_what_it_cannot_parse():
-    from fuzzycat_spark.sources.multimodal import real_decoder
-
-    with pytest.raises(NotImplementedError):  # JPEG = the remaining seam
-        real_decoder(b"\xff\xd8\xff\xe0rest-of-jpeg", "image")
-    with pytest.raises(ValueError):  # PNG signature but no chunks
-        real_decoder(b"\x89PNG\r\n\x1a\nrest", "image")
-    with pytest.raises(NotImplementedError):  # 16-bit PNG unsupported
-        import struct as _s
-        import zlib as _z
-
-        ihdr = _s.pack(">IIBBBBB", 1, 1, 16, 0, 0, 0, 0)
-        chunk = _s.pack(">I", len(ihdr)) + b"IHDR" + ihdr + _s.pack(
-            ">I", _z.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF
-        )
-        body = _z.compress(b"\x00\x00\x00")
-        idat = _s.pack(">I", len(body)) + b"IDAT" + body + _s.pack(
-            ">I", _z.crc32(b"IDAT" + body) & 0xFFFFFFFF
-        )
-        real_decoder(b"\x89PNG\r\n\x1a\n" + chunk + idat, "image")
-    with pytest.raises(NotImplementedError):  # 32bpp BMP unsupported
-        bad = bytearray(60)
-        bad[:2] = b"BM"
-        bad[28] = 32
-        real_decoder(bytes(bad), "image")
-    with pytest.raises(ValueError):  # truncated BMP header
-        real_decoder(b"BM\x00", "image")
-    with pytest.raises(ValueError):  # PNM raster shorter than header claims
-        real_decoder(b"P6\n4 4\n255\n\x00\x00", "image")
-    with pytest.raises(NotImplementedError):  # 2-byte PNM samples
-        real_decoder(b"P5\n1 1\n65535\n\x00\x00", "image")
-    with pytest.raises(NotImplementedError):  # non-PCM WAV
-        wav = (
-            b"RIFF\x24\x00\x00\x00WAVEfmt \x10\x00\x00\x00"
-            + (3).to_bytes(2, "little")  # IEEE float, not PCM
-            + b"\x01\x00" + b"\x40\x1f\x00\x00" + b"\x80\x3e\x00\x00"
-            + b"\x02\x00\x10\x00" + b"data\x00\x00\x00\x00"
-        )
-        real_decoder(wav, "audio")
-
-
-def test_decode_media_stats_distributed_matches_fixture(spark):
-    """The mapInPandas decode audit (default codec = real_decoder) over
-    the committed fixture reproduces the generation-time scalars — the
-    same invariant the media_decode driver gate pins at sf0.01."""
-    from fuzzycat_spark.sources.multimodal import decode_media_stats
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    want = {
-        r.media_id: (r.px_count, r.px_sum, r.px_sha)
-        for r in media.select("media_id", "px_count", "px_sum", "px_sha").collect()
-    }
-    got = {
-        r.media_id: (r.px_count, r.px_sum, r.px_sha)
-        for r in decode_media_stats(media).collect()
-    }
-    assert got == want
-
-
-def test_resize_nearest_kernel():
-    from fuzzycat_spark.sources.multimodal import resize_nearest
-
-    # identity: same dims returns the samples unchanged
-    img = np.arange(2 * 3 * 3, dtype=np.uint8)
-    assert np.array_equal(resize_nearest(img, 2, 3, 2, 3), img)
-    # 2x upscale duplicates each pixel into a 2x2 block (floor grid)
-    tiny = np.array([[1, 2], [3, 4]], dtype=np.uint8).reshape(-1)
-    up = resize_nearest(tiny, 2, 2, 4, 4).reshape(4, 4)
-    assert np.array_equal(
-        up,
-        np.array([[1, 1, 2, 2], [1, 1, 2, 2], [3, 3, 4, 4], [3, 3, 4, 4]]),
-    )
-    # downsample picks the floor-mapped source pixels: yi = y*4 // 2 = 0,2
-    big = np.arange(16, dtype=np.uint8)
-    down = resize_nearest(big, 4, 4, 2, 2)
-    assert np.array_equal(down, np.array([0, 2, 8, 10]))
-    # metadata that does not tile the payload fails loudly
-    with pytest.raises(ValueError, match="do not tile"):
-        resize_nearest(np.zeros(10, np.uint8), 3, 3, 2, 2)
-    with pytest.raises(ValueError, match="degenerate"):
-        resize_nearest(tiny, 0, 2, 2, 2)
-
-
-def test_resize_media_distributed_matches_fixture(spark):
-    """resize_media over the committed fixture reproduces the
-    generation-time 8x8 scalars (the media_resize driver gate) and
-    excludes audio rows."""
-    from fuzzycat_spark.sources.multimodal import resize_media
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    want = {
-        r.media_id: (r.rs8_count, r.rs8_sum, r.rs8_sha)
-        for r in media.filter(F.col("kind") == "image")
-        .select("media_id", "rs8_count", "rs8_sum", "rs8_sha")
-        .collect()
-    }
-    got = {
-        r.media_id: (r.rs_count, r.rs_sum, r.rs_sha)
-        for r in resize_media(media, 8, 8).collect()
-    }
-    assert got == want
-    assert "wav_pcm16" not in got and len(got) == 13
 
 
 def test_incremental_equals_batch_dedup(spark):
@@ -583,102 +413,3 @@ def test_incremental_embedding_config_change_fails_loudly(spark, tmp_path):
         incremental_dedup_batch(b2, index, pairs_path, emb_cfg)
 
 
-def test_frame_stats_hand_computed():
-    from fuzzycat_spark.sources.multimodal import frame_stats_u8
-
-    # x - 128 = [0, -1, 0, 1]: energy 2, sign flips at 0->-1 and -1->0
-    got = frame_stats_u8(np.array([128, 127, 128, 129], np.uint8), 4)
-    assert got == [(0, 4, 2, 2)]
-    # partial trailing frame is kept and indexes sequentially
-    got = frame_stats_u8(np.array([128, 127, 128, 129, 255], np.uint8), 2)
-    assert got == [(0, 2, 1, 1), (1, 2, 1, 0), (2, 1, 127 * 127, 0)]
-    assert frame_stats_u8(np.array([], np.uint8), 4) == []
-
-
-def test_audio_frame_stats_excludes_images_and_matches_kernel(spark):
-    from fuzzycat_spark.sources.multimodal import (
-        audio_frame_stats,
-        frame_stats_u8,
-    )
-
-    raw = bytes(range(40))
-    rows = [
-        ("aud", "audio", None, raw, None, None, None),
-        ("img", "image", None, b"\x01\x02", 2, 1, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    passthrough = lambda b, k: np.frombuffer(b, np.uint8)  # noqa: E731
-    got = sorted(
-        (r.media_id, r.frame_idx, r.n_samples, r.energy, r.zero_crossings)
-        for r in audio_frame_stats(media, frame_len=16, decode=passthrough)
-        .collect()
-    )
-    want = sorted(
-        ("aud", i, n, e, z)
-        for i, n, e, z in frame_stats_u8(np.frombuffer(raw, np.uint8), 16)
-    )
-    assert got == want and len(got) == 3
-
-
-def test_audio_frame_stats_fixture_parity(spark):
-    from fuzzycat_spark.sources.multimodal import audio_frame_stats
-    import pyarrow.parquet as pq
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    got = {
-        (r.media_id, r.frame_idx): (r.n_samples, r.energy, r.zero_crossings)
-        for r in audio_frame_stats(media, frame_len=16).collect()
-    }
-    t = pq.read_table(
-        "/root/repo/fixtures/media_audio_frames.parquet"
-    ).to_pydict()
-    want = {
-        (m, i): (n, e, z)
-        for m, i, n, e, z in zip(
-            t["media_id"], t["frame_idx"], t["n_samples"], t["energy"],
-            t["zero_crossings"],
-        )
-    }
-    assert got == want and len(got) == 7
-
-
-def test_ahash_invariant_across_containers_and_layouts():
-    from fuzzycat_spark.sources.multimodal import ahash64, real_decoder
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(_MEDIA_FIXTURE).to_pydict()
-    row = {m: i for i, m in enumerate(t["media_id"])}
-
-    def ah(mid):
-        i = row[mid]
-        px = real_decoder(t["bytes"][i], "image")
-        return ahash64(px, t["height"][i], t["width"][i])
-
-    # same pixels, three containers -> identical hash
-    assert ah("bmp_grad") == ah("bmp_grad_dup") == ah("png_grad")
-    # pinned column matches the decode path
-    assert ah("bmp_grad") == t["ahash"][row["bmp_grad"]]
-    # one-pixel tweak flips few bits
-    d = ah("bmp_grad") ^ ah("bmp_grad_tweak")
-    assert 1 <= bin(d & ((1 << 64) - 1)).count("1") <= 7
-
-
-def test_image_dup_pairs_finds_family_and_skips_random(spark):
-    from fuzzycat_spark.sources.multimodal import image_dup_pairs
-
-    media = spark.read.parquet(_MEDIA_FIXTURE)
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in image_dup_pairs(media).collect()
-    }
-    fam = {"bmp_grad", "bmp_grad_dup", "png_grad"}
-    for a in fam:
-        for b in fam:
-            if a < b:
-                assert got[(a, b)] == 0
-    for a in sorted(fam):
-        pair = tuple(sorted((a, "bmp_grad_tweak")))
-        assert got[pair] == 6
-    # nothing outside the planted family pairs up
-    outside = {p for p in got if not set(p) <= fam | {"bmp_grad_tweak"}}
-    assert outside == set()

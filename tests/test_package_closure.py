@@ -29,18 +29,18 @@ ENTRY_POINTS = (
 )
 
 # outside the closure: the corpus-prep modules (ROADMAP.md open item
-# "Delete the 22 corpus-prep modules") and the synthetic corpus generator
+# "Delete the 19 corpus-prep modules") and the synthetic corpus generator
 # of the tests and tools; a deletion of any of them shrinks this list
 OUTSIDE = {
     f"{PKG}.functions.{m}" for m in ("encoding", "pii", "repetition", "webfilters")
 } | {
     f"{PKG}.operators.{m}"
     for m in (
-        "bpe", "classify", "domains", "kmeans", "lines", "linkgraph", "lm",
-        "mixing", "pq", "retrieval", "robots", "sharding", "sitemap", "sketch",
-        "spans", "stats", "vocab",
+        "bpe", "classify", "domains", "lines", "linkgraph", "lm", "mixing",
+        "retrieval", "robots", "sharding", "sitemap", "sketch", "spans",
+        "stats", "vocab",
     )
-} | {f"{PKG}.sources.multimodal", f"{PKG}.sources.synth"}
+} | {f"{PKG}.sources.synth"}
 
 
 def _path(module: str) -> Path | None:

@@ -171,31 +171,6 @@ def test_lm_scores_all_jvm_and_narrow(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
 
-def test_kmeans_seed_selection_is_heap_not_global_sort(spark):
-    """kmeans_seeds (k smallest md5(id)) must plan as
-    TakeOrderedAndProject, never a range-partitioned global sort."""
-    from fuzzycat_spark.operators.kmeans import kmeans_fit
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assign, cents = kmeans_fit(e, k=4, iters=0)
-    plan = _plan(cents)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "rangepartitioning" not in plan.lower(), plan
-
-
-def test_kmeans_assignment_join_is_broadcast(spark):
-    """Cluster assignment must join the k-row centroid table by
-    broadcast — a shuffle join here would repartition the whole vector
-    corpus per Lloyd iteration."""
-    from fuzzycat_spark.operators.kmeans import kmeans_fit
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assign, _ = kmeans_fit(e, k=4, iters=1)
-    plan = _plan(assign)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_pagerank_shuffles_are_host_int64_only(spark):
     """PageRank iteration shuffles must carry (host, int64) rows — the
     edge list and score vector — never page html/urls; and the loop must

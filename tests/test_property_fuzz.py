@@ -9,7 +9,6 @@ from __future__ import annotations
 import io
 import sys
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -69,33 +68,6 @@ def test_mojibake_repair_inverts_mangle(text):
     )
 
     assert fix_mojibake_py(mangle_utf8_as_cp1252(text)) == text
-
-
-# ------------------------------------------------------------------ PNG
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    data=st.data(),
-    w=st.integers(1, 9),
-    h=st.integers(1, 9),
-    color_type=st.sampled_from([0, 2, 6]),
-)
-def test_png_decode_inverts_encode_for_any_filter_sequence(data, w, h, color_type):
-    from make_media_fixture import encode_png
-
-    from fuzzycat_spark.sources.multimodal import _decode_png
-
-    ch = {0: 1, 2: 3, 6: 4}[color_type]
-    rng = np.random.RandomState(data.draw(st.integers(0, 2**31 - 1)))
-    shape = (h, w) if ch == 1 else (h, w, ch)
-    px = rng.randint(0, 256, size=shape, dtype=np.uint8)
-    filters = data.draw(
-        st.lists(st.integers(0, 4), min_size=h, max_size=h)
-    )
-    decoded = _decode_png(encode_png(px, color_type, filters))
-    assert decoded.dtype == np.float32
-    np.testing.assert_array_equal(decoded.astype(np.uint8), px.reshape(-1))
 
 
 # ------------------------------------------------------------- html text

@@ -1,8 +1,9 @@
 """Failures around the incremental dedup state are loud: an unreadable
-committed table or a garbled commit or base pointer raises instead of
-reading as empty history, and a failed epoch manifest write is logged (the
-epoch still commits). A sizes snapshot written with an extra column of an
-earlier layout still resumes."""
+committed table or a garbled commit pointer, base pointer or epoch manifest
+raises instead of reading as empty history, and a failed epoch manifest
+write is logged (the epoch still commits). A sizes snapshot written with an
+extra column of an earlier layout still resumes, and a relative state root
+works like an absolute one."""
 
 from __future__ import annotations
 
@@ -86,6 +87,39 @@ def test_manifest_write_failure_is_logged_and_epoch_commits(
         "_manifest_epoch_0.json" in m and "no space left on device" in m for m in msgs
     ), msgs
     assert ds.read_epoch_manifest(index, 0) is None
+
+
+def test_garbled_epoch_manifest_raises_with_its_path(spark, tmp_path):
+    """Only a manifest that was never written reads as None; one that does
+    not parse is not "no manifest"."""
+    index, pairs = f"{tmp_path}/index", f"{tmp_path}/pairs"
+    ds.incremental_dedup_batch(
+        spark.createDataFrame([("u1", FAM)], SCHEMA), index, pairs, CFG, assign=False
+    )
+    assert ds.read_epoch_manifest(index, 0)["epoch"] == 0
+    assert ds.read_epoch_manifest(index, 1) is None
+    with open(f"{index}_sizes/_manifest_epoch_0.json", "w") as f:
+        f.write('{"epoch": 0, "tables"')
+    with pytest.raises(RuntimeError, match="_manifest_epoch_0.json"):
+        ds.read_epoch_manifest(index, 0)
+
+
+def test_relative_state_root_commits_and_reads_back(spark, tmp_path):
+    """Pointer and manifest I/O resolve a scheme-less relative path like
+    Spark does. A relative path, not a chdir: the Spark JVM resolves
+    relative paths against the directory it started in."""
+    root = os.path.relpath(tmp_path)
+    assert not os.path.isabs(root)
+    index, pairs = f"{root}/index", f"{root}/pairs"
+    for rows in ([("u1", FAM), ("u2", "an unrelated page about tides")], [("u3", FAM)]):
+        ds.incremental_dedup_batch(
+            spark.createDataFrame(rows, SCHEMA), index, pairs, CFG, assign=False
+        )
+    assert ds.committed_epoch(index) == 1
+    got = {(r.id_a, r.id_b): r.status for r in ds.read_pairs(spark, pairs, index).collect()}
+    assert got.get(("u1", "u3")) == "exact"
+    lineage = ds.read_epoch_manifest(index, 1)["tables"]["pairs"]
+    assert "error" not in lineage and lineage["rows"] == 1, lineage
 
 
 def test_sizes_snapshot_with_cap_column_still_resumes(spark, tmp_path):
