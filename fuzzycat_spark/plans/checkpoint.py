@@ -22,6 +22,7 @@ from __future__ import annotations
 import atexit
 import json
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -33,21 +34,39 @@ _EPHEMERAL: dict[str, "StageCheckpointer"] = {}
 _MAT_COUNTER = 0
 
 
+# a URI scheme, with or without `//`: Hadoop writes `file:/a/b` and
+# `hdfs:/a/b`, and pyarrow's `from_uri` reads both
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+
+
 def resolve_fs(path: str):
     """(filesystem, fs_path) via pyarrow.fs — local paths AND object-store
     URIs (hadoop s3a:///s3n:// map to pyarrow's s3://). Shared by stage
     lineage here and the streaming pointer/lineage I/O. A path without a
-    scheme is made absolute first: `from_uri` rejects a relative one."""
-    import os
-
+    scheme is made absolute against the process's working directory first
+    (`from_uri` rejects a relative one). Spark resolves the same relative
+    path against fs.defaultFS, so the two agree only when that is the
+    local filesystem; a job passes its root through `qualify_path` once
+    so both sides see one URI."""
     from pyarrow import fs as pafs
 
-    uri = path if "://" in path else os.path.abspath(path)
+    uri = path if _URI_SCHEME.match(path) else os.path.abspath(path)
     for hadoop_scheme in ("s3a://", "s3n://"):
         if uri.startswith(hadoop_scheme):
             uri = "s3://" + uri[len(hadoop_scheme) :]
             break
     return pafs.FileSystem.from_uri(uri)
+
+
+def qualify_path(spark: SparkSession, path: str) -> str:
+    """`path` as the fully-qualified URI Spark reads and writes it at
+    (Hadoop's `FileSystem.makeQualified`): a relative or scheme-less path
+    is resolved against fs.defaultFS and its working directory, e.g.
+    `state` -> `file:/home/u/state` or `hdfs://nn:8020/user/u/state`."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs.makeQualified(hpath).toString()
 
 
 def atomic_put(path: str, payload: str) -> None:

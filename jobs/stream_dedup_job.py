@@ -64,14 +64,19 @@ def main() -> None:
     args = p.parse_args()
 
     from fuzzycat_spark.operators.dedup import DedupConfig
+    from fuzzycat_spark.plans.checkpoint import qualify_path
     from fuzzycat_spark.sources.html_extract import extract_text_udf
     from fuzzycat_spark.sources.warc import stream_warc
     from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
 
     spark = SparkSession.builder.appName("fuzzycat-spark-stream").getOrCreate()
 
-    index_path = f"{args.state}/index"
-    pairs_path = f"{args.state}/pairs"
+    # one URI for Spark's table writes and the pointer/listing I/O: a
+    # relative root would otherwise resolve against fs.defaultFS on one
+    # side and the driver's local working directory on the other
+    state = qualify_path(spark, args.state)
+    index_path = f"{state}/index"
+    pairs_path = f"{state}/pairs"
     if args.compact_only:
         # pure maintenance: no source construction, no --input needed
         from fuzzycat_spark.streaming.compaction import compact_state
@@ -125,7 +130,7 @@ def main() -> None:
             df, index_path, pairs_path, cfg,
             epoch_id=epoch, assign=not args.no_assign,
         )
-    ).option("checkpointLocation", f"{args.state}/checkpoint")
+    ).option("checkpointLocation", f"{state}/checkpoint")
     if not args.continuous:
         writer = writer.trigger(availableNow=True)
     q = writer.start()

@@ -2,8 +2,8 @@
 committed table or a garbled commit pointer, base pointer or epoch manifest
 raises instead of reading as empty history, and a failed epoch manifest
 write is logged (the epoch still commits). A sizes snapshot written with an
-extra column of an earlier layout still resumes, and a relative state root
-works like an absolute one."""
+extra column of an earlier layout still resumes, and a relative or
+`file:` state root works like an absolute path."""
 
 from __future__ import annotations
 
@@ -104,18 +104,31 @@ def test_garbled_epoch_manifest_raises_with_its_path(spark, tmp_path):
         ds.read_epoch_manifest(index, 0)
 
 
-def test_relative_state_root_commits_and_reads_back(spark, tmp_path):
-    """Pointer and manifest I/O resolve a scheme-less relative path like
-    Spark does. A relative path, not a chdir: the Spark JVM resolves
-    relative paths against the directory it started in."""
-    root = os.path.relpath(tmp_path)
-    assert not os.path.isabs(root)
+@pytest.mark.parametrize("form", ["relative", "file_uri", "qualified"])
+def test_state_root_forms_commit_and_read_back(spark, tmp_path, form):
+    """Pointer and manifest I/O reach the state Spark wrote for a relative
+    root, a Hadoop single-slash `file:/...` URI, and a relative root
+    qualified through Spark as the stream job does. A relative path, not a
+    chdir: the Spark JVM resolves relative paths against the directory it
+    started in."""
+    from fuzzycat_spark.plans.checkpoint import qualify_path
+
+    rel = os.path.relpath(tmp_path)
+    assert not os.path.isabs(rel)
+    root = {
+        "relative": rel,
+        "file_uri": f"file:{tmp_path}",
+        "qualified": qualify_path(spark, rel),
+    }[form]
+    if form == "qualified":
+        assert root == f"file:{tmp_path}"
     index, pairs = f"{root}/index", f"{root}/pairs"
     for rows in ([("u1", FAM), ("u2", "an unrelated page about tides")], [("u3", FAM)]):
         ds.incremental_dedup_batch(
             spark.createDataFrame(rows, SCHEMA), index, pairs, CFG, assign=False
         )
     assert ds.committed_epoch(index) == 1
+    assert os.path.exists(f"{tmp_path}/index_sizes/_CURRENT")
     got = {(r.id_a, r.id_b): r.status for r in ds.read_pairs(spark, pairs, index).collect()}
     assert got.get(("u1", "u3")) == "exact"
     lineage = ds.read_epoch_manifest(index, 1)["tables"]["pairs"]
