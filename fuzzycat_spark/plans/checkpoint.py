@@ -221,6 +221,29 @@ def _sweep_stale(root: str, prefix: str, max_age_sec: int = 3 * 3600) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
+def _session_checkpointer(spark: SparkSession) -> "StageCheckpointer":
+    """The per-session ephemeral checkpointer, its dir removed at exit."""
+    key = spark.sparkContext.applicationId
+    ck = _EPHEMERAL.get(key)
+    if ck is None:
+        ck = _EPHEMERAL.setdefault(key, StageCheckpointer(spark))
+        atexit.register(shutil.rmtree, ck.base_dir, ignore_errors=True)
+    return ck
+
+
+def scratch_checkpointer(spark: SparkSession, prefix: str) -> "StageCheckpointer":
+    """An ephemeral checkpointer with its own namespace: a fresh subdir of
+    the session's ephemeral dir, so fixed stage names (the `cc_*` rounds)
+    never overwrite files an earlier caller's lazy frame still reads, and
+    the session's exit-time removal takes the subdir with it."""
+    root = _session_checkpointer(spark)
+    ck = StageCheckpointer(
+        spark, tempfile.mkdtemp(prefix=prefix, dir=root.base_dir), lineage=False
+    )
+    ck.codec = root.codec
+    return ck
+
+
 def materialize(
     df: DataFrame, name: str | None = None, keep_last: int | None = None
 ) -> DataFrame:
@@ -241,12 +264,7 @@ def materialize(
     older frames under that name are no longer referenced.
     """
     global _MAT_COUNTER
-    spark = df.sparkSession
-    key = spark.sparkContext.applicationId
-    ck = _EPHEMERAL.get(key)
-    if ck is None:
-        ck = _EPHEMERAL.setdefault(key, StageCheckpointer(spark))
-        atexit.register(shutil.rmtree, ck.base_dir, ignore_errors=True)
+    ck = _session_checkpointer(df.sparkSession)
     _MAT_COUNTER += 1
     out = ck.write(df, f"{name or 'mat'}_{_MAT_COUNTER}")
     if keep_last is not None and name:
@@ -304,7 +322,10 @@ class StageCheckpointer:
         if self.codec:
             w = w.option("compression", self.codec)
         w.parquet(path)
-        out = self.spark.read.parquet(path)
+        # passing the schema skips the Spark job that infers it from the
+        # footers; a file source reads every field as nullable either way
+        # (pinned per stage by tests/test_checkpoint_reread.py)
+        out = self.spark.read.schema(df.schema).parquet(path)
         entry = {"path": path}
         if self.lineage:
             lineage = partition_lineage(path)

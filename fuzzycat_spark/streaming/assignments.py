@@ -164,12 +164,11 @@ def update_assignments(
         .select("la", "lb")
         .distinct()
     )
-    merge_map = materialize(
-        connected_components(reduced, id_a="la", id_b="lb").select(
-            F.col("id").alias("node"), F.col("cluster_id").alias("canon")
-        ),
-        "assign_merge_map",
-        keep_last=2,
+    # no copy: connected_components returns a parquet read (plus a join
+    # onto the driver's map when it finished mid-loop) or a local relation,
+    # both cheap to read three times below
+    merge_map = connected_components(reduced, id_a="la", id_b="lb").select(
+        F.col("id").alias("node"), F.col("cluster_id").alias("canon")
     )
 
     # base rows for ids first seen this epoch, already path-compressed

@@ -368,9 +368,11 @@ def incremental_dedup_batch(
         if name == "assignments":
             return None  # update_assignments folds the epoch's pairs below
         if name == "verified":
-            # the epoch's pairs sink is the verified stage's checkpoint
-            build().write.mode("overwrite").parquet(f"{pairs_path}/epoch={epoch_id}")
-            return spark.read.parquet(f"{pairs_path}/epoch={epoch_id}")
+            # the epoch's pairs sink is the verified stage's checkpoint;
+            # re-read with the known schema (no footer-inference job)
+            df = build()
+            df.write.mode("overwrite").parquet(f"{pairs_path}/epoch={epoch_id}")
+            return spark.read.schema(df.schema).parquet(f"{pairs_path}/epoch={epoch_id}")
         df = build()
         if name in HARD_STAGES or name in ("bands", "grams"):
             df = materialize(df, f"stream_{name}", keep_last=2)

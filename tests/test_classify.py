@@ -20,8 +20,10 @@ from fuzzycat_spark.operators.classify import (
     text_feature_rows,
 )
 
-DOCS_FX = "/root/repo/fixtures/classifier_docs.parquet"
-WEIGHTS_FX = "/root/repo/fixtures/classifier_weights.parquet"
+from _paths import FIXTURES
+
+DOCS_FX = f"{FIXTURES}/classifier_docs.parquet"
+WEIGHTS_FX = f"{FIXTURES}/classifier_weights.parquet"
 
 
 def _py_features(text: str, bigrams: bool = True) -> list[str]:

@@ -31,6 +31,7 @@ from test_oracles import (
     _surt_cte,
     _surt_host_col_sql,
     compare,
+    loop_only,
     q_components,
 )
 
@@ -2235,6 +2236,7 @@ CASES = {
     "split_assign": (q_split_assign, _split_assign_sql()),
     "split_leakage_safe": (q_split_leakage_safe, _split_leakage_safe_sql()),
     "host_components": (q_host_components, _host_components_sql()),
+    "host_components_loop": (loop_only(q_host_components), _host_components_sql()),
     "pii_scrub": (q_pii_scrub, _pii_scrub_sql()),
     "corpus_mix": (q_corpus_mix, _corpus_mix_sql()),
     "temperature_mix": (q_temperature_mix, _temperature_mix_sql()),

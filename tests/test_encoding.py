@@ -12,7 +12,9 @@ from fuzzycat_spark.functions.encoding import (
     mojibake_score,
 )
 
-FIXTURE = "/root/repo/fixtures/mojibake_docs.parquet"
+from _paths import FIXTURES
+
+FIXTURE = f"{FIXTURES}/mojibake_docs.parquet"
 
 
 class TestMangleModel:

@@ -30,6 +30,8 @@ from fuzzycat_spark.functions.hashing import (
     minhash_signature_udf,
 )
 
+from _paths import FIXTURES
+
 
 def one(spark, text, col):
     df = spark.createDataFrame([(text,)], "text string")
@@ -427,7 +429,7 @@ def test_lang_id_script_fixture_accuracy(spark):
     the Column form."""
     from fuzzycat_spark.functions.text import lang_id_script_col, lang_id_table
 
-    df = spark.read.parquet("/root/repo/fixtures/multilang_docs.parquet")
+    df = spark.read.parquet(f"{FIXTURES}/multilang_docs.parquet")
     col_rows = df.select(
         "doc_id", "expected", lang_id_script_col("text").alias("pred")
     ).collect()

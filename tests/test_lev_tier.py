@@ -14,7 +14,9 @@ from fuzzycat_spark.operators.verify import (
     verify_pairs,
 )
 
-_FIXTURE = "/root/repo/fixtures/lev_docs.parquet"
+from _paths import FIXTURES
+
+_FIXTURE = f"{FIXTURES}/lev_docs.parquet"
 
 
 def _all_pairs_verified(spark):

@@ -3,11 +3,20 @@ connected components."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
+from fuzzycat_spark.operators import components
 from fuzzycat_spark.operators.components import connected_components
 from fuzzycat_spark.operators.lsh import lsh_candidate_pairs, minhash_band_table
 from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs
+
+
+@pytest.fixture
+def loop_only(monkeypatch):
+    """Run connected components through its distributed rounds only."""
+    monkeypatch.setattr(components, "driver_edge_cap", lambda spark: 0)
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +85,7 @@ def test_connected_components_shapes(spark):
     }
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, loop_only):
     # 33-node chain exercises sublinear convergence (contraction + doubling)
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(32)], "id_a string, id_b string"
@@ -86,7 +95,7 @@ def test_connected_components_long_chain(spark):
     assert len(labels) == 33
 
 
-def test_connected_components_pathological_chain_shapes(spark):
+def test_connected_components_pathological_chain_shapes(spark, loop_only):
     """The two linear-convergence pathologies, both fixed by contraction +
     cumulative-map pointer doubling: a shuffled-id path (static-edge min
     propagation advanced ~1 hop/round — >60 rounds at n=1000) and a
@@ -94,8 +103,6 @@ def test_connected_components_pathological_chain_shapes(spark):
     nodes/round). Both must converge to ONE component well inside the
     default round budget; web containment chains take exactly these
     shapes."""
-    import random
-
     from fuzzycat_spark.plans import checkpoint as cp
 
     rounds: list[int] = []
@@ -125,7 +132,7 @@ def test_connected_components_pathological_chain_shapes(spark):
         cp.StageCheckpointer.record_counters = orig
 
 
-def test_connected_components_raises_when_rounds_exhausted(spark):
+def test_connected_components_raises_when_rounds_exhausted(spark, loop_only):
     import pytest
 
     edges = spark.createDataFrame(
@@ -135,7 +142,7 @@ def test_connected_components_raises_when_rounds_exhausted(spark):
         connected_components(edges, max_iterations=1)
 
 
-def test_connected_components_leaves_caller_session_conf_alone(spark):
+def test_connected_components_leaves_caller_session_conf_alone(spark, loop_only):
     """The CC loop sizes its shuffles in a CHILD session: a concurrent
     query on the caller's session must never observe the reduced
     shuffle-partition count (the round-3 set/restore raced concurrent
@@ -165,7 +172,7 @@ def test_connected_components_leaves_caller_session_conf_alone(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
-def test_connected_components_counters_survive_in_caller_manifest(spark, tmp_path):
+def test_connected_components_counters_survive_in_caller_manifest(spark, tmp_path, loop_only):
     """The child-session loop's cc_iter convergence counters must land in
     the CALLER's manifest (and survive a later caller-side flush) — the
     per-iteration metrics are part of the resumability/lineage story."""
@@ -184,6 +191,153 @@ def test_connected_components_counters_survive_in_caller_manifest(spark, tmp_pat
     assert iters, list(m)
     assert all("counters" in m[k] for k in iters)
     assert m[iters[-1]]["counters"]["remaining_edges"] == 0  # converged
+
+
+def _random_graph(seed: int, n: int = 300) -> list[tuple[int, int]]:
+    """Chains, stars and cliques over shuffled node ids, with repeated and
+    reversed edges and a few nodes whose only edge is a self-loop."""
+    rng = random.Random(seed)
+    ids = list(range(n))
+    rng.shuffle(ids)
+    edges, pos = [(x, x) for x in ids[:12]], 12
+    while pos < n:
+        size = rng.randint(2, 24)
+        comp, pos = ids[pos : pos + size], pos + size
+        shape = rng.choice(("chain", "star", "clique"))
+        if shape == "chain":
+            edges += list(zip(comp, comp[1:]))
+        elif shape == "star":
+            edges += [(comp[0], x) for x in comp[1:]]
+        else:
+            edges += [(a, b) for i, a in enumerate(comp) for b in comp[i + 1 :]]
+    edges += [(b, a) for a, b in rng.sample(edges, 20)] + rng.sample(edges, 20)
+    rng.shuffle(edges)
+    return edges
+
+
+def _component_minima(rows) -> set:
+    """(id, component minimum) by breadth-first search, for reference."""
+    adj: dict = {}
+    for a, b in rows:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out, seen = set(), set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            frontier = [y for x in frontier for y in adj[x] if y not in comp]
+            comp.update(frontier)
+        seen |= comp
+        out |= {(x, min(comp)) for x in comp}
+    return out
+
+
+def _cc_rows(edges, monkeypatch, cap: int, **kwargs) -> set:
+    monkeypatch.setattr(components, "driver_edge_cap", lambda spark: cap)
+    return {tuple(r) for r in connected_components(edges, **kwargs).collect()}
+
+
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_driver_finish_matches_loop_on_random_graphs(spark, monkeypatch, tmp_path, id_type):
+    """Finished on the driver before round 0, components give the same
+    (id, cluster_id) rows as the distributed rounds, self-loop-only nodes
+    included, from one checkpoint write and no round."""
+    import json
+
+    from fuzzycat_spark.plans.checkpoint import StageCheckpointer
+
+    cast = str if id_type == "string" else int
+    for seed in (1, 2):
+        rows = [(cast(a), cast(b)) for a, b in _random_graph(seed)]
+        edges = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
+        ck = StageCheckpointer(spark, str(tmp_path / f"{id_type}{seed}"))
+        local = _cc_rows(edges, monkeypatch, 10**9, checkpointer=ck)
+        loop = _cc_rows(edges, monkeypatch, 0)
+        assert local == loop == _component_minima(rows)
+        loners = {a for a, b in rows if a == b}
+        assert {(x, x) for x in loners} <= local and len(loners) >= 12
+        m = json.load(open(tmp_path / f"{id_type}{seed}" / "_manifest.json"))
+        assert not [k for k in m if k.startswith(("cc_iter_", "cc_labels_"))]
+        assert m["cc_local"]["counters"]["edges"] == 2 * len(rows)
+        assert m["cc_local"]["counters"]["nodes"] == len(local)
+        assert m["cc_local"]["counters"]["rounds"] == 0
+
+
+def test_loop_resolves_label_chains_left_by_pointer_doubling(spark, monkeypatch):
+    """On an ascending 18-node chain the rounds' contraction empties the
+    edge set while node 17 is still labelled 1 (whose label is 0); the
+    loop must follow such links to the component minimum."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(17)], "id_a: long, id_b: long"
+    )
+    assert _cc_rows(edges, monkeypatch, 0) == {(x, 0) for x in range(18)}
+
+
+def test_driver_finish_keeps_self_loop_nodes(spark, monkeypatch):
+    edges = spark.createDataFrame(
+        [("a", "a"), ("c", "b"), ("b", "b")], "id_a string, id_b string"
+    )
+    want = {("a", "a"), ("b", "b"), ("c", "b")}
+    assert _cc_rows(edges, monkeypatch, 10**9) == want
+    assert _cc_rows(edges, monkeypatch, 0) == want
+
+
+def test_driver_finish_string_minimum_matches_spark(spark, monkeypatch):
+    """Python orders str by code point and Spark by UTF-8 bytes, which
+    agree; UTF-16 order would not (U+1D538 sorts below U+FF45 in UTF-16
+    and above it by code point). Mixed lengths and a shared prefix with a
+    non-ASCII tail pick the same minimum too."""
+    from pyspark.sql import functions as F
+
+    ids = ["ｅ", "\U0001d538", "é", "e\u0301", "ee", "e", "z", "日本", "ß", "aa\u00e9", "aaz"]
+    for group in (ids, ["\U0001d538", "ｅ"]):
+        edges = spark.createDataFrame(
+            list(zip(group, group[1:])), "id_a string, id_b string"
+        )
+        assert edges.select(F.least(F.min("id_a"), F.min("id_b"))).first()[0] == min(group)
+        want = {(x, min(group)) for x in group}
+        assert _cc_rows(edges, monkeypatch, 10**9) == want
+        assert _cc_rows(edges, monkeypatch, 0) == want
+
+
+def test_driver_finish_mid_loop_on_chains(spark, monkeypatch, tmp_path):
+    """A cap just below the edge count entering round r makes the 400-node
+    shuffled and monotone chains run round r, then finish on the driver as
+    soon as the contracted edges plus the label links fit: the loop's rows,
+    never more rounds than the loop, and on each chain in fewer."""
+    import json
+
+    from fuzzycat_spark.plans.checkpoint import StageCheckpointer
+
+    n = 400
+    shuffled = list(range(n))
+    random.Random(7).shuffle(shuffled)
+    for shape, ids in (("shuffled", shuffled), ("monotone", list(range(n - 1, -1, -1)))):
+        edges = spark.createDataFrame(
+            [(ids[i], ids[i + 1]) for i in range(n - 1)], "id_a: long, id_b: long"
+        )
+        ck = StageCheckpointer(spark, str(tmp_path / shape))
+        loop = _cc_rows(edges, monkeypatch, 0, checkpointer=ck)
+        assert loop == {(x, 0) for x in range(n)}
+        m = json.load(open(tmp_path / shape / "_manifest.json"))
+        sizes = [m[f"cc_iter_{i}"]["counters"]["remaining_edges"]
+                 for i in range(sum(k.startswith("cc_iter_") for k in m))]
+        early = 0
+        for r, entering in enumerate([2 * (n - 1)] + sizes[:2]):
+            base = tmp_path / f"{shape}_{r}"
+            ck = StageCheckpointer(spark, str(base))
+            assert _cc_rows(edges, monkeypatch, entering - 1, checkpointer=ck) == loop
+            m = json.load(open(base / "_manifest.json"))
+            iters = sum(k.startswith("cc_iter_") for k in m)
+            assert r + 1 <= iters <= len(sizes), (r, iters, sizes)
+            if "cc_local" in m:
+                c = m["cc_local"]["counters"]
+                assert c["rounds"] == iters and c["edges"] == sizes[iters - 1]
+                assert c["edges"] + c["links"] <= entering - 1
+                early += iters < len(sizes)
+        assert early, (shape, sizes)
 
 
 def test_exact_substring_pairs_short_contained_doc(spark):

@@ -19,6 +19,7 @@ import math
 import tempfile
 from dataclasses import replace
 from pathlib import Path
+from unittest import mock
 
 import duckdb
 import pytest
@@ -44,6 +45,7 @@ from fuzzycat_spark.functions.text import (
     quality_score_cols,
     token_count,
 )
+from fuzzycat_spark.operators import components
 from fuzzycat_spark.operators.components import connected_components
 from fuzzycat_spark.operators.dedup import (
     DedupConfig,
@@ -61,9 +63,10 @@ from fuzzycat_spark.operators.verify import (
     verify_pairs,
 )
 
+from _paths import FIXTURES
+
 # the sf0.001 tables (TESTDATA.md) and the committed fixtures (FIXTURES.md)
 SF = "/root/testdata/sf0.001"
-FIXTURES = Path(__file__).resolve().parent.parent / "fixtures"
 
 # ---------------------------------------------------------------------------
 # shared config (the "shingle/signature config" recall is defined at)
@@ -1047,6 +1050,17 @@ def q_components(spark, sf_dir):
         .join(cc, on="id", how="left")
         .select("id", F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id"))
     )
+
+
+def loop_only(query):
+    """`query` with connected components held to its distributed rounds
+    (no driver finish), so that the loop keeps its check against DuckDB."""
+
+    def run(spark, sf_dir):
+        with mock.patch.object(components, "driver_edge_cap", lambda spark: 0):
+            return query(spark, sf_dir)
+
+    return run
 
 
 def q_components_all(spark, sf_dir):
@@ -2366,6 +2380,7 @@ CASES = {
             SELECT id_a, id_b, status, reason FROM verified""",
     ),
     "components": (q_components, _CC_SQL),
+    "components_loop": (loop_only(q_components), _CC_SQL),
     "canonical_docs": (
         q_canonical_docs,
         f"""

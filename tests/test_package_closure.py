@@ -14,7 +14,7 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parent.parent
+from _paths import ROOT
 PKG = "fuzzycat_spark"
 
 ENTRY_POINTS = (

@@ -20,7 +20,9 @@ from fuzzycat_spark.functions.pii import (
     redact_pii,
 )
 
-FIXTURE = "/root/repo/fixtures/pii_docs.parquet"
+from _paths import FIXTURES
+
+FIXTURE = f"{FIXTURES}/pii_docs.parquet"
 
 
 def _chain(text: str) -> str:

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from _paths import FIXTURES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -181,7 +183,7 @@ def test_pagerank_shuffles_are_host_int64_only(spark):
         pagerank_fp,
     )
 
-    pages = spark.read.parquet("/root/repo/fixtures/link_docs.parquet")
+    pages = spark.read.parquet(f"{FIXTURES}/link_docs.parquet")
     pr = pagerank_fp(host_graph(extract_links(pages)), iters=2)
     plan = _plan(pr)
     assert "CartesianProduct" not in plan, plan
@@ -197,7 +199,7 @@ def test_robots_rules_single_hosts_shuffle_no_udf(spark):
     from fuzzycat_spark.operators.robots import robots_rules
 
     rules = robots_rules(
-        spark.read.parquet("/root/repo/fixtures/robots_docs.parquet")
+        spark.read.parquet(f"{FIXTURES}/robots_docs.parquet")
     )
     plan = rules._jdf.queryExecution().executedPlan().toString()
     assert "pythonUDF" not in plan.lower()

@@ -12,7 +12,9 @@ import sys
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo/tools")
+from _paths import TOOLS
+
+sys.path.insert(0, TOOLS)
 
 
 # ---------------------------------------------------------------- WARC

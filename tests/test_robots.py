@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import pytest
 
-_ROBOTS = "/root/repo/fixtures/robots_docs.parquet"
-_PAGES = "/root/repo/fixtures/robots_pages.parquet"
+from _paths import FIXTURES
+
+_ROBOTS = f"{FIXTURES}/robots_docs.parquet"
+_PAGES = f"{FIXTURES}/robots_pages.parquet"
 
 
 @pytest.fixture(scope="module")

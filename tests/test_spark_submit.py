@@ -15,7 +15,7 @@ import shutil
 import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from _paths import ROOT
 
 
 def test_spark_submit_py_files_end_to_end(spark, tmp_path):
@@ -27,7 +27,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
 
     # -- package zip, built the same way `make dist` does
     zip_path = shutil.make_archive(
-        str(tmp_path / "fuzzycat_spark"), "zip", REPO, "fuzzycat_spark"
+        str(tmp_path / "fuzzycat_spark"), "zip", ROOT, "fuzzycat_spark"
     )
 
     spark_submit = shutil.which("spark-submit") or os.path.join(
@@ -47,7 +47,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
             "--driver-memory", "4g",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--py-files", zip_path,
-            os.path.join(REPO, "jobs", "dedup_job.py"),
+            os.path.join(ROOT, "jobs", "dedup_job.py"),
             "--input", pages_dir,
             "--output", out_dir,
             "--checkpoint", ckpt_dir,

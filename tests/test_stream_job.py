@@ -7,9 +7,11 @@ import sys
 
 import pyarrow.parquet as pq
 
+from _paths import TOOLS
+
 
 def _segments(tmp_path, pages_by_seg):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from make_warc_fixture import http_block, warc_record
 
     seg_dir = tmp_path / "segments"

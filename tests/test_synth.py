@@ -8,6 +8,8 @@ import pytest
 
 from fuzzycat_spark.sources import extract_text_udf, synth_pages
 
+from _paths import FIXTURES
+
 N_FAMILIES = 40
 N_SPAM = 15
 
@@ -65,7 +67,7 @@ def test_extract_text_real_html_fixture(spark):
     block, entities decoded."""
     from fuzzycat_spark.sources.html_extract import extract_text
 
-    with open("/root/repo/fixtures/sample_page.html", "rb") as f:
+    with open(f"{FIXTURES}/sample_page.html", "rb") as f:
         raw = f.read()
     got = extract_text(raw)
     assert got == _EXPECTED_FIXTURE_TEXT
@@ -161,7 +163,7 @@ def test_page_directives_udf_matches_scalar_on_fixture(spark):
     from fuzzycat_spark.sources.html_extract import page_directives_udf
 
     df = (
-        spark.read.parquet("/root/repo/fixtures/html_docs.parquet")
+        spark.read.parquet(f"{FIXTURES}/html_docs.parquet")
         .select(
             "doc_id", "noindex", "nofollow", "canonical",
             page_directives_udf(F.col("html")).alias("d"),
@@ -212,7 +214,7 @@ def test_page_meta_cols_fixture_values_and_plan(spark):
     exchange): this is the 10^12-page catalog fast path."""
     from fuzzycat_spark.sources.html_extract import page_meta_cols
 
-    df = spark.read.parquet("/root/repo/fixtures/html_docs.parquet").select(
+    df = spark.read.parquet(f"{FIXTURES}/html_docs.parquet").select(
         "doc_id", *page_meta_cols(F.col("html"))
     )
     rows = {r.doc_id: r for r in df.collect()}

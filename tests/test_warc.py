@@ -23,9 +23,11 @@ from fuzzycat_spark.sources.warc import (
     warc_pages,
 )
 
-GZ = "/root/repo/fixtures/sample.warc.gz"
-PLAIN = "/root/repo/fixtures/sample_plain.warc"
-EXPECTED = "/root/repo/fixtures/warc_expected.parquet"
+from _paths import FIXTURES, TOOLS
+
+GZ = f"{FIXTURES}/sample.warc.gz"
+PLAIN = f"{FIXTURES}/sample_plain.warc"
+EXPECTED = f"{FIXTURES}/warc_expected.parquet"
 
 
 def _rows(path, types=("response",)):
@@ -163,7 +165,7 @@ class TestSparkPath:
         import gzip as _gz
         import sys
 
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, TOOLS)
         from make_warc_fixture import http_block, warc_record
 
         from fuzzycat_spark.sources.warc import read_warc, stream_warc
@@ -221,7 +223,7 @@ class TestSparkPath:
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, TOOLS)
         from make_warc_fixture import http_block, warc_record
 
         from fuzzycat_spark.operators.dedup import DedupConfig

@@ -1,8 +1,11 @@
 """Connected-components convergence benchmark on adversarial shapes at
 >= 1M edges: a single long CHAIN (worst diameter — stresses pointer
 jumping), a STAR (worst hub skew), and a forest of mid-sized cliques (the
-dedup-realistic shape). Prints one JSON line per shape with iterations,
-wall, and correctness (every node must land on the component minimum).
+dedup-realistic shape). Runs each shape twice, finishing on the driver
+once the contracted edges fit `driver_edge_cap` ("driver") and through the
+distributed rounds only ("loop"), and prints one JSON line per run with
+rounds, the driver finish, wall, and correctness (every node must land on
+the component minimum).
 
 Usage: python tools/bench_cc.py [n_edges] [cores]
 """
@@ -12,14 +15,17 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
 from fuzzycat_spark import get_spark
-from fuzzycat_spark.operators.components import connected_components
-from fuzzycat_spark.plans.checkpoint import StageCheckpointer
+from fuzzycat_spark.operators import components
+from fuzzycat_spark.plans.checkpoint import scratch_checkpointer
 
 N_EDGES = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 CORES = int(sys.argv[2]) if len(sys.argv) > 2 else 32
@@ -60,35 +66,46 @@ def main() -> None:
             ).alias("id_b"),
         ),
     }
+    # a single component each, except one path per 496-id block
+    expected = {"chain": 1, "chain_shuffled": 1, "star": 1, "paths32": -(-n // 496)}
+    driver_cap = components.driver_edge_cap
     for name, edges in shapes.items():
-        ck = StageCheckpointer(spark)
-        t0 = time.time()
-        cc = connected_components(edges, max_iterations=64, checkpointer=ck)
-        # correctness: within every component, exactly one distinct label,
-        # equal to the component's min id (spot-check via global aggregates)
-        agg = cc.agg(
-            F.countDistinct("cluster_id").alias("n_components"),
-            F.count(F.lit(1)).alias("n_nodes"),
-        ).first()
-        wall = time.time() - t0
-        iters = sum(1 for k in ck._manifest if k.startswith("cc_iter_"))
-        expected = {"chain": 1, "chain_shuffled": 1, "star": 1, "paths32": None}[name]
-        ok = expected is None or agg["n_components"] == expected
-        print(
-            json.dumps(
-                {
-                    "shape": name,
-                    "edges": n,
-                    "nodes": int(agg["n_nodes"]),
-                    "components": int(agg["n_components"]),
-                    "iterations": iters,
-                    "wall_sec": round(wall, 2),
-                    "correct": bool(ok),
-                }
-            ),
-            flush=True,
-        )
-
+        # default: finish on the driver once the edges fit its cap;
+        # loop: the distributed rounds only (cap 0)
+        for path, cap in (("driver", driver_cap), ("loop", lambda spark: 0)):
+            components.driver_edge_cap = cap
+            ck = scratch_checkpointer(spark, "bench_cc_")
+            t0 = time.time()
+            cc = components.connected_components(edges, max_iterations=64, checkpointer=ck)
+            # correctness: every cluster is labelled with its own minimum id
+            # and there are as many clusters as components
+            per = cc.groupBy("cluster_id").agg(F.min("id").alias("lo"))
+            agg = per.agg(
+                F.count(F.lit(1)).alias("n_components"),
+                F.sum((F.col("lo") != F.col("cluster_id")).cast("int")).alias("bad"),
+            ).first()
+            n_nodes = cc.count()
+            wall = time.time() - t0
+            rounds = sum(1 for k in ck._manifest if k.startswith("cc_iter_"))
+            local = ck._manifest.get("cc_local", {}).get("counters")
+            print(
+                json.dumps(
+                    {
+                        "shape": name,
+                        "path": path,
+                        "edges": n,
+                        "nodes": n_nodes,
+                        "components": int(agg["n_components"]),
+                        "rounds": rounds,
+                        "driver_finish": local,
+                        "wall_sec": round(wall, 2),
+                        "correct": agg["bad"] == 0
+                        and agg["n_components"] == expected[name],
+                    }
+                ),
+                flush=True,
+            )
+    components.driver_edge_cap = driver_cap
 
 if __name__ == "__main__":
     main()

@@ -19,6 +19,9 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 # default 1M docs: at ~100k the whole pipeline finishes in ~20s per level
 # and the ratio measures scheduling+checkpoint latency, not the job —
@@ -46,7 +49,7 @@ def main() -> None:
     if not os.path.exists(corpus_path):
         gen = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from fuzzycat_spark import get_spark
 from fuzzycat_spark.sources import synth_pages
 spark = get_spark(cores=32)

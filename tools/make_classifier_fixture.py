@@ -25,14 +25,17 @@ from __future__ import annotations
 
 import random
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-DOCS_OUT = "/root/repo/fixtures/classifier_docs.parquet"
-WEIGHTS_OUT = "/root/repo/fixtures/classifier_weights.parquet"
+DOCS_OUT = f"{ROOT}/fixtures/classifier_docs.parquet"
+WEIGHTS_OUT = f"{ROOT}/fixtures/classifier_weights.parquet"
 
 _SUBJECTS = [
     "the river valley", "a small coastal town", "the national archive",

@@ -9,8 +9,11 @@ through a real distributed plan. Pure pyarrow, no Spark needed."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -111,7 +114,7 @@ def main() -> None:
             "canonical": pa.array([d[2] for d in directives], pa.string()),
         }
     )
-    pq.write_table(table, "/root/repo/fixtures/html_docs.parquet")
+    pq.write_table(table, f"{ROOT}/fixtures/html_docs.parquet")
     for i, t in zip(doc_ids, etexts):
         print(f"--- {i} ---\n{t!r}")
 

@@ -28,8 +28,11 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pyarrow as pa
@@ -219,7 +222,7 @@ def main() -> None:
             "lang": pa.array([r[2] for r in rows], pa.string()),
         }
     )
-    out = "/root/repo/fixtures/lev_docs.parquet"
+    out = f"{ROOT}/fixtures/lev_docs.parquet"
     pq.write_table(table, out)
 
     # self-check: run the lev_pairs oracle and assert the reason coverage

@@ -12,10 +12,13 @@ Run: python tools/make_mojibake_fixture.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 
 from fuzzycat_spark.functions.encoding import (  # noqa: E402
     fix_mojibake_py as _fix,
@@ -55,7 +58,7 @@ def main() -> None:
     assert len(changed) >= 5, len(changed)
     assert {"c00", "c01", "c02"} <= {i for i, _ in unchanged}
     assert all(i.endswith("_clean") or i.startswith("c") for i, _ in unchanged)
-    df.to_parquet("/root/repo/fixtures/mojibake_docs.parquet", index=False)
+    df.to_parquet(f"{ROOT}/fixtures/mojibake_docs.parquet", index=False)
     print(f"wrote {len(rows)} docs, {len(changed)} repair under fix_mojibake")
 
 

@@ -8,8 +8,12 @@ Pure pyarrow, no Spark needed."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 DOCS: list[tuple[str, str]] = [
     # kana outranks han: Japanese with kanji still routes to ja
@@ -57,7 +61,7 @@ def main() -> None:
             "expected": pa.array([e for e, _ in DOCS], pa.string()),
         }
     )
-    pq.write_table(table, "/root/repo/fixtures/multilang_docs.parquet")
+    pq.write_table(table, f"{ROOT}/fixtures/multilang_docs.parquet")
     print(f"wrote {len(DOCS)} docs")
 
 

@@ -24,8 +24,11 @@ Families:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -73,7 +76,7 @@ def main() -> None:
             ),
         }
     )
-    pq.write_table(table, "/root/repo/fixtures/nysiis_docs.parquet")
+    pq.write_table(table, f"{ROOT}/fixtures/nysiis_docs.parquet")
     for i, (a, _) in enumerate(DOCS):
         print(i, repr(a), "->", repr(nysiis_name(a)))
 

@@ -26,8 +26,12 @@ Run: python tools/make_robots_fixture.py
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 ROBOTS: list[tuple[str, str]] = [
     (
@@ -122,11 +126,11 @@ def main() -> None:
                 "robots_txt": pa.array([t for _, t in ROBOTS], pa.string()),
             }
         ),
-        "/root/repo/fixtures/robots_docs.parquet",
+        f"{ROOT}/fixtures/robots_docs.parquet",
     )
     pq.write_table(
         pa.table({"url": pa.array(PAGES, pa.string())}),
-        "/root/repo/fixtures/robots_pages.parquet",
+        f"{ROOT}/fixtures/robots_pages.parquet",
     )
     print(f"wrote {len(ROBOTS)} robots docs, {len(PAGES)} pages")
 

@@ -18,8 +18,11 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -14,8 +14,11 @@ import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+sys.path.insert(0, ROOT)
 
 from fuzzycat_spark import get_spark
 from fuzzycat_spark.operators.dedup import DedupConfig, dedup_pages
