@@ -428,6 +428,7 @@ def dedup_stages(
     stage,
     cc_checkpointer=None,
     prior: Prior | None = None,
+    prep_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """THE dedup plan, parameterized over stage materialization and over
     the committed state of earlier epochs — the single source of truth
@@ -437,6 +438,9 @@ def dedup_stages(
     `stage(name, build)` must materialize `build()` and return the re-read
     frame; `cc_checkpointer` optionally threads a StageCheckpointer into
     the CC loop so its per-iteration tables land in the resumable dir.
+
+    `prep_path` is where `prepare_pages` writes the features (a stream
+    epoch's feature state); None keeps its ephemeral checkpoint.
 
     `prior` is the committed state of a stream (`Prior`); batch passes
     none and is the one-epoch case. Three steps read it, and each reduces
@@ -476,6 +480,7 @@ def dedup_stages(
             pages, cfg.id_col, cfg.text_col, slug_mode=cfg.slug_mode,
             with_token_hashes="simhash" in cfg.strategies,
             emb_col=cfg.embedding_col if emb_on else None,
+            out_path=prep_path,
         ),
     )
     stars = star_edges(prep, cfg, prior)
@@ -647,10 +652,10 @@ def dedup_stages(
 # "verified" is soft here: its only in-pipeline consumer is connected
 # components, whose own first checkpoint write materializes the filtered
 # edge set — a second eager write of the full verdict table cost ~2s per
-# 105k-doc run and bought nothing (the tier tables inside verify_pairs are
-# parquet-backed, so recompute-on-action for a caller reading the returned
-# verified frame is a cheap union over checkpoints, not a re-verify). The
-# durable CLI path (plans.pipeline) still names and checkpoints every
+# 105k-doc run and bought nothing. verify_pairs writes nothing either, so
+# a caller reading dedup_pages' returned verified frame re-runs the
+# cascade (and the stars) from the prepared and candidates checkpoints.
+# The durable CLI path (plans.pipeline) still names and checkpoints every
 # stage, including verified.
 HARD_STAGES = frozenset({"candidates", "emb_pairs"})
 

@@ -68,6 +68,7 @@ def prepare_pages(
     slug_mode: str = "ascii",
     with_token_hashes: bool = False,
     emb_col: str | None = None,
+    out_path: str | None = None,
 ) -> DataFrame:
     """Single-stage materialized document preparation shared by blocking
     and verification: scan → slug/tokens → shingles/tokset → hashed forms,
@@ -87,6 +88,10 @@ def prepare_pages(
 
     `emb_col` carries an embedding column through as `_emb`, so the
     embedding tier scores candidates from the feature rows.
+
+    `out_path` writes the features there (overwrite) instead of to an
+    ephemeral checkpoint, and returns the re-read: a stream epoch's
+    feature state is this write.
     """
     lang = (
         F.col("lang") if "lang" in df.columns else F.lit(None).cast("string")
@@ -186,7 +191,11 @@ def prepare_pages(
         cols.append(token_hashes32(F.col("toks")).alias("tok_h32"))
     if emb_col:
         cols.append(F.col("_emb"))
-    return materialize(s3.select(*cols), "prep_features")
+    out = s3.select(*cols)
+    if out_path is None:
+        return materialize(out, "prep_features")
+    out.write.mode("overwrite").parquet(out_path)
+    return out.sparkSession.read.schema(out.schema).parquet(out_path)
 
 
 def _tier1_rules(
@@ -296,7 +305,8 @@ def _tier3_rules() -> list[tuple[Column, str, str]]:
 
 
 def _when_chain(
-    rules: list[tuple[Column, str, str]], default: tuple[Column, Column] | None
+    rules: list[tuple[Column, Column | str, Column | str]],
+    default: tuple[Column, Column] | None,
 ) -> tuple[Column, Column]:
     status = None
     reason = None
@@ -318,31 +328,59 @@ def _pair_join(pairs: DataFrame, features: DataFrame, cols: list[str]) -> DataFr
     )
 
 
+def _open_join(todo: DataFrame, side: DataFrame, key: str, side_key: str) -> DataFrame:
+    """Left join of one side's feature columns onto the pairs the earlier
+    tiers left open (`status IS NULL`): closed pairs pass through with null
+    feature columns, so they cross the join's shuffle as narrow rows."""
+    return todo.join(
+        side, (F.col(key) == F.col(side_key)) & F.col("status").isNull(), "left"
+    )
+
+
 def _array_tier(
     todo: DataFrame,
     features: DataFrame,
     arr_col: str,
     carry: list[str],
+    extra: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Join ONE hash-array column for both pair sides and expose intersect
-    counts (i, na, nb) plus the carried scalars as `m.*` attributes behind
-    a Generate barrier (explode of a 1-element struct array — a node
-    CollapseProject cannot fold the downstream `when`-chains into; without
-    it each measure re-runs per when-arm, measured ~15x the necessary
-    per-pair CPU). Only intersections are materialized; unions are
-    arithmetic (see _jaccard_from_counts)."""
-    fa = features.select(F.col("id").alias("a_id"), F.col(arr_col).alias("a_arr"))
-    fb = features.select(F.col("id").alias("b_id"), F.col(arr_col).alias("b_arr"))
-    j = (
-        todo.join(fa, on=F.col("id_a") == F.col("a_id"))
-        .join(fb, on=F.col("id_b") == F.col("b_id"))
-    )
+    """Join ONE hash-array column (plus the `extra` feature columns, as
+    `a_<name>`/`b_<name>`) for both sides of the OPEN pairs and expose
+    intersect counts (i, na, nb), the carried scalars and the extras as
+    `m.*` attributes behind a Generate barrier (explode of a 1-element
+    struct array — a node CollapseProject cannot fold the downstream
+    `when`-chains into; without it each measure re-runs per when-arm,
+    measured ~15x the necessary per-pair CPU). Only intersections are
+    materialized; unions are arithmetic (see _jaccard_from_counts). Every
+    pair of `todo` comes out once, with its `status`/`reason` as they
+    were."""
+    extra = extra or {}
+
+    def side(s: str) -> DataFrame:
+        return features.select(
+            F.col("id").alias(f"{s}_id"),
+            F.col(arr_col).alias(f"{s}_arr"),
+            *[F.col(c).alias(f"f_{s}_{n}") for n, c in extra.items()],
+        )
+
+    j = _open_join(_open_join(todo, side("a"), "id_a", "a_id"), side("b"), "id_b", "b_id")
     fields = [
         F.size(F.array_intersect(F.col("a_arr"), F.col("b_arr"))).alias("i"),
         F.size(F.col("a_arr")).alias("na"),
         F.size(F.col("b_arr")).alias("nb"),
-    ] + [F.col(c).alias(c) for c in carry]
-    return j.select("id_a", "id_b", F.explode(F.array(F.struct(*fields))).alias("m"))
+        *[F.col(c).alias(c) for c in carry],
+        *[F.col(f"f_{s}_{n}").alias(f"{s}_{n}") for n in extra for s in ("a", "b")],
+    ]
+    return j.select(
+        "id_a", "id_b", "status", "reason",
+        F.explode(F.array(F.struct(*fields))).alias("m"),
+    )
+
+
+def _kept() -> list[tuple[Column, Column, Column]]:
+    """The first arm of every later tier: a verdict an earlier tier reached
+    stands."""
+    return [(F.col("status").isNotNull(), F.col("status"), F.col("reason"))]
 
 
 def verify_pairs(
@@ -358,19 +396,25 @@ def verify_pairs(
       keys, token count — ~60 B/side) and resolves cascade rules 1-6
       (including the denylist screen); in a dedup-heavy corpus that
       settles every exact/slug family.
-    - Tier 2 joins ONLY the shingle-hash arrays for pairs tier 1 left
-      unresolved and settles containment + strong shingle jaccard.
+    - Tier 2 joins the shingle-hash arrays and settles containment +
+      strong shingle jaccard.
     - Tier 3 (terminal) joins the tokset-hash arrays plus the two bounded
-      normalized prefixes for the remainder: token jaccard, the
-      weak-shingle rule over the jac_sh scalar carried from tier 2, the
-      short-circuited edit-distance rules (LEVENSHTEIN, TOKEN_SORT_RATIO
-      — the reference's token-ratio/Levenshtein checks), then the
-      language screen; unresolved pairs default to ambiguous/UNKNOWN.
+      normalized prefixes: token jaccard, the weak-shingle rule over the
+      jac_sh scalar carried from tier 2, the short-circuited edit-distance
+      rules (LEVENSHTEIN, TOKEN_SORT_RATIO — the reference's
+      token-ratio/Levenshtein checks), then the language screen;
+      unresolved pairs default to ambiguous/UNKNOWN.
 
-    Each tier shuffles strictly less volume than the last: the 1M-doc
-    profile measured 7.3 GB when every pair carried BOTH docs' full
-    feature rows through one fat join; tiering bounds the wide shuffles
-    by the per-tier unresolved fraction and one array family at a time.
+    One cascade, no materialization and no union: every pair flows through
+    the three tiers once. Tiers 2 and 3 are LEFT joins whose condition
+    includes `status IS NULL`, so the arrays ride only on the pairs the
+    earlier tiers left open, and each tier's `when` chain keeps an earlier
+    verdict as its first arm. The trade: closed pairs still cross the
+    later tiers' shuffles, as narrow (id_a, id_b, status, reason) rows,
+    in exchange for no per-tier write, re-read and union. Each tier's
+    wide shuffle is bounded by the open fraction and one array family at
+    a time: the 1M-doc profile measured 7.3 GB when every pair carried
+    BOTH docs' full feature rows through one fat join.
     """
     if denylist_keys is None:
         from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS
@@ -379,89 +423,42 @@ def verify_pairs(
     tier1_cols = ["id", "ch", "slug_key", "nproj_key", "n_tok", "lang"]
     j1 = _pair_join(pairs, features.select(*tier1_cols), tier1_cols)
     status1, reason1 = _when_chain(_tier1_rules(denylist_keys), None)
-    t1 = materialize(
-        j1.select(
-            "id_a",
-            "id_b",
-            status1.alias("status"),
-            reason1.alias("reason"),
-            # later tiers need these scalars; carrying them in the (small)
-            # verdict tables avoids extra feature joins
-            F.least(F.col("a_n_tok"), F.col("b_n_tok")).alias("min_tok"),
-            (
-                F.col("a_lang").isNotNull()
-                & F.col("b_lang").isNotNull()
-                & (F.col("a_lang") != F.col("b_lang"))
-            ).alias("lang_diff"),
-        ),
-        "verify_tier1",
-    )
-    resolved1 = t1.filter(F.col("status").isNotNull()).select(
-        "id_a", "id_b", "status", "reason"
+    t1 = j1.select(
+        "id_a",
+        "id_b",
+        status1.alias("status"),
+        reason1.alias("reason"),
+        # later tiers need these scalars; carrying them on the pair rows
+        # avoids extra feature joins
+        F.least(F.col("a_n_tok"), F.col("b_n_tok")).alias("min_tok"),
+        (
+            F.col("a_lang").isNotNull()
+            & F.col("b_lang").isNotNull()
+            & (F.col("a_lang") != F.col("b_lang"))
+        ).alias("lang_diff"),
     )
 
-    todo2 = t1.filter(F.col("status").isNull()).select(
-        "id_a", "id_b", "min_tok", "lang_diff"
-    )
-    m2 = _array_tier(todo2, features, "shingles_h", ["min_tok", "lang_diff"])
-    status2, reason2 = _when_chain(_tier2_rules(), None)
+    m2 = _array_tier(t1, features, "shingles_h", ["min_tok", "lang_diff"])
+    status2, reason2 = _when_chain(_kept() + _tier2_rules(), None)
     m = F.col("m")
-    t2 = materialize(
-        m2.select(
-            "id_a",
-            "id_b",
-            status2.alias("status"),
-            reason2.alias("reason"),
-            _jaccard_from_counts(m.i, m.na, m.nb).alias("jac_sh"),
-            m.lang_diff.alias("lang_diff"),
-        ),
-        "verify_tier2",
-    )
-    resolved2 = t2.filter(F.col("status").isNotNull()).select(
-        "id_a", "id_b", "status", "reason"
+    t2 = m2.select(
+        "id_a",
+        "id_b",
+        status2.alias("status"),
+        reason2.alias("reason"),
+        _jaccard_from_counts(m.i, m.na, m.nb).alias("jac_sh"),
+        m.lang_diff.alias("lang_diff"),
     )
 
     # terminal fused tier 3+4: ONE feature join carrying the tokset-hash
-    # arrays AND the two bounded prefixes per side (~200 B extra per pair,
-    # residue pairs only). The lev DPs live inside the when-chain and
-    # short-circuit behind the set rules (_tier3_rules docstring).
-    todo3 = t2.filter(F.col("status").isNull()).select(
-        "id_a", "id_b", "jac_sh", "lang_diff"
-    )
-    fa3 = features.select(
-        F.col("id").alias("a_id"),
-        F.col("tokset_h").alias("a_arr"),
-        F.col("slug_pfx").alias("f_a_pfx"),
-        F.col("tsort_pfx").alias("f_a_ts"),
-    )
-    fb3 = features.select(
-        F.col("id").alias("b_id"),
-        F.col("tokset_h").alias("b_arr"),
-        F.col("slug_pfx").alias("f_b_pfx"),
-        F.col("tsort_pfx").alias("f_b_ts"),
-    )
-    j3 = todo3.join(fa3, on=F.col("id_a") == F.col("a_id")).join(
-        fb3, on=F.col("id_b") == F.col("b_id")
-    )
-    fields = [
-        F.size(F.array_intersect(F.col("a_arr"), F.col("b_arr"))).alias("i"),
-        F.size(F.col("a_arr")).alias("na"),
-        F.size(F.col("b_arr")).alias("nb"),
-        F.col("jac_sh").alias("jac_sh"),
-        F.col("lang_diff").alias("lang_diff"),
-        F.col("f_a_pfx").alias("a_pfx"),
-        F.col("f_b_pfx").alias("b_pfx"),
-        F.col("f_a_ts").alias("a_ts"),
-        F.col("f_b_ts").alias("b_ts"),
-    ]
-    m3 = j3.select(
-        "id_a", "id_b", F.explode(F.array(F.struct(*fields))).alias("m")
+    # arrays AND the two bounded prefixes per side (~200 B extra per open
+    # pair). The lev DPs live inside the when-chain and short-circuit
+    # behind the set rules (_tier3_rules docstring).
+    m3 = _array_tier(
+        t2, features, "tokset_h", ["jac_sh", "lang_diff"],
+        extra={"pfx": "slug_pfx", "ts": "tsort_pfx"},
     )
     status3, reason3 = _when_chain(
-        _tier3_rules(), (F.lit("ambiguous"), F.lit("UNKNOWN"))
+        _kept() + _tier3_rules(), (F.lit("ambiguous"), F.lit("UNKNOWN"))
     )
-    tier3 = m3.select(
-        "id_a", "id_b", status3.alias("status"), reason3.alias("reason")
-    )
-    return resolved1.unionByName(resolved2).unionByName(tier3)
-
+    return m3.select("id_a", "id_b", status3.alias("status"), reason3.alias("reason"))

@@ -28,6 +28,7 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 _EPHEMERAL: dict[str, "StageCheckpointer"] = {}
@@ -146,6 +147,61 @@ def partition_lineage(path: str) -> dict:
         "min_file_rows": min(rows, default=0),
         "partitions": parts,
     }
+
+
+# the footer key under which Spark's parquet writer stores the written
+# frame's schema as JSON
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(fs, root: str) -> tuple[str, list[str]] | None:
+    """(path, partition keys above it) of the first data file under `root`,
+    descending `key=value` directories in name order; hidden files and
+    directories (`_SUCCESS`, `.crc`, `_temporary`) are skipped as Spark
+    skips them. None when `root` is absent or holds no data file."""
+    from pyarrow import fs as pafs
+
+    infos = sorted(
+        fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)),
+        key=lambda i: i.base_name,
+    )
+    visible = [i for i in infos if not i.base_name.startswith(("_", "."))]
+    for i in visible:
+        if i.is_file and i.base_name.endswith(".parquet"):
+            return i.path, []
+    for i in visible:
+        if i.type == pafs.FileType.Directory and "=" in i.base_name:
+            found = _first_data_file(fs, i.path)
+            if found is not None:
+                return found[0], [i.base_name.split("=", 1)[0], *found[1]]
+    return None
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The schema a Spark read of the parquet table at `path` infers, taken
+    without that inference job: the frame schema Spark's writer stored in
+    the footer of one data file (read on the driver through pyarrow, one
+    metadata fetch), followed by the `key=value` directories above that
+    file as string columns. None when `path` holds no data file.
+
+    Partition columns are strings whatever their values look like: an
+    all-digit band id stays the string the plan wrote, where inference
+    would turn it into an int."""
+    import pyarrow.parquet as pq
+
+    fs, root = resolve_fs(path)
+    found = _first_data_file(fs, root)
+    if found is None:
+        return None
+    file, keys = found
+    raw = (pq.read_metadata(file, filesystem=fs).metadata or {}).get(SPARK_ROW_METADATA)
+    if raw is None:
+        raise RuntimeError(f"{file} was not written by Spark: its footer has no schema")
+    schema = StructType.fromJson(json.loads(raw))
+    for k in keys:
+        if k not in schema.fieldNames():
+            schema = schema.add(StructField(k, StringType()))
+    return schema
 
 
 def _ephemeral_root() -> str | None:
@@ -326,7 +382,8 @@ class StageCheckpointer:
         # footers; a file source reads every field as nullable either way
         # (pinned per stage by tests/test_checkpoint_reread.py)
         out = self.spark.read.schema(df.schema).parquet(path)
-        entry = {"path": path}
+        # kept for `load`, which re-reads a stage without its frame
+        entry = {"path": path, "schema": df.schema.json()}
         if self.lineage:
             lineage = partition_lineage(path)
             parts = lineage.pop("partitions", None)
@@ -352,8 +409,14 @@ class StageCheckpointer:
         )
 
     def load(self, name: str) -> DataFrame:
+        """Re-read a completed stage with the schema its write recorded (a
+        manifest written before stages recorded one infers it)."""
         _touch_heartbeat(self.base_dir)
-        return self.spark.read.parquet(self._manifest[name]["path"])
+        entry = self._manifest[name]
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        return reader.parquet(entry["path"])
 
     def stage(self, name: str, build) -> DataFrame:
         """Resume-aware stage: load if complete, else build + checkpoint."""

@@ -129,29 +129,26 @@ def update_assignments(
     remap_hist = _read_remap_snapshot(spark, index_path, committed)
 
     # current canonical of every TOUCHED id: historical ids resolve through
-    # the committed state, ids new this epoch are their own label. The
-    # state tables are semi-joined down to the touched set before the
-    # resolution join — the update never scans labels proportional to the
-    # corpus, only to this epoch's pairs.
-    touched = materialize(
+    # the committed state (`hist`, null for ids new this epoch), ids new
+    # this epoch are their own label. The label state is semi-joined down
+    # to the touched set before the resolution join — the update never
+    # scans labels proportional to the corpus, only to this epoch's pairs.
+    # One copy, `assign_cur`, feeds the reduced graph and the remap below.
+    touched = (
         edges.select(F.col("id_a").alias("id"))
         .unionByName(edges.select(F.col("id_b").alias("id")))
-        .distinct(),
-        "assign_touched",
-        keep_last=2,
+        .distinct()
     )
     if labels_hist is not None:
-        hist_touched = _resolve(
+        hist = _resolve(
             labels_hist.join(touched, on="id", how="left_semi"), remap_hist
-        ).select("id", F.col("cluster_id").alias("_cur"))
+        ).select("id", F.col("cluster_id").alias("hist"))
+        touched = touched.join(hist, on="id", how="left")
     else:
-        hist_touched = touched.limit(0).withColumn(
-            "_cur", F.col("id")
-        ).select("id", "_cur")
+        no_label = F.lit(None).cast(edges.schema["id_a"].dataType)
+        touched = touched.withColumn("hist", no_label)
     cur = materialize(
-        touched.join(hist_touched, on="id", how="left").select(
-            "id", F.coalesce(F.col("_cur"), F.col("id")).alias("cur")
-        ),
+        touched.select("id", F.coalesce(F.col("hist"), F.col("id")).alias("cur"), "hist"),
         "assign_cur",
         keep_last=2,
     )
@@ -184,7 +181,7 @@ def update_assignments(
     #     that came from the historical side and changed label)
     # New-id nodes never enter the remap — their base rows above are
     # written already-resolved. Identity rows are dropped.
-    hist_nodes = hist_touched.select(F.col("_cur").alias("node")).distinct()
+    hist_nodes = cur.select(F.col("hist").alias("node")).dropna().distinct()
     new_remap_rows = merge_map.join(hist_nodes, on="node", how="left_semi").filter(
         F.col("node") != F.col("canon")
     ).select(F.col("node").alias("old_label"), F.col("canon").alias("cur_label"))

@@ -21,11 +21,24 @@ once are refused loudly: salt_hot and canonical_col. A stream's DedupConfig
 must not change over its lifetime — the embedding column in particular is
 persisted into the feature state, and enabling it mid-stream fails loudly.
 
+Each table of an epoch is written once, and the writes that feed the
+epoch's own plan are its stage checkpoints: `prepare_pages` writes the
+features straight to the feature state, the `bands` stage writes the band
+rows to the index, and the `verified` stage writes the pairs sink; each is
+re-read from there. The epoch's remaining copies are reuse boundaries: the
+new ids after the idempotency anti-join (`stream_batch_new`), the
+candidates, the substring grams, and `assign_cur` and `cc_edges_0` in the
+assignment update. Every state read passes the schema recorded in a
+committed data file's footer (`plans.checkpoint.footer_schema`), so it
+runs no inference job.
+
 State layout (all object-store-safe: existence = try-read, never
 os.path); each table is one field of the prior:
 - `<index>/epoch=N/`          band rows (id, band_id, band_hash) of the
                               approximate strategies, sub-partitioned by
-                              band_id (`Prior.bands`)
+                              band_id, read with band_id as a string
+                              (`Prior.bands`); an epoch without band rows
+                              leaves a dir with no data file
 - `<index>_features/epoch=N/` per-id verify features (hashed forms only;
                               plus `_emb` when the embedding strategy is
                               enabled): verification and the cosine tier
@@ -67,6 +80,7 @@ import logging
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from fuzzycat_spark.operators.dedup import (
     GRAM_BAND,
@@ -76,7 +90,7 @@ from fuzzycat_spark.operators.dedup import (
     Prior,
     dedup_stages,
 )
-from fuzzycat_spark.plans.checkpoint import materialize
+from fuzzycat_spark.plans.checkpoint import footer_schema, materialize, read_control
 
 # not used here: perfbench/tracing.py looks these names up on this module
 from fuzzycat_spark.operators.dedup import strategy_band_table  # noqa: F401
@@ -87,13 +101,19 @@ logger = logging.getLogger(__name__)
 
 
 def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Object-store-safe existence probe: attempt the read and treat a path
-    that does not exist as no table. `os.path.exists` is wrong for
-    s3a://-style URIs; the read attempt is the portable check. Any other
-    failure raises: reading an unreadable committed table as empty history
-    would silently drop the idempotency guard and the cross-epoch
-    candidates."""
+    """Object-store-safe existence probe: read the table at `path` with the
+    schema its footer records (`plans.checkpoint.footer_schema`, no
+    inference job), and treat a path that does not exist as no table.
+    `os.path.exists` is wrong for s3a://-style URIs; the listing and the
+    read attempt are the portable check. Any other failure raises, a
+    directory without a data file included: reading an unreadable
+    committed table as empty history would silently drop the idempotency
+    guard and the cross-epoch candidates."""
+    schema = footer_schema(path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     try:
+        # no data file: Spark says whether the path is absent or unreadable
         return spark.read.parquet(path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
@@ -120,8 +140,6 @@ def committed_epoch(index_path: str) -> int | None:
     means no commits: a pointer that cannot be read or parsed raises, since
     reading it as "no commits" would restart at epoch 0 over the committed
     state."""
-    from fuzzycat_spark.plans.checkpoint import read_control
-
     path = _pointer_path(index_path + "_sizes")
     raw = read_control(path)
     if raw is None:
@@ -152,6 +170,13 @@ def _read_state(
     crashed attempt's dir (present but not pointed to, possibly holding
     nothing but a `_temporary` dir) is never touched.
 
+    The read passes the schema of the first committed dir that holds a
+    data file (`footer_schema`), so it runs no inference job. Committed
+    dirs that all hold no data file but their `_SUCCESS` marker are an
+    empty table (None): a partitioned write of no rows, such as the band
+    index of an epoch without band rows, leaves no file. A committed dir
+    with neither raises.
+
     Compaction-aware (streaming/compaction.py): if the table carries a
     base pointer, the view is base(gen) ∪ epochs in (base_upto, committed]
     — one compacted table plus the short post-compaction tail, instead of
@@ -164,12 +189,24 @@ def _read_state(
 
     ptr = base_pointer(parent)
     after = -1 if ptr is None else ptr[1]
-    dirs = [f"{parent}/{d}" for e, d in _epoch_dirs(parent) if after < e <= upto_epoch]
-    tail = (
-        spark.read.option("basePath", parent).parquet(*dirs).drop("epoch")
-        if dirs
-        else None
-    )
+    dirs = [f"{parent}/{d}" for e, d in sorted(_epoch_dirs(parent)) if after < e <= upto_epoch]
+    schema = next((sc for sc in map(footer_schema, dirs) if sc is not None), None)
+    tail = None
+    if schema is not None:
+        reader = spark.read.schema(schema)
+        # one dir is its own root; several need the parent as the base of
+        # their partition discovery, which adds an `epoch` column
+        tail = (
+            reader.parquet(dirs[0]) if len(dirs) == 1
+            else reader.option("basePath", parent).parquet(*dirs).drop("epoch")
+        )
+    else:
+        for d in dirs:
+            if read_control(f"{d}/_SUCCESS") is None:
+                raise RuntimeError(
+                    f"committed state dir {d} holds neither a data file nor "
+                    "_SUCCESS; refusing to read it as empty history"
+                )
     if ptr is None:
         return tail
     gen, base_upto = ptr
@@ -323,7 +360,6 @@ def incremental_dedup_batch(
         return
 
     _check_incremental(cfg)
-    batch = materialize(batch, "stream_batch", keep_last=2)
     feat_hist = _read_state(spark, feat_path, committed)
     if feat_hist is not None:
         if "embedding" in cfg.strategies and "_emb" not in feat_hist.columns:
@@ -352,10 +388,7 @@ def incremental_dedup_batch(
         grams = _read_state(spark, index_path + "_ssgrams", committed)
         probes = _read_state(spark, index_path + "_ssmeta", committed)
     prior = Prior(
-        # partition discovery types an all-digit band_id (minhash bands) as int
-        bands=None if index is None else index.withColumn(
-            "band_id", F.col("band_id").cast("string")
-        ),
+        bands=index,
         features=feat_hist,
         grams=grams,
         probes=probes,
@@ -373,18 +406,37 @@ def incremental_dedup_batch(
             df = build()
             df.write.mode("overwrite").parquet(f"{pairs_path}/epoch={epoch_id}")
             return spark.read.schema(df.schema).parquet(f"{pairs_path}/epoch={epoch_id}")
+        if name == "bands":
+            # the epoch's band index is the bands stage's checkpoint, one
+            # file per band; the re-read types band_id as the string the
+            # plan wrote (as the state reads do), and an epoch without
+            # band rows leaves a dir with no data file, which reads empty
+            df = build()
+            path = f"{index_path}/epoch={epoch_id}"
+            df.repartition("band_id").write.partitionBy("band_id").mode(
+                "overwrite"
+            ).parquet(path)
+            schema = StructType(
+                [f for f in df.schema if f.name != "band_id"]
+                + [StructField("band_id", StringType())]
+            )
+            return spark.read.schema(schema).parquet(path).select(*df.columns)
         df = build()
-        if name in HARD_STAGES or name in ("bands", "grams"):
+        if name in HARD_STAGES or name == "grams":
             df = materialize(df, f"stream_{name}", keep_last=2)
         return df
 
-    out = dedup_stages(batch, cfg, stage, prior=prior)
+    # the prepared features are written once, as the epoch's feature state
+    out = dedup_stages(
+        batch, cfg, stage, prior=prior, prep_path=f"{feat_path}/epoch={epoch_id}"
+    )
     prep, bands, grams = out["prepared"], out["bands"], out["grams"]
-    # every state write (the pairs sink in the "verified" stage included)
-    # is per-epoch + overwrite (idempotent under replay of the same
-    # epoch); the pointer swap LAST makes the epoch atomic —
-    # a kill between any two writes leaves the pointer at the previous
-    # epoch, and the replay overwrites the partial dirs
+    # every state write (the pairs sink in the "verified" stage, the
+    # features in "prepared" and the band index in "bands" included) is
+    # per-epoch + overwrite (idempotent under replay of the same epoch);
+    # the pointer swap LAST makes the epoch atomic — a kill between any
+    # two writes leaves the pointer at the previous epoch, and the replay
+    # overwrites the partial dirs
     if assign:
         # incremental cluster assignments (streaming/assignments.py):
         # labels/remap are written BEFORE the pointer swap so assignments
@@ -400,14 +452,6 @@ def incremental_dedup_batch(
             committed,
             edge_statuses=cfg.edge_statuses,
         )
-    # an empty partitioned write leaves no data file, and a later read of
-    # the index could not infer its schema
-    if bands is not None and not bands.isEmpty():
-        # one file per band per epoch, not one per input partition and band
-        bands.repartition("band_id").write.partitionBy(
-            "band_id"
-        ).mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
-    prep.write.mode("overwrite").parquet(f"{feat_path}/epoch={epoch_id}")
     _cumulative_sizes(spark, bands, grams, prior.sizes).write.mode(
         "overwrite"
     ).parquet(f"{sizes_path}/epoch={epoch_id}")
@@ -478,8 +522,6 @@ def read_epoch_manifest(index_path: str, epoch_id: int) -> dict | None:
     written gives None: one that cannot be read or parsed raises with its
     path, like the commit pointer (`committed_epoch`)."""
     import json
-
-    from fuzzycat_spark.plans.checkpoint import read_control
 
     path = f"{index_path}_sizes/_manifest_epoch_{epoch_id}.json"
     try:

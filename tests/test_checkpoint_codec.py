@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pyarrow.parquet as pq
 
@@ -18,9 +19,10 @@ def _codec_of(path: str) -> str:
     return md.row_group(0).column(0).compression
 
 
-def test_ephemeral_tmpfs_checkpoint_uncompressed(spark, tmp_path):
+def test_ephemeral_tmpfs_checkpoint_uncompressed(spark, tmp_path, request):
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
     ck = StageCheckpointer(spark)  # ephemeral
+    request.addfinalizer(lambda: shutil.rmtree(ck.base_dir, ignore_errors=True))
     if ck.base_dir.startswith("/dev/shm"):
         assert ck.codec == "uncompressed"
         out = ck.write(df, "codec_probe")

@@ -86,11 +86,11 @@ def test_passed_schema_equals_inferred_for_every_written_stage(
     assert checkpoint.materialize(probe, "nested_probe").count() == 3
 
     names = {p.rstrip("/").rsplit("/", 1)[-1].rsplit("_", 1)[0] for p, *_ in schema_reads}
-    for stage in ("prep_features", "candidates", "verify_tier1", "verify_tier2",
-                  "cc_edges", "cc_labels", "stream_batch", "stream_bands",
-                  "nested_probe"):
+    for stage in ("prep_features", "candidates", "cc_edges", "cc_labels", "nested_probe"):
         assert stage in names, sorted(names)
-    assert {p for p, *_ in schema_reads} >= {f"{pairs}/epoch=0", f"{pairs}/epoch=1"}
+    assert {p for p, *_ in schema_reads} >= {
+        f"{state}/epoch={e}" for state in (pairs, index, f"{index}_features") for e in (0, 1)
+    }
     types = {type(t) for _, passed, _ in schema_reads for f in passed for t in _types(f.dataType)}
     assert {ArrayType, StructType, MapType} <= types
     for path, passed, inferred in schema_reads:

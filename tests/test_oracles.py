@@ -1040,8 +1040,8 @@ def q_components(spark, sf_dir):
     # no localCheckpoint: the verified frame has exactly ONE consumer here
     # (connected_components' own first checkpoint write materializes the
     # filtered edge set), so an eager extra materialization of the full
-    # verdict table bought nothing — the tier tables inside verify_pairs
-    # are already parquet-backed, keeping the recompute-on-action cheap.
+    # verdict table bought nothing — verify_pairs reads the prepared and
+    # candidate frames, so a recompute re-runs only the cascade.
     verified = verify_pairs(cands, prep)
     edges = verified.filter(F.col("status").isin("exact", "strong"))
     cc = connected_components(edges)

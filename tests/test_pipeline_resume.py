@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -119,7 +120,7 @@ def test_sweep_spares_live_dir_with_fresh_heartbeat(tmp_path):
     assert not os.path.exists(dead)
 
 
-def test_stage_lineage_from_footers(spark, tmp_path):
+def test_stage_lineage_from_footers(spark, tmp_path, request):
     """Durable stages record per-partition lineage + counters (north rule)
     from parquet footers only: manifest carries the aggregates (rows,
     files, bytes, skew spread), the stage dir a per-file sidecar."""
@@ -139,6 +140,7 @@ def test_stage_lineage_from_footers(spark, tmp_path):
     assert sum(p["rows"] for p in parts) == 1000
     # ephemeral checkpointers (materialize barriers) skip the footer scan
     eph = StageCheckpointer(spark)
+    request.addfinalizer(lambda: shutil.rmtree(eph.base_dir, ignore_errors=True))
     eph.write(df, "mat_1")
     assert "files" not in eph._manifest["mat_1"]
 
@@ -181,3 +183,25 @@ def test_dedup_job_cli_canonical_col_arm(spark, tmp_path, monkeypatch, capsys):
     ]
     v = spark.read.parquet(f"{out}/verified_pairs")
     assert v.filter(F.col("reason") == "CANONICAL_LINK").count() == 1
+
+
+def test_resumed_stage_loads_with_its_recorded_schema(spark, tmp_path, monkeypatch):
+    """A resumed stage is re-read with the schema its write recorded in the
+    manifest, so the load runs no inference job and types match the write."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    base = str(tmp_path / "ck")
+    df = spark.range(5).selectExpr("id", "array(id, id) AS arr", "CAST(id AS STRING) AS s")
+    StageCheckpointer(spark, base).write(df, "stage_a")
+    passed = []
+    orig = DataFrameReader.schema
+
+    def schema(self, s):
+        passed.append(s)
+        return orig(self, s)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    out = StageCheckpointer(spark, base).stage("stage_a", lambda: pytest.fail("rebuilt"))
+    assert [s.fieldNames() for s in passed] == [["id", "arr", "s"]]
+    assert out.dtypes == [("id", "bigint"), ("arr", "array<bigint>"), ("s", "string")]
+    assert out.count() == 5

@@ -74,6 +74,32 @@ def test_verify_tier1_join_is_narrow(spark):
         assert f"{side}_tokset_h" not in plan
 
 
+def test_verify_pairs_writes_nothing_and_unions_nothing(spark, monkeypatch):
+    """verify_pairs is one cascade: no tier is checkpointed and no union
+    puts the tiers back together — tiers 2 and 3 are left joins on the
+    pairs the earlier tiers left open, so each pair flows through once."""
+    from fuzzycat_spark.operators.dedup import DedupConfig, candidate_pairs
+    from fuzzycat_spark.operators.verify import prepare_pages, verify_pairs
+    from fuzzycat_spark.plans.checkpoint import StageCheckpointer, materialize
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    prep = prepare_pages(docs, "doc_id", "text")
+    cands = materialize(candidate_pairs(docs, DedupConfig(id_col="doc_id"), prep=prep))
+    written = []
+    orig = StageCheckpointer.write
+
+    def write(self, df, name):
+        written.append(name)
+        return orig(self, df, name)
+
+    monkeypatch.setattr(StageCheckpointer, "write", write)
+    verified = verify_pairs(cands, prep)
+    plan = _plan(verified)
+    assert written == []
+    assert "Union" not in plan, plan[:3000]
+    assert verified.count() == cands.count()
+
+
 def test_components_all_candidates_have_no_cartesian(spark):
     """The ALL-strategy candidate union (minhash + simhash bands +
     substring index) must stay join-shaped — no strategy may introduce a
