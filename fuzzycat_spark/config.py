@@ -15,6 +15,28 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 MAX_DRIVER_HEAP_MB = 32 << 10
 
+# The session settings every entry point applies: `get_spark` and the
+# session builders of jobs/dedup_job.py and jobs/stream_dedup_job.py, all
+# through `with_session_conf`.
+SESSION_CONF: dict[str, str] = {
+    # Spark's compiled-class cache holds 100 classes by default and, being
+    # split into segments, evicts before it is full. One process compiles
+    # ~98 distinct classes for a batch dedup run and ~155 for a stream with
+    # compaction (CodegenMetrics counts of the benchmark workloads on 4
+    # vCPUs), so each run recompiled classes an earlier one had compiled:
+    # 42-48 per `web_crawl` run and 103-105 per `stream_ingest` pass. 1000
+    # holds that working set several times over; a repeated run compiles
+    # none.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # PySpark wraps every `pyspark.sql.functions` call in an origin
+    # capture: extra py4j round trips (`F.col("a") + F.lit(1)` makes 27
+    # with it, 7 without), a stack walk and an `import ipykernel` attempt.
+    # Off, a `web_crawl` run makes ~3,700 py4j round trips instead of
+    # ~9,950. Python tracebacks still name the failing call; Spark's error
+    # messages lose only the DataFrame origin context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
 # scan-parallelism cache for fan_out_scan: (applicationId, key) -> n_parts.
 # Physical-planning a frame to count its scan partitions costs ~100 ms; a
 # given input path's layout is stable within an application, so pay it once.
@@ -111,6 +133,28 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     return f"{max(1024, min(MAX_DRIVER_HEAP_MB, (phys_bytes // 4) >> 20))}m"
 
 
+def launcher_conf() -> dict[str, str]:
+    """The settings the launcher gave the driver: under spark-submit (which
+    starts the JVM before Python and hands it its gateway) its `--conf`
+    values and spark-defaults.conf; empty for a session Python launches."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # connects to the launcher's JVM
+    return dict(SparkConf().getAll())
+
+
+def with_session_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """`builder` with SESSION_CONF, except the keys the launcher already
+    set: a builder value would override them, and the launcher's win."""
+    launched = launcher_conf()
+    for k, v in SESSION_CONF.items():
+        if k not in launched:
+            builder = builder.config(k, v)
+    return builder
+
+
 def get_spark(
     app_name: str = "fuzzycat-spark",
     cores: int | str = "*",
@@ -127,7 +171,8 @@ def get_spark(
         os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_SHUFFLE_PARTITIONS)
     )
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
+        with_session_conf(SparkSession.builder)
+        .master(f"local[{cores}]")
         .appName(app_name)
         # local-mode driver hosts all executor state; the 1g default heap
         # OOMs once localCheckpoint blocks accumulate across CC iterations

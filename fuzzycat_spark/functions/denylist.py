@@ -25,6 +25,9 @@ from __future__ import annotations
 
 import hashlib
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 WEB_BOILERPLATE_DENYLIST: tuple[str, ...] = (
     # empty/placeholder pages
     "untitled",
@@ -129,3 +132,12 @@ def denylist_slug_keys(denylist: tuple[str, ...] = WEB_BOILERPLATE_DENYLIST) -> 
 
 
 DEFAULT_DENYLIST_KEYS: tuple[str, ...] = denylist_slug_keys()
+
+
+def denylisted(col: str, keys: tuple[str, ...]) -> Column:
+    """`col IN (keys)` built as ONE SQL expression. `F.col(col).isin(*keys)`
+    makes one py4j call per key (87 for the default list, per screen); the
+    parsed IN-list is one call, and the optimizer turns both into the same
+    `InSet`."""
+    quoted = ("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys)
+    return F.expr(f"`{col}` IN ({', '.join(quoted)})")

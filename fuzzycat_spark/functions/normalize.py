@@ -18,6 +18,7 @@ strip → lowercase). Re-implemented from scratch in two tiers:
 
 from __future__ import annotations
 
+import functools
 import sys
 import unicodedata
 
@@ -271,32 +272,42 @@ SANDCRAWLER_PREFIX_REMOVE = [
 # the \s / \p{P} / \p{M} classes (sandcrawler.py:63-64)
 _SC_EXTRA_REMOVE = set("’·“”‘«»「」¿–±§_`°ʖ©®¤=<>|+$^~≈√∫≤≥÷ƒ∆¬£¢∞¥◊€")
 
-# After NFKD decomposition: combining marks and control chars are deleted
-# (so "é" folds to "e"), punctuation and symbols become token boundaries.
-# Built in ONE pass over the codepoint space together with the sandcrawler
-# strip table (same iteration, two policies).
-_STRIP_TABLE: dict[int, str | None] = {}
-_SC_STRIP_TABLE: dict[int, str | None] = {}
-for _cp in range(sys.maxunicode + 1):
-    _ch = chr(_cp)
-    _cat = unicodedata.category(_ch)[0]
-    if _ch.isspace():
-        _STRIP_TABLE[_cp] = " "
-    elif _cat in ("M", "C"):
-        _STRIP_TABLE[_cp] = None
-    elif _cat in ("P", "S"):
-        _STRIP_TABLE[_cp] = " "
-    # sandcrawler semantics: \s, all punctuation, all marks, the General/
-    # Supplemental Punctuation blocks, and the literal extras are DELETED
-    # (the key is a concatenated comparable string, not token input)
-    if (
-        _ch.isspace()
-        or _cat in ("P", "M")
-        or 0x2000 <= _cp <= 0x206F
-        or 0x2E00 <= _cp <= 0x2E7F
-        or _ch in _SC_EXTRA_REMOVE
-    ):
-        _SC_STRIP_TABLE[_cp] = None
+@functools.cache
+def _strip_tables() -> tuple[dict[int, str | None], dict[int, str | None]]:
+    """(strip table, sandcrawler strip table), built on first use.
+
+    After NFKD decomposition: combining marks and control chars are deleted
+    (so "é" folds to "e"), punctuation and symbols become token boundaries.
+    Built in ONE pass over the codepoint space together with the sandcrawler
+    strip table (same iteration, two policies). The walk over all 1.1M code
+    points takes ~1.4 s, and only the unicode slug modes and the sandcrawler
+    key read the tables, so an import (every Python worker that unpickles a
+    UDF of this package imports it) does not pay for them.
+    """
+    strip: dict[int, str | None] = {}
+    sc_strip: dict[int, str | None] = {}
+    for cp in range(sys.maxunicode + 1):
+        ch = chr(cp)
+        cat = unicodedata.category(ch)[0]
+        if ch.isspace():
+            strip[cp] = " "
+        elif cat in ("M", "C"):
+            strip[cp] = None
+        elif cat in ("P", "S"):
+            strip[cp] = " "
+        # sandcrawler semantics: \s, all punctuation, all marks, the General/
+        # Supplemental Punctuation blocks, and the literal extras are DELETED
+        # (the key is a concatenated comparable string, not token input)
+        if (
+            ch.isspace()
+            or cat in ("P", "M")
+            or 0x2000 <= cp <= 0x206F
+            or 0x2E00 <= cp <= 0x2E7F
+            or ch in _SC_EXTRA_REMOVE
+        ):
+            sc_strip[cp] = None
+    return strip, sc_strip
+
 
 _SC_CHAR_TABLE = {ord(k): v for k, v in SANDCRAWLER_CHAR_MAP.items()}
 # one optional group per prefix, in order — exactly the reference's
@@ -326,7 +337,7 @@ def sandcrawler_slugify(raw: str | None) -> str | None:
     if not slug:
         return ""
     slug = unicodedata.normalize("NFKD", slug)
-    return slug.translate(_SC_STRIP_TABLE).lower()
+    return slug.translate(_strip_tables()[1]).lower()
 
 
 @pandas_udf(StringType())
@@ -342,7 +353,7 @@ def sandcrawler_slugify_udf(s: pd.Series) -> pd.Series:
         .str.translate(_SC_CHAR_TABLE)
         .str.lower()
         .str.normalize("NFKD")
-        .str.translate(_SC_STRIP_TABLE)
+        .str.translate(_strip_tables()[1])
         .str.lower()
     )
     return out
@@ -361,7 +372,7 @@ def unicode_slugify(s: str | None) -> str | None:
     if s is None:
         return None
     s = unicodedata.normalize("NFKD", s)
-    s = s.translate(_STRIP_TABLE)
+    s = s.translate(_strip_tables()[0])
     return " ".join(s.lower().split())
 
 
@@ -369,5 +380,5 @@ def unicode_slugify(s: str | None) -> str | None:
 def unicode_slugify_udf(s: pd.Series) -> pd.Series:
     # str.normalize + str.translate are C-level pandas ops over the whole
     # Arrow batch — no per-row Python function calls.
-    out = s.str.normalize("NFKD").str.translate(_STRIP_TABLE).str.lower()
+    out = s.str.normalize("NFKD").str.translate(_strip_tables()[0]).str.lower()
     return out.str.split().str.join(" ")

@@ -19,6 +19,7 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS, denylisted
 from fuzzycat_spark.operators.lsh import (
     lsh_candidate_pairs,
     minhash_band_table,
@@ -133,8 +134,6 @@ class Prior:
 def _deny(cfg: "DedupConfig") -> tuple[str, ...]:
     """Resolve cfg.denylist_keys (None -> the default web denylist)."""
     if cfg.denylist_keys is None:
-        from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS
-
         return DEFAULT_DENYLIST_KEYS
     return cfg.denylist_keys
 
@@ -308,7 +307,7 @@ def star_edges(
         if deny:
             # denylisted slugs never star: a corpus full of "404 not
             # found" pages must not collapse into one SLUG_MATCH cluster
-            member = member & ~F.col("slug_key").isin(*deny)
+            member = member & ~denylisted("slug_key", deny)
         families.append(("slug_key", "SLUG_MATCH", member))
     if not families:
         return None

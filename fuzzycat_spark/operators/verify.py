@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS, denylisted
 from fuzzycat_spark.functions.hashing import content_hash, md5_h64
 from fuzzycat_spark.functions.normalize import num_project, word_shingles_from_tokens
 from fuzzycat_spark.plans.checkpoint import materialize
@@ -223,8 +224,8 @@ def _tier1_rules(
     if denylist_keys:
         rules.append(
             (
-                F.col("a_slug_key").isin(*denylist_keys)
-                | F.col("b_slug_key").isin(*denylist_keys),
+                denylisted("a_slug_key", denylist_keys)
+                | denylisted("b_slug_key", denylist_keys),
                 "ambiguous",
                 "BLACKLISTED",
             )
@@ -417,8 +418,6 @@ def verify_pairs(
     BOTH docs' full feature rows through one fat join.
     """
     if denylist_keys is None:
-        from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS
-
         denylist_keys = DEFAULT_DENYLIST_KEYS
     tier1_cols = ["id", "ch", "slug_key", "nproj_key", "n_tok", "lang"]
     j1 = _pair_join(pairs, features.select(*tier1_cols), tier1_cols)

@@ -371,7 +371,7 @@ class StageCheckpointer:
     def write(self, df: DataFrame, name: str) -> DataFrame:
         """Materialize `df` under `name` and return the re-read frame
         (a hard plan/lineage boundary)."""
-        path = os.path.join(self.base_dir, name)
+        path = self.stage_path(name)
         t0 = time.time()
         _touch_heartbeat(self.base_dir)
         w = df.write.mode("overwrite")
@@ -382,8 +382,15 @@ class StageCheckpointer:
         # footers; a file source reads every field as nullable either way
         # (pinned per stage by tests/test_checkpoint_reread.py)
         out = self.spark.read.schema(df.schema).parquet(path)
+        self._record(name, df.schema, t0)
+        return out
+
+    def _record(self, name: str, schema: StructType, t0: float) -> None:
+        """Enter the table written at `stage_path(name)` since `t0` in the
+        manifest."""
+        path = self.stage_path(name)
         # kept for `load`, which re-reads a stage without its frame
-        entry = {"path": path, "schema": df.schema.json()}
+        entry = {"path": path, "schema": schema.json()}
         if self.lineage:
             lineage = partition_lineage(path)
             parts = lineage.pop("partitions", None)
@@ -398,10 +405,13 @@ class StageCheckpointer:
         entry["ts"] = time.time()
         self._manifest[name] = entry
         self._flush()
-        return out
 
     def path(self, name: str) -> str:
         return self._manifest[name]["path"]
+
+    def stage_path(self, name: str) -> str:
+        """Where stage `name` is written."""
+        return os.path.join(self.base_dir, name)
 
     def done(self, name: str) -> bool:
         return name in self._manifest and os.path.exists(
@@ -418,11 +428,20 @@ class StageCheckpointer:
             reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
         return reader.parquet(entry["path"])
 
-    def stage(self, name: str, build) -> DataFrame:
-        """Resume-aware stage: load if complete, else build + checkpoint."""
+    def stage(self, name: str, build, writes_itself: bool = False) -> DataFrame:
+        """Resume-aware stage: load if complete, else build + checkpoint.
+        With `writes_itself`, `build()` has written the table at
+        `stage_path(name)` and returns its re-read, which is recorded
+        without a second write."""
         if self.done(name):
             return self.load(name)
-        return self.write(build(), name)
+        if not writes_itself:
+            return self.write(build(), name)
+        t0 = time.time()
+        _touch_heartbeat(self.base_dir)
+        out = build()
+        self._record(name, out.schema, t0)
+        return out
 
     def prune(self, prefix: str, keep_last: int) -> None:
         """Delete all but the `keep_last` most recent checkpoints whose name

@@ -37,9 +37,12 @@ def run_dedup_pipeline(
     ck.lineage = lineage
 
     def stage(name: str, build) -> DataFrame:
-        return ck.stage(name, build)
+        # prepare_pages writes the prepared table at its stage path itself
+        return ck.stage(name, build, writes_itself=name == "prepared")
 
-    out = dedup_stages(pages, cfg, stage, cc_checkpointer=ck)
+    out = dedup_stages(
+        pages, cfg, stage, cc_checkpointer=ck, prep_path=ck.stage_path("prepared")
+    )
 
     # the reference's run counters (notes/old_pipeline.md:106-112 analog)
     verdicts = {

@@ -108,6 +108,7 @@ def main() -> None:
     args = p.parse_args()
 
     # --py-files ships the package; imports resolve on the executors too
+    from fuzzycat_spark.config import with_session_conf
     from fuzzycat_spark.operators.dedup import DedupConfig
     from fuzzycat_spark.plans.checkpoint import StageCheckpointer
     from fuzzycat_spark.plans.pipeline import run_dedup_pipeline
@@ -117,7 +118,7 @@ def main() -> None:
         write_output,
     )
 
-    builder = SparkSession.builder.appName("fuzzycat-spark-dedup")
+    builder = with_session_conf(SparkSession.builder).appName("fuzzycat-spark-dedup")
     if args.iceberg_catalog:
         for k, v in iceberg_session_conf(
             args.iceberg_catalog,

@@ -63,13 +63,18 @@ def main() -> None:
                    "state and exit (offline maintenance run)")
     args = p.parse_args()
 
+    from fuzzycat_spark.config import with_session_conf
     from fuzzycat_spark.operators.dedup import DedupConfig
     from fuzzycat_spark.plans.checkpoint import qualify_path
     from fuzzycat_spark.sources.html_extract import extract_text_udf
     from fuzzycat_spark.sources.warc import stream_warc
     from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
 
-    spark = SparkSession.builder.appName("fuzzycat-spark-stream").getOrCreate()
+    spark = (
+        with_session_conf(SparkSession.builder)
+        .appName("fuzzycat-spark-stream")
+        .getOrCreate()
+    )
 
     # one URI for Spark's table writes and the pointer/listing I/O: a
     # relative root would otherwise resolve against fs.defaultFS on one

@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -17,8 +16,8 @@ from fuzzycat_spark.plans.pipeline import run_dedup_pipeline
 from fuzzycat_spark.sources import synth_pages
 
 
-def test_pipeline_stages_and_resume(spark):
-    base = tempfile.mkdtemp()
+def test_pipeline_stages_and_resume(spark, tmp_path):
+    base = str(tmp_path)
     pages = synth_pages(spark, n_families=30, n_spam=10)
     ck = StageCheckpointer(spark, base)
     out = run_dedup_pipeline(pages, ck, DedupConfig())
@@ -38,6 +37,40 @@ def test_pipeline_stages_and_resume(spark):
     out2 = run_dedup_pipeline(pages, ck2, DedupConfig(), lineage=False)
     assert out2["assignments"].count() == n
     assert os.path.getmtime(manifest["verified"]["path"]) == before  # not rewritten
+
+
+def test_prepared_stage_is_written_once_and_resumes(spark, tmp_path, monkeypatch):
+    """prepare_pages writes the prepared features straight to the durable
+    stage dir, the stage's only write; a resumed run loads that table and
+    writes no prepared features."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    paths: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        paths.append(str(path))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    base = str(tmp_path / "ck")
+    pages = synth_pages(spark, n_families=6, n_spam=2)
+    cfg = DedupConfig(strategies=("exact", "minhash"))
+
+    def prep_writes() -> list[str]:
+        return [p for p in paths if p.endswith("/prepared") or "prep_features" in p]
+
+    out = run_dedup_pipeline(pages, StageCheckpointer(spark, base), cfg, lineage=False)
+    n = out["assignments"].count()
+    assert prep_writes() == [os.path.join(base, "prepared")]
+    manifest = json.load(open(os.path.join(base, "_manifest.json")))
+    assert manifest["prepared"]["path"] == os.path.join(base, "prepared")
+
+    paths.clear()
+    out2 = run_dedup_pipeline(pages, StageCheckpointer(spark, base), cfg, lineage=False)
+    assert out2["assignments"].count() == n
+    assert prep_writes() == []
+    assert out2["prepared"].count() == 6 * 4 + 2
 
 
 def test_cli_pipeline_matches_flagship_on_mega_cluster(spark, tmp_path):

@@ -100,6 +100,50 @@ def test_verify_pairs_writes_nothing_and_unions_nothing(spark, monkeypatch):
     assert verified.count() == cands.count()
 
 
+def test_denylist_screens_are_one_literal_each(spark, monkeypatch):
+    """The verify and star-edge denylist screens are one IN-list literal
+    each: building them costs the same py4j round trips whatever the
+    list's length (an `isin(*keys)` makes one per key), the optimized plan
+    keeps its InSet, and the screen keeps the keys `isin` keeps."""
+    from fuzzycat_spark.functions.denylist import DEFAULT_DENYLIST_KEYS, denylisted
+    from fuzzycat_spark.operators.dedup import DedupConfig, star_edges
+    from fuzzycat_spark.operators.verify import _tier1_rules
+
+    keys = DEFAULT_DENYLIST_KEYS
+    prep = spark.createDataFrame(
+        [("u1", keys[0], 9), ("u2", keys[0], 9), ("u3", "k", 9), ("u4", "k", 9)],
+        "id string, slug_key string, n_tok int",
+    ).withColumn("ch", F.lit(None).cast("string"))
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def round_trips(deny: tuple[str, ...]) -> int:
+        before = calls[0]
+        _tier1_rules(deny)
+        star_edges(prep, DedupConfig(strategies=("slug",), denylist_keys=deny))
+        return calls[0] - before
+
+    round_trips(keys[:2])  # first-call caches
+    assert round_trips(keys) == round_trips(keys[:2])
+
+    # a quote in a key stays inside its literal
+    deny = (*keys, "o'k")
+    frame = spark.createDataFrame([(k,) for k in (*keys[:3], "k", "o'k")], "slug_key string")
+    screened = frame.filter(denylisted("slug_key", deny))
+    assert "INSET" in screened._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(screened.collect()) == sorted(frame.filter(F.col("slug_key").isin(*deny)).collect())
+    assert screened.count() == 4
+    edges = star_edges(prep, DedupConfig(strategies=("slug",), denylist_keys=keys))
+    assert {(r.id_a, r.id_b) for r in edges.collect()} == {("u3", "u4")}
+
+
 def test_components_all_candidates_have_no_cartesian(spark):
     """The ALL-strategy candidate union (minhash + simhash bands +
     substring index) must stay join-shaped — no strategy may introduce a
