@@ -538,18 +538,20 @@ def run_incremental_dedup(
     checkpoint_dir: str,
     cfg: DedupConfig = DedupConfig(),
     assign: bool = True,
+    continuous: bool = False,
 ):
     """Wire a streaming pages source into the incremental dedup sink.
     Returns the StreamingQuery (caller awaits/stops it). `assign=True`
     additionally maintains incremental cluster assignments (the batch
-    pipeline's end product) — see streaming/assignments.py."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch: incremental_dedup_batch(
-                df, index_path, pairs_path, cfg, epoch_id=epoch, assign=assign
-            )
+    pipeline's end product) — see streaming/assignments.py. By default
+    the query drains the segments that exist (availableNow) and stops;
+    `continuous=True` sets no trigger, so it keeps running micro-batches
+    as segments arrive."""
+    writer = stream.writeStream.foreachBatch(
+        lambda df, epoch: incremental_dedup_batch(
+            df, index_path, pairs_path, cfg, epoch_id=epoch, assign=assign
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    ).option("checkpointLocation", checkpoint_dir)
+    if not continuous:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

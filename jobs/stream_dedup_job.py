@@ -68,7 +68,7 @@ def main() -> None:
     from fuzzycat_spark.plans.checkpoint import qualify_path
     from fuzzycat_spark.sources.html_extract import extract_text_udf
     from fuzzycat_spark.sources.warc import stream_warc
-    from fuzzycat_spark.streaming.dedup_stream import incremental_dedup_batch
+    from fuzzycat_spark.streaming.dedup_stream import run_incremental_dedup
 
     spark = (
         with_session_conf(SparkSession.builder)
@@ -130,16 +130,10 @@ def main() -> None:
         strategies=tuple(s for s in args.strategies.split(",") if s),
         slug_mode=args.slug_mode,
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, epoch: incremental_dedup_batch(
-            df, index_path, pairs_path, cfg,
-            epoch_id=epoch, assign=not args.no_assign,
-        )
-    ).option("checkpointLocation", f"{state}/checkpoint")
-    if not args.continuous:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.awaitTermination()
+    run_incremental_dedup(
+        stream, index_path, pairs_path, f"{state}/checkpoint", cfg,
+        assign=not args.no_assign, continuous=args.continuous,
+    ).awaitTermination()
     if args.compact_state:
         from fuzzycat_spark.streaming.compaction import compact_state
 

@@ -1,9 +1,9 @@
 """DuckDB oracles for the corpus-prep modules.
 
 The corpus-prep modules (line and web filters, mixing and splits, sharding,
-vocabularies and BPE, LM scores, link graph, sketches, PII, mojibake and
-the classifier) sit outside the dedup system's import closure. Until a
-module is deleted, its cases here gate it; a case goes with its module.
+sketches, PII, mojibake and the classifier) sit outside the dedup system's
+import closure. Until a module is deleted, its cases here gate it; a case
+goes with its module.
 
 Each case runs a Spark function that calls the library directly and an
 independent DuckDB query, and compares them the way tests/test_oracles.py
@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from fuzzycat_spark.functions.normalize import tokens_col
 from fuzzycat_spark.functions.text import quality_score_cols
-from fuzzycat_spark.operators.components import connected_components
 from test_oracles import (
     FIXTURES,
     SF,
@@ -31,7 +30,6 @@ from test_oracles import (
     _surt_cte,
     _surt_host_col_sql,
     compare,
-    loop_only,
     q_components,
 )
 
@@ -593,51 +591,6 @@ def _stratified_sample_sql() -> str:
             SELECT doc_id AS id, lang, rank FROM r WHERE rank <= quota"""
 
 
-def q_host_components(spark, sf_dir):
-    """Site clusters: connected components over the UNDIRECTED host link
-    graph (operators/linkgraph.host_graph → operators/components) —
-    the mirror/sister-domain grouping a crawl-curation pipeline caps or
-    screens as one unit. Reuses the contraction + pointer-doubling CC
-    verbatim on string host ids; every host in the graph gets a label,
-    cluster_id = lexicographically-smallest member host."""
-    from fuzzycat_spark.operators.components import connected_components
-    from fuzzycat_spark.operators.linkgraph import extract_links, host_graph
-
-    g = host_graph(extract_links(spark.read.parquet(_LINK_FIXTURE)))
-    edges = g.select(
-        F.col("src_host").alias("id_a"), F.col("dst_host").alias("id_b")
-    )
-    hosts = (
-        g.select(F.col("src_host").alias("host"))
-        .unionByName(g.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    cc = connected_components(edges)
-    return hosts.join(cc, hosts.host == cc.id, "left").select(
-        "host", F.coalesce(F.col("cluster_id"), F.col("host")).alias("cluster_id")
-    )
-
-
-def _host_components_sql() -> str:
-    return f"""WITH RECURSIVE {_HOST_GRAPH_CTE},
-        und AS (
-          SELECT src_host AS src, dst_host AS dst FROM edges
-          UNION ALL
-          SELECT dst_host AS src, src_host AS dst FROM edges),
-        reach(id, r) AS (
-          SELECT src, src FROM und
-          UNION
-          SELECT u.src, reach.r FROM und u JOIN reach ON u.dst = reach.id),
-        cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-        allhosts AS (
-          SELECT DISTINCT host FROM (
-            SELECT src_host AS host FROM edges
-            UNION ALL
-            SELECT dst_host AS host FROM edges))
-        SELECT h.host, coalesce(cc.cluster_id, h.host) AS cluster_id
-        FROM allhosts h LEFT JOIN cc ON h.host = cc.id"""
-
-
 _SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
@@ -832,6 +785,9 @@ WITH smlines AS (
 SELECT DISTINCT host, regexp_extract(line, {sm_re}, 1) AS sitemap_url
 FROM smlines
 WHERE regexp_matches(regexp_extract(line, {sm_re}, 1), '^(?i)https?://')"""
+
+
+_HOST_HRE = r"'^(?:[A-Za-z][A-Za-z0-9+.-]*://)?([^/?#]*)'"
 
 
 def _robots_surt_sql(raw: str) -> str:
@@ -1448,359 +1404,6 @@ def _packed_sequences_sql() -> str:
         FROM pos"""
 
 
-_VOCAB_K = 100
-
-
-_BIGRAM_K = 50
-
-
-def q_vocab_top(spark, sf_dir):
-    """Corpus vocabulary (operators/vocab.py): token occurrence counts
-    over the raw whitespace stream, deterministic top-k ((count DESC,
-    gram ASC) tiebreak). One partial-aggregated shuffle; the top-k is
-    TakeOrderedAndProject (per-partition k-heaps + driver merge), never
-    a global sort."""
-    from fuzzycat_spark.operators.vocab import token_ngram_counts
-
-    return token_ngram_counts(_docs(spark, sf_dir), n=1, top_k=_VOCAB_K)
-
-
-def q_bigram_top(spark, sf_dir):
-    """Word-bigram frequency table (n=2, min_count=2, top 50) — the
-    n-gram generalization of the vocab pass, same single-shuffle plan."""
-    from fuzzycat_spark.operators.vocab import token_ngram_counts
-
-    return token_ngram_counts(
-        _docs(spark, sf_dir), n=2, top_k=_BIGRAM_K, min_count=2
-    )
-
-
-def _vocab_sql(n: int, k: int, min_count: int) -> str:
-    if n == 1:
-        gram_src = f"SELECT unnest({_RAW_TOKS}) AS gram FROM documents"
-    else:
-        gram_src = f"""
-            SELECT array_to_string(toks[i+1:i+{n}], ' ') AS gram
-            FROM (SELECT {_RAW_TOKS} AS toks FROM documents),
-                 UNNEST(range(0, greatest(len(toks)-{n}+1, 0))) AS u(i)"""
-    return f"""
-        SELECT gram, CAST(count(*) AS BIGINT) AS occurrences
-        FROM ({gram_src}) GROUP BY gram
-        HAVING count(*) >= {min_count}
-        ORDER BY occurrences DESC, gram LIMIT {k}"""
-
-
-_BPE_MERGES = 8
-
-
-# printable ASCII, no space: the per-character symbolization splits per
-# UTF-16 unit JVM-side but per codepoint in DuckDB — on ASCII they agree
-_BPE_WORD_RE = "^[!-~]+$"
-
-
-def q_bpe_merges(spark, sf_dir):
-    """BPE tokenizer training (operators/bpe.py): the 8 most frequent
-    symbol-pair merges learned from the corpus word-frequency table.
-    One corpus shuffle (the word count), then every round runs on the
-    vocab-sized word table: one partial-aggregated (left,right) count,
-    a TakeOrderedAndProject(1) argmax, a 1-row broadcast rewrite —
-    training cost is corpus-size-independent past the first count, and
-    int64 pair counts make the learned sequence cross-engine exact."""
-    from fuzzycat_spark.operators.bpe import bpe_train, bpe_word_table
-
-    w = bpe_word_table(_docs(spark, sf_dir), word_pattern=_BPE_WORD_RE)
-    merges, _ = bpe_train(w, _BPE_MERGES)
-    return merges
-
-
-def q_bpe_token_counts(spark, sf_dir):
-    """Per-document token counts under the learned BPE vocabulary —
-    read straight off the trained word table's rewritten symbol strings
-    (training already applied every merge to every word), one join
-    shuffle; untrained words contribute nothing and empty documents
-    report 0."""
-    from fuzzycat_spark.operators.bpe import (
-        bpe_token_counts,
-        bpe_train,
-        bpe_word_table,
-    )
-
-    docs = _docs(spark, sf_dir)
-    w = bpe_word_table(docs, word_pattern=_BPE_WORD_RE)
-    _, final = bpe_train(w, _BPE_MERGES)
-    return bpe_token_counts(docs, final, id_col="doc_id")
-
-
-def _bpe_chain_sql(n_merges: int, train_where: str = "TRUE") -> str:
-    """w0..wN / b1..bN CTE chain mirroring bpe_train: per-char
-    symbolization, naive adjacent pair counts weighted by word
-    frequency, (count DESC, left, right) argmax, single-pass
-    space-padded replace application (LEFT JOIN ON TRUE so an exhausted
-    round is a no-op, exactly like the operator's left join).
-    `train_where` restricts the training corpus (the encode gate trains
-    on an md5 doc split)."""
-    parts = [
-        f"""w0 AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS freq,
-                 trim(regexp_replace(word, '(.)', '\\1 ', 'g')) AS syms
-          FROM (SELECT unnest({_RAW_TOKS}) AS word FROM documents
-                WHERE {train_where})
-          WHERE regexp_matches(word, '{_BPE_WORD_RE}')
-          GROUP BY word)"""
-    ]
-    for t in range(1, n_merges + 1):
-        parts.append(f"""b{t} AS (
-          SELECT l[i] AS lft, l[i+1] AS rgt,
-                 CAST(sum(freq) AS BIGINT) AS pair_count
-          FROM (SELECT freq, string_split(syms, ' ') AS l FROM w{t - 1}),
-               UNNEST(range(1, len(l))) AS u(i)
-          GROUP BY 1, 2
-          ORDER BY pair_count DESC, lft, rgt LIMIT 1)""")
-        parts.append(f"""w{t} AS (
-          SELECT word, freq,
-                 CASE WHEN b.lft IS NULL THEN syms
-                      ELSE trim(replace(' ' || syms || ' ',
-                                        ' ' || b.lft || ' ' || b.rgt || ' ',
-                                        ' ' || b.lft || b.rgt || ' '))
-                 END AS syms
-          FROM w{t - 1} LEFT JOIN b{t} b ON TRUE)""")
-    return ",\n".join(parts)
-
-
-def _bpe_merges_sql(n_merges: int) -> str:
-    rows = "\nUNION ALL\n".join(
-        f"SELECT {t} AS step, lft AS \"left\", rgt AS \"right\", "
-        f"lft || rgt AS merged, pair_count FROM b{t}"
-        for t in range(1, n_merges + 1)
-    )
-    return f"WITH {_bpe_chain_sql(n_merges)}\n{rows}"
-
-
-_BPE_TRAIN_WHERE = (
-    "substr(md5(doc_id::VARCHAR), 1, 1) IN "
-    "('0','1','2','3','4','5','6','7')"
-)
-
-
-def q_bpe_encode(spark, sf_dir):
-    """Deployment encode path (operators/bpe.py bpe_apply): train the
-    merge table on an md5-selected half of the corpus, then tokenize
-    ALL documents — held-out docs contain words the trainer never saw,
-    which must still segment through the literal-replace fold. The
-    8-row learned merge table is collected as the published model
-    artifact (a tokenizer model is driver-sized by definition, same
-    footing as broadcast centroids/classifier weights); the apply pass
-    is one codegen replace chain per token plus the per-doc count
-    shuffle."""
-    from fuzzycat_spark.operators.bpe import (
-        bpe_apply,
-        bpe_train,
-        bpe_word_table,
-    )
-    from pyspark.sql import functions as F
-
-    docs = _docs(spark, sf_dir)
-    train = docs.filter(
-        F.substring(
-            F.md5(F.col("doc_id").cast("string")), 1, 1
-        ).isin(list("01234567"))
-    )
-    merges_df, _ = bpe_train(
-        bpe_word_table(train, word_pattern=_BPE_WORD_RE), _BPE_MERGES
-    )
-    merges = [(r.left, r.right) for r in merges_df.orderBy("step").collect()]
-    return bpe_apply(
-        docs, merges, id_col="doc_id", word_pattern=_BPE_WORD_RE
-    )
-
-
-def _bpe_encode_sql(n_merges: int) -> str:
-    # fold the learned merges over every token as nested replaces;
-    # coalesce(-, chr(1)) turns a missing merge row into an identity
-    # replace so an exhausted round is a no-op (mirrors bpe_apply
-    # folding only the merges that exist)
-    s = "' ' || trim(regexp_replace(word, '(.)', '\\1 ', 'g')) || ' '"
-    joins = []
-    for t in range(1, n_merges + 1):
-        s = (
-            f"replace({s},"
-            f" coalesce(' '||b{t}.lft||' '||b{t}.rgt||' ', chr(1)),"
-            f" coalesce(' '||b{t}.lft||b{t}.rgt||' ', chr(1)))"
-        )
-        joins.append(f"LEFT JOIN b{t} ON TRUE")
-    return f"""
-        WITH {_bpe_chain_sql(n_merges, _BPE_TRAIN_WHERE)},
-        per_doc AS (
-          SELECT doc_id,
-                 CAST(sum(len(string_split(trim({s}), ' '))) AS BIGINT) AS n
-          FROM (SELECT doc_id, unnest({_RAW_TOKS}) AS word FROM documents)
-               {' '.join(joins)}
-          WHERE regexp_matches(word, '{_BPE_WORD_RE}')
-          GROUP BY doc_id)
-        SELECT d.doc_id, CAST(coalesce(p.n, 0) AS BIGINT) AS n_tokens_bpe
-        FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
-
-
-def _bpe_token_counts_sql(n_merges: int) -> str:
-    return f"""
-        WITH {_bpe_chain_sql(n_merges)},
-        wt AS (SELECT word,
-                      CAST(len(string_split(syms, ' ')) AS BIGINT) AS nt
-               FROM w{n_merges}),
-        per_doc AS (
-          SELECT doc_id, CAST(sum(nt) AS BIGINT) AS n
-          FROM (SELECT doc_id, unnest({_RAW_TOKS}) AS word FROM documents)
-          JOIN wt USING (word)
-          GROUP BY doc_id)
-        SELECT d.doc_id, CAST(coalesce(p.n, 0) AS BIGINT) AS n_tokens_bpe
-        FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
-
-
-_LINK_FIXTURE = f"{FIXTURES}/link_docs.parquet"
-
-
-_PR_ITERS = 8
-
-
-_PR_SCALE = 1_000_000_000
-
-
-def q_host_links(spark, sf_dir):
-    """Weighted host link digraph (operators/linkgraph.py) over the
-    committed link fixture: href targets via one Catalyst
-    regexp_extract_all (Java/RE2-shared pattern), absolute http(s) only,
-    SURT reversed-label hosts, self loops dropped, ONE partial-agg
-    shuffle on the host pair. www./:80/uppercase spellings collapse."""
-    from fuzzycat_spark.operators.linkgraph import extract_links, host_graph
-
-    return host_graph(extract_links(spark.read.parquet(_LINK_FIXTURE)))
-
-
-def q_host_pagerank(spark, sf_dir):
-    """Fixed-point PageRank over the fixture host graph — the
-    crawl-centrality quality prior (Common Crawl publishes exactly this
-    per-host ranking). Integer mass (scale units/node, fused-division
-    edge contributions) makes 8 power iterations exact and order-free —
-    hash-matchable where float PageRank never is. One score-to-edges
-    join + one partial-agg groupBy per iteration; only (host, int64)
-    rows ride the loop's shuffles."""
-    from fuzzycat_spark.operators.linkgraph import (
-        extract_links,
-        host_graph,
-        pagerank_fp,
-    )
-
-    g = host_graph(extract_links(spark.read.parquet(_LINK_FIXTURE)))
-    return pagerank_fp(g, iters=_PR_ITERS, scale=_PR_SCALE)
-
-
-def q_anchor_texts(spark, sf_dir):
-    """(src_url, dst_url, anchor) web-supervision pairs
-    (operators/linkgraph.anchor_texts): whole-anchor regexp_extract_all
-    + per-element extracts inside a transform — zero shuffles, pure
-    codegen; inner markup stripped, whitespace collapsed with the
-    explicit [ \\t\\r\\n] class (Java \\s and RE2 \\s diverge on
-    \\x0B), entities left as written."""
-    from fuzzycat_spark.operators.linkgraph import anchor_texts
-
-    return anchor_texts(spark.read.parquet(_LINK_FIXTURE))
-
-
-_ANCHOR_TEXTS_SQL = rf"""
-WITH tags AS (
-  SELECT url AS src_url,
-         unnest(regexp_extract_all(html,
-           '(?is)<a\s[^>]*?href\s*=\s*"([^"]+)"[^>]*>(.*?)</a\s*>', 0)) AS t
-  FROM '{_LINK_FIXTURE}'
-),
-x AS (
-  SELECT src_url,
-         regexp_extract(t, '(?i)<a\s[^>]*?href\s*=\s*"([^"]+)"', 1) AS dst_url,
-         trim(regexp_replace(regexp_replace(
-             regexp_extract(t, '(?is)^<a\b[^>]*>(.*)</a\s*>$', 1),
-             '<[^>]+>', ' ', 'g'), '[ \t\r\n]+', ' ', 'g')) AS anchor,
-         len(list_intersect(
-           string_split_regex(
-             lower(regexp_extract(t, '(?is)<a[^>]*?\srel\s*=\s*"([^"]*)"', 1)),
-             '[ ,\t\r\n]+'),
-           ['nofollow', 'ugc', 'sponsored'])) > 0 AS nofollow
-  FROM tags
-)
-SELECT src_url, dst_url, anchor, nofollow FROM x
-WHERE regexp_matches(dst_url, '^(?i)https?://') AND anchor <> ''"""
-
-
-_HOST_HRE = r"'^(?:[A-Za-z][A-Za-z0-9+.-]*://)?([^/?#]*)'"
-
-
-_HOST_GRAPH_CTE = rf"""
-raw AS (
-  SELECT url AS src_url,
-         unnest(regexp_extract_all(html,
-           '(?i)<a\s[^>]*?href\s*=\s*"([^"]+)"', 1)) AS dst_url
-  FROM '{_LINK_FIXTURE}'
-),
-links AS (
-  SELECT * FROM raw WHERE regexp_matches(dst_url, '^(?i)https?://')
-),
-h1 AS (
-  SELECT
-    regexp_replace(regexp_replace(
-      lower(regexp_extract(trim(src_url), {_HOST_HRE}, 1)),
-      '^www\.', ''), ':(80|443)$', '') AS sh1,
-    regexp_replace(regexp_replace(
-      lower(regexp_extract(trim(dst_url), {_HOST_HRE}, 1)),
-      '^www\.', ''), ':(80|443)$', '') AS dh1
-  FROM links
-),
-hosts AS (
-  SELECT {_surt_host_col_sql('sh1')} AS src_host,
-         {_surt_host_col_sql('dh1')} AS dst_host
-  FROM h1
-),
-edges AS (
-  SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS weight
-  FROM hosts
-  WHERE src_host <> dst_host AND src_host <> '' AND dst_host <> ''
-  GROUP BY src_host, dst_host
-)"""
-
-
-_HOST_LINKS_SQL = f"WITH {_HOST_GRAPH_CTE} SELECT * FROM edges"
-
-
-def _host_pagerank_sql(
-    iters: int = _PR_ITERS,
-    scale: int = _PR_SCALE,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> str:
-    base = (scale * (d_den - d_num)) // d_den
-    parts = [
-        _HOST_GRAPH_CTE,
-        "nodes AS (SELECT DISTINCT src_host AS host FROM edges"
-        " UNION SELECT DISTINCT dst_host FROM edges)",
-        "outw AS (SELECT src_host, CAST(sum(weight) AS BIGINT) AS ow"
-        " FROM edges GROUP BY src_host)",
-        f"s0 AS (SELECT host, CAST({scale} AS BIGINT) AS s FROM nodes)",
-    ]
-    for i in range(iters):
-        parts.append(f"""s{i + 1} AS (
-          SELECT n.host, CAST({base} + COALESCE(c.tot, 0) AS BIGINT) AS s
-          FROM nodes n LEFT JOIN (
-            SELECT e.dst_host AS host,
-                   CAST(sum(p.s * {d_num} * e.weight
-                            // ({d_den} * o.ow)) AS BIGINT) AS tot
-            FROM edges e JOIN s{i} p ON p.host = e.src_host
-                         JOIN outw o ON o.src_host = e.src_host
-            GROUP BY e.dst_host) c USING (host))""")
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"\nSELECT host, s AS score_fp FROM s{iters}"
-    )
-
-
 _LL_B = 6  # 64 LogLog registers
 
 
@@ -1980,128 +1583,6 @@ GROUP BY probe_id"""
     )
 
 
-_LM_SCALE = 1_000_000_000
-
-
-def q_lm_scores(spark, sf_dir):
-    """CCNet-style corpus bigram-LM fluency scores (operators/lm.py):
-    add-one-smoothed P(w2|w1) per token position in integer fixed point
-    (exact, order-free — hash-matchable where float log-prob sums are
-    not), rolled up per document with a hapax-bigram novelty count.
-    Model estimation is one partial-agg shuffle on 8-byte bigram hash
-    pairs; scoring joins the token stream back to the model by the same
-    hashes (AQE broadcasts small models); token text never shuffles."""
-    from fuzzycat_spark.operators.lm import doc_lm_scores
-
-    return doc_lm_scores(_docs(spark, sf_dir), scale=_LM_SCALE)
-
-
-def q_dsir_contrast(spark, sf_dir):
-    """DSIR-style importance contrast (operators/lm.dsir_contrast): mean
-    fixed-point bigram probability under a TARGET-corpus LM (here the
-    corpus's English half — the 'reference distribution') minus the same
-    under the BACKGROUND LM (the full corpus), per document. Bigrams
-    absent from the target model take the smoothed floor
-    (c=0, global ctx+V denominator) — the oracle mirrors those left-join
-    semantics exactly. Integer throughout, so the selection ranking is
-    cross-engine exact; non-vacuous because non-English docs miss the
-    target model's bigrams and score the floor."""
-    from fuzzycat_spark.operators.lm import dsir_contrast
-
-    docs = _docs(spark, sf_dir)
-    return dsir_contrast(
-        docs, docs.filter(F.col("lang") == "en"), scale=_LM_SCALE
-    )
-
-
-def _dsir_contrast_sql() -> str:
-    return f"""
-        WITH t AS (SELECT doc_id, lang, {_RAW_TOKS} AS toks FROM documents),
-        big AS (
-          SELECT doc_id, toks[i+1] AS w1,
-                 array_to_string(toks[i+1:i+2], ' ') AS bg
-          FROM t, UNNEST(range(0, greatest(len(toks)-1, 0))) AS u(i)
-        ),
-        tbig AS (
-          SELECT toks[i+1] AS w1, array_to_string(toks[i+1:i+2], ' ') AS bg
-          FROM t, UNNEST(range(0, greatest(len(toks)-1, 0))) AS u(i)
-          WHERE lang = 'en'
-        ),
-        tc2 AS (SELECT w1, bg, CAST(count(*) AS BIGINT) AS tc
-                FROM tbig GROUP BY w1, bg),
-        tc1 AS (SELECT w1, CAST(sum(tc) AS BIGINT) AS tctx FROM tc2 GROUP BY w1),
-        tv AS (SELECT CAST(count(DISTINCT gram) AS BIGINT) AS vocab
-               FROM (SELECT unnest(toks) AS gram FROM t WHERE lang = 'en')),
-        bc2 AS (SELECT w1, bg, CAST(count(*) AS BIGINT) AS bc
-                FROM big GROUP BY w1, bg),
-        bc1 AS (SELECT w1, CAST(sum(bc) AS BIGINT) AS bctx FROM bc2 GROUP BY w1),
-        bv AS (SELECT CAST(count(DISTINCT gram) AS BIGINT) AS vocab
-               FROM (SELECT unnest(toks) AS gram FROM t)),
-        tscored AS (
-          SELECT b.doc_id,
-                 (COALESCE(tc2.tc, 0) + 1) * {_LM_SCALE}
-                   // (COALESCE(tc1.tctx, 0) + tv.vocab) AS p_fp
-          FROM big b
-          LEFT JOIN tc2 USING (w1, bg) LEFT JOIN tc1 USING (w1) CROSS JOIN tv
-        ),
-        bscored AS (
-          SELECT b.doc_id,
-                 (bc2.bc + 1) * {_LM_SCALE} // (bc1.bctx + bv.vocab) AS p_fp
-          FROM big b JOIN bc2 USING (w1, bg) JOIN bc1 USING (w1) CROSS JOIN bv
-        ),
-        tagg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
-                        CAST(sum(p_fp) AS BIGINT) AS s
-                 FROM tscored GROUP BY doc_id),
-        bagg AS (SELECT doc_id, CAST(sum(p_fp) AS BIGINT) AS s
-                 FROM bscored GROUP BY doc_id),
-        m AS (
-          SELECT d.doc_id,
-                 COALESCE(tagg.n, 0) AS n_bigrams,
-                 CASE WHEN tagg.n > 0 THEN tagg.s // tagg.n END AS target_fp,
-                 CASE WHEN tagg.n > 0 THEN bagg.s // tagg.n END AS background_fp
-          FROM documents d
-          LEFT JOIN tagg USING (doc_id) LEFT JOIN bagg USING (doc_id)
-        )
-        SELECT doc_id, n_bigrams, target_fp, background_fp,
-               target_fp - background_fp AS contrast_fp
-        FROM m"""
-
-
-def _lm_scores_sql() -> str:
-    return f"""
-        WITH t AS (SELECT doc_id, {_RAW_TOKS} AS toks FROM documents),
-        big AS (
-          SELECT doc_id, toks[i+1] AS w1,
-                 array_to_string(toks[i+1:i+2], ' ') AS bg
-          FROM t, UNNEST(range(0, greatest(len(toks)-1, 0))) AS u(i)
-        ),
-        c2 AS (SELECT w1, bg, CAST(count(*) AS BIGINT) AS c
-               FROM big GROUP BY w1, bg),
-        c1 AS (SELECT w1, CAST(sum(c) AS BIGINT) AS ctx FROM c2 GROUP BY w1),
-        v AS (SELECT CAST(count(DISTINCT gram) AS BIGINT) AS vocab
-              FROM (SELECT unnest(toks) AS gram FROM t)),
-        scored AS (
-          SELECT b.doc_id, c2.c,
-                 (c2.c + 1) * {_LM_SCALE} // (c1.ctx + v.vocab) AS p_fp
-          FROM big b JOIN c2 USING (w1, bg) JOIN c1 USING (w1) CROSS JOIN v
-        ),
-        agg AS (
-          SELECT doc_id,
-                 CAST(count(*) AS BIGINT) AS n_bigrams,
-                 CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS hapax_bigrams,
-                 CAST(sum(p_fp) AS BIGINT) AS sum_p_fp
-          FROM scored GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               COALESCE(a.n_bigrams, 0) AS n_bigrams,
-               COALESCE(a.hapax_bigrams, 0) AS hapax_bigrams,
-               COALESCE(a.sum_p_fp, 0) AS sum_p_fp,
-               CASE WHEN a.n_bigrams > 0 THEN a.sum_p_fp // a.n_bigrams END
-                 AS mean_p_fp
-        FROM documents d LEFT JOIN agg a USING (doc_id)"""
-
-
 _LEX_QUERIES = [
     (1, "hash join"),
     (2, "dup scan"),
@@ -2163,60 +1644,6 @@ def _lexical_topk_sql() -> str:
         ) WHERE rank <= {_LEX_K}"""
 
 
-_BUCKET_RATE = 0.5
-
-
-_BUCKET_SEED = 13
-
-
-_BUCKET_THRESH = int(_BUCKET_RATE * (1 << 48))
-
-
-def q_lm_buckets(spark, sf_dir):
-    """CCNet head/middle/tail perplexity tiers (operators/lm.py
-    lm_perplexity_buckets): tertile cutoffs fitted on the deterministic
-    md5 half-sample of the corpus LM scores (no global sort at scale —
-    CCNet itself fits cutoffs on a sample), every doc bucketed by
-    integer value comparison; unscorable docs are 'tail'."""
-    from fuzzycat_spark.operators.lm import (
-        doc_lm_scores,
-        lm_perplexity_buckets,
-    )
-
-    scores = doc_lm_scores(_docs(spark, sf_dir), scale=_LM_SCALE)
-    return lm_perplexity_buckets(
-        scores, sample_rate=_BUCKET_RATE, seed=_BUCKET_SEED
-    )
-
-
-def _lm_buckets_sql() -> str:
-    return f"""
-        WITH scores AS ({_lm_scores_sql()}),
-        samp AS (
-          SELECT doc_id, mean_p_fp FROM scores
-          WHERE mean_p_fp IS NOT NULL
-            AND ('0x' || substr(md5(doc_id::VARCHAR || ':{_BUCKET_SEED}'),
-                                1, 12))::BIGINT < {_BUCKET_THRESH}),
-        ranked AS (
-          SELECT mean_p_fp AS s,
-                 row_number() OVER (ORDER BY mean_p_fp DESC, doc_id ASC)
-                   AS rn,
-                 count(*) OVER () AS n
-          FROM samp),
-        cuts AS (
-          SELECT max(CASE WHEN rn = (n + 2) // 3 THEN s END) AS cut_head,
-                 max(CASE WHEN rn = (2 * n + 2) // 3 THEN s END)
-                   AS cut_middle
-          FROM ranked)
-        SELECT s.doc_id, s.n_bigrams, s.hapax_bigrams, s.sum_p_fp,
-               s.mean_p_fp,
-               CASE WHEN s.mean_p_fp IS NULL THEN 'tail'
-                    WHEN s.mean_p_fp >= c.cut_head THEN 'head'
-                    WHEN s.mean_p_fp >= c.cut_middle THEN 'middle'
-                    ELSE 'tail' END AS bucket
-        FROM scores s CROSS JOIN cuts c"""
-
-
 CASES = {
     "repetition": (q_repetition, _REPETITION_SQL),
     "line_stats": (q_line_stats, _LINE_STATS_SQL),
@@ -2235,8 +1662,6 @@ CASES = {
     "stratified_sample": (q_stratified_sample, _stratified_sample_sql()),
     "split_assign": (q_split_assign, _split_assign_sql()),
     "split_leakage_safe": (q_split_leakage_safe, _split_leakage_safe_sql()),
-    "host_components": (q_host_components, _host_components_sql()),
-    "host_components_loop": (loop_only(q_host_components), _host_components_sql()),
     "pii_scrub": (q_pii_scrub, _pii_scrub_sql()),
     "corpus_mix": (q_corpus_mix, _corpus_mix_sql()),
     "temperature_mix": (q_temperature_mix, _temperature_mix_sql()),
@@ -2245,18 +1670,7 @@ CASES = {
     "jsonl_manifest": (q_jsonl_manifest, _jsonl_manifest_sql()),
     "dup_spans": (q_dup_spans, _dup_spans_sql()),
     "packed_sequences": (q_packed_sequences, _packed_sequences_sql()),
-    "vocab_top": (q_vocab_top, _vocab_sql(1, _VOCAB_K, 1)),
-    "bpe_merges": (q_bpe_merges, _bpe_merges_sql(_BPE_MERGES)),
-    "bpe_token_counts": (q_bpe_token_counts, _bpe_token_counts_sql(_BPE_MERGES)),
-    "bpe_encode": (q_bpe_encode, _bpe_encode_sql(_BPE_MERGES)),
-    "bigram_top": (q_bigram_top, _vocab_sql(2, _BIGRAM_K, 2)),
-    "lm_scores": (q_lm_scores, _lm_scores_sql()),
-    "dsir_contrast": (q_dsir_contrast, _dsir_contrast_sql()),
-    "lm_buckets": (q_lm_buckets, _lm_buckets_sql()),
     "lexical_topk": (q_lexical_topk, _lexical_topk_sql()),
-    "host_links": (q_host_links, _HOST_LINKS_SQL),
-    "host_pagerank": (q_host_pagerank, _host_pagerank_sql()),
-    "anchor_texts": (q_anchor_texts, _ANCHOR_TEXTS_SQL),
     "distinct_sketch": (q_distinct_sketch, _distinct_sketch_sql()),
     "cms_counts": (q_cms_counts, _cms_counts_sql()),
     "bloom_bits": (q_bloom_bits, _bloom_bits_sql()),

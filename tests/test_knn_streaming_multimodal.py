@@ -260,6 +260,51 @@ def test_run_incremental_dedup_via_writestream(spark, tmp_path):
     assert got.get(("u1", "u3")) == "exact"
 
 
+def test_run_incremental_dedup_continuous_keeps_consuming(spark, tmp_path):
+    """continuous=True sets no trigger: the query stays up after draining
+    what exists and links a segment that arrives later to the committed
+    state."""
+    import glob
+    import os
+
+    from fuzzycat_spark.streaming.dedup_stream import (
+        committed_epoch,
+        read_pairs,
+        run_incremental_dedup,
+    )
+
+    base = str(tmp_path)
+    src = f"{base}/src"
+    os.makedirs(src)
+    fam = "the quick brown fox jumps over the lazy dog again and again today fine"
+    schema = "url string, text string"
+
+    def arrive(name, url):
+        # written elsewhere, then renamed in: the source never lists a
+        # half-written file
+        staged = f"{base}/staged_{name}"
+        spark.createDataFrame([(url, fam)], schema).coalesce(1).write.parquet(staged)
+        os.rename(glob.glob(f"{staged}/part-*.parquet")[0], f"{src}/{name}.parquet")
+
+    arrive("b0", "u1")
+    stream = spark.readStream.schema(schema).parquet(src)
+    index, pairs = f"{base}/index", f"{base}/pairs"
+    cfg = DedupConfig(strategies=("exact", "minhash"))
+    q = run_incremental_dedup(
+        stream, index, pairs, f"{base}/ckpt", cfg, continuous=True
+    )
+    try:
+        q.processAllAvailable()
+        assert q.isActive and committed_epoch(index) == 0
+        arrive("b1", "u3")
+        q.processAllAvailable()
+        assert q.isActive and committed_epoch(index) == 1
+    finally:
+        q.stop()
+    got = {(r.id_a, r.id_b): r.status for r in read_pairs(spark, pairs, index).collect()}
+    assert got.get(("u1", "u3")) == "exact"
+
+
 def test_incremental_equals_batch_winnow_substring(spark, tmp_path):
     """The round-4 gap: winnow and substring were batch-only. Split a
     corpus with (a) a shared-paragraph partial-overlap family (winnow's

@@ -1,6 +1,8 @@
 """The package holds the dedup system: every module of `fuzzycat_spark` is in
 the import closure of the product entry points, except the corpus-prep
 modules that ROADMAP.md lists for deletion and the test corpus generator.
+Nothing outlives its code either: every committed fixture is read by some
+test or program file, and every fixture maker writes a committed fixture.
 
 AST-only: no module is imported and no Spark session starts. Imports inside
 functions count (the product imports strategy code lazily). A name imported
@@ -29,16 +31,15 @@ ENTRY_POINTS = (
 )
 
 # outside the closure: the corpus-prep modules (ROADMAP.md open item
-# "Delete the 19 corpus-prep modules") and the synthetic corpus generator
+# "Delete the 15 corpus-prep modules") and the synthetic corpus generator
 # of the tests and tools; a deletion of any of them shrinks this list
 OUTSIDE = {
     f"{PKG}.functions.{m}" for m in ("encoding", "pii", "repetition", "webfilters")
 } | {
     f"{PKG}.operators.{m}"
     for m in (
-        "bpe", "classify", "domains", "lines", "linkgraph", "lm", "mixing",
-        "retrieval", "robots", "sharding", "sitemap", "sketch", "spans",
-        "stats", "vocab",
+        "classify", "domains", "lines", "mixing", "retrieval", "robots",
+        "sharding", "sitemap", "sketch", "spans", "stats",
     )
 } | {f"{PKG}.sources.synth"}
 
@@ -124,3 +125,21 @@ def test_modules_outside_the_closure_are_the_listed_corpus_prep_ones():
     modules = {_name(p) for p in (ROOT / PKG).rglob("*.py")}
     outside = modules - _closure()
     assert outside == OUTSIDE
+
+
+def test_no_orphan_fixtures_or_fixture_makers():
+    fixtures = {p.name for p in (ROOT / "fixtures").iterdir() if p.is_file()}
+    # only source files count: a stale .pyc of a deleted test still holds
+    # the names it read
+    readers = " ".join(
+        p.read_text()
+        for d in ("tests", "perfbench", "jobs", PKG)
+        for p in (ROOT / d).rglob("*.py")
+    )
+    assert {f for f in fixtures if f not in readers} == set()
+    makers = {
+        p.name: p.read_text() for p in (ROOT / "tools").glob("make_*.py")
+    }
+    assert {
+        m for m, src in makers.items() if not any(f in src for f in fixtures)
+    } == set()

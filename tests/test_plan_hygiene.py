@@ -228,40 +228,6 @@ def test_all_strategy_bands_share_one_shuffle(spark):
     assert len(band_exchanges) == 1, plan[:3000]
 
 
-def test_lm_scores_all_jvm_and_narrow(spark):
-    """The bigram-LM scorer must stay whole-stage-codegen (no Python
-    workers) and shuffle only 8-byte hash rows — never token text."""
-    from test_oracles import _docs
-
-    from fuzzycat_spark.operators.lm import doc_lm_scores
-
-    plan = _plan(doc_lm_scores(_docs(spark, SF), scale=1_000_000_000))
-    assert "PythonUDF" not in plan and "ArrowEval" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    # the 1-row vocab scalar joins via broadcast nested loop; that must
-    # be the ONLY nested-loop join in the plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
-
-
-def test_pagerank_shuffles_are_host_int64_only(spark):
-    """PageRank iteration shuffles must carry (host, int64) rows — the
-    edge list and score vector — never page html/urls; and the loop must
-    not introduce a cartesian."""
-    from fuzzycat_spark.operators.linkgraph import (
-        extract_links,
-        host_graph,
-        pagerank_fp,
-    )
-
-    pages = spark.read.parquet(f"{FIXTURES}/link_docs.parquet")
-    pr = pagerank_fp(host_graph(extract_links(pages)), iters=2)
-    plan = _plan(pr)
-    assert "CartesianProduct" not in plan, plan
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "html" not in line and "dst_url" not in line, line
-
-
 def test_robots_rules_single_hosts_shuffle_no_udf(spark):
     """robots.txt parsing is native Catalyst end-to-end: the two group-
     tracking windows share ONE (host) exchange and no Python UDF ever

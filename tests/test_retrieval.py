@@ -1,9 +1,5 @@
-"""Lexical retrieval (operators/retrieval.py) + CCNet perplexity
-buckets (operators/lm.lm_perplexity_buckets)."""
+"""Lexical retrieval (operators/retrieval.py)."""
 
-from pyspark.sql import functions as F
-
-from fuzzycat_spark.operators.lm import lm_perplexity_buckets
 from fuzzycat_spark.operators.retrieval import doc_term_rows, lexical_topk
 
 SCALE = 1200
@@ -101,61 +97,6 @@ def test_doc_term_rows_plan_has_no_exchange(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
-
-
-# --- lm_perplexity_buckets ------------------------------------------------
-
-
-def _bucket(spark, rows, **kw):
-    df = spark.createDataFrame(rows, "doc_id bigint, mean_p_fp bigint")
-    out = lm_perplexity_buckets(df, **kw).collect()
-    return {r.doc_id: r.bucket for r in out}
-
-
-def test_tertile_buckets_hand_computed(spark):
-    rows = [(i, 100 - 10 * i) for i in range(1, 10)]  # 90..10, n=9
-    got = _bucket(spark, rows)
-    assert [got[i] for i in range(1, 10)] == (
-        ["head"] * 3 + ["middle"] * 3 + ["tail"] * 3
-    )
-
-
-def test_n_not_multiple_of_three(spark):
-    # n=5: head rank <= ceil(5/3)=2, middle ranks 3..4, tail 5
-    rows = [(i, 60 - 10 * i) for i in range(1, 6)]  # 50..10
-    got = _bucket(spark, rows)
-    assert [got[i] for i in range(1, 6)] == [
-        "head", "head", "middle", "middle", "tail",
-    ]
-
-
-def test_ties_share_a_bucket(spark):
-    # cut_head is the value at rank 2 (n=5) = 7 -> every 7 is head
-    rows = [(1, 7), (2, 7), (3, 7), (4, 1), (5, 1)]
-    got = _bucket(spark, rows)
-    assert got[1] == got[2] == got[3] == "head"
-
-
-def test_null_scores_are_tail(spark):
-    rows = [(1, 90), (2, 60), (3, 30), (4, None)]
-    got = _bucket(spark, rows)
-    assert got[4] == "tail"
-
-
-def test_all_null_sample_puts_everything_in_tail(spark):
-    got = _bucket(spark, [(1, None), (2, None)])
-    assert set(got.values()) == {"tail"}
-
-
-def test_sampled_cutoffs_keep_bucket_monotone_in_score(spark):
-    rows = [(i, 1000 - i) for i in range(300)]
-    got = _bucket(spark, rows, sample_rate=0.3, seed=5)
-    order = {"head": 0, "middle": 1, "tail": 2}
-    seq = [order[got[i]] for i in range(300)]  # descending score order
-    assert seq == sorted(seq)
-    assert set(got.values()) == {"head", "middle", "tail"}
-    again = _bucket(spark, rows, sample_rate=0.3, seed=5)
-    assert got == again
 
 
 def test_lexical_topk_plan_broadcasts_query_side(spark):
